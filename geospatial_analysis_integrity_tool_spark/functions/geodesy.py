@@ -60,11 +60,6 @@ def polygon_area_m2_np(xs: np.ndarray, ys: np.ndarray) -> float:
     return float(abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))) * 0.5)
 
 
-def ring_perimeter_m_np(xs: np.ndarray, ys: np.ndarray) -> float:
-    d = equirect_dist_m_np(xs[:-1], ys[:-1], xs[1:], ys[1:])
-    return float(d.sum())
-
-
 def truncate3_np(v: np.ndarray) -> np.ndarray:
     """Truncate (toward zero) to 3 decimals — TruncateToNdigits, utilities.c:97."""
     return np.trunc(np.asarray(v, dtype=np.float64) * 1000.0) / 1000.0

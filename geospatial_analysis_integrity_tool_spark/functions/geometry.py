@@ -139,18 +139,6 @@ def segments_intersect(
     return proper | touch
 
 
-def segment_intersection_point(ax, ay, bx, by, cx, cy, dx, dy):
-    """Intersection point of (assumed properly intersecting) segment pairs."""
-    rpx = bx - ax
-    rpy = by - ay
-    spx = dx - cx
-    spy = dy - cy
-    denom = rpx * spy - rpy * spx
-    with np.errstate(invalid="ignore", divide="ignore"):
-        t = ((cx - ax) * spy - (cy - ay) * spx) / denom
-    return ax + t * rpx, ay + t * rpy
-
-
 def point_seg_dist_m_poly(px, py, ax, ay, bx, by) -> np.ndarray:
     """Bit-identical numpy twin of geodesy.sql_point_seg_dist_m."""
     px = np.asarray(px, dtype=np.float64)

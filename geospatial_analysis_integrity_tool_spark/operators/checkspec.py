@@ -57,11 +57,6 @@ SENSITIVITY_OPS: dict[str, str] = {
 }
 
 
-def sensitivity_sql(op: str, v: str, t1: str, t2: str = "NULL") -> str:
-    """Render one of the nine ops as shared predicate text."""
-    return SENSITIVITY_OPS[op].format(v=v, t1=t1, t2=t2)
-
-
 def resolve_tolerances(spec: DataFrame) -> DataFrame:
     """Clone-max tolerance resolution (FindRelevantSensitivity TT.c:2266,
     max across clones :2291): per (check, role) the governing tolerance is

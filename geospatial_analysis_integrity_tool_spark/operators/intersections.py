@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pip import cell_id, explode_bbox_cells
+from .pip import explode_bbox_cells
 
 
 def _d(ax, ay, bx, by, px, py) -> str:
@@ -60,13 +60,6 @@ def sql_intersection_xy() -> tuple[str, str]:
     safe_denom = f"(CASE WHEN {denom} = 0.0 THEN 1.0 ELSE {denom} END)"
     t = f"(((_cx - _ax) * {spy} - (_cy - _ay) * {spx}) / {safe_denom})"
     return f"(_ax + {t} * {rpx})", f"(_ay + {t} * {rpy})"
-
-
-def wide_to_arrays(lines: DataFrame, id_col: str, n_vertices: int) -> DataFrame:
-    """(id, x1..xN, y1..yN) -> (id, xs, ys) array form (legacy fixtures)."""
-    xs = F.array(*[F.col(f"x{i}") for i in range(1, n_vertices + 1)])
-    ys = F.array(*[F.col(f"y{i}") for i in range(1, n_vertices + 1)])
-    return lines.select(F.col(id_col), xs.alias("xs"), ys.alias("ys"))
 
 
 def vertices_to_lines(

@@ -19,7 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.observation import Observation
+
+from ..plans.fixpoint import fixpoint
 
 
 def endpoint_nodes(
@@ -72,7 +73,8 @@ def min_label_components(
         .withColumn("label", F.col("line_id"))
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         neigh = (
             edges.join(labels.withColumnRenamed("line_id", "b"), "b")
             .groupBy("a")
@@ -89,10 +91,8 @@ def min_label_components(
             )
             .select("line_id", "llabel")
         )
-        # the changed count rides the checkpoint job as an observed metric
-        # (label_prev carried in the plan) — no separate join job per round
-        obs = Observation()
-        new_labels = (
+        # pl (the previous label) feeds only the changed count
+        return (
             labels.join(neigh, "line_id", "left")
             .join(chased, "line_id", "left")
             .select(
@@ -104,26 +104,18 @@ def min_label_components(
                 ).alias("nl"),
                 F.col("label").alias("pl"),
             )
-            .observe(
-                obs,
-                F.sum(F.expr("CASE WHEN nl <> pl THEN 1 ELSE 0 END")).alias(
-                    "c"
-                ),
-            )
-            # pl feeds only the observed metric; project before checkpoint
-            .select("line_id", F.col("nl").alias("label"))
-            .localCheckpoint(eager=True)
         )
-        changed = obs.get["c"]
-        labels = new_labels
-        if not changed:
-            return labels.select(
-                F.col("line_id").alias("id"),
-                F.col("label").alias("component_id"),
-            )
-    raise RuntimeError(
-        f"min_label_components did not converge in {max_iter} rounds "
-        "(graph diameter > 2^max_iter?) — refusing to return partial labels"
+
+    labels, _ = fixpoint(
+        "min_label_components",
+        labels,
+        step,
+        F.sum(F.expr("CASE WHEN nl <> pl THEN 1 ELSE 0 END")),
+        ["line_id", F.col("nl").alias("label")],
+        max_iter,
+    )
+    return labels.select(
+        F.col("line_id").alias("id"), F.col("label").alias("component_id")
     )
 
 
@@ -141,11 +133,12 @@ def connected_components(
     with diameter in the thousands finishes in ~12 rounds, where plain
     one-hop propagation (the previous implementation) needed thousands.
 
-    Each round materializes via ``localCheckpoint`` (truncates lineage — the
-    plan would otherwise grow superlinearly) and the convergence test is an
-    observed metric riding that same job (no separate action per round).  If ``max_iter``
-    rounds do not converge the function RAISES instead of silently returning
-    partial labels (the default 48 covers diameter ~2^48).
+    The rounds run on the fixed-point driver (plans/fixpoint.py): each
+    materializes via ``localCheckpoint`` (truncates lineage — the plan would
+    otherwise grow superlinearly) and the changed count is an observed
+    metric riding that same job.  If ``max_iter`` rounds do not converge the
+    function RAISES instead of silently returning partial labels (the
+    default 48 covers diameter ~2^48).
 
     Reference: InitializeBucketsOfTransNets / PropagateTransitiveCounters,
     moregeomchecks.c:2749-2854.

@@ -38,6 +38,30 @@ from pyspark.sql.types import BooleanType
 
 from ..functions.geometry import pad_rings, pip_ray_cast, pip_ray_cast_ring
 
+def sql_side(p: tuple[str, str], a: tuple[str, str], b: tuple[str, str]) -> str:
+    """SQL text of (px-bx)*(ay-by) - (ax-bx)*(py-by): the side of edge a-b
+    that point p lies on (the oracles' triangle sign test)."""
+    px, py = p
+    ax, ay = a
+    bx, by = b
+    return f"(({px} - {bx}) * ({ay} - {by}) - ({ax} - {bx}) * ({py} - {by}))"
+
+
+def sql_ray3(px: str, py: str, tri: str = "") -> str:
+    """SQL text of the even-odd ray-cast parity of (px, py) against the
+    triangle {tri}x1..{tri}y3 (PointInsidePoly, TT.c:6920): true inside."""
+
+    def edge(i: int, j: int) -> str:
+        x1, y1, x2, y2 = f"{tri}x{i}", f"{tri}y{i}", f"{tri}x{j}", f"{tri}y{j}"
+        return (
+            f"CASE WHEN ({y1} > {py}) <> ({y2} > {py})"
+            f" THEN CASE WHEN {px} < {x1} + ({py} - {y1}) * ({x2} - {x1})"
+            f" / ({y2} - {y1}) THEN 1 ELSE 0 END ELSE 0 END"
+        )
+
+    return f"(({edge(1, 2)} + {edge(2, 3)} + {edge(3, 1)}) % 2 = 1)"
+
+
 #: grid cell width in degrees for the spatial hash; 1 deg ~ 111 km. Chosen per
 #: dataset density by plans/partitioning.choose_cell_deg at scale.
 DEFAULT_CELL_DEG = 4.0

@@ -1,168 +1,26 @@
 """Query registry: each submodule exports QUERIES (name -> callable(spark, sf_dir)
--> DataFrame) and ORACLES (name -> DuckDB SQL text).  __spark_entry__.py at the
-repo root aggregates them for the driver's correctness gate."""
+-> DataFrame) and ORACLES (name -> DuckDB SQL text).  The submodules are
+discovered, not listed (``pkgutil`` also walks a ``--py-files`` zip), and a
+query name registered twice is an error rather than a silent override.
+__spark_entry__.py at the repo root aggregates them for the driver's
+correctness gate."""
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
+
 
 def all_queries():
-    from . import (
-        attrchecks,
-        attrisf,
-        checks2,
-        checks3,
-        conditionspipe,
-        coverage2,
-        coverageq,
-        coverext,
-        coverptq,
-        connectseq,
-        cutoutq,
-        compositionq,
-        intvariants,
-        lsrq,
-        polyq,
-        tearq,
-        demchecks2,
-        elevrangeq,
-        edgematch3,
-        edgematch4,
-        edgematchq,
-        embeddings,
-        aavariants,
-        lavariants,
-        shootvariants,
-        witnessq,
-        endptq,
-        geometry,
-        metadataq,
-        mgcpq,
-        tds6q,
-        modeldomains,
-        mgcpcombos,
-        nunanpoq,
-        psq,
-        spaceq,
-        utmq,
-        misc,
-        morechecks,
-        negationq,
-        networksq,
-        nonsql,
-        overlay,
-        overshootq,
-        packagingq,
-        proxvariants,
-        raster2,
-        rasterhydro,
-        rastermask,
-        rasterstats,
-        relational,
-        scalarq,
-        sensq,
-        shpq,
-        specq,
-        stragglerq,
-        streamq,
-        streamdedup,
-        dsirq,
-        textops,
-        textops2,
-        textops3,
-        tokenizerq,
-        uomq,
-        winnowq,
-        variantq,
-        vgeomq,
-        linkgraph,
-        ranking,
-        vectorq,
-        warcq,
-        webcurate,
-        webcurate2,
-        webcurate3,
-        zshareq,
-    )
-
     q: dict = {}
     o: dict = {}
-    for mod in (
-        relational,
-        geometry,
-        textops,
-        textops2,
-        textops3,
-        dsirq,
-        winnowq,
-        tokenizerq,
-        embeddings,
-        attrchecks,
-        attrisf,
-        conditionspipe,
-        overlay,
-        vgeomq,
-        raster2,
-        rastermask,
-        rasterhydro,
-        demchecks2,
-        coverage2,
-        coverageq,
-        coverptq,
-        cutoutq,
-        connectseq,
-        elevrangeq,
-        checks2,
-        checks3,
-        edgematchq,
-        edgematch3,
-        edgematch4,
-        aavariants,
-        lavariants,
-        shootvariants,
-        witnessq,
-        endptq,
-        variantq,
-        networksq,
-        negationq,
-        morechecks,
-        metadataq,
-        mgcpq,
-        tds6q,
-        modeldomains,
-        mgcpcombos,
-        nunanpoq,
-        psq,
-        spaceq,
-        utmq,
-        packagingq,
-        misc,
-        uomq,
-        specq,
-        stragglerq,
-        streamq,
-        streamdedup,
-        shpq,
-        scalarq,
-        sensq,
-        overshootq,
-        proxvariants,
-        compositionq,
-        intvariants,
-        lsrq,
-        polyq,
-        tearq,
-        rasterstats,
-        coverext,
-        nonsql,
-        linkgraph,
-        ranking,
-        vectorq,
-        warcq,
-        webcurate,
-        webcurate2,
-        webcurate3,
-        zshareq,
-    ):
+    for info in pkgutil.iter_modules(__path__):
+        if info.name == "suiteq":
+            continue
+        mod = importlib.import_module(f"{__name__}.{info.name}")
+        dup = (q.keys() & mod.QUERIES.keys()) | (o.keys() & mod.ORACLES.keys())
+        if dup:
+            raise ValueError(f"{info.name} re-registers query names {sorted(dup)}")
         q.update(mod.QUERIES)
         o.update(mod.ORACLES)
     # composition gate: built FROM the registered per-family entries so the

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.intersections import sql_proper_cross
-from ..operators.pip import explode_bbox_cells, with_point_cell
+from ..operators.pip import explode_bbox_cells, sql_ray3, with_point_cell
 from ..sources.synthetic import oracle_cte, register_geo_views
 
 CELL = 0.01
@@ -68,26 +68,7 @@ FROM geo_areas WHERE area_id % 8 = 0
 """
 
 
-def _ray3(px: str, py: str) -> str:
-    """Even-odd parity of (px,py) vs triangle x1..y3 (TT.c:6920)."""
-
-    def edge(x1, y1, x2, y2):
-        return (
-            f"CASE WHEN ({y1} > {py}) <> ({y2} > {py})"
-            f" THEN CASE WHEN {px} < {x1} + ({py} - {y1}) * ({x2} - {x1})"
-            f" / ({y2} - {y1}) THEN 1 ELSE 0 END ELSE 0 END"
-        )
-
-    return (
-        "(("
-        + edge("x1", "y1", "x2", "y2") + " + "
-        + edge("x2", "y2", "x3", "y3") + " + "
-        + edge("x3", "y3", "x1", "y1")
-        + ") % 2 = 1)"
-    )
-
-
-_INSIDE_K = _ray3("vx", "vy")
+_INSIDE_K = sql_ray3("vx", "vy")
 
 
 def q_area_cover_checks(spark: SparkSession, sf_dir: str) -> DataFrame:

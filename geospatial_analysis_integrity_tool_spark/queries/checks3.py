@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..conditions import consolidate_scalable
 from ..operators.checks_single import single_feature_checks
-from ..operators.pip import pip_join
+from ..operators.pip import pip_join, sql_side
 from ..sources.synthetic import oracle_cte, register_geo_views
 from .conditionspipe import TOL, _CELL
 
@@ -106,16 +106,9 @@ def q_points_without_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
     return points.join(inside, "point_id", "left_anti").select("point_id", "fcode")
 
 
-def _sign(p, a, b):
-    px, py = p
-    ax, ay = a
-    bx, by = b
-    return f"(({px} - {bx}) * ({ay} - {by}) - ({ax} - {bx}) * ({py} - {by}))"
-
-
-_D1 = _sign(("p.lon", "p.lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
-_D2 = _sign(("p.lon", "p.lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
-_D3 = _sign(("p.lon", "p.lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
+_D1 = sql_side(("p.lon", "p.lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
+_D2 = sql_side(("p.lon", "p.lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
+_D3 = sql_side(("p.lon", "p.lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
 
 ORACLE_POINTS_WITHOUT = f"""
 {oracle_cte('geo_points', 'geo_zones')}

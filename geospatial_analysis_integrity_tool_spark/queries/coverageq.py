@@ -36,7 +36,12 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
 from ..operators.proximity import point_seg_candidates
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..sources.synthetic import (
+    GEO_VIEWS,
+    oracle_cte,
+    oracle_materialized,
+    register_geo_views,
+)
 from .vgeomq import _EDGES_CTE, _area_edges
 
 PCOVER_TOL_M = 60.0     # PNOCOVERLE: end node must sit within 60 m
@@ -607,11 +612,4 @@ ORACLES = {
 
 # DuckDB planning explodes when the UNION/CROSS-JOIN fixture views are
 # re-derived per reference (round-2 memory note): materialize them.
-def _matz(sql: str) -> str:
-    for v in ("geo_lines", "geo_vlines", "geo_vareas", "geo_sites",
-              "geo_lines_dup", "geo_points"):
-        sql = sql.replace(f"{v} AS (", f"{v} AS MATERIALIZED (")
-    return sql
-
-
-ORACLES = {k: _matz(v) for k, v in ORACLES.items()}
+ORACLES = {k: oracle_materialized(v) for k, v in ORACLES.items()}

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
-from ..operators.pip import pip_join
+from ..operators.pip import pip_join, sql_side
 from ..operators.proximity import point_proximity_pairs, point_to_segment_proximity
 from ..sources.synthetic import oracle_cte, register_geo_views
 
@@ -58,17 +58,9 @@ def q_geo_pip_gait(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("point_id", "zone_id", "fcode")
 
 
-def _sign(p, a, b):
-    # (px-bx)*(ay-by) - (ax-bx)*(py-by) for text substitution
-    px, py = p
-    ax, ay = a
-    bx, by = b
-    return f"(({px} - {bx}) * ({ay} - {by}) - ({ax} - {bx}) * ({py} - {by}))"
-
-
-_D1 = _sign(("p.lon", "p.lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
-_D2 = _sign(("p.lon", "p.lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
-_D3 = _sign(("p.lon", "p.lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
+_D1 = sql_side(("p.lon", "p.lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
+_D2 = sql_side(("p.lon", "p.lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
+_D3 = sql_side(("p.lon", "p.lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
 
 ORACLE_GEO_PIP = f"""
 {oracle_cte('geo_points', 'geo_zones')}

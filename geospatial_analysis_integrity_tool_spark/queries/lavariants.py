@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_point_seg_dist_m
 from ..operators.intersections import sql_intersection_xy, sql_proper_cross
-from ..operators.pip import explode_bbox_cells, with_point_cell
+from ..operators.pip import explode_bbox_cells, sql_ray3, with_point_cell
 from ..sources.synthetic import oracle_cte, register_geo_views
 
 CELL = 0.01
@@ -271,22 +271,7 @@ WHERE NOT is_cut AND NOT is_endat
 
 #: even-odd ray-cast parity over the triangle's 3 edges, inline (the
 #: PointInsidePoly TT.c:6920 eastward ray, one CASE per edge).
-def _ray3(px: str, py: str) -> str:
-    def edge(x1, y1, x2, y2):
-        return (
-            f"CASE WHEN ({y1} > {py}) <> ({y2} > {py})"
-            f" THEN CASE WHEN {px} < {x1} + ({py} - {y1}) * ({x2} - {x1})"
-            f" / ({y2} - {y1}) THEN 1 ELSE 0 END ELSE 0 END"
-        )
-
-    return (
-        edge("x1", "y1", "x2", "y2") + " + "
-        + edge("x2", "y2", "x3", "y3") + " + "
-        + edge("x3", "y3", "x1", "y1")
-    )
-
-
-_INSIDE = f"(({_ray3('vx', 'vy')}) % 2 = 1)"
+_INSIDE = sql_ray3("vx", "vy")
 
 #: colinearity of a cover segment (ax,ay)-(bx,by) with an edge + positive-
 #: length 1-D overlap along x (both segments horizontal-or-general; the

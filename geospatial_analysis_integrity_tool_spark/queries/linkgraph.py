@@ -34,8 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.observation import Observation
 
+from ..plans.fixpoint import fixpoint
 from ..sources.pages import extract_outlinks, synth_pages
 from .nonsql import _LANGS_SQL, _n_pages
 
@@ -159,9 +159,10 @@ SELECT {_url_sql('i')} AS url, CAST(r AS BIGINT) AS pagerank_ppm FROM r2
 # (max |r_{k+1} - r_k| == 0), instead of unrolling a fixed count.  This is
 # the iterate-until-done shape of the reference's transitive-counter
 # propagation loop (moregeomchecks.c:2774 PropagateTransitiveCounters: sweep
-# until no counter changes), re-expressed as DataFrame rounds: each round
-# localCheckpoints (truncating lineage so plan size stays O(1) across
-# rounds) and collects ONE scalar (the max delta) to the driver.  Because
+# until no counter changes), re-expressed as DataFrame rounds on the
+# fixed-point driver (plans/fixpoint.py): each round localCheckpoints
+# (truncating lineage so plan size stays O(1) across rounds) and observes
+# ONE scalar (the max delta) on that same job.  Because
 # the recurrence is exact BIGINT, the fixed point is reached in finitely
 # many rounds and is engine-independent; the DuckDB twin unrolls the
 # simulation-determined round count for the sf0.01 fixture (n=500 -> 18).
@@ -170,9 +171,10 @@ PAGERANK_MAX_ITERS = 100
 
 
 def pagerank_converged(
-    spark: SparkSession, n: int, tol_ppm: int = 0, max_iters: int = PAGERANK_MAX_ITERS
-) -> tuple[DataFrame, int, bool]:
-    """Run integer PageRank to its fixed point; returns (ranks, iters, converged)."""
+    spark: SparkSession, n: int, max_iters: int = PAGERANK_MAX_ITERS
+) -> tuple[DataFrame, int]:
+    """Run integer PageRank to its exact fixed point; returns (ranks, rounds)
+    and raises if ``max_iters`` rounds do not reach it."""
     pages = synth_pages(spark, n)
     edges = (
         extract_outlinks(pages)
@@ -193,8 +195,8 @@ def pagerank_converged(
         )
         s = contrib.groupBy("url").agg(F.sum("c").alias("s"))
         # Carry r_prev through the materialized round so the convergence
-        # test is a plain scan-aggregate over the checkpointed partitions
-        # (one cheap job) instead of a second shuffle join per round.
+        # delta is observed on the round's own checkpoint job instead of a
+        # second shuffle join per round.
         return (
             nodes.join(s, "url", "left")
             .join(ranks.select("url", F.col("r").alias("r_prev")), "url")
@@ -205,28 +207,19 @@ def pagerank_converged(
             )
         )
 
-    for it in range(1, max_iters + 1):
-        # the convergence delta rides the checkpoint job as an observed
-        # metric — no separate aggregate job per round
-        obs = Observation(f"pagerank_r{it}")
-        nxt = (
-            iterate(ranks)
-            .observe(obs, F.max(F.expr("abs(r - r_prev)")).alias("d"))
-            # r_prev feeds only the observed metric; project it away BEFORE
-            # the checkpoint so cached rounds store just (url, r)
-            .select("url", "r")
-            .localCheckpoint(eager=True)
-        )
-        delta = obs.get["d"]
-        ranks = nxt
-        if delta is not None and delta <= tol_ppm:
-            return ranks, it, True
-    return ranks, max_iters, False
+    return fixpoint(
+        "pagerank_converged",
+        ranks,
+        iterate,
+        F.max(F.expr("abs(r - r_prev)")),
+        ["url", "r"],
+        max_iters,
+    )
 
 
 def q_pages_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _n_pages(sf_dir)
-    ranks, _, _ = pagerank_converged(spark, n)
+    ranks, _ = pagerank_converged(spark, n)
     return ranks.select("url", F.col("r").alias("pagerank_ppm"))
 
 

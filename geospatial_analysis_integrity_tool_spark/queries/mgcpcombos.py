@@ -22,12 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.mgcp3_tables import CLASS_CODES
 from ..functions.mgcp_combos import (
     MGCP3_ILLEGALAREACOMBOS,
     MGCP3_WARNAREACOMBOS,
 )
+from ..functions.schema_models import model
 from ..sources.synthetic import register_testdata_views
+
+CLASS_CODES = model("MGCP3")["classes"]
 
 N_PAIRS = 6000
 N_CLASS = len(CLASS_CODES)

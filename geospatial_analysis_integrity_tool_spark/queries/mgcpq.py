@@ -2,8 +2,9 @@
 
 The ATTR_* family elsewhere runs against fixture-sized mini-specs; this
 query exercises the FULL transcribed MGCP3 domain volume
-(functions/mgcp3_tables.py: 185 feature classes, 169 attributes, 1257
-enumerants, 1154 per-geometry optional-attribute pairs — the reference's
+(functions/schema_models.json and functions/mgcp3_tables.py: 185 feature
+classes, 169 attributes, 1257 enumerants, 1154 per-geometry
+optional-attribute pairs — the reference's
 MIT-licensed public data tables mgcp3_class.c:21 / mgcp3_attr.c:20 /
 mgcp3_enum.c:20).
 
@@ -19,7 +20,7 @@ violations and validates it against the real tables:
 
 Spark shape: the schema tables broadcast (a few KB) and every decision is
 an equi-join membership test; the oracle carries the SAME tables as VALUES
-lists rendered from the single Python source, so both engines validate
+lists rendered from the same Python data, so both engines validate
 against identical domains.
 """
 
@@ -28,15 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.mgcp3_tables import (
-    ATTR_CODES,
-    ATTR_ENUMS,
-    CLASS_CODES,
-    OPTIONAL_A,
-    OPTIONAL_L,
-    OPTIONAL_P,
-)
+from ..functions.mgcp3_tables import OPTIONAL_A, OPTIONAL_L, OPTIONAL_P
+from ..functions.schema_models import model
 from ..sources.synthetic import register_testdata_views
+
+CLASS_CODES = model("MGCP3")["classes"]
+ATTR_CODES = model("MGCP3")["attrs"]
+ATTR_ENUMS = model("MGCP3")["enums"]
 
 N_FEATURES = 3000
 N_CLASS = len(CLASS_CODES)

@@ -1,14 +1,14 @@
 """Per-model attribute-domain conformance at REAL schema size — ALL models.
 
-Round-3 verdict "missing #1": only MGCP TRD3 (queries/mgcpq.py) and then
-TDS6 (queries/tds6q.py) ran at real domain volume; the other models stayed
-fixture-sized.  This factory stamps one oracle-gated query per remaining
-model over the full transcribed tables (functions/schema_models.json —
-D4, DFDD, FLDB, GGDM21, GGDM22_U, GGDM3, GIFD, MGCP4, NFDD, SAC, TDS4,
-UFD1, UFD2, UFD3; e.g. NFDD: 775 classes / 2,126 attrs / 28,190 enum
-rows, nfdd_class.c:21 / nfdd_attr.c:20 / nfdd_enum.c:20).
+This factory stamps one oracle-gated query per model over the full
+transcribed tables (functions/schema_models.json — D4, DFDD, FLDB, GGDM21,
+GGDM22_U, GGDM3, GIFD, MGCP4, NFDD, SAC, TDS4, TDS6, UFD1, UFD2, UFD3; e.g.
+NFDD: 775 classes / 2,126 attrs / 28,190 enum rows, nfdd_class.c:21 /
+nfdd_attr.c:20 / nfdd_enum.c:20).  MGCP TRD3 keeps its own query
+(queries/mgcpq.py): it adds the per-geometry NOTAPPL check on a different
+planted-violation fixture.
 
-Checks per feature (same planted-violation fixture as tds6q):
+Checks per feature (one planted-violation fixture for every model):
 
 * {M}_BADCLASS — class not in the roster;
 * {M}_BADATTR  — attribute not in the roster;
@@ -33,7 +33,7 @@ from ..sources.synthetic import register_testdata_views
 N_FEATURES = 4000
 
 #: models with dedicated full-size queries elsewhere
-_EXCLUDED = {"MGCP3", "TDS6"}
+_EXCLUDED = {"MGCP3"}
 
 
 def _q(s: str) -> str:

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_point_seg_dist_m
+from ..operators.pip import sql_ray3
 from ..operators.proximity import point_to_segment_proximity
 from ..sources.synthetic import oracle_cte, register_geo_views
 
@@ -107,31 +108,12 @@ SELECT aid, 2, x3, y3, x1, y1 FROM ({AUG_AREAS_SQL})
 """
 
 
-def _ray3(px: str, py: str) -> str:
-    """Even-odd parity of (px,py) vs the triangle x1..y3 (TT.c:6920)."""
-
-    def edge(x1, y1, x2, y2):
-        return (
-            f"CASE WHEN ({y1} > {py}) <> ({y2} > {py})"
-            f" THEN CASE WHEN {px} < {x1} + ({py} - {y1}) * ({x2} - {x1})"
-            f" / ({y2} - {y1}) THEN 1 ELSE 0 END ELSE 0 END"
-        )
-
-    return (
-        "(("
-        + edge("x1", "y1", "x2", "y2") + " + "
-        + edge("x2", "y2", "x3", "y3") + " + "
-        + edge("x3", "y3", "x1", "y1")
-        + ") % 2 = 1)"
-    )
-
-
 _ERRTYPE_AREA = f"""
-CASE WHEN src = 'P' AND NOT {_ray3('px', 'py')} THEN 'PUNDERSHTA'
+CASE WHEN src = 'P' AND NOT {sql_ray3('px', 'py')} THEN 'PUNDERSHTA'
      WHEN src = 'P' THEN 'POVERSHTA'
-     WHEN src = 'L' AND NOT {_ray3('px', 'py')} THEN 'LUNDERSHTA'
+     WHEN src = 'L' AND NOT {sql_ray3('px', 'py')} THEN 'LUNDERSHTA'
      WHEN src = 'L' THEN 'LOVERSHTA'
-     WHEN NOT {_ray3('px', 'py')} THEN 'AUNDERSHTA'
+     WHEN NOT {sql_ray3('px', 'py')} THEN 'AUNDERSHTA'
      ELSE 'AOVERSHTA' END
 """
 

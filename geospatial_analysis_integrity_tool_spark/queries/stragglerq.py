@@ -47,7 +47,7 @@ from ..operators.proximity import (
     _with_kring_cells,
     point_to_segment_proximity,
 )
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte, oracle_materialized, register_geo_views
 from .vgeomq import (
     CELL,
     RAY_CROSS,
@@ -834,14 +834,7 @@ ORACLES = {
 
 # DuckDB planning explodes when the UNION/CROSS-JOIN fixture views are
 # re-derived per reference (round-2 memory note): materialize them.
-def _matz(sql: str) -> str:
-    for v in ("geo_lines", "geo_vlines", "geo_vareas", "geo_sites",
-              "geo_lines_dup", "geo_points"):
-        sql = sql.replace(f"{v} AS (", f"{v} AS MATERIALIZED (")
-    return sql
-
-
-ORACLES = {k: _matz(v) for k, v in ORACLES.items()}
+ORACLES = {k: oracle_materialized(v) for k, v in ORACLES.items()}
 # P_O_LOOP nests ORACLE_LOOPS (which carries its own geo_vlines CTE) inside a
 # subquery; materializing BOTH scopes makes DuckDB hoist them into one query
 # and fail with "Duplicate alias" — keep this one unmaterialized (it was

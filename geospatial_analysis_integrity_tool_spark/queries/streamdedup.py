@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.portable_hash import duck_md5_slice
+from ..streaming.replay import replay_to_memory
 
 N_BATCHES = 5
 #: 1-based hex offsets of the 4 disjoint 16-bit md5 slices (one per band)
@@ -97,37 +98,15 @@ def q_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import lsh_first_seen
 
     d = write_lsh_stream_fixture(sf_dir)
-    for q in spark.streams.active:
-        if q.name == "lsh_dedup_sink":
-            q.stop()
     src = (
         spark.readStream.schema(_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    out = lsh_first_seen(src)
-    # small state-store partition count for the tiny replay (see
-    # q_streaming_first_seen for why); 8 rather than 4 because the work per
-    # batch is thousands of per-bucket Python calls — parallelism wins over
-    # commit overhead here
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("lsh_dedup_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming_lsh_dedup replay did not finish within 300 s — "
-            "refusing to aggregate a partially-populated sink"
-        )
+    # 8 state-store partitions rather than the replay default of 4: the work
+    # per batch is thousands of per-bucket Python calls — parallelism wins
+    # over commit overhead here
+    replay_to_memory(lsh_first_seen(src), "lsh_dedup_sink", shuffle_partitions=8)
     return (
         spark.table("lsh_dedup_sink")
         .groupBy("doc_id", "batch_idx")

@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming.replay import await_replay, replay_to_memory
+
 N_ROWS = 600
 N_PER_BATCH = 120
 N_KEYS = 240
@@ -58,9 +60,6 @@ def q_streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import dedup_first_seen
 
     d = write_stream_fixture()
-    for q in spark.streams.active:
-        if q.name == "first_seen_replay_sink":
-            q.stop()
     src = (
         spark.readStream.schema(_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -69,29 +68,7 @@ def q_streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dedup_first_seen(
         src, key_cols=["cond_key"], payload_cols=["batch_idx", "payload"]
     )
-    # The state-store partition count is frozen from spark.sql.shuffle.partitions
-    # at stream start.  The replay fixture is 5 micro-batches of 120 rows; at the
-    # session default (32) every tiny batch commits 32 state-store partitions,
-    # which is pure per-task overhead.  Pin a small count for the stream only —
-    # real deployments size this to the keyspace, not the session default.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("first_seen_replay_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming replay did not finish within 300 s — refusing to "
-            "read a partially-populated sink"
-        )
+    replay_to_memory(out, "first_seen_replay_sink")
     return spark.table("first_seen_replay_sink").select(
         "cond_key", "batch_idx", "payload"
     )
@@ -191,9 +168,6 @@ def q_streaming_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     d = write_windowed_fixture()
-    for q in spark.streams.active:
-        if q.name == "windowed_replay_sink":
-            q.stop()
     src = (
         spark.readStream.schema("key long, ts timestamp")
         .option("maxFilesPerTrigger", 1)
@@ -209,24 +183,7 @@ def q_streaming_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("windowed_replay_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming replay did not finish within 300 s — refusing to "
-            "read a partially-populated sink"
-        )
+    replay_to_memory(agg, "windowed_replay_sink")
     return spark.table("windowed_replay_sink").filter("key >= 0")
 
 
@@ -307,9 +264,6 @@ def q_streaming_url_consolidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import consolidate_latest
 
     d = write_capture_fixture()
-    for q in spark.streams.active:
-        if q.name == "url_consolidate_sink":
-            q.stop()
     src = (
         spark.readStream.schema(
             "cap_key long, batch_idx long, ts long, payload long"
@@ -318,24 +272,7 @@ def q_streaming_url_consolidate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(d)
     )
     out = consolidate_latest(src, key_col="cap_key", ts_col="ts", payload_col="payload")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("url_consolidate_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming replay did not finish within 300 s — refusing to "
-            "read a partially-populated sink"
-        )
+    replay_to_memory(out, "url_consolidate_sink")
     return spark.table("url_consolidate_sink").select(
         "cap_key", "upto_batch", "n_so_far", "latest_ts", "latest_payload"
     )
@@ -416,13 +353,7 @@ def q_streaming_extract_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_extract_to_parquet(stream, out, cp)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming replay did not finish within 300 s — refusing to "
-            "read a partially-populated sink"
-        )
+    await_replay(stream_extract_to_parquet(stream, out, cp))
     feats = spark.read.parquet(out)
     return feats.groupBy("fcode").agg(
         F.count("*").alias("n_feats"),
@@ -495,9 +426,6 @@ def q_streaming_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_geo_views(spark, sf_dir)
     d = write_pip_stream_fixture()
-    for q in spark.streams.active:
-        if q.name == "streaming_pip_sink":
-            q.stop()
     src = (
         spark.readStream.schema(
             "point_id long, lon double, lat double, fcode string"
@@ -513,41 +441,17 @@ def q_streaming_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pip_join(src, zones, point_id="point_id", poly_id="zone_id").select(
         "point_id", "zone_id"
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("streaming_pip_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming replay did not finish within 300 s — refusing to "
-            "read a partially-populated sink"
-        )
+    replay_to_memory(out, "streaming_pip_sink")
     return spark.table("streaming_pip_sink").select("point_id", "zone_id")
 
 
 def _pip_stream_oracle() -> str:
+    from ..operators.pip import sql_side
     from ..sources.synthetic import oracle_cte
 
-    def sign(p, a, b):
-        px, py = p
-        ax, ay = a
-        bx, by = b
-        return (
-            f"(({px} - {bx}) * ({ay} - {by}) - ({ax} - {bx}) * ({py} - {by}))"
-        )
-
-    d1 = sign(("p.lon", "p.lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
-    d2 = sign(("p.lon", "p.lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
-    d3 = sign(("p.lon", "p.lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
+    d1 = sql_side(("p.lon", "p.lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
+    d2 = sql_side(("p.lon", "p.lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
+    d3 = sql_side(("p.lon", "p.lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
     return f"""
 {oracle_cte('geo_zones')},
 pts AS (
@@ -615,9 +519,6 @@ def q_streaming_utm_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_geo_views(spark, sf_dir)
     d = write_utm_stream_fixture()
-    for q in spark.streams.active:
-        if q.name == "streaming_utm_pip_sink":
-            q.stop()
     src = (
         spark.readStream.schema(
             "point_id long, zone long, easting double, northing double"
@@ -655,38 +556,14 @@ def q_streaming_utm_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pip_join(pts, zones, point_id="point_id", poly_id="zone_id").select(
         "point_id", "zone_id"
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("streaming_utm_pip_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming replay did not finish within 300 s — refusing to "
-            "read a partially-populated sink"
-        )
+    replay_to_memory(out, "streaming_utm_pip_sink")
     return spark.table("streaming_utm_pip_sink").select("point_id", "zone_id")
 
 
 def _utm_stream_oracle() -> str:
     from ..functions.utm import oracle_utm_subquery
+    from ..operators.pip import sql_side
     from ..sources.synthetic import oracle_cte
-
-    def sign(p, a, b):
-        px, py = p
-        ax, ay = a
-        bx, by = b
-        return (
-            f"(({px} - {bx}) * ({ay} - {by}) - ({ax} - {bx}) * ({py} - {by}))"
-        )
 
     inner = f"""
   SELECT i AS point_id,
@@ -695,9 +572,9 @@ def _utm_stream_oracle() -> str:
          CAST((i * 104729) % 8000000 AS DOUBLE) AS northing
   FROM (SELECT unnest(range(0, {UTM_STREAM_N})) AS i)
 """
-    d1 = sign(("p.utm_lon", "p.utm_lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
-    d2 = sign(("p.utm_lon", "p.utm_lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
-    d3 = sign(("p.utm_lon", "p.utm_lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
+    d1 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
+    d2 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
+    d3 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
     return f"""
 {oracle_cte('geo_zones')}
 SELECT p.point_id, z.zone_id

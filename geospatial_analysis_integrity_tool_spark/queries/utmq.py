@@ -35,7 +35,7 @@ from ..functions.utm import (
     with_tm_geodetic,
     with_utm_geodetic,
 )
-from ..operators.pip import pip_join
+from ..operators.pip import pip_join, sql_side
 from ..sources.synthetic import oracle_cte, register_geo_views, register_testdata_views
 
 N_FEATURES = 4000
@@ -86,16 +86,9 @@ def q_utm_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("point_id", "zone_id")
 
 
-def _sign(p, a, b):
-    px, py = p
-    ax, ay = a
-    bx, by = b
-    return f"(({px} - {bx}) * ({ay} - {by}) - ({ax} - {bx}) * ({py} - {by}))"
-
-
-_D1 = _sign(("p.utm_lon", "p.utm_lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
-_D2 = _sign(("p.utm_lon", "p.utm_lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
-_D3 = _sign(("p.utm_lon", "p.utm_lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
+_D1 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
+_D2 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
+_D3 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
 
 ORACLE_UTM_PIP = f"""
 {oracle_cte('geo_zones')}

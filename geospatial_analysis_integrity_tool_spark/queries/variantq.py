@@ -56,7 +56,7 @@ from ..operators.proximity import (
     point_proximity_pairs,
     point_to_segment_proximity,
 )
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte, oracle_materialized, register_geo_views
 from .coverageq import _line_ends, _line_segs, _pk_sql, _segc_sql
 
 LLINTAWAY_TOL_M = 40.0
@@ -813,14 +813,7 @@ ORACLES = {
 
 # DuckDB planning explodes when the UNION/CROSS-JOIN fixture views are
 # re-derived per reference (round-2 memory note): materialize them.
-def _matz(sql: str) -> str:
-    for v in ("geo_lines", "geo_vlines", "geo_vareas", "geo_sites",
-              "geo_lines_dup", "geo_points"):
-        sql = sql.replace(f"{v} AS (", f"{v} AS MATERIALIZED (")
-    return sql
-
-
-ORACLES = {k: _matz(v) for k, v in ORACLES.items()}
+ORACLES = {k: oracle_materialized(v) for k, v in ORACLES.items()}
 
 
 # --- geo_loc_multint (LOC_MULTINT 127) ------------------------------------------
@@ -860,4 +853,4 @@ GROUP BY 1, 2 HAVING COUNT(*) > 1
 
 
 QUERIES["geo_loc_multint"] = q_loc_multint
-ORACLES["geo_loc_multint"] = _matz(_oracle_loc_multint())
+ORACLES["geo_loc_multint"] = oracle_materialized(_oracle_loc_multint())

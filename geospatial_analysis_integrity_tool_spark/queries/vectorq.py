@@ -40,9 +40,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.observation import Observation
 from pyspark.sql.window import Window
 
+from ..plans.fixpoint import fixpoint
 from ..sources.synthetic import register_testdata_views
 
 K_CLUSTERS = 8
@@ -236,8 +236,9 @@ SELECT query_id, neighbor_id, adc_dist, rank FROM (
 # rounds.  Same exact-integer recurrence (argmin of BIGINT squared distances,
 # ties to the lowest k; centroid update SUM(qv) DIV COUNT, truncating in both
 # engines), so the stable assignment is engine-independent and reached in
-# finitely many rounds.  Each round localCheckpoints the assignment
-# (lineage stays O(1)) and collects ONE scalar — the count of vectors that
+# finitely many rounds.  The rounds run on the fixed-point driver
+# (plans/fixpoint.py): each localCheckpoints the assignment (lineage stays
+# O(1)) and observes ONE scalar on that job — the count of vectors that
 # switched clusters.  Empty clusters drop out of the centroid table
 # naturally (groupBy emits no rows for them), matching the SQL twin.  The
 # DuckDB oracle unrolls the simulation-determined round count for the
@@ -253,8 +254,9 @@ def _mat(cte: str, name: str) -> str:
 
 def kmeans_converged(
     spark: SparkSession, max_iters: int = KMEANS_MAX_ITERS
-) -> tuple[DataFrame, int, bool]:
-    """Lloyd's to a stable assignment; returns (assignment, iters, converged).
+) -> tuple[DataFrame, int]:
+    """Lloyd's to a stable assignment; returns (assignment, rounds) and
+    raises if ``max_iters`` rounds do not reach it.
 
     The returned DataFrame carries (vec_id, k, dist) for the stable round.
 
@@ -265,9 +267,10 @@ def kmeans_converged(
     array_min(dists))`` takes the first (= lowest-k) minimum, matching the
     oracle's tie rule exactly.  Per round: one K*dims-row centroid collect
     (map-side-combined partial aggregate — the corpus shuffles at most
-    K*dims rows per partition), one zero-shuffle assign + localCheckpoint,
-    and one scan-count of switched vectors (k_prev is carried in the
-    checkpointed row, no join).  The exact BIGINT recurrence (sum of squared
+    K*dims rows per partition) and one zero-shuffle assign +
+    localCheckpoint that also observes the count of switched vectors
+    (k_prev rides the round's plan and is projected away before the
+    checkpoint, no join).  The exact BIGINT recurrence (sum of squared
     diffs; centroid = SUM DIV COUNT) is unchanged from the unrolled twin.
     """
     wide = (
@@ -288,7 +291,7 @@ def kmeans_converged(
             F.expr("CAST(0 AS BIGINT)").alias("k"),
             F.expr("CAST(0 AS BIGINT)").alias("dist"),
         )
-        return empty, 1, True
+        return empty, 1
     dims = len(first["q"])
 
     def assign(df: DataFrame, cen: list[tuple[int, list[int]]], *extra):
@@ -335,38 +338,23 @@ def kmeans_converged(
         (r["vec_id"], list(r["q"]))
         for r in wide.filter(F.col("vec_id") < K_CLUSTERS).collect()
     )
-    a_prev = assign(wide, cen0).localCheckpoint(eager=True)
-    for it in range(2, max_iters + 1):
-        # the switch count rides the checkpoint job as an observed metric —
-        # no separate count job per round; k_prev flows through the metric
-        # but is projected away BEFORE the checkpoint, so the cached rounds
-        # never store convergence-only columns
-        obs = Observation(f"kmeans_r{it}")
-        a = (
-            assign(
-                a_prev,
-                collect_centroids(a_prev),
-                F.col("k").alias("k_prev"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    F.expr("CASE WHEN k <> k_prev THEN 1 ELSE 0 END")
-                ).alias("changed"),
-            )
-            .select("vec_id", "q", "k", "dist")
-            .localCheckpoint(eager=True)
-        )
-        changed = obs.get["changed"]
-        a_prev = a
-        if not changed:
-            return a_prev.select("vec_id", "k", "dist"), it, True
-    return a_prev.select("vec_id", "k", "dist"), max_iters, False
+    # round 1 assigns against the seed centroids; the driver runs rounds 2..
+    a1 = assign(wide, cen0).localCheckpoint(eager=True)
+    a, rounds = fixpoint(
+        "kmeans_converged",
+        a1,
+        lambda a: assign(a, collect_centroids(a), F.col("k").alias("k_prev")),
+        F.sum(F.expr("CASE WHEN k <> k_prev THEN 1 ELSE 0 END")),
+        ["vec_id", "q", "k", "dist"],
+        max_iters,
+        first_round=2,
+    )
+    return a.select("vec_id", "k", "dist"), rounds
 
 
 def q_embedding_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_testdata_views(spark, sf_dir)
-    a, _, _ = kmeans_converged(spark)
+    a, _ = kmeans_converged(spark)
     return (
         a.groupBy("k")
         .agg(F.count("*").alias("n_members"), F.sum("dist").alias("inertia"))

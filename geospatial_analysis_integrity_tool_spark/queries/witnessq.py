@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.pip import explode_bbox_cells, with_point_cell
+from ..operators.pip import explode_bbox_cells, sql_ray3, with_point_cell
 from ..sources.synthetic import oracle_cte, register_geo_views
 
 CELL = 0.01
@@ -188,23 +188,6 @@ SELECT line_id, 1, x3, y3 FROM geo_lines
 """
 
 
-def _ray3z(px: str, py: str) -> str:
-    def edge(x1, y1, x2, y2):
-        return (
-            f"CASE WHEN ({y1} > {py}) <> ({y2} > {py})"
-            f" THEN CASE WHEN {px} < {x1} + ({py} - {y1}) * ({x2} - {x1})"
-            f" / ({y2} - {y1}) THEN 1 ELSE 0 END ELSE 0 END"
-        )
-
-    return (
-        "(("
-        + edge("x1", "y1", "x2", "y2") + " + "
-        + edge("x2", "y2", "x3", "y3") + " + "
-        + edge("x3", "y3", "x1", "y1")
-        + ") % 2 = 1)"
-    )
-
-
 def q_perimeter_connect_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_geo_views(spark, sf_dir)
     endpts = spark.sql(ENDPTS_SQL).localCheckpoint()
@@ -274,7 +257,7 @@ def q_perimeter_connect_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "px", "py", ZCELL,
         )
         .join(zcov, "cell")
-        .filter(F.expr(_ray3z("px", "py")))
+        .filter(F.expr(sql_ray3("px", "py")))
         .groupBy("zone_id")
         .agg(
             F.sum(F.expr("CASE WHEN fcode = 'AL015' THEN 1 ELSE 0 END")).alias("n2"),
@@ -330,7 +313,7 @@ pin AS MATERIALIZED (
   JOIN geo_zones z
     ON p.lon >= LEAST(z.x1, z.x2, z.x3) AND p.lon <= GREATEST(z.x1, z.x2, z.x3)
    AND p.lat >= LEAST(z.y1, z.y2, z.y3) AND p.lat <= GREATEST(z.y1, z.y2, z.y3)
-  WHERE {_ray3z('p.lon', 'p.lat').replace('x1', 'z.x1').replace('y1', 'z.y1').replace('x2', 'z.x2').replace('y2', 'z.y2').replace('x3', 'z.x3').replace('y3', 'z.y3')}
+  WHERE {sql_ray3('p.lon', 'p.lat', tri='z.')}
   GROUP BY z.zone_id
 )
 SELECT lid AS id1, aid AS id2, 'LLAINT' AS errtype,

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 #: the reference's FULL 277-entry country-trigraph table, transcribed from
 #: the MIT-licensed data array (IsTrigraph.c:14 — ISO-3166-style alpha-3
 #: codes plus NGA multi-country composites like ACGU/APFS/BWCS); data, not
-#: code, same footing as the MGCP TRD3 tables in functions/mgcp3_tables.py.
+#: code, same footing as the schema tables in functions/schema_models.json.
 VALID_TRIGRAPHS = frozenset([
     "ABW", "ACGU", "AFG", "AGO", "AIA", "ALA", "ALB", "AND", "ANT", "APFS",
     "ARE", "ARG", "ARM", "ASM", "ATA", "ATF", "ATG", "AUS", "AUT", "AZE",

@@ -23,7 +23,7 @@ Layers (mirroring GAIT's Lindex layer concept, share_linux.h:782 `Lindex`):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 TESTDATA_TABLES = (
     "region",
@@ -310,12 +310,16 @@ def register_geo_views(spark: SparkSession, sf_dir: str) -> None:
         spark.sql(sql).createOrReplaceTempView(name)
 
 
-def geo_view(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
-    return spark.table(name)
-
-
 def oracle_cte(*names: str) -> str:
     """DuckDB CTE prefix defining the requested geometry views."""
     parts = [f"{n} AS ({GEO_VIEWS[n]})" for n in names]
     return "WITH " + ",\n".join(parts)
+
+
+def oracle_materialized(sql: str) -> str:
+    """Mark the heavy geometry-view CTEs of an oracle MATERIALIZED, so DuckDB
+    synthesizes each once instead of inlining it per reference."""
+    for v in ("geo_lines", "geo_vlines", "geo_vareas", "geo_sites",
+              "geo_lines_dup", "geo_points"):
+        sql = sql.replace(f"{v} AS (", f"{v} AS MATERIALIZED (")
+    return sql

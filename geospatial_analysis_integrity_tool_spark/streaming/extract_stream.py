@@ -17,22 +17,19 @@ from ..sources.pages import extract_features
 
 
 def stream_extract_to_parquet(
-    pages_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
+    pages_stream: DataFrame, out_dir: str, checkpoint_dir: str
 ) -> StreamingQuery:
     """pages readStream -> extract_features -> parquet append, exactly-once
     via the streaming checkpoint; availableNow processes the backlog and
-    stops (the batch-parity mode used in tests)."""
+    stops (the batch-parity mode the replay harness awaits)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         feats = extract_features(batch_df)
         feats.write.mode("append").parquet(out_dir)
 
-    writer = pages_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        pages_stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -3,10 +3,15 @@
 The verdict's round-5 mandate: the loop must exit because the per-iteration
 delta hit zero, not because an unrolled count ran out — the same
 sweep-until-no-change contract as the reference's transitive-counter
-propagation loop (moregeomchecks.c:2774 PropagateTransitiveCounters).
+propagation loop (moregeomchecks.c:2774 PropagateTransitiveCounters).  A
+loop that runs out of rounds raises instead of returning partial results.
 """
 
 from __future__ import annotations
+
+import pytest
+
+from tests.conftest import SF_SMALL
 
 
 def test_pagerank_exits_by_delta_not_count(spark):
@@ -15,11 +20,10 @@ def test_pagerank_exits_by_delta_not_count(spark):
         pagerank_converged,
     )
 
-    ranks, iters, converged = pagerank_converged(spark, 500)
-    assert converged, "loop must exit via the delta==0 test"
+    ranks, iters = pagerank_converged(spark, 500)
     assert iters == _PAGERANK_FIXED_POINT_ITERS_500
     # the fixed point is genuinely fixed: one more sweep changes nothing
-    assert iters < 100  # not the max_iters fallback
+    assert iters < 100
     assert ranks.count() == 500
 
 
@@ -31,15 +35,27 @@ def test_pagerank_fixed_point_is_idempotent(spark):
         pagerank_converged,
     )
 
-    ranks, iters, _ = pagerank_converged(spark, 200)
-    again, iters2, converged2 = pagerank_converged(spark, 200, max_iters=iters + 5)
-    assert converged2 and iters2 == iters
+    ranks, iters = pagerank_converged(spark, 200)
+    again, iters2 = pagerank_converged(spark, 200, max_iters=iters + 5)
+    assert iters2 == iters
     diff = (
         ranks.join(again.withColumnRenamed("r", "r2"), "url")
         .filter(F.col("r") != F.col("r2"))
         .count()
     )
     assert diff == 0
+
+
+def test_pagerank_empty_graph_converges_in_one_round(spark):
+    """No pages: the first round's delta is null, which counts as converged
+    (as for CC and k-means) instead of spinning to max_iters."""
+    from geospatial_analysis_integrity_tool_spark.queries.linkgraph import (
+        pagerank_converged,
+    )
+
+    ranks, iters = pagerank_converged(spark, 0)
+    assert iters == 1
+    assert ranks.count() == 0
 
 
 def test_kmeans_exits_by_stable_assignment(spark):
@@ -51,8 +67,7 @@ def test_kmeans_exits_by_stable_assignment(spark):
     )
 
     register_testdata_views(spark, "/root/testdata/sf0.01")
-    a, iters, converged = kmeans_converged(spark)
-    assert converged, "loop must exit via the zero-switch test"
+    a, iters = kmeans_converged(spark)
     assert iters == _KMEANS_STABLE_ITERS_SF001
     assert iters < 100
     # all clusters alive at the fixture's stable assignment
@@ -60,8 +75,8 @@ def test_kmeans_exits_by_stable_assignment(spark):
 
 
 def test_kmeans_empty_corpus_converges_trivially(spark):
-    """Zero embeddings: the loop returns an empty converged assignment
-    instead of crashing on the dims probe."""
+    """Zero embeddings: the loop returns an empty assignment after one
+    round instead of crashing on the dims probe."""
     from geospatial_analysis_integrity_tool_spark.queries.vectorq import (
         kmeans_converged,
     )
@@ -69,7 +84,31 @@ def test_kmeans_empty_corpus_converges_trivially(spark):
     spark.createDataFrame(
         [], "vec_id bigint, embedding array<float>"
     ).createOrReplaceTempView("embeddings")
-    a, iters, converged = kmeans_converged(spark)
-    assert converged
+    a, iters = kmeans_converged(spark)
+    assert iters == 1
     assert a.count() == 0
     assert set(a.columns) == {"vec_id", "k", "dist"}
+
+
+def test_pagerank_raises_when_not_converged(spark):
+    """Two rounds cannot reach the fixed point: the loop must raise, not
+    hand back partial ranks."""
+    from geospatial_analysis_integrity_tool_spark.queries.linkgraph import (
+        pagerank_converged,
+    )
+
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        pagerank_converged(spark, 200, max_iters=2)
+
+
+def test_kmeans_raises_when_not_converged(spark):
+    """The sf0.001 assignment needs 18 rounds; a 2-round budget must raise,
+    not hand back a partial assignment."""
+    from geospatial_analysis_integrity_tool_spark.queries.vectorq import (
+        kmeans_converged,
+        register_testdata_views,
+    )
+
+    register_testdata_views(spark, SF_SMALL)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        kmeans_converged(spark, max_iters=2)

@@ -105,6 +105,9 @@ def test_streaming_dedup_first_seen(spark, tmp_path):
     LATER micro-batch is suppressed; each identity emits exactly once."""
     import pandas as pd
 
+    from geospatial_analysis_integrity_tool_spark.streaming.replay import (
+        replay_to_memory,
+    )
     from geospatial_analysis_integrity_tool_spark.streaming.stateful import (
         dedup_first_seen,
     )
@@ -127,15 +130,7 @@ def test_streaming_dedup_first_seen(spark, tmp_path):
     out = dedup_first_seen(
         stream, key_cols=["errtype", "feature_id"], payload_cols=["magnitude_mm"]
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    replay_to_memory(out, "dedup_out")
     rows = {
         (r.errtype, r.feature_id, r.magnitude_mm)
         for r in spark.sql("SELECT * FROM dedup_out").collect()

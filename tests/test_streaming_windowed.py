@@ -12,6 +12,9 @@ def test_windowed_replay_drops_late_rows(spark):
         WIN_S,
         write_windowed_fixture,
     )
+    from geospatial_analysis_integrity_tool_spark.streaming.replay import (
+        replay_to_memory,
+    )
 
     src = (
         spark.readStream.schema("key long, ts timestamp")
@@ -23,14 +26,8 @@ def test_windowed_replay_drops_late_rows(spark):
         .groupBy(F.window("ts", f"{WIN_S} seconds"), "key")
         .agg(F.count("*").alias("n"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("wmtest_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    # a replay timeout raises instead of leaving a partial sink to assert on
+    q = replay_to_memory(agg, "wmtest_sink")
     dropped = sum(
         o.get("numRowsDroppedByWatermark", 0)
         for p in q.recentProgress

@@ -6,18 +6,16 @@ Sources (MIT-licensed public data under ``/root/reference/GAIT 26 Source``):
 
 * ``tds_illegals.c``   — TDS4_ISF_Headers[225] + the 225x225 'n/e/g/w'
   illegal-structure-formation matrix (consumed by interface2.c:8059).
-* ``tds6_class.c``     — TDS6_class_codes[321].
-* ``tds6_attr.c``      — TDS6_attr_codes[552] + TDS6_attr_types[552].
-* ``tds6_enum.c``      — TDS6_enum_codes[7675] +
-  TDS6_attr_enum_count/start[552] (per-attribute slices).
+* ``{model}_class.c`` / ``_attr.c`` / ``_enum.c`` — every schema model's
+  class, attribute, type and enum tables (per-attribute enum slices).
 
 Emits:
 
 * ``geospatial_analysis_integrity_tool_spark/functions/tds_isf_table.py`` — headers + the matrix
   as ONE 50,625-char string (row-major, ``matrix[i*225+j]``), the layout
   the C consumer indexes directly.
-* ``geospatial_analysis_integrity_tool_spark/functions/tds6_tables.py`` — class codes, attr
-  codes/types, attr->enum-values dict (same shape as mgcp3_tables.py).
+* ``geospatial_analysis_integrity_tool_spark/functions/schema_models.json`` — all 16 models'
+  tables, the single schema-table source the ATTR_* queries read.
 """
 
 from __future__ import annotations
@@ -120,49 +118,6 @@ assert len(ISF6_MATRIX) == ISF6_N * ISF6_N
     counts = {c: matrix.count(c) for c in "negw"}
     counts6 = {c: matrix6.count(c) for c in "negw"}
     print("tds_isf_table.py:", n, "+", n6, "headers,", counts, counts6)
-
-
-def emit_tds6() -> None:
-    ctext = (REF / "tds6_class.c").read_text(errors="replace")
-    atext = (REF / "tds6_attr.c").read_text(errors="replace")
-    etext = (REF / "tds6_enum.c").read_text(errors="replace")
-    classes = parse_string_array(ctext, "TDS6_class_codes")
-    attrs = parse_string_array(atext, "TDS6_attr_codes")
-    types = parse_string_array(atext, "TDS6_attr_types")
-    enum_codes = parse_string_array(etext, "TDS6_enum_codes")
-    counts = parse_int_array(etext, "TDS6_attr_enum_count")
-    starts = parse_int_array(etext, "TDS6_attr_enum_start")
-    assert len(attrs) == len(types) == len(counts) == len(starts)
-    enums: dict[str, list[str]] = {}
-    for a, c, s in zip(attrs, counts, starts):
-        if c > 0 and s >= 0:
-            enums[a] = enum_codes[s : s + c]
-    out = f'''"""TDS 6.x schema tables at REAL size ({len(classes)} feature classes,
-{len(attrs)} attributes, {len(enum_codes)} enum rows -> {len(enums)} enumerated attributes).
-
-Transcribed from the reference's MIT-licensed public data tables
-(tds6_class.c:21 TDS6_class_codes; tds6_attr.c:20 TDS6_attr_codes /
-:1130 TDS6_attr_types; tds6_enum.c:20 TDS6_enum_codes +
-:15376 TDS6_attr_enum_count / :15931 TDS6_attr_enum_start).
-Pure data, no logic — the second full-size domain volume (after MGCP
-TRD3, functions/mgcp3_tables.py) for the ATTR_* conformance family.
-"""
-
-CLASS_CODES = {classes!r}
-
-ATTR_CODES = {attrs!r}
-
-ATTR_TYPES = {types!r}
-
-ATTR_ENUMS = {enums!r}
-'''
-    (OUT / "tds6_tables.py").write_text(out)
-    print(
-        "tds6_tables.py:",
-        len(classes), "classes,", len(attrs), "attrs,",
-        sum(len(v) for v in enums.values()), "enum values over",
-        len(enums), "attrs",
-    )
 
 
 def emit_labels() -> None:
@@ -376,7 +331,6 @@ def emit_nunanpo() -> None:
 
 if __name__ == "__main__":
     emit_isf()
-    emit_tds6()
     emit_all_models()  # supersedes the older two-model emit_labels()
     emit_mgcp_combos()
     emit_nunanpo()
