@@ -19,10 +19,9 @@ via queries/modeldomains.py.
 from __future__ import annotations
 
 import json
-import os
+import pkgutil
 from functools import lru_cache
 
-_JSON_PATH = os.path.join(os.path.dirname(__file__), "schema_models.json")
 
 #: attr types whose values must parse as numbers (ATTR_DT semantics)
 NUMERIC_TYPES = {"Short Integer", "Integer", "Long Integer", "Real", "Float"}
@@ -30,8 +29,8 @@ NUMERIC_TYPES = {"Short Integer", "Integer", "Long Integer", "Real", "Float"}
 
 @lru_cache(maxsize=1)
 def all_models() -> dict[str, dict]:
-    with open(_JSON_PATH) as f:
-        return json.load(f)
+    # pkgutil, not open(): the package may be imported from a --py-files zip
+    return json.loads(pkgutil.get_data(__package__, "schema_models.json"))
 
 
 def model(name: str) -> dict:

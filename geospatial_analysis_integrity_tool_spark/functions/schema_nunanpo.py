@@ -14,16 +14,14 @@ instances may further allow all nunanpo values or all-less-'Unknown'
 from __future__ import annotations
 
 import json
-import os
+import pkgutil
 from functools import lru_cache
-
-_JSON_PATH = os.path.join(os.path.dirname(__file__), "schema_nunanpo.json")
 
 
 @lru_cache(maxsize=1)
 def all_nunanpo() -> dict[str, dict[str, list[str]]]:
-    with open(_JSON_PATH) as f:
-        return json.load(f)
+    # pkgutil, not open(): the package may be imported from a --py-files zip
+    return json.loads(pkgutil.get_data(__package__, "schema_nunanpo.json"))
 
 
 def nunanpo_enums(model: str) -> dict[str, list[str]]:

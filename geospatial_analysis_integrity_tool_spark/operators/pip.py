@@ -1,20 +1,34 @@
-"""Point-in-polygon spatial hash join (the north rule's flagship operator).
+"""Cell-grid spatial hash joins: the point-in-polygon flagship and the
+primitives every cell join in the package shares.
 
-Strategy (replaces GAIT's per-region nested loop, CheckRegion TT.c:43916 +
-PointInsidePoly TT.c:6920):
+GAIT finds cross-tile pairs by also loading each region's neighbours
+(CheckRegion TT.c:44027-44030, FindApplicableNeighborFeatures
+geomchecks.c:4602).  The Spark analogue copies each feature into the cells
+its bbox or 3x3 k-ring touches, equi-joins on the packed cell key, then
+refines exactly.  This module owns one implementation of each step:
 
-1. **Cell encode** both sides onto an integer lon/lat grid: points to their
-   single cell, polygons to every cell their bbox covers (the Spark analogue of
-   GAIT's neighbor-region duplication, TT.c:44027-44030 /
-   FindApplicableNeighborFeatures geomchecks.c:4602).
+* ``cell_id`` packs (ix, iy) into one BIGINT key;
+* ``with_point_cell`` puts a point in its single cell;
+* ``with_kring_cells`` copies a point into its 3x3 k-ring;
+* ``explode_bbox_cells`` copies a feature into every cell its bbox covers;
+* ``cell_deg_for_tolerance`` sizes the cell so a k=1 ring captures every
+  pair within a metric tolerance.
+
+Point-in-polygon (replaces GAIT's per-region nested loop, CheckRegion
+TT.c:43916 + PointInsidePoly TT.c:6920):
+
+1. **Cell encode** both sides: points to their single cell, polygons to
+   every cell their bbox covers.
 2. **Equi-join on cell id.** The polygon side carries only (poly_id, bbox,
    cell) — never vertex arrays — so the join output stays narrow.  Catalyst
-   broadcasts the cover when it is small; AQE splits skewed cells otherwise.
+   broadcasts the cover when it is small; AQE splits skewed cells otherwise,
+   and ``pip_join_salted`` splits hot cells explicitly.
 3. **Exact refine** in a ``mapInPandas`` kernel: polygon vertex arrays travel
    once as a **Spark broadcast** (poly_id -> padded numpy rings), the kernel
    groups each Arrow batch by poly_id and runs the vectorized ray cast.
-   Shipping vertices per-candidate-row through Arrow was measured 5-10x
-   slower and anti-scaled (serialization bound) — see SCALE.md.
+   ``pip_join`` and ``pip_join_salted`` share this refine and differ only in
+   the join.  Shipping vertices per-candidate-row through Arrow was measured
+   5-10x slower and anti-scaled (serialization bound) — see SCALE.md.
 
 Because the probe side occupies exactly one cell, every (point, polygon) pair
 can only meet in that cell — the join output is already duplicate-free and
@@ -28,7 +42,8 @@ The bbox prefilter before the kernel mirrors GAIT's minxvtx/maxxvtx prefilter
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -62,8 +77,9 @@ def sql_ray3(px: str, py: str, tri: str = "") -> str:
     return f"(({edge(1, 2)} + {edge(2, 3)} + {edge(3, 1)}) % 2 = 1)"
 
 
-#: grid cell width in degrees for the spatial hash; 1 deg ~ 111 km. Chosen per
-#: dataset density by plans/partitioning.choose_cell_deg at scale.
+#: default grid cell width in degrees for the PIP spatial hash; 1 deg ~ 111 km.
+#: A fixed width: callers pass their own, and tolerance joins derive theirs
+#: with cell_deg_for_tolerance.
 DEFAULT_CELL_DEG = 4.0
 
 
@@ -78,6 +94,7 @@ def cell_id(ix: Column, iy: Column) -> Column:
 
 
 def with_point_cell(df: DataFrame, lon: str, lat: str, cell_deg: float) -> DataFrame:
+    """One row per feature, keyed by the single cell its point falls in."""
     ix = F.floor(F.col(lon) / F.lit(cell_deg))
     iy = F.floor(F.col(lat) / F.lit(cell_deg))
     return df.withColumn("cell", cell_id(ix, iy))
@@ -104,16 +121,58 @@ def explode_bbox_cells(
     )
 
 
-def _candidates(
-    points: DataFrame,
-    polys_meta: DataFrame,
-    lon: str,
-    lat: str,
-    cell_deg: float,
+def with_kring_cells(df: DataFrame, lon: str, lat: str, cell_deg: float) -> DataFrame:
+    """One row per (feature, cell of its 3x3 k-ring): joined on ``cell``
+    against :func:`with_point_cell`, every pair less than one cell width
+    apart per axis meets exactly once."""
+    ix = F.floor(F.col(lon) / F.lit(cell_deg))
+    iy = F.floor(F.col(lat) / F.lit(cell_deg))
+    one_ring = F.array(F.lit(-1), F.lit(0), F.lit(1))
+    df = df.withColumn("_dx", F.explode(one_ring)).withColumn(
+        "_dy", F.explode(one_ring)
+    )
+    return df.withColumn(
+        "cell", cell_id(ix + F.col("_dx"), iy + F.col("_dy"))
+    ).drop("_dx", "_dy")
+
+
+def cell_deg_for_tolerance(tol_m: float, max_abs_lat_deg: float) -> float:
+    """Cell width (deg) at which a k=1 ring captures every pair within tol_m.
+
+    A pair within tol_m spans at most tol_m / (111319.5 * cos(lat)) degrees
+    of longitude, which exceeds its latitude span, so the width is taken at
+    the worst-case |latitude| of the data (clamped to 89 deg), widened by
+    0.1% and floored at the 1e-6 deg that :func:`cell_id` can pack.
+    """
+    m_per_deg_lon = 111319.5 * math.cos(math.radians(min(abs(max_abs_lat_deg), 89.0)))
+    return max(tol_m / m_per_deg_lon * 1.001, 1e-6)
+
+
+def _poly_cells(
+    polys: DataFrame, poly_id: str, xs: str, ys: str, cell_deg: float, *extra: Column
 ) -> DataFrame:
-    """Cell join + bbox prefilter; polys_meta = (poly_id, _minx.., cell)."""
-    pts_cells = with_point_cell(points, lon, lat, cell_deg)
-    joined = pts_cells.join(polys_meta, "cell")
+    """(poly_id, *extra, _minx, _maxx, _miny, _maxy, cell): each polygon's
+    bbox copied into every cell it covers — never the vertex arrays unless
+    ``extra`` carries them."""
+    return explode_bbox_cells(
+        polys.select(
+            F.col(poly_id),
+            *extra,
+            F.array_min(xs).alias("_minx"),
+            F.array_max(xs).alias("_maxx"),
+            F.array_min(ys).alias("_miny"),
+            F.array_max(ys).alias("_maxy"),
+        ),
+        "_minx",
+        "_maxx",
+        "_miny",
+        "_maxy",
+        cell_deg,
+    )
+
+
+def _in_bbox(joined: DataFrame, lon: str, lat: str) -> DataFrame:
+    """bbox prefilter on the cell-join output, then drop the join columns."""
     return joined.filter(
         (F.col(lon) >= F.col("_minx"))
         & (F.col(lon) <= F.col("_maxx"))
@@ -137,7 +196,6 @@ def pip_join(
     xs: str = "xs",
     ys: str = "ys",
     cell_deg: float = DEFAULT_CELL_DEG,
-    broadcast_max_vertex_bytes: int = BROADCAST_MAX_VERTEX_BYTES,
     kernel: str = "fast",
 ) -> DataFrame:
     """points (id, lon, lat, ...) x polys (id, xs: array, ys: array) -> matches.
@@ -146,6 +204,12 @@ def pip_join(
     cheap aggregate; codebook-sized sets broadcast (fastest, zero shuffle),
     while landcover-mosaic-sized sets (millions of rings) take the
     array-shipping variant instead of dying on a driver collect.
+
+    kernel="gait" swaps the refine predicate for the REFERENCE-EXACT
+    PointInsidePoly transcription (functions/gait_parity.py, fuzzed
+    bit-for-bit against the compiled C — TT.c:6920): identical answers off
+    the boundary-degenerate set, reference tie-breaks ON it (vertex-on-ray
+    collinear runs).  The shipped variant always runs the fast kernel.
     """
     est = polys.select(
         F.max(F.size(F.col(xs))).alias("mv"), F.count("*").alias("np")
@@ -156,57 +220,49 @@ def pip_join(
     # total vertex count — one 10k-vertex coastline among a million small
     # rings makes the padded matrix 10k wide for every row.  Route on the
     # true padded size, not the vertex sum.
-    if npoly * max_verts * 16 > broadcast_max_vertex_bytes:
+    if npoly * max_verts * 16 > BROADCAST_MAX_VERTEX_BYTES:
         return pip_join_shipped(
             points, polys, point_id, lon, lat, poly_id, xs, ys, cell_deg
         )
-    return _pip_join_broadcast(
-        points, polys, point_id, lon, lat, poly_id, xs, ys, cell_deg, kernel
+    return _pip_refine_broadcast(
+        points,
+        polys,
+        lambda pts_cells, poly_cells: pts_cells.join(poly_cells, "cell"),
+        lon, lat, poly_id, xs, ys, cell_deg, kernel,
     )
 
 
-def _pip_join_broadcast(
+def _pip_refine_broadcast(
     points: DataFrame,
     polys: DataFrame,
-    point_id: str = "point_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    poly_id: str = "poly_id",
-    xs: str = "xs",
-    ys: str = "ys",
-    cell_deg: float = DEFAULT_CELL_DEG,
-    kernel: str = "fast",
+    join: Callable[[DataFrame, DataFrame], DataFrame],
+    lon: str,
+    lat: str,
+    poly_id: str,
+    xs: str,
+    ys: str,
+    cell_deg: float,
+    kernel: str,
 ) -> DataFrame:
-    """Broadcast-build variant: polygon vertices collected once and broadcast
-    to the kernel workers (row-identical to the shipped variant).
-
-    kernel="gait" swaps the refine predicate for the REFERENCE-EXACT
-    PointInsidePoly transcription (functions/gait_parity.py, fuzzed
-    bit-for-bit against the compiled C — TT.c:6920): identical answers off
-    the boundary-degenerate set, reference tie-breaks ON it (vertex-on-ray
-    collinear runs)."""
+    """Broadcast-build refine shared by :func:`pip_join` and
+    :func:`pip_join_salted`: polygon vertices are collected once and
+    broadcast to the kernel workers (row-identical to the shipped variant);
+    ``join(point_cells, poly_cells)`` pairs the two cell-encoded sides."""
     spark = points.sparkSession
     ppd = polys.select(poly_id, xs, ys).toPandas()
     ids = ppd[poly_id].to_numpy()
-    X, Y, V = pad_rings(ppd[xs].tolist(), ppd[ys].tolist())
+    X, Y, _ = pad_rings(ppd[xs].tolist(), ppd[ys].tolist())
     index = {int(p): i for i, p in enumerate(ids)}
     bpolys = spark.sparkContext.broadcast((index, X, Y))
 
-    polys_meta = explode_bbox_cells(
-        polys.select(
-            F.col(poly_id),
-            F.array_min(xs).alias("_minx"),
-            F.array_max(xs).alias("_maxx"),
-            F.array_min(ys).alias("_miny"),
-            F.array_max(ys).alias("_maxy"),
+    cands = _in_bbox(
+        join(
+            with_point_cell(points, lon, lat, cell_deg),
+            _poly_cells(polys, poly_id, xs, ys, cell_deg),
         ),
-        "_minx",
-        "_maxx",
-        "_miny",
-        "_maxy",
-        cell_deg,
+        lon,
+        lat,
     )
-    cands = _candidates(points, polys_meta, lon, lat, cell_deg)
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in cands.schema.fields
     )
@@ -252,7 +308,6 @@ def pip_join_salted(
     ys: str = "ys",
     cell_deg: float = DEFAULT_CELL_DEG,
     target_rows_per_task: int = 100_000,
-    kernel: str = "fast",
 ) -> DataFrame:
     """pip_join with the hot-cell salt plan applied (north rule: "skew
     detected per-cell-histogram and hot cells split before shuffle").
@@ -263,70 +318,15 @@ def pip_join_salted(
     """
     from ..plans.partitioning import cell_histogram, salt_plan, salted_join
 
-    spark = points.sparkSession
-    ppd = polys.select(poly_id, xs, ys).toPandas()
-    ids = ppd[poly_id].to_numpy()
-    X, Y, V = pad_rings(ppd[xs].tolist(), ppd[ys].tolist())
-    index = {int(p): i for i, p in enumerate(ids)}
-    bpolys = spark.sparkContext.broadcast((index, X, Y))
+    def join(pts_cells: DataFrame, poly_cells: DataFrame) -> DataFrame:
+        plan = salt_plan(
+            cell_histogram(pts_cells), target_rows_per_task=target_rows_per_task
+        )
+        return salted_join(pts_cells, poly_cells, plan, probe_id=point_id)
 
-    polys_meta = explode_bbox_cells(
-        polys.select(
-            F.col(poly_id),
-            F.array_min(xs).alias("_minx"),
-            F.array_max(xs).alias("_maxx"),
-            F.array_min(ys).alias("_miny"),
-            F.array_max(ys).alias("_maxy"),
-        ),
-        "_minx",
-        "_maxx",
-        "_miny",
-        "_maxy",
-        cell_deg,
+    return _pip_refine_broadcast(
+        points, polys, join, lon, lat, poly_id, xs, ys, cell_deg, "fast"
     )
-    pts_cells = with_point_cell(points, lon, lat, cell_deg)
-    plan = salt_plan(
-        cell_histogram(pts_cells), target_rows_per_task=target_rows_per_task
-    )
-    joined = salted_join(pts_cells, polys_meta, plan, probe_id=point_id)
-    cands = joined.filter(
-        (F.col(lon) >= F.col("_minx"))
-        & (F.col(lon) <= F.col("_maxx"))
-        & (F.col(lat) >= F.col("_miny"))
-        & (F.col(lat) <= F.col("_maxy"))
-    ).drop("cell", "_minx", "_maxx", "_miny", "_maxy")
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in cands.schema.fields
-    )
-
-    if kernel == "gait":
-        from ..functions.gait_parity import point_inside_poly_gait_ring
-
-        ring_test = lambda px, py, rx, ry: point_inside_poly_gait_ring(
-            px, py, rx, ry
-        ).astype(bool)
-    else:
-        ring_test = pip_ray_cast_ring
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        index_, X_, Y_ = bpolys.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.reset_index(drop=True)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for pid, grp in pdf.groupby(poly_id, sort=False):
-                i = index_[int(pid)]
-                ring_x = X_[i][~np.isnan(X_[i])]
-                ring_y = Y_[i][~np.isnan(Y_[i])]
-                pos = grp.index.to_numpy()
-                keep[pos] = ring_test(
-                    grp[lon].to_numpy(), grp[lat].to_numpy(), ring_x, ring_y
-                )
-            if keep.any():
-                yield pdf.loc[keep]
-
-    return cands.mapInPandas(refine, schema=out_schema)
 
 
 @F.pandas_udf(BooleanType())
@@ -352,22 +352,10 @@ def pip_join_shipped(
 ) -> DataFrame:
     """Array-shipping variant for polygon sets too large to broadcast: vertex
     arrays ride the join (heavier Arrow transfer) instead of a broadcast."""
-    polys_b = polys.select(
-        F.col(poly_id),
-        F.col(xs).alias("_pxs"),
-        F.col(ys).alias("_pys"),
-        F.array_min(xs).alias("_minx"),
-        F.array_max(xs).alias("_maxx"),
-        F.array_min(ys).alias("_miny"),
-        F.array_max(ys).alias("_maxy"),
+    vertices = (F.col(xs).alias("_pxs"), F.col(ys).alias("_pys"))
+    poly_cells = _poly_cells(polys, poly_id, xs, ys, cell_deg, *vertices)
+    cands = _in_bbox(
+        with_point_cell(points, lon, lat, cell_deg).join(poly_cells, "cell"), lon, lat
     )
-    polys_cells = explode_bbox_cells(polys_b, "_minx", "_maxx", "_miny", "_maxy", cell_deg)
-    pts_cells = with_point_cell(points, lon, lat, cell_deg)
-    joined = pts_cells.join(polys_cells, "cell").filter(
-        (F.col(lon) >= F.col("_minx"))
-        & (F.col(lon) <= F.col("_maxx"))
-        & (F.col(lat) >= F.col("_miny"))
-        & (F.col(lat) <= F.col("_maxy"))
-    )
-    matched = joined.filter(_pip_udf(F.col(lon), F.col(lat), F.col("_pxs"), F.col("_pys")))
-    return matched.drop("cell", "_pxs", "_pys", "_minx", "_maxx", "_miny", "_maxy")
+    inside = _pip_udf(F.col(lon), F.col(lat), F.col("_pxs"), F.col("_pys"))
+    return cands.filter(inside).drop("_pxs", "_pys")

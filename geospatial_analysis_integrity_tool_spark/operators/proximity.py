@@ -5,7 +5,7 @@ GAIT finds near pairs by scanning each region plus its neighbors
 The Spark-native shape is a **k-ring cell join**:
 
 1. choose a cell width >= tolerance (so any qualifying pair is in the same or
-   an adjacent cell),
+   an adjacent cell; ``cell_deg_for_tolerance``),
 2. duplicate the *right* side into its 3x3 cell neighborhood (k-ring, k=1) —
    cheap explode of 9 literals,
 3. equi-join on cell, dedupe the pair with ``a.id < b.id`` (GAIT's pair memo
@@ -13,6 +13,12 @@ The Spark-native shape is a **k-ring cell join**:
 4. refine with the exact distance expression — evaluated **JVM-side** from the
    same SQL text the DuckDB oracle runs, so both engines compare bit-identical
    doubles against the tolerance.
+
+The cell primitives (``with_point_cell``, ``with_kring_cells``,
+``explode_bbox_cells``, ``cell_deg_for_tolerance``) live in operators/pip.py;
+this module only composes them.  The one ring built here is the long-segment
+sampler's in ``point_seg_candidates``, which also filters against the previous
+sample's ring.
 
 No UDF in this operator at all: whole-stage codegen end to end.
 """
@@ -28,25 +34,13 @@ from ..functions.geodesy import (
     sql_point_seg_dist_m,
     with_point_seg_dist_m,
 )
-from .pip import cell_id, explode_bbox_cells
-
-
-def _with_cell(df: DataFrame, lon: str, lat: str, cell_deg: float) -> DataFrame:
-    ix = F.floor(F.col(lon) / F.lit(cell_deg))
-    iy = F.floor(F.col(lat) / F.lit(cell_deg))
-    return df.withColumn("cell", cell_id(ix, iy))
-
-
-def _with_kring_cells(df: DataFrame, lon: str, lat: str, cell_deg: float) -> DataFrame:
-    ix = F.floor(F.col(lon) / F.lit(cell_deg))
-    iy = F.floor(F.col(lat) / F.lit(cell_deg))
-    one_ring = F.array(F.lit(-1), F.lit(0), F.lit(1))
-    df = df.withColumn("_dx", F.explode(one_ring)).withColumn(
-        "_dy", F.explode(one_ring)
-    )
-    return df.withColumn(
-        "cell", cell_id(ix + F.col("_dx"), iy + F.col("_dy"))
-    ).drop("_dx", "_dy")
+from .pip import (
+    cell_deg_for_tolerance,
+    cell_id,
+    explode_bbox_cells,
+    with_kring_cells,
+    with_point_cell,
+)
 
 
 def point_proximity_pairs(
@@ -63,12 +57,9 @@ def point_proximity_pairs(
 
     Returns (id_a, id_b, dist_mm) with id_a < id_b and dist_mm = floor(m*1000).
 
-    Cell sizing: a pair within tol_m spans at most tol_m / (111319.5 *
-    cos(max_abs_lat)) degrees of LONGITUDE, which exceeds the latitude span —
-    the k=1 ring only guarantees capture if the cell is at least that wide, so
-    the width is derived from the worst-case latitude of the dataset (pass the
-    true data bound for tighter cells; at scale this comes from the cell
-    histogram stats).
+    Cell sizing: ``cell_deg_for_tolerance`` at the worst-case latitude of the
+    dataset (pass the true data bound for tighter cells; at scale this comes
+    from the cell histogram stats).
 
     frame: "geodetic" (degrees in, equirect meters — Ctype() == 1) or
     "euclidean" (PROJECTED meters in, planar distance — the reference's
@@ -76,21 +67,18 @@ def point_proximity_pairs(
     projected, TT.c:7151/7128, Ctype() SEEIT_API.c:122).  In the euclidean
     frame the cell width is tol_m itself (coords already meters).
     """
-    import math
-
     if cell_deg is None:
         if frame == "euclidean":
             cell_deg = tol_m * 1.001
         else:
-            worst_mlon = 111319.5 * math.cos(math.radians(max_abs_lat_deg))
-            cell_deg = max(tol_m / worst_mlon * 1.001, 1e-6)
-    left = _with_cell(points, lon, lat, cell_deg).select(
+            cell_deg = cell_deg_for_tolerance(tol_m, max_abs_lat_deg)
+    left = with_point_cell(points, lon, lat, cell_deg).select(
         F.col(id_col).alias("id_a"),
         F.col(lon).alias("_xa"),
         F.col(lat).alias("_ya"),
         "cell",
     )
-    right = _with_kring_cells(points, lon, lat, cell_deg).select(
+    right = with_kring_cells(points, lon, lat, cell_deg).select(
         F.col(id_col).alias("id_b"),
         F.col(lon).alias("_xb"),
         F.col(lat).alias("_yb"),
@@ -128,20 +116,16 @@ def knn_points(
     kNN operator of the north star): k-ring candidate join + per-point window
     rank.  Returns (site_id, neighbor_id, rank, dist_mm), rank 1..k by
     (distance, neighbor id)."""
-    import math
-
     from pyspark.sql.window import Window
 
-    cell_deg = max(
-        radius_m / (111319.5 * math.cos(math.radians(max_abs_lat_deg))) * 1.001, 1e-6
-    )
-    left = _with_cell(points, lon, lat, cell_deg).select(
+    cell_deg = cell_deg_for_tolerance(radius_m, max_abs_lat_deg)
+    left = with_point_cell(points, lon, lat, cell_deg).select(
         F.col(id_col).alias("site_id"),
         F.col(lon).alias("_xa"),
         F.col(lat).alias("_ya"),
         "cell",
     )
-    right = _with_kring_cells(points, lon, lat, cell_deg).select(
+    right = with_kring_cells(points, lon, lat, cell_deg).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(lon).alias("_xb"),
         F.col(lat).alias("_yb"),
@@ -279,7 +263,7 @@ def point_seg_candidates(
     segs_cells = short_cells.unionByName(long_cells)
 
     pts = points.select(F.col(point_id), F.col(px).alias("_px"), F.col(py).alias("_py"))
-    pts_cells = _with_kring_cells(pts, "_px", "_py", cell_deg)
+    pts_cells = with_kring_cells(pts, "_px", "_py", cell_deg)
 
     pairs = pts_cells.join(segs_cells, "cell")
     # cheap DEGREE-space corridor prefilter before the poly-cos meter refine:

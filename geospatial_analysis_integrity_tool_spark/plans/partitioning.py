@@ -5,9 +5,10 @@ The reference sizes its region grid from feature density:
 ``featurefraction = featureverts / 5e6; RegionSize ~ extent / (262..329 *
 sqrt(ff))`` (TTformat.c:28570-28612) and special-cases features much larger
 than a region (``AreaSizeCutoff = RegionSize^2 * 4``, TT.c:44196).  The Spark
-engine replaces both with explicit, data-derived decisions:
+engine does not size cells from density: each caller passes its cell width
+(tolerance joins derive theirs with ``operators.pip.cell_deg_for_tolerance``).
+Hot cells are split with explicit, data-derived decisions instead:
 
-* ``choose_cell_deg``      — the same density law, solved for cell width;
 * ``cell_histogram``       — one cheap aggregation over the encoded cells;
 * ``salt_plan``            — cells whose row count exceeds the per-task target
   get a salt factor ceil(count / target), capped;
@@ -22,19 +23,8 @@ row-identical across runs and parallelism (the parity contract).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def choose_cell_deg(
-    extent_deg: float, total_vertices: int, target_constant: float = 300.0
-) -> float:
-    """TTformat.c:28570 density law, returning a cell width in degrees."""
-    ff = max(total_vertices / 5_000_000.0, 1e-12)
-    size = extent_deg / (target_constant * math.sqrt(ff))
-    return max(min(size, extent_deg), 1e-4)
 
 
 def cell_histogram(df: DataFrame, cell_col: str = "cell") -> DataFrame:

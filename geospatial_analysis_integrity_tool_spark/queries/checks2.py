@@ -26,7 +26,7 @@ from pyspark.sql.window import Window
 
 from ..conditions import summary_report
 from ..functions.geodesy import sql_dist_m
-from ..operators.pip import cell_id
+from ..operators.pip import with_kring_cells, with_point_cell
 from ..sources.synthetic import oracle_cte, register_geo_views
 from .conditionspipe import ORACLE_CONDITIONS_PIPELINE, q_conditions_pipeline
 
@@ -118,26 +118,16 @@ def q_dangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     endpoints = starts.unionByName(ends)
     cell_deg = 0.0001
-    left = endpoints.withColumn(
-        "cell", cell_id(F.floor(F.col("ex") / cell_deg), F.floor(F.col("ey") / cell_deg))
-    )
-    one = F.array(F.lit(-1), F.lit(0), F.lit(1))
-    right = (
+    left = with_point_cell(endpoints, "ex", "ey", cell_deg)
+    right = with_kring_cells(
         endpoints.select(
             F.col("line_id").alias("lid2"),
             F.col("ex").alias("qx"),
             F.col("ey").alias("qy"),
-        )
-        .withColumn("_dx", F.explode(one))
-        .withColumn("_dy", F.explode(one))
-        .withColumn(
-            "cell",
-            cell_id(
-                F.floor(F.col("qx") / cell_deg) + F.col("_dx"),
-                F.floor(F.col("qy") / cell_deg) + F.col("_dy"),
-            ),
-        )
-        .drop("_dx", "_dy")
+        ),
+        "qx",
+        "qy",
+        cell_deg,
     )
     d = F.expr(sql_dist_m("ex", "ey", "qx", "qy"))
     connected = (
@@ -179,22 +169,8 @@ def q_conflation_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         "line_id", F.col("x1").alias("qx"), F.col("y1").alias("qy")
     )
     cell_deg = CONFLATE_RADIUS_M / (111319.5 * 0.7) * 1.001
-    left = sites.withColumn(
-        "cell", cell_id(F.floor(F.col("lon") / cell_deg), F.floor(F.col("lat") / cell_deg))
-    )
-    one = F.array(F.lit(-1), F.lit(0), F.lit(1))
-    right = (
-        lines.withColumn("_dx", F.explode(one))
-        .withColumn("_dy", F.explode(one))
-        .withColumn(
-            "cell",
-            cell_id(
-                F.floor(F.col("qx") / cell_deg) + F.col("_dx"),
-                F.floor(F.col("qy") / cell_deg) + F.col("_dy"),
-            ),
-        )
-        .drop("_dx", "_dy")
-    )
+    left = with_point_cell(sites, "lon", "lat", cell_deg)
+    right = with_kring_cells(lines, "qx", "qy", cell_deg)
     d = F.expr(sql_dist_m("lon", "lat", "qx", "qy"))
     cands = (
         left.join(right, "cell")

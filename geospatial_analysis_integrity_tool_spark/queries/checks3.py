@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..conditions import consolidate_scalable
 from ..operators.checks_single import single_feature_checks
 from ..operators.pip import pip_join, sql_side
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import geo_zone_rings, oracle_cte, register_geo_views
 from .conditionspipe import TOL, _CELL
 
 # --- conditions_pipeline_scalable ---------------------------------------------
@@ -95,11 +95,7 @@ FROM raw
 def q_points_without_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_geo_views(spark, sf_dir)
     points = spark.table("geo_points")
-    zones = spark.table("geo_zones").select(
-        F.col("zone_id"),
-        F.array("x1", "x2", "x3").alias("xs"),
-        F.array("y1", "y2", "y3").alias("ys"),
-    )
+    zones = geo_zone_rings(spark)
     inside = pip_join(points, zones, point_id="point_id", poly_id="zone_id").select(
         "point_id"
     )

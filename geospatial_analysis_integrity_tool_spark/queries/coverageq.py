@@ -68,11 +68,11 @@ def q_pnocoverle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends = lines.selectExpr("x1 AS ex", "y1 AS ey").unionByName(
         lines.selectExpr("x3 AS ex", "y3 AS ey")
     )
-    from ..operators.proximity import _with_cell, _with_kring_cells
+    from ..operators.pip import with_kring_cells, with_point_cell
 
     cell = 0.002  # >= 60 m in degrees at |lat| <= 66
-    s = _with_cell(sites, "lon", "lat", cell)
-    e = _with_kring_cells(ends, "ex", "ey", cell)
+    s = with_point_cell(sites, "lon", "lat", cell)
+    e = with_kring_cells(ends, "ex", "ey", cell)
     covered = (
         s.join(e, "cell")
         .filter(

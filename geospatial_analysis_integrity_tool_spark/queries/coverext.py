@@ -40,8 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_point_seg_dist_m
-from ..operators.proximity import _with_cell, _with_kring_cells, point_seg_candidates
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..operators.pip import with_kring_cells, with_point_cell
+from ..operators.proximity import point_seg_candidates
+from ..sources.synthetic import oracle_cte, register_geo_views
 
 GRID_N = 60
 HOLE_MOD = 97
@@ -252,8 +253,8 @@ def q_lunma_acrs_a(spark: SparkSession, sf_dir: str) -> DataFrame:
     anodes = ge.filter("xb IS NOT NULL AND eid % 2 = 0").selectExpr(
         "eid AS aid", "xb", "yb"
     )
-    ek = _with_kring_cells(ends, "xa", "ya", 0.0005)
-    ak = _with_cell(anodes, "xb", "yb", 0.0005)
+    ek = with_kring_cells(ends, "xa", "ya", 0.0005)
+    ak = with_point_cell(anodes, "xb", "yb", 0.0005)
     matched = (
         ek.join(ak, "cell")
         .filter(

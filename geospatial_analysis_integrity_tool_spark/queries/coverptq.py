@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import MY_2D_SENTINEL_Z, sql_dist_m
-from ..operators.proximity import _with_cell, _with_kring_cells
+from ..operators.pip import with_kring_cells, with_point_cell
 from ..sources.synthetic import oracle_cte, register_geo_views
 
 PV_TOL_M = 60.0     # PNOCOVERLV / LENOCOVERP point-to-vertex tolerance
@@ -45,8 +45,8 @@ def q_pnocoverlv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # well away from the end-node lattice, so coverage genuinely differs from
     # the end-node-only check (PNOCOVERLE)
     verts = spark.table("geo_vlines").selectExpr("x AS vx", "y AS vy")
-    s = _with_cell(sites, "lon", "lat", _CELL)
-    v = _with_kring_cells(verts, "vx", "vy", _CELL)
+    s = with_point_cell(sites, "lon", "lat", _CELL)
+    v = with_kring_cells(verts, "vx", "vy", _CELL)
     covered = (
         s.join(v, "cell")
         .filter(F.expr(f"{sql_dist_m('lon', 'lat', 'vx', 'vy')} < {PV_TOL_M}"))
@@ -87,8 +87,8 @@ def q_lenocoverp(spark: SparkSession, sf_dir: str) -> DataFrame:
         lines.selectExpr("line_id", "1 AS end_which", "x3 AS ex", "y3 AS ey")
     )
     sites = spark.table("geo_sites").select("lon", "lat")
-    e = _with_cell(ends, "ex", "ey", _CELL)
-    s = _with_kring_cells(sites, "lon", "lat", _CELL)
+    e = with_point_cell(ends, "ex", "ey", _CELL)
+    s = with_kring_cells(sites, "lon", "lat", _CELL)
     covered = (
         e.join(s, "cell")
         .filter(F.expr(f"{sql_dist_m('ex', 'ey', 'lon', 'lat')} < {PV_TOL_M}"))

@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
-from ..operators.proximity import _with_cell, _with_kring_cells, point_to_segment_proximity
+from ..operators.pip import with_kring_cells, with_point_cell
+from ..operators.proximity import point_to_segment_proximity
 from ..sources.synthetic import oracle_cte, register_geo_views
 
 # --- geo_le_a_unm (LE_A_UNM_LON 182) --------------------------------------------
@@ -232,11 +233,11 @@ def q_lunm_acrs_a(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # 2) endpoint -> other-line vertex k-ring join within sensitivity.
-    p_cells = _with_kring_cells(
+    p_cells = with_kring_cells(
         nearest.select("end_id", "px", "py", "qx", "qy", "ax", "ay", "bx", "by"),
         "px", "py", _LA_CELL,
     )
-    c_cells = _with_cell(conts, "rx", "ry", _LA_CELL)
+    c_cells = with_point_cell(conts, "rx", "ry", _LA_CELL)
     d_pr = F.expr(sql_dist_m("px", "py", "rx", "ry"))
     pairs = (
         p_cells.join(c_cells, "cell")

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
 from ..operators.pip import pip_join, sql_side
 from ..operators.proximity import point_proximity_pairs, point_to_segment_proximity
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import geo_zone_rings, oracle_cte, register_geo_views
 
 PROX_TOL_M = 50000.0
 UNDERSHOOT_TOL_M = 3.0
@@ -28,11 +28,7 @@ def q_geo_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     register_geo_views(spark, sf_dir)
     points = spark.table("geo_points")
-    zones = spark.table("geo_zones").select(
-        F.col("zone_id"),
-        F.array("x1", "x2", "x3").alias("xs"),
-        F.array("y1", "y2", "y3").alias("ys"),
-    )
+    zones = geo_zone_rings(spark)
     out = pip_join(points, zones, point_id="point_id", poly_id="zone_id")
     return out.select("point_id", "zone_id", "fcode")
 
@@ -47,11 +43,7 @@ def q_geo_pip_gait(spark: SparkSession, sf_dir: str) -> DataFrame:
     query scale."""
     register_geo_views(spark, sf_dir)
     points = spark.table("geo_points")
-    zones = spark.table("geo_zones").select(
-        F.col("zone_id"),
-        F.array("x1", "x2", "x3").alias("xs"),
-        F.array("y1", "y2", "y3").alias("ys"),
-    )
+    zones = geo_zone_rings(spark)
     out = pip_join(
         points, zones, point_id="point_id", poly_id="zone_id", kernel="gait"
     )
@@ -239,11 +231,7 @@ def q_geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_geo_views(spark, sf_dir)
     points = spark.table("geo_points")
-    zones = spark.table("geo_zones").select(
-        F.col("zone_id"),
-        F.array("x1", "x2", "x3").alias("xs"),
-        F.array("y1", "y2", "y3").alias("ys"),
-    )
+    zones = geo_zone_rings(spark)
     # low target forces real salting on the densest cells even at sf0.01
     out = pip_join_salted(
         points, zones, point_id="point_id", poly_id="zone_id",

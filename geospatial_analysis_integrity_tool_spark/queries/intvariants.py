@@ -58,9 +58,8 @@ from pyspark.sql.window import Window
 
 from ..functions.geodesy import sql_coslat_poly, sql_dist_m
 from ..operators.intersections import sql_intersection_xy, sql_proper_cross
-from ..operators.pip import explode_bbox_cells
-from ..operators.proximity import _with_cell, _with_kring_cells
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..operators.pip import explode_bbox_cells, with_kring_cells, with_point_cell
+from ..sources.synthetic import oracle_cte, register_geo_views
 from .compositionq import POLYS_SQL
 
 CELL = 0.01
@@ -236,8 +235,8 @@ def q_laiex(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["lid", "aid", "ix", "iy"])
     )
     exc = spark.sql(LAIEX_EXC_SQL)
-    xk = _with_kring_cells(xings, "ix", "iy", 0.0001)
-    pk = _with_cell(exc, "ex", "ey", 0.0001)
+    xk = with_kring_cells(xings, "ix", "iy", 0.0001)
+    pk = with_point_cell(exc, "ex", "ey", 0.0001)
     d = F.expr(sql_dist_m("ix", "iy", "ex", "ey"))
     # suppression is PER CROSSING: a pair is reported if ANY of its
     # crossings lacks a nearby exception point (errors.c:11311 semantics)

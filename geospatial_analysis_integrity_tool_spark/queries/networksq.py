@@ -11,8 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.geodesy import sql_dist_m
 from ..operators.networks import component_stats, connected_components
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..operators.pip import cell_deg_for_tolerance, with_kring_cells, with_point_cell
+from ..sources.synthetic import GEO_VIEWS, register_geo_views
 
 
 def q_network_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -24,11 +26,10 @@ def q_network_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..sources.synthetic import GEO_VIEWS
-
-ORACLE_NETWORK_COMPONENTS = f"""
-WITH RECURSIVE geo_lines AS ({GEO_VIEWS['geo_lines']}),
-nodes AS (
+# The connected-components oracle: line adjacency over coincident endpoints
+# (node_key), its transitive closure, component = min reachable line id.
+# Spliced after a ``geo_lines`` CTE inside ``WITH RECURSIVE``.
+_CC_CTES = """nodes AS (
   SELECT line_id,
          CAST(floor(x1 * 1000000.0) AS BIGINT) * 1000000000
          + CAST(floor(y1 * 1000000.0) AS BIGINT) AS node_key
@@ -50,7 +51,20 @@ reach AS (
 ),
 comp AS (
   SELECT a AS line_id, MIN(b) AS component_id FROM reach GROUP BY a
-),
+)"""
+
+# every line endpoint tagged with its component (follows _CC_CTES)
+_ENDPOINTS_CTE = """endpoints AS (
+  SELECT g.line_id, g.x1 AS ex, g.y1 AS ey, c.component_id
+  FROM geo_lines g JOIN comp c USING (line_id)
+  UNION ALL
+  SELECT g.line_id, g.x3, g.y3, c.component_id
+  FROM geo_lines g JOIN comp c USING (line_id)
+)"""
+
+ORACLE_NETWORK_COMPONENTS = f"""
+WITH RECURSIVE geo_lines AS ({GEO_VIEWS['geo_lines']}),
+{_CC_CTES},
 sizes AS (
   SELECT component_id, COUNT(*) AS n_lines FROM comp GROUP BY 1
 )
@@ -66,10 +80,16 @@ FROM comp c JOIN sizes s USING (component_id)
 NEAR_MISS_TOL_M = 5.0
 
 
-def q_network_near_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.geodesy import sql_dist_m
-    from ..operators.pip import cell_id
+def _endpoint_cell_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate endpoint pairs for the near-miss checks: every line endpoint
+    tagged with its component, the left side in its cell, the right side in
+    its 3x3 k-ring, equi-joined on cell.
 
+    Columns: (cell, line_a, _xa, _ya, comp_a, line_b, _xb, _yb, comp_b).
+    The cell width comes from the worst-case latitude in the data: one cell
+    of longitude must span >= the tolerance, or qualifying pairs can land 2+
+    cells apart above ~63 deg latitude and be silently missed by the k-ring.
+    """
     register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     comp = connected_components(lines).withColumnRenamed("line_id", "cid_line")
@@ -79,54 +99,38 @@ def q_network_near_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
         comp, F.col("line_id") == F.col("cid_line")
     ).select("line_id", "ex", "ey", "component_id")
 
-    # Cell width derived from the worst-case latitude in the data: one cell
-    # of longitude must span >= the tolerance, or qualifying pairs can land
-    # 2+ cells apart above ~63 deg latitude and be silently missed by the
-    # 3x3 k-ring.  (Same derivation as point_proximity_pairs.)
-    import math
-
     max_abs_lat = (
         lines.agg(
             F.max(F.greatest(F.abs(F.col("y1")), F.abs(F.col("y3"))))
         ).first()[0]
         or 0.0
     )
-    cell_deg = (
-        NEAR_MISS_TOL_M
-        / (111319.5 * math.cos(math.radians(min(abs(max_abs_lat), 89.0))))
-        * 1.001
-    )
-    left = endpoints.withColumn(
-        "cell", cell_id(F.floor(F.col("ex") / cell_deg), F.floor(F.col("ey") / cell_deg))
-    ).select(
+    cell_deg = cell_deg_for_tolerance(NEAR_MISS_TOL_M, max_abs_lat)
+    left = with_point_cell(endpoints, "ex", "ey", cell_deg).select(
         F.col("line_id").alias("line_a"),
         F.col("ex").alias("_xa"),
         F.col("ey").alias("_ya"),
         F.col("component_id").alias("comp_a"),
         "cell",
     )
-    one = F.array(F.lit(-1), F.lit(0), F.lit(1))
-    right = (
+    right = with_kring_cells(
         endpoints.select(
             F.col("line_id").alias("line_b"),
             F.col("ex").alias("_xb"),
             F.col("ey").alias("_yb"),
             F.col("component_id").alias("comp_b"),
-        )
-        .withColumn("_dx", F.explode(one))
-        .withColumn("_dy", F.explode(one))
-        .withColumn(
-            "cell",
-            cell_id(
-                F.floor(F.col("_xb") / cell_deg) + F.col("_dx"),
-                F.floor(F.col("_yb") / cell_deg) + F.col("_dy"),
-            ),
-        )
-        .drop("_dx", "_dy")
+        ),
+        "_xb",
+        "_yb",
+        cell_deg,
     )
+    return left.join(right, "cell")
+
+
+def q_network_near_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.expr(sql_dist_m("_xa", "_ya", "_xb", "_yb"))
     return (
-        left.join(right, "cell")
+        _endpoint_cell_pairs(spark, sf_dir)
         .filter(F.col("comp_a") < F.col("comp_b"))
         .withColumn("_d", d)
         .filter(F.col("_d") < F.lit(NEAR_MISS_TOL_M))
@@ -135,41 +139,11 @@ def q_network_near_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..functions.geodesy import sql_dist_m as _sdm  # noqa: E402
-
-_NM_D = _sdm("a.ex", "a.ey", "b.ex", "b.ey")
+_NM_D = sql_dist_m("a.ex", "a.ey", "b.ex", "b.ey")
 ORACLE_NETWORK_NEAR_MISS = f"""
 WITH RECURSIVE geo_lines AS ({GEO_VIEWS['geo_lines']}),
-nodes AS (
-  SELECT line_id,
-         CAST(floor(x1 * 1000000.0) AS BIGINT) * 1000000000
-         + CAST(floor(y1 * 1000000.0) AS BIGINT) AS node_key
-  FROM geo_lines
-  UNION ALL
-  SELECT line_id,
-         CAST(floor(x3 * 1000000.0) AS BIGINT) * 1000000000
-         + CAST(floor(y3 * 1000000.0) AS BIGINT)
-  FROM geo_lines
-),
-edges AS (
-  SELECT DISTINCT l.line_id AS a, r.line_id AS b
-  FROM nodes l JOIN nodes r ON l.node_key = r.node_key AND l.line_id <> r.line_id
-),
-reach AS (
-  SELECT line_id AS a, line_id AS b FROM geo_lines
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-),
-comp AS (
-  SELECT a AS line_id, MIN(b) AS component_id FROM reach GROUP BY a
-),
-endpoints AS (
-  SELECT g.line_id, g.x1 AS ex, g.y1 AS ey, c.component_id
-  FROM geo_lines g JOIN comp c USING (line_id)
-  UNION ALL
-  SELECT g.line_id, g.x3, g.y3, c.component_id
-  FROM geo_lines g JOIN comp c USING (line_id)
-)
+{_CC_CTES},
+{_ENDPOINTS_CTE}
 SELECT DISTINCT a.component_id AS comp_a, b.component_id AS comp_b,
        a.line_id AS line_a, b.line_id AS line_b
 FROM endpoints a JOIN endpoints b
@@ -200,29 +174,7 @@ def q_netisofeat(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_NETISOFEAT = f"""
 WITH RECURSIVE geo_lines0 AS ({GEO_VIEWS['geo_lines']}),
 geo_lines AS (SELECT * FROM geo_lines0 WHERE line_id % 7 < 3),
-nodes AS (
-  SELECT line_id,
-         CAST(floor(x1 * 1000000.0) AS BIGINT) * 1000000000
-         + CAST(floor(y1 * 1000000.0) AS BIGINT) AS node_key
-  FROM geo_lines
-  UNION ALL
-  SELECT line_id,
-         CAST(floor(x3 * 1000000.0) AS BIGINT) * 1000000000
-         + CAST(floor(y3 * 1000000.0) AS BIGINT)
-  FROM geo_lines
-),
-edges AS (
-  SELECT DISTINCT l.line_id AS a, r.line_id AS b
-  FROM nodes l JOIN nodes r ON l.node_key = r.node_key AND l.line_id <> r.line_id
-),
-reach AS (
-  SELECT line_id AS a, line_id AS b FROM geo_lines
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-),
-comp AS (
-  SELECT a AS line_id, MIN(b) AS component_id FROM reach GROUP BY a
-),
+{_CC_CTES},
 sizes AS (
   SELECT component_id, COUNT(*) AS n_lines FROM comp GROUP BY 1
 )
@@ -239,60 +191,9 @@ WHERE s.n_lines = 1
 
 
 def q_network_intra_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
-    from ..functions.geodesy import sql_dist_m
-    from ..operators.pip import cell_id
-
-    register_geo_views(spark, sf_dir)
-    lines = spark.table("geo_lines")
-    comp = connected_components(lines).withColumnRenamed("line_id", "cid_line")
-    starts = lines.selectExpr("line_id", "x1 AS ex", "y1 AS ey")
-    ends = lines.selectExpr("line_id", "x3 AS ex", "y3 AS ey")
-    endpoints = starts.unionByName(ends).join(
-        comp, F.col("line_id") == F.col("cid_line")
-    ).select("line_id", "ex", "ey", "component_id")
-
-    max_abs_lat = (
-        lines.agg(F.max(F.greatest(F.abs(F.col("y1")), F.abs(F.col("y3"))))).first()[0]
-        or 0.0
-    )
-    cell_deg = (
-        NEAR_MISS_TOL_M
-        / (111319.5 * math.cos(math.radians(min(abs(max_abs_lat), 89.0))))
-        * 1.001
-    )
-    left = endpoints.withColumn(
-        "cell", cell_id(F.floor(F.col("ex") / cell_deg), F.floor(F.col("ey") / cell_deg))
-    ).select(
-        F.col("line_id").alias("line_a"),
-        F.col("ex").alias("_xa"),
-        F.col("ey").alias("_ya"),
-        F.col("component_id").alias("comp_a"),
-        "cell",
-    )
-    one = F.array(F.lit(-1), F.lit(0), F.lit(1))
-    right = (
-        endpoints.select(
-            F.col("line_id").alias("line_b"),
-            F.col("ex").alias("_xb"),
-            F.col("ey").alias("_yb"),
-            F.col("component_id").alias("comp_b"),
-        )
-        .withColumn("_dx", F.explode(one))
-        .withColumn("_dy", F.explode(one))
-        .withColumn(
-            "cell",
-            cell_id(
-                F.floor(F.col("_xb") / cell_deg) + F.col("_dx"),
-                F.floor(F.col("_yb") / cell_deg) + F.col("_dy"),
-            ),
-        )
-        .drop("_dx", "_dy")
-    )
     d = F.expr(sql_dist_m("_xa", "_ya", "_xb", "_yb"))
     return (
-        left.join(right, "cell")
+        _endpoint_cell_pairs(spark, sf_dir)
         .filter(
             (F.col("comp_a") == F.col("comp_b"))
             & (F.col("line_a") < F.col("line_b"))
@@ -308,36 +209,8 @@ def q_network_intra_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_NETWORK_INTRA_MISS = f"""
 WITH RECURSIVE geo_lines AS ({GEO_VIEWS['geo_lines']}),
-nodes AS (
-  SELECT line_id,
-         CAST(floor(x1 * 1000000.0) AS BIGINT) * 1000000000
-         + CAST(floor(y1 * 1000000.0) AS BIGINT) AS node_key
-  FROM geo_lines
-  UNION ALL
-  SELECT line_id,
-         CAST(floor(x3 * 1000000.0) AS BIGINT) * 1000000000
-         + CAST(floor(y3 * 1000000.0) AS BIGINT)
-  FROM geo_lines
-),
-edges AS (
-  SELECT DISTINCT l.line_id AS a, r.line_id AS b
-  FROM nodes l JOIN nodes r ON l.node_key = r.node_key AND l.line_id <> r.line_id
-),
-reach AS (
-  SELECT line_id AS a, line_id AS b FROM geo_lines
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-),
-comp AS (
-  SELECT a AS line_id, MIN(b) AS component_id FROM reach GROUP BY a
-),
-endpoints AS (
-  SELECT g.line_id, g.x1 AS ex, g.y1 AS ey, c.component_id
-  FROM geo_lines g JOIN comp c USING (line_id)
-  UNION ALL
-  SELECT g.line_id, g.x3, g.y3, c.component_id
-  FROM geo_lines g JOIN comp c USING (line_id)
-)
+{_CC_CTES},
+{_ENDPOINTS_CTE}
 SELECT DISTINCT a.component_id, a.line_id AS line_a, b.line_id AS line_b
 FROM endpoints a JOIN endpoints b
   ON a.component_id = b.component_id

@@ -53,13 +53,8 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
 from ..operators.intersections import sql_intersection_xy, sql_proper_cross
-from ..operators.pip import explode_bbox_cells
-from ..operators.proximity import (
-    _with_cell,
-    _with_kring_cells,
-    point_seg_candidates,
-    point_to_segment_proximity,
-)
+from ..operators.pip import explode_bbox_cells, with_kring_cells, with_point_cell
+from ..operators.proximity import point_seg_candidates, point_to_segment_proximity
 from ..sources.synthetic import oracle_cte, register_geo_views
 
 LELINE_TOL_M = 3.0
@@ -174,8 +169,8 @@ def q_lbndusht(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("dbnd") > 0.0) & (F.col("dbnd") < BND_TOL_M))
     )
     verts = spark.sql(LINE_VERTS_SQL)
-    e = _with_kring_cells(ends, "ex", "ey", 0.0001)
-    v = _with_cell(verts, "vx", "vy", 0.0001)
+    e = with_kring_cells(ends, "ex", "ey", 0.0001)
+    v = with_point_cell(verts, "vx", "vy", 0.0001)
     d = F.expr(sql_dist_m("ex", "ey", "vx", "vy"))
     connected = (
         e.join(v, "cell")
@@ -259,8 +254,8 @@ def q_vushtl_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     tnodes = targets.selectExpr("tid", "tax AS nx", "tay AS ny").unionByName(
         targets.selectExpr("tid", "tbx AS nx", "tby AS ny")
     )
-    vk = _with_kring_cells(verts, "vx", "vy", 0.0001)
-    nk = _with_cell(tnodes, "nx", "ny", 0.0001)
+    vk = with_kring_cells(verts, "vx", "vy", 0.0001)
+    nk = with_point_cell(tnodes, "nx", "ny", 0.0001)
     d = F.expr(sql_dist_m("vx", "vy", "nx", "ny"))
     rescued = (
         vk.join(nk, "cell")
@@ -396,8 +391,8 @@ def q_plp_fail(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection above the un-filtered join (ANSI overflow on huge t values
     # evaluated speculatively for near-parallel candidate pairs).
     xings = _crossings(spark).localCheckpoint()
-    pk = _with_kring_cells(pts_b, "px", "py", 0.0005)
-    xk = _with_cell(xings, "cx", "cy", 0.0005)
+    pk = with_kring_cells(pts_b, "px", "py", 0.0005)
+    xk = with_point_cell(xings, "cx", "cy", 0.0005)
     d = F.expr(sql_dist_m("px", "py", "cx", "cy"))
     near_x = (
         pk.join(xk, "cell").filter(d < PLL_TOL_M).select("site_id").distinct()
@@ -498,8 +493,8 @@ def q_lez_prox_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_geo_views(spark, sf_dir)
     ends = spark.sql(LEZ_ENDS_SQL).filter(F.col("ez") != Z_SENTINEL)
     stubs = spark.sql(LEZ_STUBS_SQL).filter(F.col("sz") != Z_SENTINEL)
-    ek = _with_kring_cells(ends, "ex", "ey", 0.0001)
-    sk = _with_cell(stubs, "sx", "sy", 0.0001)
+    ek = with_kring_cells(ends, "ex", "ey", 0.0001)
+    sk = with_point_cell(stubs, "sx", "sy", 0.0001)
     d = F.expr(sql_dist_m("ex", "ey", "sx", "sy"))
     return (
         ek.join(sk, "cell")

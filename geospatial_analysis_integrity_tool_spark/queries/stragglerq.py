@@ -42,11 +42,8 @@ from ..operators.intersections import (
     segments_of_vertices,
     self_intersections_of_segments,
 )
-from ..operators.proximity import (
-    _with_cell,
-    _with_kring_cells,
-    point_to_segment_proximity,
-)
+from ..operators.pip import with_kring_cells, with_point_cell
+from ..operators.proximity import point_to_segment_proximity
 from ..sources.synthetic import oracle_cte, oracle_materialized, register_geo_views
 from .vgeomq import (
     CELL,
@@ -195,8 +192,8 @@ def q_isoturn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sites = spark.table("geo_sites").select("site_id", "lon", "lat")
     cell = 0.003
-    s = _with_cell(strong, "px", "py", cell)
-    t = _with_kring_cells(sites, "lon", "lat", cell)
+    s = with_point_cell(strong, "px", "py", cell)
+    t = with_kring_cells(sites, "lon", "lat", cell)
     justified = (
         s.join(t, "cell")
         .filter(

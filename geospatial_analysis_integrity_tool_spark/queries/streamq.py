@@ -419,10 +419,8 @@ def write_pip_stream_fixture(dirpath: str | None = None) -> str:
 
 
 def q_streaming_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from ..operators.pip import pip_join
-    from ..sources.synthetic import register_geo_views
+    from ..sources.synthetic import geo_zone_rings, register_geo_views
 
     register_geo_views(spark, sf_dir)
     d = write_pip_stream_fixture()
@@ -433,11 +431,7 @@ def q_streaming_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    zones = spark.table("geo_zones").select(
-        F.col("zone_id"),
-        F.array("x1", "x2", "x3").alias("xs"),
-        F.array("y1", "y2", "y3").alias("ys"),
-    )
+    zones = geo_zone_rings(spark)
     out = pip_join(src, zones, point_id="point_id", poly_id="zone_id").select(
         "point_id", "zone_id"
     )
@@ -512,10 +506,8 @@ def write_utm_stream_fixture(dirpath: str | None = None) -> str:
 
 
 def q_streaming_utm_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from ..operators.pip import pip_join
-    from ..sources.synthetic import register_geo_views
+    from ..sources.synthetic import geo_zone_rings, register_geo_views
 
     register_geo_views(spark, sf_dir)
     d = write_utm_stream_fixture()
@@ -548,11 +540,7 @@ def q_streaming_utm_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = src.mapInPandas(
         _xform, "point_id long, lon double, lat double, fcode string"
     )
-    zones = spark.table("geo_zones").select(
-        F.col("zone_id"),
-        F.array("x1", "x2", "x3").alias("xs"),
-        F.array("y1", "y2", "y3").alias("ys"),
-    )
+    zones = geo_zone_rings(spark)
     out = pip_join(pts, zones, point_id="point_id", poly_id="zone_id").select(
         "point_id", "zone_id"
     )

@@ -36,7 +36,12 @@ from ..functions.utm import (
     with_utm_geodetic,
 )
 from ..operators.pip import pip_join, sql_side
-from ..sources.synthetic import oracle_cte, register_geo_views, register_testdata_views
+from ..sources.synthetic import (
+    geo_zone_rings,
+    oracle_cte,
+    register_geo_views,
+    register_testdata_views,
+)
 
 N_FEATURES = 4000
 
@@ -77,11 +82,7 @@ def q_utm_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("utm_lat").alias("lat"),
         F.lit("UTMPT").alias("fcode"),
     )
-    zones = spark.table("geo_zones").select(
-        F.col("zone_id"),
-        F.array("x1", "x2", "x3").alias("xs"),
-        F.array("y1", "y2", "y3").alias("ys"),
-    )
+    zones = geo_zone_rings(spark)
     out = pip_join(points, zones, point_id="point_id", poly_id="zone_id")
     return out.select("point_id", "zone_id")
 

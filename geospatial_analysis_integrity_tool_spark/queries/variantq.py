@@ -556,13 +556,13 @@ def q_plproxex(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     near = point_to_segment_proximity(sites, segs, tol_m=PLPROXEX_TOL_M)
     ends = _line_ends(lines)
-    from ..operators.proximity import _with_cell, _with_kring_cells
+    from ..operators.pip import with_kring_cells, with_point_cell
 
     cell = 0.004
-    s = _with_cell(
+    s = with_point_cell(
         spark.table("geo_sites").select("site_id", "lon", "lat"), "lon", "lat", cell
     )
-    e = _with_kring_cells(ends, "px", "py", cell)
+    e = with_kring_cells(ends, "px", "py", cell)
     near_end = (
         s.join(e, "cell")
         .filter(

@@ -23,7 +23,8 @@ Layers (mirroring GAIT's Lindex layer concept, share_linux.h:782 `Lindex`):
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TESTDATA_TABLES = (
     "region",
@@ -77,6 +78,16 @@ SELECT
   CAST((n_nationkey * 1871) % 1800 AS DOUBLE) / 20.0 - 45.0  - 6.2023456 AS y3
 FROM nation
 """
+
+
+def geo_zone_rings(spark: SparkSession) -> DataFrame:
+    """The registered ``geo_zones`` triangles as ``pip_join`` polygons:
+    (zone_id, xs, ys)."""
+    return spark.table("geo_zones").select(
+        F.col("zone_id"),
+        F.array("x1", "x2", "x3").alias("xs"),
+        F.array("y1", "y2", "y3").alias("ys"),
+    )
 
 # --- geo_sites: supplier -> clustered points (proximity fixture) ---------------
 # All sites inside lon [10, 14), lat [40, 44): a ~440 km x ~330 km window.

@@ -7,10 +7,8 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMALL
 
 
-def test_pip_join_planted(spark):
+def _planted(spark):
     """pip_in_01 / pip_out_01 analogue: known inside/outside points."""
-    from geospatial_analysis_integrity_tool_spark.operators.pip import pip_join
-
     pts = spark.createDataFrame(
         [(1, 0.5, 0.5), (2, 5.0, 5.0), (3, 0.99, 0.01), (4, -0.01, 0.5)],
         "point_id int, lon double, lat double",
@@ -19,9 +17,27 @@ def test_pip_join_planted(spark):
         [(10, [0.0, 1.0, 1.0, 0.0], [0.0, 0.0, 1.0, 1.0])],
         "poly_id int, xs array<double>, ys array<double>",
     )
+    return pts, polys
+
+
+def _cross_cell(spark):
+    """One polygon spanning 16 x 16 one-degree cells."""
+    pts = spark.createDataFrame(
+        [(1, 0.0, 0.0), (2, 7.9, 7.9)], "point_id int, lon double, lat double"
+    )
+    polys = spark.createDataFrame(
+        [(10, [-8.0, 8.0, 8.0, -8.0], [-8.0, -8.0, 8.0, 8.0])],
+        "poly_id int, xs array<double>, ys array<double>",
+    )
+    return pts, polys
+
+
+def test_pip_join_planted(spark):
+    from geospatial_analysis_integrity_tool_spark.operators.pip import pip_join
+
     got = {
         (r.point_id, r.poly_id)
-        for r in pip_join(pts, polys, cell_deg=1.0).collect()
+        for r in pip_join(*_planted(spark), cell_deg=1.0).collect()
     }
     assert got == {(1, 10), (3, 10)}
 
@@ -30,15 +46,25 @@ def test_pip_join_cross_cell_duplication(spark):
     """A polygon spanning many cells must match each point exactly once."""
     from geospatial_analysis_integrity_tool_spark.operators.pip import pip_join
 
-    pts = spark.createDataFrame(
-        [(1, 0.0, 0.0), (2, 7.9, 7.9)], "point_id int, lon double, lat double"
-    )
-    polys = spark.createDataFrame(
-        [(10, [-8.0, 8.0, 8.0, -8.0], [-8.0, -8.0, 8.0, 8.0])],
-        "poly_id int, xs array<double>, ys array<double>",
-    )
-    rows = pip_join(pts, polys, cell_deg=1.0).collect()
+    rows = pip_join(*_cross_cell(spark), cell_deg=1.0).collect()
     assert sorted((r.point_id, r.poly_id) for r in rows) == [(1, 10), (2, 10)]
+
+
+def test_pip_join_shipped_matches_broadcast(spark):
+    """The array-shipping variant (the only route for polygon sets whose
+    padded vertices exceed BROADCAST_MAX_VERTEX_BYTES) returns the same
+    rows, columns included, as the broadcast refine."""
+    from geospatial_analysis_integrity_tool_spark.operators.pip import (
+        pip_join,
+        pip_join_shipped,
+    )
+
+    for pts, polys in (_planted(spark), _cross_cell(spark)):
+        shipped = pip_join_shipped(pts, polys, cell_deg=1.0)
+        broadcast = pip_join(pts, polys, cell_deg=1.0)
+        assert shipped.columns == broadcast.columns
+        assert sorted(shipped.collect()) == sorted(broadcast.collect())
+        assert shipped.count() > 0
 
 
 def test_proximity_planted(spark):

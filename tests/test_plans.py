@@ -8,17 +8,6 @@ import tempfile
 from pyspark.sql import functions as F
 
 
-def test_choose_cell_deg_density_law():
-    from geospatial_analysis_integrity_tool_spark.plans.partitioning import (
-        choose_cell_deg,
-    )
-
-    sparse = choose_cell_deg(10.0, 10_000)
-    dense = choose_cell_deg(10.0, 10_000_000)
-    assert dense < sparse  # cells shrink as density grows (TTformat.c law)
-    assert choose_cell_deg(10.0, 10**12) == 1e-4  # clamped
-
-
 def test_salted_join_equals_plain_join(spark):
     from geospatial_analysis_integrity_tool_spark.plans.partitioning import (
         cell_histogram,
