@@ -3,12 +3,31 @@
 discovered, not listed (``pkgutil`` also walks a ``--py-files`` zip), and a
 query name registered twice is an error rather than a silent override.
 __spark_entry__.py at the repo root aggregates them for the driver's
-correctness gate."""
+correctness gate.
+
+Query bodies only read views.  The registry registers them: every callable
+``all_queries()`` returns first calls ``register_geo_views(spark, sf_dir)``,
+which puts the 10 source tables and the 9 geometry views of ``sf_dir`` in
+place (built once per session and ``sf_dir``; see sources/synthetic.py).
+A test that calls a module function directly registers its ``sf_dir`` itself.
+"""
 
 from __future__ import annotations
 
+import functools
 import importlib
 import pkgutil
+
+from ..sources.synthetic import register_geo_views
+
+
+def _with_views(fn):
+    @functools.wraps(fn)
+    def run(spark, sf_dir):
+        register_geo_views(spark, sf_dir)
+        return fn(spark, sf_dir)
+
+    return run
 
 
 def all_queries():
@@ -30,4 +49,4 @@ def all_queries():
     sq, so = suiteq.build(q, o)
     q.update(sq)
     o.update(so)
-    return q, o
+    return {name: _with_views(fn) for name, fn in q.items()}, o

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..operators.intersections import sql_proper_cross
 from ..operators.pip import explode_bbox_cells, sql_ray3, with_point_cell
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 CELL = 0.01
 
@@ -72,7 +72,6 @@ _INSIDE_K = sql_ray3("vx", "vy")
 
 
 def q_area_cover_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     areas = spark.table("geo_areas")
     kids = spark.sql(KIDS_SQL).localCheckpoint()
 
@@ -202,7 +201,6 @@ UNION ALL SELECT aid, fc, 2, x3, y3, x1, y1 FROM aug
 
 
 def q_area_share_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     aug = spark.sql(AUG_SHARE_SQL).localCheckpoint()
     aug.createOrReplaceTempView("aug")
     edges = (

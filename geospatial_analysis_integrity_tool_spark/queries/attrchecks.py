@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.checks_attr import attr_conformance
-from ..sources.synthetic import register_testdata_views
 
 _ATTRS_LONG_SQL = """
 WITH base AS (
@@ -68,7 +67,6 @@ SPEC_ENUMS = [("TYP", v) for v in ("ECONOMY", "STANDARD", "PROMO", "SMALL")]
 
 
 def q_attr_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     attrs_long = spark.sql(_ATTRS_LONG_SQL)
     spec_pairs = spark.createDataFrame(SPEC_PAIRS, "fcode string, geom int")
     spec_attrs = spark.createDataFrame(
@@ -193,7 +191,6 @@ FROM part WHERE p_partkey % 23 = 0
 def q_attr_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.checks_attr import attr_extended
 
-    register_testdata_views(spark, sf_dir)
     attrs_long = spark.sql(_ATTRS2_SQL)
     spec_attrs = spark.createDataFrame(
         SPEC_ATTRS,

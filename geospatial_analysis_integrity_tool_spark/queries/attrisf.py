@@ -30,7 +30,6 @@ from ..functions.tds_isf_table import (
     ISF_MATRIX,
     ISF_N,
 )
-from ..sources.synthetic import register_testdata_views
 
 
 def _feat_pair_sql(n: int) -> str:
@@ -50,7 +49,6 @@ def _cell_expr(mat_ref: str, n: int) -> str:
 
 def _make_isf_query(headers: list[str], matrix: str, n: int):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_testdata_views(spark, sf_dir)
         feats = spark.sql(_feat_pair_sql(n))
         hdr = spark.createDataFrame(
             list(enumerate(headers)), "idx int, header string"

@@ -27,7 +27,7 @@ from pyspark.sql.window import Window
 from ..conditions import summary_report
 from ..functions.geodesy import sql_dist_m
 from ..operators.pip import with_kring_cells, with_point_cell
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 from .conditionspipe import ORACLE_CONDITIONS_PIPELINE, q_conditions_pipeline
 
 EDGE_TOL_M = 1.0
@@ -37,7 +37,6 @@ CONFLATE_RADIUS_M = 10000.0
 
 # --- geo_edge_match_unmatched -------------------------------------------------
 def q_edge_match_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     edges = spark.table("geo_edges")
     # west ends at the meridian; candidates on the east side (any eid)
     west = edges.select("eid", F.col("xa").alias("px"), F.col("ya").alias("py"))
@@ -88,7 +87,6 @@ _EDGE_KEY = (
 
 
 def q_duplicate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     return (
         spark.table("geo_lines_dup")
         .select(F.expr(_EDGE_KEY).alias("edge_key"), "line_id")
@@ -108,7 +106,6 @@ GROUP BY 1 HAVING COUNT(*) > 1
 
 # --- geo_dangles (NOENDCON) ---------------------------------------------------
 def q_dangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     starts = lines.select(
         "line_id", F.lit(0).alias("end_idx"), F.col("x1").alias("ex"), F.col("y1").alias("ey")
@@ -163,7 +160,6 @@ WHERE NOT EXISTS (
 
 # --- geo_conflation_best_match ------------------------------------------------
 def q_conflation_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     sites = spark.table("geo_sites")
     lines = spark.table("geo_lines").select(
         "line_id", F.col("x1").alias("qx"), F.col("y1").alias("qy")
@@ -220,7 +216,6 @@ _ATTR_BASE = """
 
 
 def q_vvt_dependencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     base = spark.sql(_ATTR_BASE)
     # VVTERR2WAY: PROMO parts must have siz <= 20
     v2 = base.filter((F.col("typ") == "PROMO") & (F.col("siz") > 20)).select(

@@ -23,14 +23,13 @@ from pyspark.sql import functions as F
 from ..conditions import consolidate_scalable
 from ..operators.checks_single import single_feature_checks
 from ..operators.pip import pip_join, sql_side
-from ..sources.synthetic import geo_zone_rings, oracle_cte, register_geo_views
+from ..sources.synthetic import geo_zone_rings, oracle_cte
 from .conditionspipe import TOL, _CELL
 
 # --- conditions_pipeline_scalable ---------------------------------------------
 
 
 def q_conditions_pipeline_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines").selectExpr(
         "line_id * 10 + 2 AS feature_id",
         "fcode",
@@ -93,7 +92,6 @@ FROM raw
 
 # --- geo_points_without_zone (OBJECTWITHOUT 65) -------------------------------
 def q_points_without_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     points = spark.table("geo_points")
     zones = geo_zone_rings(spark)
     inside = pip_join(points, zones, point_id="point_id", poly_id="zone_id").select(
@@ -130,7 +128,6 @@ ELEV_MAX = 9000.0
 
 
 def q_zvalue_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     pts = spark.table("geo_points").selectExpr("point_id", f"{_Z_EXPR} AS z")
     # sentinel features are 2-D: exempt from elevation checks (TT.c:1589)
     return (
@@ -167,7 +164,6 @@ def _on_qtr(expr: str) -> str:
 def q_edge_suppression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undershoot conditions whose end node touches a quarter-degree cell
     edge are suppressed (ConditionOnDataEdge, geomchecks.c:540-1060)."""
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     from ..operators.proximity import point_to_segment_proximity
 

@@ -52,7 +52,7 @@ from pyspark.sql.window import Window
 
 from ..functions.geodesy import sql_coslat_poly, sql_dist_m, sql_trunc3_mm
 from ..operators.proximity import point_seg_candidates
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..sources.synthetic import GEO_VIEWS, oracle_cte
 
 JUMP_DEG = 0.15              # pen-up jump starting a new line part
 FACESIZE_MM2 = 100_000_000   # net face below 100,000 m^2 (milli-m^2)
@@ -81,7 +81,6 @@ FROM geo_areas
 
 
 def q_multipart_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines").select("line_id", "vidx", "x", "y")
     wnd = Window.partitionBy("line_id").orderBy("vidx")
     jumps = (
@@ -162,7 +161,6 @@ _HOLE_M2 = (
 def q_facesize_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sensq import q_ring_winding
 
-    register_geo_views(spark, sf_dir)
     winding = q_ring_winding(spark, sf_dir)
     per_area = winding.groupBy("area_id").agg(
         F.expr(
@@ -323,7 +321,6 @@ _IS_VERT = (
 
 
 def q_smallobj_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     # POLYS_SQL's corner columns are multi-branch CASE expressions; when
     # CollapseProject inlines them into _AREA3D_M2 (which already repeats the
     # cos-lat polynomial ~12x) the generated method overflows janino's 64 KB
@@ -384,7 +381,6 @@ SELECT line_id, x2, y2, x3, y3 FROM geo_lines
 
 
 def q_tvert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     pts = spark.sql(TPOINTS_SQL)
     segs = spark.sql(TSEGS_SQL).withColumns(
         {"eax": F.col("ax"), "eay": F.col("ay"),
@@ -491,7 +487,6 @@ edges AS (
 
 
 def q_overc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     edges = spark.sql(f"WITH {OVERC_EDGES_SQL} SELECT a, b FROM edges")
     return (
         edges.groupBy("a", "b")

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..conditions import consolidate
 from ..functions.geodesy import sql_dist_m
 from ..operators.checks_single import SingleFeatureTolerances, single_feature_checks
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 TOL = SingleFeatureTolerances()
 
@@ -25,7 +25,6 @@ _CELL = "(CAST(floor(x1 * 10.0) AS BIGINT) + 2000) * 10000 + CAST(floor(y1 * 10.
 
 
 def q_conditions_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines").selectExpr(
         "line_id * 10 + 2 AS feature_id",
         "fcode",

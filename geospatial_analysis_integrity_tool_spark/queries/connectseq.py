@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m
-from ..sources.synthetic import register_geo_views
 
 ENCON_LO, ENCON_HI = 3, 99   # CLOSEDINT band: over-connected junction
 BADENCON_TOL_M = 1.0         # 3-D connection sphere
@@ -99,14 +98,13 @@ _COINC = (
 )
 
 
-def _register(spark: SparkSession, sf_dir: str) -> None:
-    register_geo_views(spark, sf_dir)
+def _register(spark: SparkSession) -> None:
     spark.sql(_NET).createOrReplaceTempView("net")
     spark.sql(_ENDS).createOrReplaceTempView("net_ends")
 
 
 def q_en_connect_seq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _register(spark, sf_dir)
+    _register(spark)
     d3 = (
         f"sqrt(pow({sql_dist_m('a.x', 'a.y', 'b.x', 'b.y')}, 2)"
         " + pow(a.z - b.z, 2))"
@@ -188,7 +186,7 @@ def q_ljoinslopedc(spark: SparkSession, sf_dir: str) -> DataFrame:
     geomchecks.c:27096-27133.  Sentinel-z ends never join (z equality is
     required here, unlike ENCONNECT's waiver).
     """
-    _register(spark, sf_dir)
+    _register(spark)
     return spark.sql(
         f"""
         SELECT a.line_id, b.line_id AS join_line_id,

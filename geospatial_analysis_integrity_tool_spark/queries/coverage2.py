@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.synthetic import register_geo_views, register_testdata_views
 from .overlay import _ELEV, _GX, _GY, _Z
 
 GRID_N = 60          # 60x60 squares -> 7200 triangles
@@ -78,7 +77,6 @@ NOT (
 
 
 def q_coverage_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     edges = spark.sql(f"WITH {_EDGES_SQL} SELECT * FROM edges")
     uncovered = (
         edges.groupBy("a", "b")
@@ -99,7 +97,6 @@ HAVING COUNT(*) = 1 AND {_BOUNDARY_PRED.replace(chr(10), ' ')}
 
 
 def q_raster_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     pts = (
         spark.table("geo_sites")
         .selectExpr("site_id", f"{_GX} AS gx", f"{_GY} AS gy")
@@ -146,7 +143,6 @@ def q_pseudo_node_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     variable-vertex fixture via the array-native intersection operator."""
     from ..operators.intersections import segment_intersections, segments_of_vertices
 
-    register_geo_views(spark, sf_dir)
     from .vgeomq import SEGCELL
 
     x = segment_intersections(

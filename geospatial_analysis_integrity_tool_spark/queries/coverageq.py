@@ -36,12 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
 from ..operators.proximity import point_seg_candidates
-from ..sources.synthetic import (
-    GEO_VIEWS,
-    oracle_cte,
-    oracle_materialized,
-    register_geo_views,
-)
+from ..sources.synthetic import GEO_VIEWS, oracle_cte, oracle_materialized
 from .vgeomq import _EDGES_CTE, _area_edges
 
 PCOVER_TOL_M = 60.0     # PNOCOVERLE: end node must sit within 60 m
@@ -62,7 +57,6 @@ _CELL_150M = 0.0025
 
 def q_pnocoverle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point features (geo_sites) with NO line end node within tolerance."""
-    register_geo_views(spark, sf_dir)
     sites = spark.table("geo_sites").select("site_id", "lon", "lat")
     lines = _lines_narrow(spark)
     ends = lines.selectExpr("x1 AS ex", "y1 AS ey").unionByName(
@@ -242,7 +236,6 @@ def q_lenocoverl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Row-identical to the per-end join (the oracle keeps the naive shape).
     """
-    register_geo_views(spark, sf_dir)
     lines = _lines_narrow(spark)
     ends = _line_ends(lines)
     dsegs = (
@@ -317,7 +310,6 @@ WHERE pid NOT IN (SELECT pid FROM covered)
 def q_nolcovle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Like LENOCOVERL, but the line may cover its own end with a
     NON-ADJACENT segment (end 0's adjacent segment is 1; end 1's is 2)."""
-    register_geo_views(spark, sf_dir)
     lines = _lines_narrow(spark)
     ends = _line_ends(lines)
     segs = _line_segs(lines).selectExpr(
@@ -369,7 +361,6 @@ WHERE pid NOT IN (SELECT pid FROM covered)
 def q_lnocoverla(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line (probed at its first-segment midpoint) covered by neither another
     line's segment nor an areal ring edge."""
-    register_geo_views(spark, sf_dir)
     lines = _lines_narrow(spark)
     probes = lines.selectExpr(
         "line_id AS src_id",
@@ -466,7 +457,6 @@ cover AS (
 def q_lspanfail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lines that do NOT span between areal edges: at least one end node has
     no areal ring edge within tolerance.  Reports ends covered (0..1)."""
-    register_geo_views(spark, sf_dir)
     lines = _lines_narrow(spark)
     cov = _end_area_cover(spark).select("line_id", "end_which").distinct()
     per_line = cov.groupBy("line_id").agg(
@@ -501,7 +491,6 @@ WHERE COALESCE(p.n_ends_covered, 0) < 2
 def q_lnocov2a(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lines that span (both ends covered by areal edges) but whose covering
     edges belong to fewer than TWO distinct area features."""
-    register_geo_views(spark, sf_dir)
     cov = _end_area_cover(spark)
     per_line = cov.groupBy("line_id").agg(
         F.countDistinct("end_which").alias("_ne"),
@@ -547,7 +536,6 @@ _DUPKEY = (
 
 
 def q_coincidefail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     d = spark.table("geo_lines_dup")
     targets = d.filter("line_id < 997").selectExpr(
         "line_id", f"{_DUPKEY} AS k"

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from ..functions.geodesy import sql_point_seg_dist_m
 from ..operators.pip import with_kring_cells, with_point_cell
 from ..operators.proximity import point_seg_candidates
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 GRID_N = 60
 HOLE_MOD = 97
@@ -148,7 +148,6 @@ SELECT tri_id, 'QUALANOCOVLA' FROM flagged WHERE i < {QUAL_I}
 
 
 def q_anocoverla(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     return spark.sql(f"WITH {COV_CTES}, {ANOCOV_BODY}")
 
 
@@ -185,7 +184,6 @@ FROM geo_lines_dup
 
 
 def q_pnocov2lea(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     probes = spark.sql(PROBES_SQL)
     terms = spark.sql(TERMS_SQL)
     pq = probes.selectExpr(
@@ -247,7 +245,6 @@ WHERE pid NOT IN (SELECT pid FROM covered2)
 
 
 def q_lunma_acrs_a(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     ge = spark.table("geo_edges")
     ends = ge.selectExpr("eid", "xa", "ya")
     anodes = ge.filter("xb IS NOT NULL AND eid % 2 = 0").selectExpr(

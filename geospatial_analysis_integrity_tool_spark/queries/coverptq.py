@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import MY_2D_SENTINEL_Z, sql_dist_m
 from ..operators.pip import with_kring_cells, with_point_cell
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 PV_TOL_M = 60.0     # PNOCOVERLV / LENOCOVERP point-to-vertex tolerance
 _PRE = 0.003        # oracle bbox prefilter half-width (deg) >= tol
@@ -39,7 +39,6 @@ _CELL = 0.002       # engine cell width >= 60 m in degrees at |lat| <= 66
 
 
 def q_pnocoverlv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     sites = spark.table("geo_sites").select("site_id", "lon", "lat")
     # vertex set = the variable-length zigzag lines: interior vertices roam
     # well away from the end-node lattice, so coverage genuinely differs from
@@ -79,7 +78,6 @@ WHERE site_id NOT IN (SELECT site_id FROM covered)
 
 
 def q_lenocoverp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     ends = lines.selectExpr(
         "line_id", "0 AS end_which", "x1 AS ex", "y1 AS ey"
@@ -127,7 +125,6 @@ WHERE NOT EXISTS (SELECT 1 FROM covered c
 def q_lenocovera(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .coverageq import _end_area_cover, _line_ends, _lines_narrow
 
-    register_geo_views(spark, sf_dir)
     ends = _line_ends(_lines_narrow(spark))
     cov = _end_area_cover(spark).select("pid").distinct()
     return ends.join(cov, "pid", "left_anti").selectExpr(
@@ -158,7 +155,6 @@ _VZ = (
 
 
 def q_multidfeat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines").selectExpr("line_id", "vidx", f"{_VZ} AS z")
     agg = v.groupBy("line_id").agg(
         F.expr(

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_coslat_poly, sql_trunc3_mm
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..sources.synthetic import GEO_VIEWS, oracle_cte
 
 SMLCUTOUT_MM2 = 15_000_000   # inner ring below 15,000 m^2 -> SMLCUTOUT
 NARROW_PPM = 50_000          # 2*area/L^2 below 0.05 (integer ppm)
@@ -101,7 +101,6 @@ FROM holes
 
 
 def q_failmerge_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     d = (
         spark.table("geo_lines_dup")
         .filter("line_id % 13 < 2")
@@ -217,7 +216,6 @@ def q_narrow_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Generate barrier (explode of a 1-element struct array) keeps each
     # projection small enough to compile while computing the *identical*
     # double sequence, so the oracle hash is unchanged.
-    register_geo_views(spark, sf_dir)
     c = spark.sql(_CORNERS)
     staged = c.select(
         "area_id",
@@ -273,7 +271,6 @@ _VA_Z = (
 def q_areal_z_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vareas").filter("ring = 0").select(
         "area_id", "vidx"
     )
@@ -341,7 +338,6 @@ _SLOPE_PCT = (
 
 
 def q_hslope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     a = spark.table("geo_areas").selectExpr(
         "area_id", "x1", "y1", "x2", "y2", "x3", "y3",
         f"{_TRI_Z.format(i=1)} AS z1",

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 from .overlay import NTILES, POSTS
 from .rastermask import _ed, _posts
 
@@ -118,7 +118,6 @@ WHERE abs(2 * {_ed('gx', 'gy')} - ({_ed('gx - 1', 'gy')} + {_ed('gx + 1', 'gy')}
 def q_slope_dir_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.intersections import vertices_to_lines
 
-    register_geo_views(spark, sf_dir)
     lines = vertices_to_lines(spark.table("geo_vlines"), extra=("z",))
     n = F.size(F.col("z"))
     zipped = F.arrays_zip(
@@ -174,7 +173,6 @@ _GEOM_KEY = (
 
 
 def q_sameid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     d = spark.table("geo_lines_dup").selectExpr(
         "line_id",
         f"{_SAMEID_KEY} AS local_id",

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.portable_hash import duck_md5_slice, spark_md5_slice
-from ..sources.synthetic import register_testdata_views
 
 #: hashed-ngram feature buckets (the paper uses 10^4; 256 keeps every bucket
 #: populated at the sf0.01 gate fixture while exercising the same plan)
@@ -76,12 +75,13 @@ def _bucket_duck() -> str:
 
 
 def q_docs_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     srcs = ", ".join(f"'{s}'" for s in TARGET_SOURCES)
-    # ONE corpus token pass: everything downstream (target distribution, raw
-    # distribution, per-doc weights) aggregates from the same per-(doc,
-    # source, bucket) count table, so the explode+hash shuffle is computed
-    # once and reused (ReusedExchange) instead of three times
+    # everything downstream (target distribution, raw distribution, per-doc
+    # weights) aggregates from one per-(doc, source, bucket) count table.
+    # That is one DataFrame, not one token pass: the plan scans and tokenizes
+    # documents four times (EXPLAIN.md: four Scan parquet nodes, no
+    # ReusedExchange), because the pushed-down source filters make the four
+    # fragments differ
     n_part = spark.sparkContext.defaultParallelism
     bucket_counts = (
         spark.table("documents")
@@ -215,7 +215,6 @@ SELECT doc_id, logw_fp, gumbel_fp, rank FROM (
 
 
 def q_docs_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     toks = spark.table("documents").select(
         "doc_id", F.posexplode(F.expr(_TOKS)).alias("d", "tok")
     )

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
 from ..operators.pip import with_kring_cells, with_point_cell
 from ..operators.proximity import point_to_segment_proximity
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 # --- geo_le_a_unm (LE_A_UNM_LON 182) --------------------------------------------
 
@@ -72,7 +72,6 @@ FROM geo_edges WHERE eid % 7 = 0
 
 
 def q_le_a_unm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     ends = spark.sql(_LE_ENDS)
     east = spark.sql(_LE_EAST)
     west = spark.sql(_LE_WEST)
@@ -197,7 +196,6 @@ def _side(px: str, py: str) -> str:
 
 
 def q_lunm_acrs_a(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     # localCheckpoint the derived fixture relations: the corridor join below
     # duplicates its inputs' expression trees several times, and the inlined
     # modular-arithmetic fixtures push generated code past janino's 64 KB

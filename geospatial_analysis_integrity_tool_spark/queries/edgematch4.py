@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m
 from ..operators.proximity import point_to_segment_proximity
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 TOL_M = 2.5          # unmatched tolerance for the banded family
 _BAND = 0.0001       # ~8-11 m bands along the boundary (>= TOL_M everywhere)
@@ -104,8 +104,7 @@ _RANGE_BRANCHES: dict[str, str] = {
 }
 
 
-def _register_fixtures(spark: SparkSession, sf_dir: str) -> None:
-    register_geo_views(spark, sf_dir)
+def _register_fixtures(spark: SparkSession) -> None:
     spark.sql(AVERTS_SQL).createOrReplaceTempView("averts")
 
 
@@ -169,7 +168,7 @@ WHERE 1 = 1 {win}
 
 
 def q_geom_unm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _register_fixtures(spark, sf_dir)
+    _register_fixtures(spark)
     out = None
     for errtype, sql in _BRANCHES.items():
         part = _banded_unmatched(spark, sql, errtype)
@@ -189,7 +188,7 @@ ORACLE_GEOM_UNM = (
 
 
 def q_rnge_unm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _register_fixtures(spark, sf_dir)
+    _register_fixtures(spark)
     out = None
     for errtype, sql in _RANGE_BRANCHES.items():
         part = _banded_unmatched(spark, sql, errtype, window=(RANGE_LO, RANGE_HI))
@@ -274,7 +273,6 @@ def _lua_parts(spark: SparkSession):
 
 
 def q_l_unm_a(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     ends, near_edge, any_rescued, same_rescued = _lua_parts(spark)
     base = ends.join(
         near_edge.withColumnRenamed("src_id", "lid"), "lid"
@@ -363,7 +361,7 @@ _AV_FC_E = (
 
 
 def q_unm_attr_a(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _register_fixtures(spark, sf_dir)
+    _register_fixtures(spark)
     ends = spark.sql(LUA_ENDS_SQL)
     edges = spark.sql(BOT_EDGES_SQL).join(
         spark.table("geo_areas").selectExpr("area_id AS aid", "fcode AS afcode"),
@@ -458,7 +456,7 @@ _Y12 = "(py + (qy - py) * (12.0 - px) / (qx - px))"
 
 
 def q_aunm_acrs_a(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _register_fixtures(spark, sf_dir)
+    _register_fixtures(spark)
     av = spark.table("averts")
     w = av.select("aid", "px", "py").withColumn("band", F.floor(F.col("py") / _BAND))
     e = (

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 EDGE_TOL_M = 1.0
 RANGE_LAT_LO = 41.0
@@ -69,7 +69,6 @@ def _banded_pairs(west: DataFrame, east: DataFrame) -> DataFrame:
 
 
 def q_edge_match_attr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     west, east = _sides(spark)
     return (
         _banded_pairs(west, east)
@@ -95,7 +94,6 @@ WHERE {_EM_D} < {EDGE_TOL_M} AND a.fcode_w <> b.fcode_e
 
 
 def q_edge_match_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     west, east = _sides(spark)
     in_range = west.filter(
         (F.col("py") >= RANGE_LAT_LO) & (F.col("py") < RANGE_LAT_HI)

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 ELEVGT_T = 75.0        # spikes only (natural profile tops out at 29.9)
 ELEVLT_T = 0.8         # z steps are 0.1 -> catches 0.0 .. 0.7
@@ -60,7 +60,6 @@ _IS_SENT = (
 
 
 def q_elev_range_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     zl = spark.sql(_ZL)
     zl.createOrReplaceTempView("_elevr_zl")
     sent = F.expr(_IS_SENT)

@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ann import cosine_topk, near_dup_pairs
-from ..sources.synthetic import register_testdata_views
 
 TOPK_K = 5
 TOPK_N_QUERIES = 10
@@ -49,7 +48,6 @@ def _emb_aug(spark: SparkSession) -> DataFrame:
 
 # --- ann_cosine_topk: brute-force top-k neighbors -----------------------------
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     emb = spark.table("embeddings")
     queries = emb.filter(F.col("vec_id") < TOPK_N_QUERIES)
     return cosine_topk(emb, queries, k=TOPK_K)
@@ -83,7 +81,6 @@ FROM ranked WHERE rank <= {TOPK_K}
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import near_dup_pairs_lsh
 
-    register_testdata_views(spark, sf_dir)
     return near_dup_pairs_lsh(_emb_aug(spark), threshold=NEAR_DUP_THRESHOLD)
 
 
@@ -127,7 +124,6 @@ ORACLE_NEAR_DUP_LSH = _lsh_oracle()
 
 # exact broadcast path (small/medium corpora), kept gated separately
 def q_embedding_near_dup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     return near_dup_pairs(_emb_aug(spark), threshold=NEAR_DUP_THRESHOLD)
 
 
@@ -145,7 +141,6 @@ IVF_NPROBE = 3
 
 
 def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     emb = spark.table("embeddings")
     queries = emb.filter(F.col("vec_id") < TOPK_N_QUERIES)
     from ..operators.ann import cosine_topk_ivf

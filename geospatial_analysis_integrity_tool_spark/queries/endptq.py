@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_point_seg_dist_m, with_point_seg_dist_m
 from ..operators.intersections import segments_of_vertices
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 SELF_TOUCH_TOL_M = 15.0
 REGION = (10.0, 14.0, 40.0, 44.0)  # lon_min, lon_max, lat_min, lat_max
@@ -28,7 +28,6 @@ REGION = (10.0, 14.0, 40.0, 44.0)  # lon_min, lon_max, lat_min, lat_max
 
 
 def q_endpoint_self_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines")
     segs = segments_of_vertices(v)
     nv = v.groupBy("line_id").agg(F.count("*").alias("_n"))
@@ -98,7 +97,6 @@ WHERE s.seg_idx <> e.adj_seg
 
 
 def q_feat_outside(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines")
     bbox = v.groupBy("line_id").agg(
         F.min("x").alias("_mnx"), F.max("x").alias("_mxx"),

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
 from ..operators.pip import pip_join, sql_side
 from ..operators.proximity import point_proximity_pairs, point_to_segment_proximity
-from ..sources.synthetic import geo_zone_rings, oracle_cte, register_geo_views
+from ..sources.synthetic import geo_zone_rings, oracle_cte
 
 PROX_TOL_M = 50000.0
 UNDERSHOOT_TOL_M = 3.0
@@ -26,7 +26,6 @@ def q_geo_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Engine: cell-cover equi-join + eastward ray-cast refine (TT.c:6920).
     """
-    register_geo_views(spark, sf_dir)
     points = spark.table("geo_points")
     zones = geo_zone_rings(spark)
     out = pip_join(points, zones, point_id="point_id", poly_id="zone_id")
@@ -41,7 +40,6 @@ def q_geo_pip_gait(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture keeps points off the boundary-degenerate set where only the
     tie-breaks differ), so the gate proves the reference kernel agrees at
     query scale."""
-    register_geo_views(spark, sf_dir)
     points = spark.table("geo_points")
     zones = geo_zone_rings(spark)
     out = pip_join(
@@ -69,7 +67,6 @@ def q_geo_prox_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Engine: k-ring cell self-join, JVM-side exact distance (no UDF).
     """
-    register_geo_views(spark, sf_dir)
     return point_proximity_pairs(
         spark.table("geo_sites"), id_col="site_id", tol_m=PROX_TOL_M
     )
@@ -90,7 +87,6 @@ def q_geo_undershoot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LUNDERSHTL (geomchecks.c:6432-6753): line end node within (0, tol) of
     another line — OPENINT sensitivity (TT.c:13798 SensitivityCheck).
     """
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     ends = lines.select(
         F.col("line_id").alias("src_id"),
@@ -141,7 +137,6 @@ def _kink_expr(prefix: str) -> str:
 
 def q_geo_kink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KINK (TT.c:43064ff emission; angle kernel moregeomchecks.c:1591)."""
-    register_geo_views(spark, sf_dir)
     return (
         spark.table("geo_lines")
         .filter(F.expr(_kink_expr("")))
@@ -173,7 +168,6 @@ def q_geo_dup_geom(spark: SparkSession, sf_dir: str) -> DataFrame:
     Engine: hash-groupBy on a canonical micro-degree geometry signature — the
     Spark replacement for GAIT's per-region O(n^2) duplicate scan (TT.c:45157).
     """
-    register_geo_views(spark, sf_dir)
     return (
         spark.table("geo_lines_dup")
         .select(F.expr(_SIG).alias("geom_sig"), "line_id")
@@ -200,7 +194,6 @@ def q_geo_cell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell density histogram — the engine's analogue of GAIT's
     density-adaptive region sizing input (TTformat.c:28570-28612); feeds the
     hot-cell split planner (plans/partitioning.py)."""
-    register_geo_views(spark, sf_dir)
     return (
         spark.table("geo_points")
         .select(
@@ -229,7 +222,6 @@ def q_geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves salting changes only the physical plan."""
     from ..operators.pip import pip_join_salted
 
-    register_geo_views(spark, sf_dir)
     points = spark.table("geo_points")
     zones = geo_zone_rings(spark)
     # low target forces real salting on the densest cells even at sf0.01
@@ -248,7 +240,6 @@ KNN_RADIUS_M = 100000.0
 def q_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.proximity import knn_points
 
-    register_geo_views(spark, sf_dir)
     return knn_points(
         spark.table("geo_sites"), k=KNN_K, radius_m=KNN_RADIUS_M, max_abs_lat_deg=44.1
     )
@@ -289,7 +280,6 @@ EUCL_TOL_U = 40000.0
 
 
 def q_geo_prox_pairs_euclidean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     pts = spark.table("geo_sites").selectExpr(
         "site_id", "lon * 100000.0 AS px", "lat * 100000.0 AS py"
     )

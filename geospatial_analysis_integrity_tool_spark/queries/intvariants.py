@@ -59,7 +59,7 @@ from pyspark.sql.window import Window
 from ..functions.geodesy import sql_coslat_poly, sql_dist_m
 from ..operators.intersections import sql_intersection_xy, sql_proper_cross
 from ..operators.pip import explode_bbox_cells, with_kring_cells, with_point_cell
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 from .compositionq import POLYS_SQL
 
 CELL = 0.01
@@ -146,7 +146,6 @@ def _ring_segs_df(v: DataFrame) -> DataFrame:
 
 
 def q_cut_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     holes = _ring_segs_df(spark.sql(HOLE2_SQL)).selectExpr(
         "area_id", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
     )
@@ -214,7 +213,6 @@ _IX, _IY = sql_intersection_xy()
 
 
 def q_laiex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = spark.sql(LAIEX_LINES_SQL).selectExpr(
         "lid", "lx AS ax", "ya AS ay", "lx AS bx", "yb AS by"
     )
@@ -303,7 +301,6 @@ _END_ON_QTR = (
 
 
 def q_lfnoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     segs = spark.sql(LINE_SEGS_SQL)
     a = _seg_cells(segs).selectExpr(
         "cell", "sid AS id_a", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
@@ -374,7 +371,6 @@ SELECT aid, ax3, ay3, ax1, ay1 FROM ({AREAS_B_SQL})
 
 
 def q_areaintarea(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     ea = spark.sql(AREA_EDGES_SQL)
     eb = spark.sql(AREA_B_EDGES_SQL)
     a = _seg_cells(ea).selectExpr(
@@ -441,7 +437,6 @@ _MIN_END_D = (
 
 
 def q_llintnoend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     segs = spark.sql(LINE_SEGS_SQL)
     ends = lines.selectExpr(
@@ -518,7 +513,6 @@ SELECT poly_id, x3, y3, x1, y1 FROM ({POLYS_SQL})
 
 
 def q_lmint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lsegs = spark.sql(LINE_SEGS_SQL)
     pedges = spark.sql(POLY_EDGES_SQL)
     lc = _seg_cells(lsegs).selectExpr(
@@ -598,7 +592,6 @@ _NO_SHARED_NODE = (
 
 
 def q_nonodeovlp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = spark.sql(OVLP_LINES_SQL)
     edges = spark.sql(AREA_EDGES_SQL).selectExpr(
         "aid", "ax AS ex1", "ay AS ey1", "bx AS ex2", "by AS ey2"

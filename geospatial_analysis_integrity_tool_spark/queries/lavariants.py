@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from ..functions.geodesy import sql_point_seg_dist_m
 from ..operators.intersections import sql_intersection_xy, sql_proper_cross
 from ..operators.pip import explode_bbox_cells, sql_ray3, with_point_cell
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 CELL = 0.01
 SLICE_MIL_MAX = 200          # LSLICEA: piece/total ratio < 0.200
@@ -124,7 +124,6 @@ def _seg_bbox(df: DataFrame, ax: str, ay: str, bx: str, by: str,
 
 
 def q_line_area_cut_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = spark.sql(LA_LINES_SQL).localCheckpoint()
     edges = spark.sql(AREA_EDGES_SQL).localCheckpoint()
 
@@ -287,7 +286,6 @@ _EDGE_DIST = sql_point_seg_dist_m("vx", "vy", "ex1", "ey1", "ex2", "ey2")
 
 
 def q_line_in_area_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     areas = spark.table("geo_areas")
     in_lines = spark.sql(IN_LINES_SQL).localCheckpoint()
     cover = spark.sql(COVER_LINES_SQL).localCheckpoint()

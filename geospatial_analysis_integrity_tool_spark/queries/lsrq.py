@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.geodesy import sql_euclidean_dist, sql_trunc3_mm
 from ..operators.intersections import segments_of_vertices
 from ..operators.proximity import point_proximity_pairs
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 #: fixed LSR frame: rotate by 0.48 rad, then offset — constants are exact
 #: double literals shared by both engines (repr of cos/sin(0.48))
@@ -64,7 +64,6 @@ _LSR_SITES_SELECT = (
 
 
 def q_lsr_prox_planar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     pts = spark.sql(_LSR_SITES_SELECT)
     return point_proximity_pairs(
         pts, id_col="site_id", lon="lx", lat="ly",
@@ -99,7 +98,6 @@ _SEG_LSR_MU = sql_trunc3_mm(
 
 
 def q_lsr_feat_length(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     segs = segments_of_vertices(spark.table("geo_vlines"))
     lengths = (
         segs.selectExpr("line_id", f"{_SEG_LSR_MU} AS seg_mu")

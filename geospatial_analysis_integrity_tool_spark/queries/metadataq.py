@@ -11,11 +11,9 @@ from ..sources.metadata_xml import (
     VALID_TRIGRAPHS,
     validate_metadata_xml,
 )
-from ..sources.synthetic import register_testdata_views
 
 
 def q_metadata_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     xml = spark.sql(METADATA_XML_SQL)
     return validate_metadata_xml(xml)
 

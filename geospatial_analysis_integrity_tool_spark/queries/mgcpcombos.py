@@ -27,7 +27,6 @@ from ..functions.mgcp_combos import (
     MGCP3_WARNAREACOMBOS,
 )
 from ..functions.schema_models import model
-from ..sources.synthetic import register_testdata_views
 
 CLASS_CODES = model("MGCP3")["classes"]
 
@@ -52,7 +51,6 @@ FROM orders WHERE o_orderkey < {N_PAIRS}
 
 
 def q_mgcp_overlap_combos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     pairs = spark.sql(_PAIR_SQL)
     roster = spark.createDataFrame(
         list(enumerate(CLASS_CODES)), "idx int, fcode string"

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from ..functions.mgcp3_tables import OPTIONAL_A, OPTIONAL_L, OPTIONAL_P
 from ..functions.schema_models import model
-from ..sources.synthetic import register_testdata_views
 
 CLASS_CODES = model("MGCP3")["classes"]
 ATTR_CODES = model("MGCP3")["attrs"]
@@ -67,7 +66,6 @@ def _fixture_exprs(o: str) -> dict[str, str]:
 
 
 def q_attr_mgcp3_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     e = _fixture_exprs("o_orderkey")
     feats = (
         spark.table("orders")
@@ -240,7 +238,6 @@ ORACLES = {"attr_mgcp3_domains": _oracle()}
 def q_attr_enum_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.schema_models import enum_value_labels
 
-    register_testdata_views(spark, sf_dir)
     rows = [
         (a, v, n) for (a, v), n in sorted(enum_value_labels("MGCP3").items())
     ]

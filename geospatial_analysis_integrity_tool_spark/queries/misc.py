@@ -12,7 +12,7 @@ from ..sources.multimodal import (
     extract_media_features,
     synth_media,
 )
-from ..sources.synthetic import oracle_cte, register_geo_views, register_testdata_views
+from ..sources.synthetic import oracle_cte
 
 # --- check_role_gating (CombinedCheckApplies TT.c:30625) ----------------------
 
@@ -27,7 +27,6 @@ SPEC_ROWS = [
 
 
 def q_check_role_gating(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     features = spark.table("geo_points").selectExpr(
         "point_id AS feature_id", "fcode", "CAST(1 AS INT) AS geom"
     )
@@ -69,7 +68,6 @@ UNION ALL
 
 # --- dedup_simhash (GATED: md5 token-hash simhash re-derived in SQL) ----------
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     d = spark.table("documents").select("doc_id", "text")
     pert = d.select(
         (F.col("doc_id") + F.lit(1000000)).alias("doc_id"),
@@ -217,7 +215,6 @@ def q_checkpoint_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.checkpointing import lineage, run_stage_checkpointed
     from ..sources.fixtures import fixture_dir
 
-    register_testdata_views(spark, sf_dir)
     out = fixture_dir(
         "checkpoint_gate_" + sf_dir.strip("/").replace("/", "_")
     )

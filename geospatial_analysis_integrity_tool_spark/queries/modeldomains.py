@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.schema_models import NUMERIC_TYPES, all_models, model_names
-from ..sources.synthetic import register_testdata_views
 
 N_FEATURES = 4000
 
@@ -76,7 +75,6 @@ def _tables(model: str):
 
 def _make_query(model: str):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_testdata_views(spark, sf_dir)
         classes, attr_rows, enum_rows = _tables(model)
         e = _fixture_exprs("o_orderkey", len(classes), len(attr_rows))
         feats = (

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_coslat_poly, sql_dist_m, sql_trunc3_mm
 from ..operators.intersections import segment_intersections, segments_of_vertices
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..sources.synthetic import GEO_VIEWS, oracle_cte
 from .vgeomq import CELL, SEGCELL, ORACLE_LLINT_V
 
 NODE_TOL_M = 33.0          # crossing counts as "at a node" within 33 m
@@ -47,7 +47,6 @@ BIGAREA_MM2 = 370_000_000      # outer-ring area > 370,000 m^2
 
 
 def q_multi_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     x = segment_intersections(
         segments_of_vertices(spark.table("geo_vlines")), cell_deg=CELL
     )
@@ -69,7 +68,6 @@ FROM llint GROUP BY 1, 2 HAVING COUNT(*) > 1
 
 
 def q_cross_away_from_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines")
     x = segment_intersections(segments_of_vertices(v), cell_deg=SEGCELL)
     nv = v.groupBy("line_id").agg(F.count("*").alias("_n"))
@@ -134,7 +132,6 @@ WHERE NOT EXISTS (
 def q_isolated_areas(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .vgeomq import q_area_overlap
 
-    register_geo_views(spark, sf_dir)
     overlaps = q_area_overlap(spark, sf_dir)
     touched = (
         overlaps.select(F.col("id_a").alias("area_id"))
@@ -172,7 +169,6 @@ _SEG_MM = sql_trunc3_mm(sql_dist_m("sax", "say", "sbx", "sby"))
 
 
 def q_feat_length_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     segs = segments_of_vertices(spark.table("geo_vlines"))
     lengths = (
         segs.selectExpr("line_id", f"{_SEG_MM} AS seg_mm")
@@ -234,7 +230,6 @@ _SEG_EU_MU = sql_trunc3_mm(
 
 
 def q_feat_length_euclidean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     segs = segments_of_vertices(spark.table("geo_vlines"))
     lengths = (
         segs.selectExpr("line_id", f"{_SEG_EU_MU} AS seg_mu")

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..operators.intersections import line_intersections, segments_of_vertices, vertices_to_lines
 from ..operators.pip import explode_bbox_cells, with_point_cell
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..sources.synthetic import GEO_VIEWS, oracle_cte
 from .vgeomq import CELL, ORACLE_LLINT_V, RAY_CROSS
 
 # --- geo_lines_no_intersection (LLNOINT 115) -----------------------------------
@@ -30,7 +30,6 @@ NOINT_CELL = 0.02  # whole-line bboxes are wider than segments; coarser cells
 
 
 def q_lines_no_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines")
     lines = vertices_to_lines(v)
     bbox = v.groupBy("line_id").agg(
@@ -113,7 +112,6 @@ WHERE (o_orderkey % 30) = 0
 def q_inside_hole(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .vgeomq import _area_edges
 
-    register_geo_views(spark, sf_dir)
     aug = spark.sql(_AREAS_IH_SQL)
     aug.createOrReplaceTempView("geo_vareas_ih")
     holes = aug.filter("ring = 1")

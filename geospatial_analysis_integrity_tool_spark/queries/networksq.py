@@ -14,11 +14,10 @@ from pyspark.sql import functions as F
 from ..functions.geodesy import sql_dist_m
 from ..operators.networks import component_stats, connected_components
 from ..operators.pip import cell_deg_for_tolerance, with_kring_cells, with_point_cell
-from ..sources.synthetic import GEO_VIEWS, register_geo_views
+from ..sources.synthetic import GEO_VIEWS
 
 
 def q_network_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     comp = connected_components(spark.table("geo_lines"))
     sizes = component_stats(comp)
     return comp.join(sizes, "component_id").select(
@@ -80,7 +79,7 @@ FROM comp c JOIN sizes s USING (component_id)
 NEAR_MISS_TOL_M = 5.0
 
 
-def _endpoint_cell_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _endpoint_cell_pairs(spark: SparkSession) -> DataFrame:
     """Candidate endpoint pairs for the near-miss checks: every line endpoint
     tagged with its component, the left side in its cell, the right side in
     its 3x3 k-ring, equi-joined on cell.
@@ -90,7 +89,6 @@ def _endpoint_cell_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of longitude must span >= the tolerance, or qualifying pairs can land 2+
     cells apart above ~63 deg latitude and be silently missed by the k-ring.
     """
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     comp = connected_components(lines).withColumnRenamed("line_id", "cid_line")
     starts = lines.selectExpr("line_id", "x1 AS ex", "y1 AS ey")
@@ -130,7 +128,7 @@ def _endpoint_cell_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_network_near_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.expr(sql_dist_m("_xa", "_ya", "_xb", "_yb"))
     return (
-        _endpoint_cell_pairs(spark, sf_dir)
+        _endpoint_cell_pairs(spark)
         .filter(F.col("comp_a") < F.col("comp_b"))
         .withColumn("_d", d)
         .filter(F.col("_d") < F.lit(NEAR_MISS_TOL_M))
@@ -161,7 +159,6 @@ WHERE {_NM_D} < {NEAR_MISS_TOL_M}
 def q_netisofeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runs on a sparsified layer (every 7th residue class 0-2) — the full
     fixture's endpoint lattice leaves no singleton networks to find."""
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines").filter(F.col("line_id") % 7 < 3)
     comp = connected_components(lines)
     sizes = component_stats(comp)
@@ -193,7 +190,7 @@ WHERE s.n_lines = 1
 def q_network_intra_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.expr(sql_dist_m("_xa", "_ya", "_xb", "_yb"))
     return (
-        _endpoint_cell_pairs(spark, sf_dir)
+        _endpoint_cell_pairs(spark)
         .filter(
             (F.col("comp_a") == F.col("comp_b"))
             & (F.col("line_a") < F.col("line_b"))

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..operators.encode import encode_cells
 from ..sources.pages import extract_features, extract_text, synth_pages
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 
 def _s2_parent_sql(col: str, parent_level: int) -> str:
@@ -114,7 +114,6 @@ def _cell_pair_stats(
 
 
 def q_encode_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     pts = spark.table("geo_points").select("point_id", "lon", "lat")
     enc = encode_cells(pts, hex_res=(7, 9, 12), s2_levels=(10, 13, 16)).persist()
     pairs = [("hex", 7, 9), ("hex", 9, 12), ("s2", 10, 13), ("s2", 13, 16)]

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from ..functions.schema_models import all_models
 from ..functions.schema_nunanpo import nunanpo_enums
-from ..sources.synthetic import register_testdata_views
 
 MODEL = "NFDD"
 N_FEATURES = 6000
@@ -55,7 +54,6 @@ _FIX = {
 
 
 def q_attr_nfdd_nunanpo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     attr_rows, strict_rows, wide_rows = _tables()
     n_attr = len(attr_rows)
     feats = (
@@ -256,7 +254,6 @@ WHERE verdict <> 'MATCH'
 
 
 def q_edgematch_nunanpo_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     return spark.sql(_np_sql())
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.raster import overlay_sample_exact
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 # --- raster_point_grid_dif (PT_GRID_DIF 198) ----------------------------------
 
@@ -49,7 +49,6 @@ def build_raster_tiles(spark: SparkSession) -> DataFrame:
 
 
 def q_raster_point_grid_dif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     sites = (
         spark.table("geo_sites")
         .selectExpr("site_id", "lon", "lat", f"{_GX} AS gx0", f"{_GY} AS gy0")

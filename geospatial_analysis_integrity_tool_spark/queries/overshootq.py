@@ -20,14 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.intersections import segment_intersections, segments_of_vertices
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..sources.synthetic import GEO_VIEWS, oracle_cte
 from .vgeomq import CELL, SEGCELL, ORACLE_LLINT_V
 
 OVERSHOOT_UDEG = 500  # ~55 m Manhattan in integer micro-degrees
 
 
 def q_overshoot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines")
     x = segment_intersections(segments_of_vertices(v), cell_deg=SEGCELL)
 
@@ -99,7 +98,6 @@ _PT_KEY = "(CAST(floor({x} * 1000000.0) AS BIGINT) * 100000000 + CAST(floor({y} 
 
 
 def q_area_shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     aug = spark.sql(_AREAS_DUP_SQL)
     aug.createOrReplaceTempView("geo_vareas_dup")
     nv = aug.groupBy("area_id", "ring").agg(F.count("*").alias("_n"))

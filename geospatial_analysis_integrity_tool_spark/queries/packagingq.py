@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.synthetic import register_testdata_views
-
 N_PACKAGES = 60
 
 SUMMARY_FILES = ["checkoptions.txt", "checksummary.txt", "contentsummary.txt"]
@@ -77,7 +75,6 @@ FROM (SELECT o_orderkey AS p FROM orders WHERE o_orderkey < {N_PACKAGES})
 
 
 def q_mgcp_package_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     pkgs = spark.sql(_packages_sql())
     required = spark.createDataFrame(
         [(f,) for f in REQUIRED_FILES], "filename string"

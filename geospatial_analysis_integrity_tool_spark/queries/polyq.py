@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from ..operators.intersections import sql_proper_cross
 from ..operators.pip import explode_bbox_cells, with_point_cell
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 from .compositionq import POLYS_SQL
 from .intvariants import (
     AREA_EDGES_SQL,
@@ -74,7 +74,6 @@ WINDOW w AS (PARTITION BY area_id, ring ORDER BY vidx)
 
 
 def q_ptosideregion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     edges = spark.sql(_VAREA_EDGES)
     sites = spark.table("geo_sites").filter("fcode = 'AT010'")
     probes = sites.selectExpr("site_id", "lon AS px", "lat AS py")
@@ -160,7 +159,6 @@ _TRI_RAY = (
 def q_leaon_notin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.proximity import point_seg_candidates
 
-    register_geo_views(spark, sf_dir)
     stubs = spark.sql(STUB_LINES_SQL)
     edges = spark.sql(AREA_EDGES_SQL)
     on_edge = point_seg_candidates(
@@ -244,7 +242,6 @@ SELECT poly_id, x3, y3 FROM ({POLYS_SQL})
 
 
 def q_polyoside(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     polys = spark.sql(POLYS_SQL).filter("poly_id % 5 = 0")
     corners = spark.sql(POLY_CORNERS_SQL).filter("poly_id % 5 = 0")
     areas = spark.table("geo_areas").select(
@@ -357,7 +354,6 @@ FROM ({POLYS_SQL}) WHERE poly_id % 3 = 0
 
 
 def q_polyintpoly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     ea = spark.sql(POLY_EDGES_SQL)
     eb = spark.sql(POLYS_B_EDGES_SQL)
     a = _seg_cells(ea).selectExpr(
@@ -398,7 +394,6 @@ WHERE a._mnx <= b._mxx AND a._mxx >= b._mnx
 
 
 def q_polyintarea(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     pe = spark.sql(POLY_EDGES_SQL)
     ae = spark.sql(AREA_EDGES_SQL)
     p = _seg_cells(pe).selectExpr(
@@ -489,7 +484,6 @@ _IXS, _IYS = _guarded_xy()
 
 
 def q_lspint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lsegs = spark.sql(LSP_LINE_SEGS_SQL)
     # materialize the (small) poly layer once: the fixture synthesis CASEs
     # plus the steep predicate inlined 3x per edge branch blow the codegen

@@ -55,7 +55,7 @@ from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
 from ..operators.intersections import sql_intersection_xy, sql_proper_cross
 from ..operators.pip import explode_bbox_cells, with_kring_cells, with_point_cell
 from ..operators.proximity import point_seg_candidates, point_to_segment_proximity
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 LELINE_TOL_M = 3.0
 BND_TOL_M = 2.0
@@ -97,7 +97,6 @@ SELECT line_id, x3, y3 FROM geo_lines
 
 
 def q_leline_prox(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     ends = spark.sql(LINE_ENDS_SQL)
     segs = spark.sql(LINE_SEGS_SQL)
     # Lower bound is 1 um, not 0: at a SHARED endpoint the point-seg distance
@@ -162,7 +161,6 @@ _DBND_M = f"LEAST({_DLON_M}, {_DLAT_M})"
 
 
 def q_lbndusht(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     ends = (
         spark.sql(LINE_ENDS_SQL)
         .withColumn("dbnd", F.expr(_DBND_M))
@@ -241,7 +239,6 @@ SELECT line_id, x2 AS vx, y2 AS vy FROM geo_lines WHERE {_STRAIGHT}
 
 
 def q_vushtl_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     verts = spark.sql(VU_VERTS_SQL)
     targets = spark.sql(VU_TARGETS_SQL)
     pairs = point_to_segment_proximity(
@@ -364,7 +361,6 @@ def _crossings(spark: SparkSession) -> DataFrame:
 
 
 def q_plp_fail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     sites = spark.table("geo_sites")
     segs = spark.sql(LINE_SEGS_SQL)
 
@@ -490,7 +486,6 @@ FROM geo_vlines WHERE vidx = 1 + (line_id % 49)
 
 
 def q_lez_prox_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     ends = spark.sql(LEZ_ENDS_SQL).filter(F.col("ez") != Z_SENTINEL)
     stubs = spark.sql(LEZ_STUBS_SQL).filter(F.col("sz") != Z_SENTINEL)
     ek = with_kring_cells(ends, "ex", "ey", 0.0001)
@@ -549,7 +544,6 @@ _D_PERIM = (
 
 
 def q_overunder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     sites = spark.table("geo_sites")
     outside = sites.filter(
         (F.col("lon") < B_XLO) | (F.col("lon") >= B_XHI)

@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.polar_stereo import oracle_ps_subquery, with_ps_geodetic
-from ..sources.synthetic import register_testdata_views
 
 N_FEATURES = 4000
 
@@ -38,7 +37,6 @@ WHERE c_custkey < {N_FEATURES}
 
 
 def q_ups_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     feats = spark.sql(_PS_FIXTURE_SQL)
     north = with_ps_geodetic(feats.filter("hemi = 0"), "easting", "northing")
     south = with_ps_geodetic(

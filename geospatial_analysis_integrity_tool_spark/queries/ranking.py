@@ -35,8 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.synthetic import register_testdata_views
-
 #: fixed disjunctive query (terms from the corpus vocabulary)
 QUERY_TERMS = ("spark", "window", "merge", "stream")
 TOP_K = 10
@@ -45,7 +43,6 @@ _TOKS = "filter(split(text, '\\\\s+'), t -> t <> '')"
 
 
 def q_docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     docs = spark.table("documents").select(
         "doc_id", F.expr(_TOKS).alias("toks")
     )

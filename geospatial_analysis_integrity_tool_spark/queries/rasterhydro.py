@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.networks import min_label_components
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..sources.synthetic import GEO_VIEWS, oracle_cte
 from .overlay import NTILES, POSTS
 from .rastermask import _ed, _ed2, _is_zone, _posts
 
@@ -416,7 +416,6 @@ def _clamp_ed(x: str, y: str) -> str:
 def q_clamp_sdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slope direction change along a DEM-clamped line: consecutive clamped
     segments climb then descend (or vice versa), both legs above noise."""
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines").selectExpr(
         "line_id", "vidx", f"{_clamp_ed('x', 'y')} AS zc"
     )
@@ -491,7 +490,6 @@ def _join_ends_sql() -> str:
 def q_clamp_join_sdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slope direction change where two clamped lines meet at a node
     (exact quantized-endpoint join on the geo_lines fixture)."""
-    register_geo_views(spark, sf_dir)
     ends = spark.sql(_join_ends_sql())
     a = ends.selectExpr("line_id AS line_a", "node_key", "d_in AS d_a")
     b = ends.selectExpr("line_id AS line_b", "node_key", "d_in AS d_b")
@@ -530,7 +528,6 @@ ORACLE_CLAMP_JOIN_SDC = _oracle_clamp_join_sdc()
 
 def q_clamp_nflat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Area whose outer ring does not clamp to one constant DEM elevation."""
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vareas").filter("ring = 0").selectExpr(
         "area_id", f"{_clamp_ed('x', 'y')} AS zc"
     )
@@ -556,7 +553,6 @@ GROUP BY 1 HAVING COUNT(DISTINCT {_clamp_ed('x', 'y')}) > 1
 def q_clamp_seg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catenary segment below the DEM: the segment's interpolated midpoint
     elevation sits more than tolerance below the DEM post at the midpoint."""
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines")
     w = Window.partitionBy("line_id").orderBy("vidx")
     segs = (

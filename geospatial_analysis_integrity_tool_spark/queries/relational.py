@@ -18,8 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.synthetic import register_testdata_views
-
 _CENTS = "CAST(floor({x} * 100.0 + 0.5) AS BIGINT)"
 
 
@@ -29,7 +27,6 @@ def _cents(x: str) -> F.Column:
 
 # --- q1: pricing summary (TPC-H Q1 shape: scan + filter + partial agg) --------
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     li = spark.table("lineitem").filter(
         F.col("l_shipdate") <= F.expr("TIMESTAMP '1998-09-01 00:00:00'")
     )
@@ -55,7 +52,6 @@ GROUP BY l_returnflag, l_linestatus
 
 # --- q3: shipping priority (3-way join + agg) ---------------------------------
 def q_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     cust = spark.table("customer").filter(F.col("c_mktsegment") == "HOUSEHOLD")
     orders = spark.table("orders").filter(
         F.col("o_orderdate") < F.expr("TIMESTAMP '1998-01-01 00:00:00'")
@@ -83,7 +79,6 @@ GROUP BY o_orderkey, o_orderdate
 
 # --- q5: revenue by region/nation (star join, broadcast dims) -----------------
 def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     region = spark.table("region")
     nation = spark.table("nation")
     cust = spark.table("customer")
@@ -120,7 +115,6 @@ GROUP BY r_name, n_name
 
 # --- events_hourly: time-bucketed aggregation ---------------------------------
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     ev = spark.table("events")
     return ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour"), F.col("event_type")
@@ -144,7 +138,6 @@ SESSION_GAP_MS = 30 * 60 * 1000
 
 
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     # parquet timestamps arrive as TIMESTAMP_NTZ; with session tz=UTC the cast
     # to LTZ interprets the wall clock as UTC — matching DuckDB's epoch_ms
     ev = spark.table("events").withColumn(
@@ -191,7 +184,6 @@ FROM flagged GROUP BY user_id
 # by event type each pass; at 10^12 events the type filter is pushed to the
 # scan and each aggregate is map-side combinable).
 def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     e = spark.table("events").select("user_id", "event_type", "ts")
     v = (
         e.filter(F.col("event_type") == "view")

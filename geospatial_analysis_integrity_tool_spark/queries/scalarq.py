@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 from .vgeomq import _TRIPLES_CTE, _line_triples
 from ..operators.intersections import vertices_to_lines
 
@@ -36,7 +36,6 @@ COLINEAR_PRED = "abs(ux * wy - uy * wx) < 1e-12"
 
 
 def q_colinear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = vertices_to_lines(spark.table("geo_vlines"))
     return _line_triples(lines).filter(F.expr(COLINEAR_PRED)).select(
         "line_id", "vidx"
@@ -68,7 +67,6 @@ def _strict_inside(px, py, x1, y1, x2, y2, x3, y3) -> str:
 
 
 def q_convex_hull_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vareas").filter("ring = 0").select("area_id", "vidx", "x", "y")
 
     def side(n):
@@ -143,7 +141,6 @@ FROM nv LEFT JOIN nin USING (area_id)
 
 
 def q_line_lsq_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines").selectExpr(
         "line_id",
         "CAST(floor(x * 1000000.0) AS BIGINT) AS xi",
@@ -190,7 +187,6 @@ FROM acc
 def q_conf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .checks2 import q_conflation_best_match
 
-    register_geo_views(spark, sf_dir)
     best = q_conflation_best_match(spark, sf_dir)
     site_fc = spark.table("geo_sites").select("site_id", F.col("fcode").alias("site_fcode"))
     line_fc = spark.table("geo_lines").select(

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.checkspec import SENSITIVITY_OPS
-from ..sources.synthetic import oracle_cte, register_geo_views, register_testdata_views
+from ..sources.synthetic import oracle_cte
 
 # --- sensitivity_ops -----------------------------------------------------------
 
@@ -55,7 +55,6 @@ FROM orders
 
 
 def q_sensitivity_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     mags = spark.sql(_MAGS_SQL)
     spec = spark.createDataFrame(
         SENS_SPEC, "chk string, op string, t1 double, t2 double"
@@ -101,7 +100,6 @@ def q_tolerance_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.inspection_spec import load_inspection_spec
     from .specq import SPEC_TEXT
 
-    register_testdata_views(spark, sf_dir)
     spec = load_inspection_spec(spark, SPEC_TEXT)
     return resolve_tolerances(spec).selectExpr(
         '`check`',
@@ -127,7 +125,6 @@ SELECT * FROM (VALUES
 
 def q_ring_winding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shoelace 2*area per ring in udeg^2 (exact ints); winding from sign."""
-    register_geo_views(spark, sf_dir)
     from pyspark.sql.window import Window
 
     v = spark.table("geo_vareas").selectExpr(
@@ -189,7 +186,6 @@ def q_hole_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (even-odd parity over OUTER-ring edges only, candidates by bbox cell)."""
     from .vgeomq import _area_edges, _inside_pairs
 
-    register_geo_views(spark, sf_dir)
     spark.table("geo_vareas").filter("ring = 0").createOrReplaceTempView(
         "geo_vareas_outer"
     )

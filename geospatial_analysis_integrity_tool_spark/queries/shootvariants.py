@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from ..functions.geodesy import sql_point_seg_dist_m
 from ..operators.pip import sql_ray3
 from ..operators.proximity import point_to_segment_proximity
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 TOL_M = 0.5
 CELL = 0.01
@@ -119,7 +119,6 @@ CASE WHEN src = 'P' AND NOT {sql_ray3('px', 'py')} THEN 'PUNDERSHTA'
 
 
 def q_shoot_area_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     probes = spark.sql(AREA_PROBES_SQL).localCheckpoint()
     edges = (
         spark.sql(AUG_EDGES_SQL)
@@ -248,7 +247,6 @@ _SIDE = "sign((bx - ax) * (py - ay) - (by - ay) * (px - ax))"
 
 
 def q_shoot_line_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     targets = spark.sql(SV_TARGETS_SQL).localCheckpoint()
     probes = spark.sql(SV_PROBES_SQL).localCheckpoint()
 

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from ..sources.fixtures import fixture_dir
 from ..sources.shapefile import read_dbf, read_shp, write_dbf, write_polyline_shp
-from ..sources.synthetic import register_testdata_views
 
 N_FEATURES = 1000
 
@@ -78,7 +77,6 @@ def write_fixture(dirpath: str | None = None, n: int = N_FEATURES) -> str:
 
 
 def q_shp_dbf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     d = write_fixture()
     feats = read_shp(spark, d + "/*.shp").filter(F.col("shape_type") == 3)
     attrs = read_dbf(spark, d + "/*.dbf")

@@ -26,7 +26,6 @@ from ..functions.spaceframes import (
     oracle_spaceframe_subquery,
     with_spaceframe_geodetic,
 )
-from ..sources.synthetic import register_testdata_views
 
 N_FEATURES = 4000
 
@@ -52,7 +51,6 @@ WHERE (ux * ux + uy * uy + uz * uz) > 1000000.0
 
 def _make_query(frame: str):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_testdata_views(spark, sf_dir)
         feats = spark.sql(_FRAME_FIXTURE_SQL)
         out = with_spaceframe_geodetic(feats, frame, "fx", "fy", "fz")
         pre = frame.lower()

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.synthetic import oracle_cte, register_geo_views, register_testdata_views
+from ..sources.synthetic import oracle_cte
 
 # --- inspection_spec_roles ----------------------------------------------------
 
@@ -48,7 +48,6 @@ def q_inspection_spec_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.checkspec import apply_roles
     from ..sources.inspection_spec import load_inspection_spec
 
-    register_testdata_views(spark, sf_dir)
     spec = load_inspection_spec(spark, SPEC_TEXT)
     features = spark.sql(_FEATURES_SQL)
     return apply_roles(features, spec)
@@ -101,7 +100,6 @@ def q_markignore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..conditions import mark_ignored
     from .vgeomq import q_zkink
 
-    register_geo_views(spark, sf_dir)
     new = q_zkink(spark, sf_dir)
     prior = new.filter(F.col("line_id") % 2 == 0)
     return mark_ignored(new, prior, ["line_id", "vidx"])

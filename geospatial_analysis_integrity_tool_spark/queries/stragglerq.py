@@ -44,7 +44,7 @@ from ..operators.intersections import (
 )
 from ..operators.pip import with_kring_cells, with_point_cell
 from ..operators.proximity import point_to_segment_proximity
-from ..sources.synthetic import oracle_cte, oracle_materialized, register_geo_views
+from ..sources.synthetic import oracle_cte, oracle_materialized
 from .vgeomq import (
     CELL,
     RAY_CROSS,
@@ -121,7 +121,6 @@ turns AS MATERIALIZED (
 
 
 def q_internalkink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     return (
         _vline_turns(spark)
         .filter(F.expr(KINK_STRONG))
@@ -142,7 +141,6 @@ WHERE {KINK_STRONG} AND vidx >= 2 AND vidx <= n - 3
 
 
 def q_context_kink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     t = _vline_turns(spark).withColumn(
         "cls",
         F.expr(
@@ -184,7 +182,6 @@ WHERE a.cls = 2 AND EXISTS (
 
 
 def q_isoturn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     strong = (
         _vline_turns(spark)
         .filter(F.expr(KINK_STRONG))
@@ -225,7 +222,6 @@ WHERE NOT EXISTS (
 
 
 def q_p_o_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines")
     segs = segments_of_vertices(v)
     loops = self_intersections_of_segments(segs)
@@ -256,7 +252,6 @@ WHERE l.seg_a = 1 OR l.seg_b = n.ns
 def q_ptinproper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point inside an areal (even-odd over ALL rings — holes count) and not
     within tolerance of any of that areal's ring edges."""
-    register_geo_views(spark, sf_dir)
     sites = spark.table("geo_sites").selectExpr(
         "site_id", "lon AS px", "lat AS py"
     )
@@ -337,7 +332,6 @@ WHERE v.ring = 0 AND v.area_id % 6 <> 0
 
 
 def q_polyinarea(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     spark.sql(_AREAS_PIA_SQL).createOrReplaceTempView("geo_vareas_pia")
     edges = _area_edges(spark, view="geo_vareas_pia")
     probes = spark.table("geo_vareas_pia").selectExpr(
@@ -439,7 +433,6 @@ tedges AS (
 def q_netisoa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangles of the (hole-punched) mosaic with NO shared-edge neighbor —
     the degree-0 case of the transitive-connection check."""
-    register_geo_views(spark, sf_dir)
     edges = spark.sql(f"WITH {_EDGES_ISO_SQL.strip()} SELECT * FROM tedges")
     neigh = (
         edges.selectExpr("tri_id AS ta", "a", "b")
@@ -494,7 +487,6 @@ def q_featbridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line L is the only connection between same-fcode features A and B:
     L meets A at one node and B at a DIFFERENT node, A and B are not
     directly adjacent, and no other line connects A and B."""
-    register_geo_views(spark, sf_dir)
     nodes = spark.sql(_NODES_SQL)
     la = (
         nodes.selectExpr("line_id AS l", "node_key AS k1")
@@ -585,7 +577,6 @@ _QON = "({q} % 1000000 = 0)"
 def q_lhang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line end exactly on a whole-degree boundary with no other feature end
     at the same quantized point (edge-match hang, geomchecks.c:2958)."""
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     ends = lines.selectExpr(
         "line_id", "0 AS end_which",
@@ -647,7 +638,6 @@ WHERE ({_QON.format(q='e.qx')} OR {_QON.format(q='e.qy')})
 def q_ahang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Areal vertex exactly on a whole-degree boundary with no other areal
     sharing that quantized vertex."""
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vareas").selectExpr(
         "area_id", "ring", "vidx",
         "CAST(floor(x * 1000000.0) AS BIGINT) AS qx",
@@ -698,7 +688,6 @@ def q_vvt_1way(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature carrying the designated attribute & value (SIZ = 13)."""
     from .checks2 import _ATTR_BASE
 
-    register_geo_views(spark, sf_dir)
     base = spark.sql(_ATTR_BASE)
     return base.filter(F.col("siz") == 13).select(
         "feature_id",
@@ -739,9 +728,6 @@ TPORTRAY_GROUPS = [
 def q_attr_tportrayf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .attrchecks import _ATTRS2_SQL
 
-    from ..sources.synthetic import register_testdata_views
-
-    register_testdata_views(spark, sf_dir)
     attrs_long = spark.sql(_ATTRS2_SQL)
     feats = attrs_long.select("feature_id", "fcode").distinct()
     present = attrs_long.filter(F.col("attr").isNotNull())

@@ -58,12 +58,13 @@ def write_lsh_stream_fixture(sf_dir: str) -> str:
         os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
     )
     n = int(docs["doc_id"].max()) + 1
-    # cache key includes a content digest: this fixture is DERIVED from the
-    # documents table, so a regenerated corpus with the same cardinality must
-    # not serve stale signatures
-    digest = hashlib.md5(
-        f"{n}|{docs['text'].str.len().sum()}|{docs['text'].iloc[0]}".encode()
-    ).hexdigest()[:8]
+    # cache key digests every (doc_id, text): this fixture is DERIVED from
+    # the documents table, so a corpus that differs in any one text must not
+    # serve stale signatures
+    h = hashlib.md5()
+    for doc_id, text in zip(docs["doc_id"], docs["text"]):
+        h.update(f"{doc_id}|{len(text)}|{text}".encode())
+    digest = h.hexdigest()[:8]
     dirpath = fixture_dir(f"stream_lsh_{n}_{digest}")
     if os.path.exists(os.path.join(dirpath, "_done")):
         return dirpath

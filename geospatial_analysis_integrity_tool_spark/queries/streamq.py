@@ -420,9 +420,8 @@ def write_pip_stream_fixture(dirpath: str | None = None) -> str:
 
 def q_streaming_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pip import pip_join
-    from ..sources.synthetic import geo_zone_rings, register_geo_views
+    from ..sources.synthetic import geo_zone_rings
 
-    register_geo_views(spark, sf_dir)
     d = write_pip_stream_fixture()
     src = (
         spark.readStream.schema(
@@ -507,9 +506,8 @@ def write_utm_stream_fixture(dirpath: str | None = None) -> str:
 
 def q_streaming_utm_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pip import pip_join
-    from ..sources.synthetic import geo_zone_rings, register_geo_views
+    from ..sources.synthetic import geo_zone_rings
 
-    register_geo_views(spark, sf_dir)
     d = write_utm_stream_fixture()
     src = (
         spark.readStream.schema(

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_coslat_poly, sql_dist_m, sql_trunc3_mm
 from ..operators.proximity import point_seg_candidates
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 from .intvariants import _sub
 
 GRID_N = 60
@@ -128,7 +128,6 @@ FROM agg WHERE cnt = 1 AND {_NOT_BOUNDARY}
 
 
 def q_tear_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     return spark.sql(f"WITH {TEAR_EDGES_SQL}, {TEAR_BODY_SQL}")
 
 
@@ -158,7 +157,6 @@ SELECT id1, id2, 'FAILMERGEA2' AS errtype FROM pairs
 
 
 def q_failmergea2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     return spark.sql(f"WITH {TEAR_EDGES_SQL}, {FM2_SQL}")
 
 
@@ -257,7 +255,6 @@ def _sliver_pairs(
 
 
 def q_lasliver(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     return _sliver_pairs(
         spark,
         spark.sql(LAS_LINES_SQL),
@@ -267,7 +264,6 @@ def q_lasliver(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_llsliver(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     return _sliver_pairs(
         spark,
         spark.sql(LLS_TWINS_SQL),
@@ -341,7 +337,6 @@ _TANGENT = (
 
 
 def q_la_kink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     stubs = spark.sql(KINK_STUBS_SQL)
     segs = spark.sql(AREA_EDGES_SQL2).selectExpr(
         "aid AS tgt_id", "ax", "ay", "bx", "by",

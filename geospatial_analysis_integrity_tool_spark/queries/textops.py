@@ -23,8 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.synthetic import register_testdata_views
-
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 LANG_MARKERS = {
     "en": ("the", "and", "of"),
@@ -82,7 +80,6 @@ _SHINGLES_DUCK = """
 
 # --- dedup_exact (exact hash-groupBy; C_DUPS analogue for documents) ----------
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     return (
         _docs_aug(spark)
         .select(F.md5(F.col("text")).alias("text_hash"), "doc_id")
@@ -144,7 +141,6 @@ _DF_CAP_SQL = (
 
 
 def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     aug = _docs_aug(spark)
     df_cap = _df_cap(aug.count())  # corpus-relative stop-shingle cap
     # The shingle relation feeds sizes, rare, and both common joins;
@@ -240,7 +236,6 @@ N_BANDS = 4
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     aug = _docs_aug(spark)
     sh = (
         aug.select("doc_id", F.expr(_TOKS_SPARK).alias("toks"))
@@ -280,7 +275,6 @@ GROUP BY 1, 2
 
 # --- text_quality: token/stopword profile -------------------------------------
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     stop_pred = " OR ".join(f"x = '{w}'" for w in STOPWORDS)
     return spark.table("documents").select(
         "doc_id",
@@ -309,7 +303,6 @@ FROM documents
 
 # --- lang_id: marker-token language guess -------------------------------------
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     scores = {}
     for lang, markers in LANG_MARKERS.items():
         pred = " OR ".join(f"x = '{w}'" for w in markers)
@@ -356,7 +349,6 @@ FROM documents
 
 # --- doc_fingerprint: min-hash document fingerprint ---------------------------
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     sh = (
         spark.table("documents")
         .select("doc_id", F.expr(_TOKS_SPARK).alias("toks"))
@@ -387,7 +379,6 @@ FROM shingles GROUP BY 1
 def q_dedup_cluster_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.networks import min_label_components
 
-    register_testdata_views(spark, sf_dir)
     aug = _docs_aug(spark)
     hashed = aug.select("doc_id", F.md5("text").alias("h"))
     gmin = hashed.groupBy("h").agg(F.min("doc_id").alias("mn"))
@@ -478,7 +469,6 @@ _BPE_PAT = "[A-Za-z]+|[0-9]{1,3}|[^A-Za-z0-9 ]"
 
 
 def q_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     return spark.table("documents").select(
         "doc_id",
         F.expr("CAST(size(split(text, '\\\\s+')) AS BIGINT)").alias("n_ws_tokens"),
@@ -520,7 +510,6 @@ _RATE_CASE = (
 
 
 def q_docs_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     return (
         spark.table("documents")
         .select("doc_id", "lang", F.expr(_BUCKET).alias("bucket"))

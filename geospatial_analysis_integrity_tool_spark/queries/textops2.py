@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.synthetic import register_testdata_views
 from .textops import _DOCS_AUG_SQL, _docs_aug
 
 # --- text_repetition_filters (Gopher-style repetition rules) ------------------
@@ -57,7 +56,6 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    register_testdata_views(spark, sf_dir)
     docs = spark.table("documents").select("doc_id", "text")
 
     def run(batches):
@@ -174,7 +172,6 @@ _NGRAMS_SPARK = (
 
 
 def q_docs_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     aug = _docs_aug(spark)
     bench_sh = (
         spark.table("documents")
@@ -242,7 +239,6 @@ _PHONE_RE = "555-[0-9]{4}"
 
 
 def q_text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     planted = spark.table("documents").selectExpr(
         "doc_id",
         "CASE WHEN doc_id % 11 = 5 THEN concat(text, ' contact u', doc_id,"

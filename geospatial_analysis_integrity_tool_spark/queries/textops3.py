@@ -39,7 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.pages import extract_text, synth_pages
-from ..sources.synthetic import register_testdata_views
 from .nonsql import _n_pages, _oracle_pages_text
 from .textops import _DOCS_AUG_SQL, _TOKS_SPARK, _docs_aug
 from .textops2 import _BENCH_MOD, _BENCH_REM, _NGRAMS_SPARK, DECON_N
@@ -69,7 +68,6 @@ def q_docs_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                          (within- OR cross-document repeats, as in the paper)
     n_crossdoc_windows   windows shared with at least one OTHER document
     """
-    register_testdata_views(spark, sf_dir)
     wins = (
         _docs_aug(spark)
         .filter(F.length("text") >= WIN_W)
@@ -151,7 +149,6 @@ def q_docs_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter's false-positive count, which the pipeline's second-pass exact
     check must absorb.
     """
-    register_testdata_views(spark, sf_dir)
     bench_sh = (
         spark.table("documents")
         .filter(F.col("doc_id") % _BENCH_MOD == _BENCH_REM)
@@ -334,7 +331,6 @@ _PACK_BUCKET = 1000
 def q_docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    register_testdata_views(spark, sf_dir)
     d = spark.table("documents").select(
         "doc_id",
         F.expr(f"CAST(size({_TOKS_SPARK}) AS BIGINT)").alias("n_toks"),
@@ -415,7 +411,6 @@ _SURPRISAL_SCALE = 1_000_000
 def q_docs_surprisal_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    register_testdata_views(spark, sf_dir)
     toks = (
         spark.table("documents")
         .select("doc_id", "lang", F.explode(F.expr(_TOKS_SPARK)).alias("t"))

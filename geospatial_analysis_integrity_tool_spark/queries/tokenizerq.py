@@ -27,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.synthetic import register_testdata_views
 from .textops import _TOKS_SPARK
 
 PAIR_TOPN = 10
@@ -51,7 +50,6 @@ def q_tokenizer_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (char i, char i+1) pairs times its corpus frequency — exactly the
     statistic the first BPE merge maximizes.
     """
-    register_testdata_views(spark, sf_dir)
     wf = _word_freq(spark)
     pairs = wf.select(
         "freq",
@@ -103,7 +101,6 @@ def q_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oov_permille is integer (1000 * oov / n_toks, floor) so both engines
     hash identical values.
     """
-    register_testdata_views(spark, sf_dir)
     vocab = (
         _word_freq(spark)
         .select(
@@ -170,7 +167,6 @@ def q_tokenizer_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    register_testdata_views(spark, sf_dir)
     wf = _word_freq(spark)
     pairs = wf.select(
         "w",

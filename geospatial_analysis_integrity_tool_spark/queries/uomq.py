@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.synthetic import register_testdata_views
-
 _ATTR_UOM_SQL = """
 SELECT p_partkey AS feature_id,
        CASE CAST(p_partkey % 4 AS INT)
@@ -35,7 +33,6 @@ SPEC_UOM = [("SIZ", "m"), ("WGT", "kg")]
 
 
 def q_uom_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     attrs = spark.sql(_ATTR_UOM_SQL)
     spec = spark.createDataFrame(SPEC_UOM, "attr string, unit_expected string")
     return (

@@ -36,12 +36,7 @@ from ..functions.utm import (
     with_utm_geodetic,
 )
 from ..operators.pip import pip_join, sql_side
-from ..sources.synthetic import (
-    geo_zone_rings,
-    oracle_cte,
-    register_geo_views,
-    register_testdata_views,
-)
+from ..sources.synthetic import geo_zone_rings, oracle_cte
 
 N_FEATURES = 4000
 
@@ -58,7 +53,6 @@ WHERE c_custkey < {N_FEATURES}
 
 
 def q_utm_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     feats = spark.sql(_UTM_FIXTURE_SQL)
     out = with_utm_geodetic(feats, "easting", "northing", "zone")
     return out.select("feature_id", "zone", "utm_lon", "utm_lat")
@@ -71,8 +65,6 @@ FROM {oracle_utm_subquery(_UTM_FIXTURE_SQL, "easting", "northing", "zone")} q
 
 
 def q_utm_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
-    register_testdata_views(spark, sf_dir)
     feats = spark.sql(_UTM_FIXTURE_SQL)
     points = with_utm_geodetic(
         feats, "easting", "northing", "zone", block_inline=True
@@ -121,7 +113,6 @@ WHERE c_custkey < {N_FEATURES}
 
 
 def q_tm_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     feats = spark.sql(_TM_FIXTURE_SQL)
     out = with_tm_geodetic(feats, "easting", "northing", TM_LON0, TM_K0,
                            TM_FE, TM_FN)
@@ -148,7 +139,6 @@ WHERE c_custkey < {N_FEATURES}
 
 
 def q_ec_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     feats = spark.sql(_EC_FIXTURE_SQL)
     out = with_ec_geodetic(feats, "easting", "northing")
     return out.select("feature_id", "ec_lon", "ec_lat")
@@ -181,7 +171,6 @@ WHERE c_custkey < {N_FEATURES}
 
 
 def q_mercator_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     feats = spark.sql(_MERC_FIXTURE_SQL)
     out = with_mercator_geodetic(feats, "easting", "northing", MERC_LON0,
                                  MERC_K0, MERC_FE, MERC_FN)
@@ -211,7 +200,6 @@ WHERE c_custkey < {N_FEATURES}
 
 
 def q_lcc_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     feats = spark.sql(_LCC_FIXTURE_SQL)
     out = with_lcc_geodetic(feats, "easting", "northing", *LCC_PARAMS)
     return out.select("feature_id", "lcc_lon", "lcc_lat")
@@ -240,7 +228,6 @@ WHERE c_custkey < {N_FEATURES}
 
 
 def q_ltp_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     feats = spark.sql(_LTP_FIXTURE_SQL)
     out = with_ltp_geodetic(feats, "le", "ln_", "lu", *LTP_ORIGIN)
     return out.select("feature_id", "ltp_lon", "ltp_lat")
@@ -269,7 +256,6 @@ WHERE c_custkey < {N_FEATURES}
 
 
 def q_om_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     feats = spark.sql(_OM_FIXTURE_SQL)
     out = with_om_geodetic(feats, "ucoord", "vcoord", *OM_PARAMS)
     return out.select("feature_id", "om_lon", "om_lat")

@@ -56,7 +56,7 @@ from ..operators.proximity import (
     point_proximity_pairs,
     point_to_segment_proximity,
 )
-from ..sources.synthetic import oracle_cte, oracle_materialized, register_geo_views
+from ..sources.synthetic import oracle_cte, oracle_materialized
 from .coverageq import _line_ends, _line_segs, _pk_sql, _segc_sql
 
 LLINTAWAY_TOL_M = 40.0
@@ -129,7 +129,6 @@ def _xings(spark: SparkSession) -> DataFrame:
 
 
 def q_lliex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     return (
         _xings(spark)
         .filter(F.col("fcode_a") != F.col("fcode_b"))
@@ -155,7 +154,6 @@ _AWAY_PRED = " AND ".join(
 
 
 def q_llintaway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     # _AWAY_PRED inlines the parametric intersection point (_IX, _IY) into
     # each of the four endpoint distances; after CollapseProject the expanded
     # expression overflows janino's 64 KB method limit and drops the stage to
@@ -204,7 +202,6 @@ _NOEND_PRED = " AND ".join(
 
 
 def q_llnoendint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     return (
         _xings(spark)
         .filter(F.expr(_NOEND_PRED))
@@ -236,7 +233,6 @@ _ANGLE_PRED = (
 
 
 def q_lli_angle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     return (
         _xings(spark)
         .filter(F.expr(_ANGLE_PRED))
@@ -259,7 +255,6 @@ FROM xings WHERE {_ANGLE_PRED}
 def q_featnotcut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B's end node within tolerance of A's segment INTERIOR (not near A's
     own vertices): a T-junction where A should have been cut but was not."""
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     ends = _line_ends(lines)
     segs = _line_segs(lines).selectExpr(
@@ -357,7 +352,6 @@ _STRAIGHT_PRED = (
 def q_badfeatcut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two same-fcode lines meet at a node and continue nearly straight
     through it — the cut has no geometric or attribution purpose."""
-    register_geo_views(spark, sf_dir)
     arr = spark.sql(_ARRIVALS_SQL)
     a = arr.alias("a")
     b = arr.alias("b")
@@ -390,7 +384,6 @@ WHERE a.fcode = b.fcode AND {_STRAIGHT_PRED}
 def q_laprox(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Smallest end-node-to-areal-edge distance per (line, area) in
     (0, tol): the line skims the area without touching it."""
-    register_geo_views(spark, sf_dir)
     from .vgeomq import _area_edges
 
     lines = spark.table("geo_lines")
@@ -440,7 +433,6 @@ FROM near GROUP BY 1, 2
 
 def q_lvprox(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interior vertex (x2, y2) within (0, tol) of another line's segment."""
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     verts = lines.selectExpr("line_id AS src_id", "x2 AS px", "y2 AS py")
     segs = _line_segs(lines).selectExpr(
@@ -483,7 +475,6 @@ SELECT src_id, tgt_id, MIN(dist_mm) AS dist_mm FROM near GROUP BY 1, 2
 def q_en_en_prox(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-miss end-node pairs whose lines are ALREADY connected through a
     common third feature (sharing exact nodes with both)."""
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     ends = _line_ends(lines)
     pairs = point_proximity_pairs(
@@ -546,7 +537,6 @@ WHERE p.b <> n.line_a AND p.b <> n.line_b
 def q_plproxex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point near a line segment — EXCEPT points that sit near a line end
     node (those are legitimate junction features)."""
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     sites = spark.table("geo_sites").selectExpr(
         "site_id AS src_id", "lon AS px", "lat AS py"
@@ -636,7 +626,6 @@ def _foot_case(px, py, ax, ay, bx, by) -> str:
 def q_pshootl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point within tolerance of a line segment whose perpendicular foot
     clamps to a segment END — the point over/undershoots the line."""
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     sites = spark.table("geo_sites").selectExpr(
         "site_id AS src_id", "lon AS px", "lat AS py"
@@ -705,7 +694,6 @@ _BMIN = f"LEAST({_BXD}, {_BYD})"
 def q_bndryundersht(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line end node within (0, tol) meters of a whole-degree boundary but
     not exactly on it — the feature undershoots the project edge."""
-    register_geo_views(spark, sf_dir)
     ends = _line_ends(spark.table("geo_lines"))
     return (
         ends.withColumn("_d", F.expr(_BMIN))
@@ -737,7 +725,6 @@ WHERE {_BMIN} > 0.0 AND {_BMIN} < {BNDRY_TOL_M}
 
 def q_lushtl_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line-end-to-line undershoot restricted to DIFFERENT feature types."""
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     ends = lines.selectExpr("line_id AS src_id", "x3 AS px", "y3 AS py")
     segs = lines.selectExpr(
@@ -829,7 +816,6 @@ def q_loc_multint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.intersections import segments_of_vertices
     from .vgeomq import SEGCELL
 
-    register_geo_views(spark, sf_dir)
     x = segment_intersections(
         segments_of_vertices(spark.table("geo_vlines")), cell_deg=SEGCELL
     )

@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.fixpoint import fixpoint
-from ..sources.synthetic import register_testdata_views
 
 K_CLUSTERS = 8
 PQ_NSUB = 8  # 8 subspaces x 8 dims = 64
@@ -77,7 +76,6 @@ verts AS (
 
 # --- embedding_kmeans ----------------------------------------------------------
 def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     verts = _verts(spark)
 
     cen0 = (
@@ -145,7 +143,6 @@ FROM a2 GROUP BY 1
 
 # --- embedding_pq_topk ----------------------------------------------------------
 def q_embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     verts = _verts(spark).withColumn("sub", F.expr("d DIV 8"))
 
     thr = verts.groupBy("d").agg(F.expr("sum(qv) DIV count(*)").alias("thr"))
@@ -353,7 +350,6 @@ def kmeans_converged(
 
 
 def q_embedding_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     a, _ = kmeans_converged(spark)
     return (
         a.groupBy("k")
@@ -546,7 +542,6 @@ def semantic_dedup_pairs(grp: DataFrame, cap: int = SEM_CLUSTER_CAP) -> DataFram
 def q_embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .embeddings import _emb_aug
 
-    register_testdata_views(spark, sf_dir)
     aug = _emb_aug(spark)
     verts = aug.select(
         "vec_id", F.posexplode("embedding").alias("d", "_v")

@@ -40,7 +40,7 @@ from ..operators.intersections import (
     vertices_to_lines,
 )
 from ..operators.pip import explode_bbox_cells
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 CELL = 0.01
 
@@ -146,7 +146,6 @@ def _cells(src: str, out: str, cell: float = CELL) -> str:
 
 
 def q_line_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     segs = segments_of_vertices(spark.table("geo_vlines"))
     return segment_intersections(segs, cell_deg=SEGCELL)
 
@@ -180,7 +179,6 @@ WHERE {sql_proper_cross()}
 
 
 def q_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     segs = segments_of_vertices(spark.table("geo_vlines"))
     return self_intersections_of_segments(segs)
 
@@ -281,7 +279,6 @@ def _inside_pairs(spark: SparkSession, edges: DataFrame, probes: DataFrame,
 
 
 def q_line_area(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     segs = _with_bbox(
         segments_of_vertices(spark.table("geo_vlines")), ("sax", "sbx"), ("say", "sby")
     )
@@ -443,7 +440,6 @@ FROM geo_vareas WHERE area_id % 11 = 0
 
 
 def q_area_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     spark.sql(_AREAS_OV_SQL).createOrReplaceTempView("geo_vareas_ov")
     edges = _area_edges(spark, view="geo_vareas_ov")
     ec = explode_bbox_cells(
@@ -569,7 +565,6 @@ def _line_triples(lines: DataFrame) -> DataFrame:
 
 
 def q_kickback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = vertices_to_lines(spark.table("geo_vlines"))
     return _line_triples(lines).filter(F.expr(KICKBACK_PRED)).select(
         "line_id", "vidx"
@@ -601,7 +596,6 @@ def q_zkink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Magnitude reported in decimeters (floor), mirroring the reference's
     3-digit truncation discipline (TruncateToNdigits utilities.c:97).
     """
-    register_geo_views(spark, sf_dir)
     lines = vertices_to_lines(spark.table("geo_vlines"), extra=("z",))
     n = F.size(F.col("z"))
     zipped = F.arrays_zip(
@@ -639,7 +633,6 @@ def q_areakink(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_area_edges` (next edge starts at this edge's end, so its vector
     is ``next_end - this_end``) — no edge-to-edge self-join.
     """
-    register_geo_views(spark, sf_dir)
     from pyspark.sql.window import Window
 
     edges = _area_edges(spark)

@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.pages import synth_pages
-from ..sources.synthetic import register_testdata_views
 from .nonsql import _LANGS_SQL, _n_pages, _oracle_pages_text
 
 #: snapshots-per-canonical-url fold factor (n pages -> n/_SNAP canonical urls)
@@ -145,7 +144,6 @@ def q_docs_token_df_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     once — array_distinct BEFORE the explode keeps the shuffle at one row
     per (doc, distinct token).  Top 5 per language, ties broken by token
     text ascending (deterministic in both engines)."""
-    register_testdata_views(spark, sf_dir)
     from pyspark.sql.window import Window
 
     docs = spark.table("documents").select("doc_id", "lang", "text")

@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.pages import synth_pages
-from ..sources.synthetic import register_testdata_views
 from .nonsql import _n_pages
 from .webcurate import _NHOSTS  # noqa: F401  (same host sharding as host_stats)
 
@@ -44,7 +43,6 @@ Q_MED = -64
 
 
 def q_docs_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     toks = (
         spark.table("documents")
         .select("doc_id", F.explode(F.expr("split(text, '\\\\s+')")).alias("tok"))
@@ -126,7 +124,6 @@ SELECT host, url, rn FROM (
 # sources).  weight_ppm = isqrt(source_chars) * 1e6 DIV sum(isqrt(chars));
 # floor(sqrt(x)) on a BIGINT < 2^52 is exact IEEE in both engines.
 def q_docs_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     per_src = (
         spark.table("documents")
         .groupBy("source")

@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.portable_hash import duck_md5_slice, spark_md5_slice
-from ..sources.synthetic import register_testdata_views
 
 WINNOW_W = 4
 #: 2^32 — the rightmost-tie key packs (h, reversed pos) into one BIGINT;
@@ -100,7 +99,6 @@ def winnow_fps(docs: DataFrame) -> DataFrame:
 
 
 def q_docs_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_testdata_views(spark, sf_dir)
     fps = winnow_fps(spark.table("documents"))
     pairs = (
         fps.select(F.col("doc_id").alias("a"), "h")

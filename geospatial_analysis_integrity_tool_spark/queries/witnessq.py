@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.pip import explode_bbox_cells, sql_ray3, with_point_cell
-from ..sources.synthetic import oracle_cte, register_geo_views
+from ..sources.synthetic import oracle_cte
 
 CELL = 0.01
 ZCELL = 4.0
@@ -75,7 +75,6 @@ FROM geo_lines WHERE line_id % 50 = 0
 
 
 def q_end_connect_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     ends = spark.sql(ENDS_SQL).localCheckpoint()
     sites = spark.sql(SITES_SQL).localCheckpoint()
 
@@ -189,7 +188,6 @@ SELECT line_id, 1, x3, y3 FROM geo_lines
 
 
 def q_perimeter_connect_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     endpts = spark.sql(ENDPTS_SQL).localCheckpoint()
     edges = spark.sql(AREA_EDGES_SQL).localCheckpoint()
     sites = spark.sql(SITES_SQL).localCheckpoint()

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_trunc3_mm
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
+from ..sources.synthetic import GEO_VIEWS, oracle_cte
 
 ELEVADJ_TOL = 20.0     # ELEVADJCHANGE: |dz| > 20 (natural wrap steps = 26.3)
 FEATSPIKE_TOL = 40.0   # FEATSPIKE: vertex away from BOTH neighbors by > 40
@@ -64,7 +64,6 @@ _HORIZ_M = sql_dist_m("x", "y", "nx", "ny")
 def q_elev_profile_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines").select("line_id", "vidx", "x", "y", "z")
     w = Window.partitionBy("line_id").orderBy("vidx")
     t = (
@@ -139,7 +138,6 @@ _SEGLEN_MM = sql_trunc3_mm(sql_dist_m("x", "y", "nx", "ny"))
 def q_longseg_oside_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    register_geo_views(spark, sf_dir)
     v = spark.table("geo_vlines").select("line_id", "vidx", "x", "y")
     w = Window.partitionBy("line_id").orderBy("vidx")
     seg = (
@@ -211,7 +209,6 @@ _SEG_KEY = (
 
 
 def q_shareseg_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     d = (
         spark.table("geo_lines_dup")
         .filter("line_id % 13 < 2")
@@ -250,7 +247,6 @@ WHERE c.n_owners >= 2
 
 
 def q_lattrchng(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     lines = spark.table("geo_lines")
     attrs = spark.table("orders").selectExpr(
         "CAST(o_orderkey AS BIGINT) AS line_id", "o_orderpriority AS attr"
@@ -317,7 +313,6 @@ _DUP_Z = (
 
 
 def q_cnode_z_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_geo_views(spark, sf_dir)
     d = spark.table("geo_lines_dup").selectExpr(
         "line_id", f"{_DUP_Z} AS z", "x1", "y1", "x2", "y2"
     )

@@ -41,9 +41,15 @@ TESTDATA_TABLES = (
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the driver parquet tables as temp views (idempotent)."""
+    """Register the source parquet tables as temp views.
+
+    Cheap after the first call per (session, ``sf_dir``): the frames come from
+    ``_source_frames`` and each call only re-issues the views, so a view a
+    caller replaced is restored.
+    """
+    frames = _source_frames(spark, sf_dir)
     for t in TESTDATA_TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        frames[t].createOrReplaceTempView(t)
 
 
 # --- geo_points: customer -> global points -------------------------------------
@@ -306,8 +312,44 @@ GEO_VIEWS: dict[str, str] = {
 }
 
 
+#: (session, sf_dir) -> {view name: DataFrame} for the 10 tables and the 9
+#: geometry views; filled by _source_frames
+_FRAMES: dict[tuple[SparkSession, str], dict[str, DataFrame]] = {}
+
+
+def _source_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The 19 source frames of one (session, ``sf_dir``), built on first use.
+
+    Building costs 10 parquet reads (one schema-inference job each) and 9
+    analyzed geometry SQL texts.  The cache assumes the parquet files under
+    ``sf_dir`` do not change for the life of the session; a caller with new
+    inputs writes them to a new directory.  The key holds the session
+    object, so a new session (e.g. after ``stop()``) builds afresh.
+    """
+    key = (spark, sf_dir)
+    frames = _FRAMES.get(key)
+    if frames is None:
+        frames = {}
+        # register as we go: the geometry SQL resolves view names when it is
+        # analyzed
+        for t in TESTDATA_TABLES:
+            frames[t] = spark.read.parquet(f"{sf_dir}/{t}.parquet")
+            frames[t].createOrReplaceTempView(t)
+        for name, sql in GEO_VIEWS.items():
+            frames[name] = spark.sql(sql)
+            frames[name].createOrReplaceTempView(name)
+        _FRAMES[key] = frames
+    return frames
+
+
 def register_geo_views(spark: SparkSession, sf_dir: str) -> None:
     """Register testdata + derived geometry views in one call.
+
+    The query registry (``queries.all_queries``) calls this before every
+    query, so query bodies only read views.  Every call re-issues all 19
+    views from the frames ``_source_frames`` caches per (session,
+    ``sf_dir``): a view a caller replaced is restored, and no parquet is
+    re-read.
 
     The geometry views are synthesis SQL over the parquet tables (hundreds of
     expression ops per row), so a query that scans one several times should
@@ -316,9 +358,8 @@ def register_geo_views(spark: SparkSession, sf_dir: str) -> None:
     was tried and rejected: it materializes every column of every view and
     penalizes the majority of queries that scan a view exactly once.
     """
-    register_testdata_views(spark, sf_dir)
-    for name, sql in GEO_VIEWS.items():
-        spark.sql(sql).createOrReplaceTempView(name)
+    for name, df in _source_frames(spark, sf_dir).items():
+        df.createOrReplaceTempView(name)
 
 
 def oracle_cte(*names: str) -> str:

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -17,3 +18,5 @@ def spark():
 
 
 SF_SMALL = "/root/testdata/sf0.001"
+#: the correctness-gate scale, beside SF_SMALL
+SF_GATE = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")

@@ -63,6 +63,8 @@ def test_kmeans_exits_by_stable_assignment(spark):
         _KMEANS_STABLE_ITERS_SF001,
         K_CLUSTERS,
         kmeans_converged,
+    )
+    from geospatial_analysis_integrity_tool_spark.sources.synthetic import (
         register_testdata_views,
     )
 
@@ -106,6 +108,8 @@ def test_kmeans_raises_when_not_converged(spark):
     not hand back a partial assignment."""
     from geospatial_analysis_integrity_tool_spark.queries.vectorq import (
         kmeans_converged,
+    )
+    from geospatial_analysis_integrity_tool_spark.sources.synthetic import (
         register_testdata_views,
     )
 

@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import math
 
+from geospatial_analysis_integrity_tool_spark.sources.synthetic import register_geo_views
+from tests.conftest import SF_GATE
+
 
 def test_log2fp_is_monotone_and_close():
     """The fixed-point log2 surrogate: strictly monotone, max error < 0.09 bits."""
@@ -28,7 +31,8 @@ def test_lm_perplexity_invariants(spark):
         q_docs_lm_perplexity,
     )
 
-    out = q_docs_lm_perplexity(spark, "/root/testdata/sf0.01")
+    register_geo_views(spark, SF_GATE)
+    out = q_docs_lm_perplexity(spark, SF_GATE)
     rows = out.collect()
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     n_multi = docs.filter(
@@ -50,7 +54,8 @@ def test_dsir_selects_from_raw_pool_only(spark):
         q_docs_dsir_select,
     )
 
-    sel = q_docs_dsir_select(spark, "/root/testdata/sf0.01")
+    register_geo_views(spark, SF_GATE)
+    sel = q_docs_dsir_select(spark, SF_GATE)
     rows = sel.collect()
     assert len(rows) == SELECT_K
     # ranks are dense 1..K and the weight spread is real (not jitter-only)
@@ -105,7 +110,8 @@ def test_bpe_merge_step_matches_brute_force(spark):
         q_tokenizer_bpe_merge_step,
     )
 
-    out = q_tokenizer_bpe_merge_step(spark, "/root/testdata/sf0.01").collect()
+    register_geo_views(spark, SF_GATE)
+    out = q_tokenizer_bpe_merge_step(spark, SF_GATE).collect()
     assert out, "top pair must occur in at least one word"
     pair = out[0]["pair"]
 
@@ -128,12 +134,11 @@ def test_bpe_merge_step_matches_brute_force(spark):
         assert r["freq"] == freq[r["w"]]
 
 
-def test_bpe_merge_step_sql_overlap_run(spark, monkeypatch):
+def test_bpe_merge_step_sql_overlap_run(spark):
     """Drive the SQL islands logic itself over a doubled-char corpus: the
     top pair is 'aa' and overlap runs must merge (L+1) DIV 2 times."""
     from geospatial_analysis_integrity_tool_spark.queries import tokenizerq
 
-    monkeypatch.setattr(tokenizerq, "register_testdata_views", lambda s, d: None)
     spark.createDataFrame(
         [(1, "aaaa aaa aa xy"), (2, "aaaaaa aa ab"), (3, "aa aa xy")],
         "doc_id: bigint, text: string",

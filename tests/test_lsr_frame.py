@@ -21,6 +21,9 @@ from geospatial_analysis_integrity_tool_spark.queries.lsrq import (
 from geospatial_analysis_integrity_tool_spark.queries.morechecks import (
     q_feat_length_euclidean,
 )
+from geospatial_analysis_integrity_tool_spark.sources.synthetic import (
+    register_geo_views,
+)
 
 from tests.conftest import SF_SMALL
 
@@ -30,6 +33,7 @@ SF_GATE = "/root/testdata/sf0.01"  # prox band is empty at sf0.001
 def test_lsr_prox_pairs_match_unrotated_frame(spark):
     """The pair SET is isometry-invariant (distances are preserved exactly
     up to ulps far from the tolerance boundary in this fixture)."""
+    register_geo_views(spark, SF_GATE)
     lsr = {
         (r.id_a, r.id_b) for r in q_lsr_prox_planar(spark, SF_GATE).collect()
     }
@@ -45,6 +49,7 @@ def test_lsr_lengths_classify_like_unrotated_frame(spark):
     """SHORT/LONGFEAT classification is rotation-stable: same feature ids,
     same errtypes, and per-line length within a few mm-units of the projected
     frame (floor boundaries may differ by an ulp per segment, so the bound is per-line segment-count-ish)."""
+    register_geo_views(spark, SF_SMALL)
     lsr = {
         r.line_id: (r.errtype, r.len_mu)
         for r in q_lsr_feat_length(spark, SF_SMALL).collect()

@@ -14,8 +14,12 @@ def test_streaming_lsh_matches_batch_rule_and_replays_identically(spark):
         q_streaming_lsh_dedup,
         write_lsh_stream_fixture,
     )
+    from geospatial_analysis_integrity_tool_spark.sources.synthetic import (
+        register_geo_views,
+    )
 
     sf = "/root/testdata/sf0.01"
+    register_geo_views(spark, sf)
     out = q_streaming_lsh_dedup(spark, sf)
     rows = {r["doc_id"]: (r["n_dup_bands"], r["is_dup"]) for r in out.collect()}
 
@@ -42,3 +46,24 @@ def test_streaming_lsh_matches_batch_rule_and_replays_identically(spark):
         for r in q_streaming_lsh_dedup(spark, sf).collect()
     }
     assert rows == again
+
+
+def test_lsh_fixture_key_covers_every_text(tmp_path, monkeypatch):
+    """Two corpora with the same doc count, total text length and first text
+    but a different later text must not share a cached fixture."""
+    import pandas as pd
+
+    from geospatial_analysis_integrity_tool_spark.queries.streamdedup import (
+        write_lsh_stream_fixture,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(tmp_path))
+    dirs = []
+    for name, last in (("a", "delta epsilon zeta eta"), ("b", "DELTA EPSILON ZETA ETA")):
+        sf = tmp_path / name
+        sf.mkdir()
+        pd.DataFrame(
+            {"doc_id": [0, 1], "text": ["alpha beta gamma", last]}
+        ).to_parquet(sf / "documents.parquet")
+        dirs.append(write_lsh_stream_fixture(str(sf)))
+    assert dirs[0] != dirs[1]

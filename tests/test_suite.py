@@ -9,6 +9,7 @@ The sf1 / two-parallelism evidence run lives in tools/run_suite.py.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from geospatial_analysis_integrity_tool_spark import suite
@@ -16,8 +17,15 @@ from geospatial_analysis_integrity_tool_spark import suite
 from tests.conftest import SF_SMALL
 
 
-def test_suite_conditions_schema_and_families(spark):
-    conds = suite.suite_conditions(spark, SF_SMALL).cache()
+@pytest.fixture(scope="module")
+def conds(spark):
+    """One cached suite build for the tests that only read its output."""
+    df = suite.suite_conditions(spark, SF_SMALL).cache()
+    yield df
+    df.unpersist()
+
+
+def test_suite_conditions_schema_and_families(conds):
     assert conds.columns == [
         "errtype",
         "instance",
@@ -38,11 +46,9 @@ def test_suite_conditions_schema_and_families(spark):
     # the bulk of the families fire on the sf0.001 fixtures (some checks
     # legitimately find nothing at tiny scale)
     assert len(errtypes) >= len(suite.SUITE_FAMILIES) * 2 // 3
-    conds.unpersist()
 
 
-def test_suite_numbering_dense_and_unique(spark):
-    conds = suite.suite_conditions(spark, SF_SMALL).cache()
+def test_suite_numbering_dense_and_unique(conds):
     n = conds.count()
     stats = conds.agg(
         F.countDistinct("cond_num").alias("d"),
@@ -54,7 +60,6 @@ def test_suite_numbering_dense_and_unique(spark):
     assert stats["d"] == n
     assert stats["lo"] == 1
     assert stats["hi"] == n
-    conds.unpersist()
 
 
 def test_conditionize_cell_and_magnitude_rules(spark):

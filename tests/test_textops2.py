@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from geospatial_analysis_integrity_tool_spark.sources.synthetic import register_geo_views
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -18,6 +20,7 @@ def test_decontaminate_flags_planted_copies(spark):
         q_docs_decontaminate,
     )
 
+    register_geo_views(spark, SF)
     out = {
         r["doc_id"]: r["n_hit_8grams"]
         for r in q_docs_decontaminate(spark, SF).collect()
@@ -43,6 +46,7 @@ def test_repetition_short_docs_no_bigram_rows(spark):
         q_text_repetition,
     )
 
+    register_geo_views(spark, SF)
     rows = q_text_repetition(spark, SF).collect()
     assert all(r["metric_total"] > 0 for r in rows)
     # integer thresholds: every flagged row actually crosses its rule
@@ -82,5 +86,6 @@ def test_pii_scrub_counts_and_redaction(spark):
         q_text_pii_scrub,
     )
 
+    register_geo_views(spark, SF)
     out = q_text_pii_scrub(spark, SF)
     assert out.filter("n_emails <> 1 OR n_phones <> 1").count() == 0

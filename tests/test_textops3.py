@@ -9,6 +9,7 @@ consistent partition of the concatenated token stream.
 
 from __future__ import annotations
 
+from geospatial_analysis_integrity_tool_spark.sources.synthetic import register_geo_views
 from tests.conftest import SF_SMALL
 
 
@@ -17,6 +18,7 @@ def test_substring_dedup_catches_exact_copies(spark):
         q_docs_substring_dedup,
     )
 
+    register_geo_views(spark, SF_SMALL)
     rows = {r["doc_id"]: r for r in q_docs_substring_dedup(spark, SF_SMALL).collect()}
     # every planted exact copy (doc_id % 7 == 0 -> +2000000) long enough to
     # carry a window must be flagged with ALL windows cross-doc duplicated
@@ -37,6 +39,7 @@ def test_bloom_error_is_one_sided(spark):
         q_docs_bloom_decontaminate,
     )
 
+    register_geo_views(spark, SF_SMALL)
     out = q_docs_bloom_decontaminate(spark, SF_SMALL).collect()
     assert len(out) > 0
     # a Bloom filter has false positives, never false negatives
@@ -59,6 +62,7 @@ def test_pack_sequences_is_consistent_partition(spark):
         q_docs_pack_sequences,
     )
 
+    register_geo_views(spark, SF_SMALL)
     rows = sorted(
         q_docs_pack_sequences(spark, SF_SMALL).collect(),
         key=lambda r: r["doc_id"],
@@ -78,6 +82,7 @@ def test_surprisal_buckets_cover_every_doc_per_lang(spark):
         q_docs_surprisal_buckets,
     )
 
+    register_geo_views(spark, SF_SMALL)
     out = q_docs_surprisal_buckets(spark, SF_SMALL).collect()
     n_docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").count()
     assert len(out) == n_docs

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from geospatial_analysis_integrity_tool_spark.sources.synthetic import register_geo_views
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -17,6 +19,7 @@ def test_url_latest_keeps_freshest_snapshot(spark):
 
     n = _n_pages(SF)
     m = n // _SNAP
+    register_geo_views(spark, SF)
     rows = q_pages_dedup_url_latest(spark, SF).collect()
     assert len(rows) == m
     for r in rows:
@@ -33,6 +36,7 @@ def test_host_stats_partition_invariant(spark):
         q_pages_host_stats,
     )
 
+    register_geo_views(spark, SF)
     a = {r["host"]: (r["n_pages"], r["n_langs"], r["total_chars"])
          for r in q_pages_host_stats(spark, SF).collect()}
     assert sum(v[0] for v in a.values()) == 100  # every page in exactly one host
@@ -49,6 +53,7 @@ def test_token_df_topk_is_df_not_tf(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     ndocs = {r["lang"]: r["n"] for r in
              docs.groupBy("lang").count().withColumnRenamed("count", "n").collect()}
+    register_geo_views(spark, SF)
     rows = q_docs_token_df_topk(spark, SF).collect()
     assert rows, "top-k must be non-empty"
     by_lang: dict[str, list] = {}
