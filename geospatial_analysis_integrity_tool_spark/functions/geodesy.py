@@ -155,17 +155,7 @@ def sql_point_seg_dist_m(px: str, py: str, ax: str, ay: str, bx: str, by: str) -
     return f"sqrt({dx} * {dx} + {dy} * {dy})"
 
 
-def with_point_seg_dist_m(
-    df,
-    px: str,
-    py: str,
-    ax: str,
-    ay: str,
-    bx: str,
-    by: str,
-    out: str = "_d",
-    block_pushdown: bool = False,
-):
+def with_point_seg_dist_m(df, px: str, py: str, ax: str, ay: str, bx: str, by: str):
     """Staged-column twin of :func:`sql_point_seg_dist_m` for the ENGINE side.
 
     The flat SQL text expands every intermediate inline — ``t`` repeats ``c1``
@@ -182,17 +172,17 @@ def with_point_seg_dist_m(
     -> residual -> sqrt), so ``<`` tolerance comparisons agree with the DuckDB
     oracle to the last bit.
 
-    Returns df with ONE added column ``out``; all ``_psd_*`` scratch columns
+    Returns df with ONE added column ``_d``; all ``_psd_*`` scratch columns
     are dropped.
 
-    block_pushdown: when the result feeds a Filter directly above a join,
-    PushPredicateThroughJoin re-inlines every staged alias into the join
-    CONDITION — a single ~110 KB expression that fails codegen and is then
-    evaluated interpreted per cell-pair.  Setting this adds ``+ rand(7)*0.0``
-    to the OUTPUT column: numerically the identity (distances are >= 0, and
-    x + 0.0 is bit-identical for every non-negative x), but it marks the
-    column non-deterministic, so Catalyst keeps the tolerance filter as a
-    post-join staged Filter (which compiles) instead of inlining it.
+    ``_d`` carries ``+ rand(7) * 0.0``: the result feeds a Filter directly
+    above a join, and PushPredicateThroughJoin would re-inline every staged
+    alias into the join CONDITION — a single ~110 KB expression that fails
+    codegen and is then evaluated interpreted per cell-pair.  The term is
+    numerically the identity (distances are >= 0, and x + 0.0 is
+    bit-identical for every non-negative x), but it marks the column
+    non-deterministic, so Catalyst keeps the tolerance filter as a post-join
+    staged Filter (which compiles) instead of inlining it.
     """
     from pyspark.sql import functions as F
 
@@ -216,9 +206,8 @@ def with_point_seg_dist_m(
     ]
     for name, expr in scratch:
         df = df.withColumn(name, F.expr(expr))
-    taint = " + rand(7) * 0.0" if block_pushdown else ""
     df = df.withColumn(
-        out, F.expr(f"sqrt(_psd_dx * _psd_dx + _psd_dy * _psd_dy){taint}")
+        "_d", F.expr("sqrt(_psd_dx * _psd_dx + _psd_dy * _psd_dy) + rand(7) * 0.0")
     )
     return df.drop(*[n for n, _ in scratch])
 

@@ -8,13 +8,13 @@ The cone constants n / F / rho0 involve only the PARAMETERS (standard
 parallels, latitude of origin) and are computed once in Python with true
 trig — like K0 in the UTM kernel they are literals in the expression tree.
 
-Per-row transcendentals, same dual-engine contract as functions/utm.py:
+Per-row transcendentals, same dual-engine contract as functions/stages.py:
 
 * t = (rho / (a F))^(1/n) becomes exp(ln(r) / n):
   - ln(r) by THREE sqrt reductions ln(r) = 16 * atanh((r^(1/8)-1)/(r^(1/8)+1))
     — for r in [0.05, 3] the atanh argument stays under ~0.17, and the odd
     degree-15 atanh Taylor truncates below 1e-12;
-  - exp by the quartered degree-13 Taylor from functions/mercator.py;
+  - exp by the quartered degree-13 Taylor from functions/stages.py;
 * chi = pi/2 - 2 atan(t) with the reciprocal-fold + two-halving atan;
 * theta = atan2(x', rho0 - y') with the same quadrant CASE tree as the
   polar stereographic longitude.
@@ -26,33 +26,21 @@ import math
 
 import numpy as np
 
-from .mercator import _EXP_COEF, sql_exp_poly_quarter
-from .polar_stereo import (
-    CHI_A2,
-    CHI_A4,
-    CHI_A6,
-    CHI_A8,
-    HALF_PI,
-    PI,
-    _atan_poly_np,
-    _e,
+from .polar_stereo import CHI_A2, CHI_A4, CHI_A6, CHI_A8, HALF_PI, PI, _e
+from .stages import (
+    atan_np,
+    atanh_np,
+    cos_np,
+    dlit,
+    exp_quarter_np,
+    sin_np,
     sql_atan_poly,
+    sql_atanh_poly,
+    sql_cos_poly,
+    sql_exp_poly_quarter,
+    sql_sin_poly,
 )
-from .utm import A, E2, RAD2DEG, _COS_COEF, _SIN_COEF, _dlit, sql_cos_poly, sql_sin_poly
-
-_ATANH_COEF = [
-    1.0 / 3.0, 1.0 / 5.0, 1.0 / 7.0, 1.0 / 9.0,
-    1.0 / 11.0, 1.0 / 13.0, 1.0 / 15.0,
-]
-
-
-def sql_atanh_poly(x: str) -> str:
-    """atanh(x) by odd degree-15 Taylor (|x| <= ~0.2: err < 2e-12)."""
-    x2 = f"({x} * {x})"
-    body = repr(_ATANH_COEF[-1])
-    for c in reversed(_ATANH_COEF[:-1]):
-        body = f"({_dlit(c)} + {x2} * {body})"
-    return f"(({x}) * (1.0 + {x2} * {body}))"
+from .utm import A, E2, RAD2DEG
 
 
 def _m_of(phi: float) -> float:
@@ -88,20 +76,20 @@ def lcc_stages(easting: str, northing: str, lon0_deg: float,
     Northern-cone setup (n > 0; the standard parallels both north)."""
     n, F, rho0 = lcc_constants(lat1_deg, lat2_deg, lat0_deg)
     aF = A * F
-    x = (f"(({easting}) - {_dlit(false_easting)})" if false_easting
+    x = (f"(({easting}) - {dlit(false_easting)})" if false_easting
          else f"({easting})")
-    y = (f"(({northing}) - {_dlit(false_northing)})" if false_northing
+    y = (f"(({northing}) - {dlit(false_northing)})" if false_northing
          else f"({northing})")
     return [
         ("_l_x", x),
-        ("_l_yy", f"({_dlit(rho0)} - {y})"),
+        ("_l_yy", f"({dlit(rho0)} - {y})"),
         ("_l_rho", "sqrt(_l_x * _l_x + _l_yy * _l_yy)"),
-        ("_l_r", f"(_l_rho / {_dlit(aF)})"),
+        ("_l_r", f"(_l_rho / {dlit(aF)})"),
         # ln(r) = 16 * atanh((r^(1/8) - 1) / (r^(1/8) + 1))
         ("_l_r8", "sqrt(sqrt(sqrt(_l_r)))"),
         ("_l_zl", "((_l_r8 - 1.0) / (_l_r8 + 1.0))"),
         ("_l_lnr", f"(16.0 * {sql_atanh_poly('_l_zl')})"),
-        *sql_exp_poly_quarter(f"(_l_lnr / {_dlit(n)})", prefix="_l"),
+        *sql_exp_poly_quarter(f"(_l_lnr / {dlit(n)})", prefix="_l"),
         ("_l_t", "_l_exp"),
         # chi = pi/2 - 2 atan(t), reciprocal fold + two halvings
         ("_l_z", "(CASE WHEN _l_t <= 1.0 THEN _l_t ELSE 1.0 / _l_t END)"),
@@ -111,9 +99,9 @@ def lcc_stages(easting: str, northing: str, lon0_deg: float,
         (
             "_l_att",
             f"(CASE WHEN _l_t <= 1.0 THEN _l_base"
-            f" ELSE {_dlit(HALF_PI)} - _l_base END)",
+            f" ELSE {dlit(HALF_PI)} - _l_base END)",
         ),
-        ("_l_chi", f"({_dlit(HALF_PI)} - 2.0 * _l_att)"),
+        ("_l_chi", f"({dlit(HALF_PI)} - 2.0 * _l_att)"),
         ("_l_schi", sql_sin_poly("_l_chi")),
         ("_l_cchi", sql_cos_poly("_l_chi")),
         ("_l_s2", "(2.0 * _l_schi * _l_cchi)"),
@@ -124,9 +112,9 @@ def lcc_stages(easting: str, northing: str, lon0_deg: float,
         ("_l_s8", "(2.0 * _l_s4 * _l_c4)"),
         (
             "lcc_lat",
-            f"((_l_chi + {_dlit(CHI_A2)} * _l_s2 + {_dlit(CHI_A4)} * _l_s4"
-            f" + {_dlit(CHI_A6)} * _l_s6 + {_dlit(CHI_A8)} * _l_s8)"
-            f" * {_dlit(RAD2DEG)})",
+            f"((_l_chi + {dlit(CHI_A2)} * _l_s2 + {dlit(CHI_A4)} * _l_s4"
+            f" + {dlit(CHI_A6)} * _l_s6 + {dlit(CHI_A8)} * _l_s8)"
+            f" * {dlit(RAD2DEG)})",
         ),
         # theta = atan2(x', rho0 - y'), same quadrant tree as polar_stereo
         ("_l_an", "LEAST(abs(_l_x), abs(_l_yy))"),
@@ -138,68 +126,20 @@ def lcc_stages(easting: str, northing: str, lon0_deg: float,
         (
             "_l_araw",
             f"(CASE WHEN abs(_l_x) <= abs(_l_yy) THEN _l_abase"
-            f" ELSE {_dlit(HALF_PI)} - _l_abase END)",
+            f" ELSE {dlit(HALF_PI)} - _l_abase END)",
         ),
         (
             "_l_theta",
             f"(CASE WHEN _l_yy >= 0.0 THEN"
             f" (CASE WHEN _l_x >= 0.0 THEN _l_araw ELSE 0.0 - _l_araw END)"
-            f" ELSE (CASE WHEN _l_x >= 0.0 THEN {_dlit(PI)} - _l_araw"
-            f" ELSE _l_araw - {_dlit(PI)} END) END)",
+            f" ELSE (CASE WHEN _l_x >= 0.0 THEN {dlit(PI)} - _l_araw"
+            f" ELSE _l_araw - {dlit(PI)} END) END)",
         ),
         (
             "lcc_lon",
-            f"({_dlit(lon0_deg)} + (_l_theta / {_dlit(n)}) * {_dlit(RAD2DEG)})",
+            f"({dlit(lon0_deg)} + (_l_theta / {dlit(n)}) * {dlit(RAD2DEG)})",
         ),
     ]
-
-
-def with_lcc_geodetic(df, easting: str, northing: str, lon0_deg: float,
-                      lat1_deg: float, lat2_deg: float, lat0_deg: float,
-                      false_easting: float = 0.0,
-                      false_northing: float = 0.0, block_inline: bool = False):
-    from pyspark.sql import functions as F
-
-    stages = lcc_stages(easting, northing, lon0_deg, lat1_deg, lat2_deg,
-                        lat0_deg, false_easting, false_northing)
-    for name, expr in stages:
-        taint = (
-            " + rand(7) * 0.0"  # see utm.with_utm_geodetic docstring
-            if block_inline and not name.startswith("_l")
-            else ""
-        )
-        df = df.withColumn(name, F.expr(expr + taint))
-    return df.drop(*[n for n, _ in stages if n.startswith("_l")])
-
-
-def oracle_lcc_subquery(inner_sql: str, easting: str, northing: str,
-                        lon0_deg: float, lat1_deg: float, lat2_deg: float,
-                        lat0_deg: float, false_easting: float = 0.0,
-                        false_northing: float = 0.0) -> str:
-    sql = f"({inner_sql})"
-    for name, expr in lcc_stages(easting, northing, lon0_deg, lat1_deg,
-                                 lat2_deg, lat0_deg, false_easting,
-                                 false_northing):
-        sql = f"(SELECT *, {expr} AS {name} FROM {sql} AS _s_{name})"
-    return sql
-
-
-def _atanh_poly_np(x):
-    x2 = x * x
-    body = np.float64(_ATANH_COEF[-1])
-    for c in reversed(_ATANH_COEF[:-1]):
-        body = c + x2 * body
-    return x * (1.0 + x2 * body)
-
-
-def _exp_poly_np(x):
-    q = x / 4.0
-    body = np.float64(_EXP_COEF[-1])
-    for c in reversed(_EXP_COEF[:-1]):
-        body = c + q * body
-    e1 = 1.0 + q * body
-    e2 = e1 * e1
-    return e2 * e2
 
 
 def lcc_to_geodetic_np(easting, northing, lon0_deg: float, lat1_deg: float,
@@ -207,21 +147,6 @@ def lcc_to_geodetic_np(easting, northing, lon0_deg: float, lat1_deg: float,
                        false_easting: float = 0.0,
                        false_northing: float = 0.0):
     """numpy twin (same polynomial + operation order)."""
-
-    def sinp(x):
-        x2 = x * x
-        body = np.float64(_SIN_COEF[-1])
-        for c in reversed(_SIN_COEF[:-1]):
-            body = c + x2 * body
-        return x * (1.0 + x2 * body)
-
-    def cosp(x):
-        x2 = x * x
-        body = np.float64(_COS_COEF[-1])
-        for c in reversed(_COS_COEF[:-1]):
-            body = c + x2 * body
-        return 1.0 + x2 * body
-
     n, F, rho0 = lcc_constants(lat1_deg, lat2_deg, lat0_deg)
     aF = A * F
     x = np.asarray(easting, dtype=np.float64) - false_easting
@@ -230,16 +155,16 @@ def lcc_to_geodetic_np(easting, northing, lon0_deg: float, lat1_deg: float,
     r = rho / aF
     r8 = np.sqrt(np.sqrt(np.sqrt(r)))
     zl = (r8 - 1.0) / (r8 + 1.0)
-    lnr = 16.0 * _atanh_poly_np(zl)
-    t = _exp_poly_np(lnr / n)
+    lnr = 16.0 * atanh_np(zl)
+    t = exp_quarter_np(lnr / n)
     z = np.where(t <= 1.0, t, 1.0 / t)
     z1 = z / (1.0 + np.sqrt(1.0 + z * z))
     z2 = z1 / (1.0 + np.sqrt(1.0 + z1 * z1))
-    base = 4.0 * _atan_poly_np(z2)
+    base = 4.0 * atan_np(z2)
     att = np.where(t <= 1.0, base, HALF_PI - base)
     chi = HALF_PI - 2.0 * att
-    schi = sinp(chi)
-    cchi = cosp(chi)
+    schi = sin_np(chi)
+    cchi = cos_np(chi)
     s2 = 2.0 * schi * cchi
     c2 = 1.0 - 2.0 * schi * schi
     s4 = 2.0 * s2 * c2
@@ -252,7 +177,7 @@ def lcc_to_geodetic_np(easting, northing, lon0_deg: float, lat1_deg: float,
     za = np.where(ad == 0.0, 0.0, an / np.where(ad == 0.0, 1.0, ad))
     za1 = za / (1.0 + np.sqrt(1.0 + za * za))
     za2 = za1 / (1.0 + np.sqrt(1.0 + za1 * za1))
-    abase = 4.0 * _atan_poly_np(za2)
+    abase = 4.0 * atan_np(za2)
     araw = np.where(np.abs(x) <= np.abs(yy), abase, HALF_PI - abase)
     theta = np.where(
         yy >= 0.0,

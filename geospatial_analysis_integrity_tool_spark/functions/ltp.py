@@ -6,7 +6,7 @@ Pipeline: the local east/north/up offsets rotate into ECEF through the
 origin's rotation matrix (all entries are trig of the FIXED origin — Python
 constants, like K0 in the UTM kernel), then ECEF -> geodetic by Bowring's
 method (Bowring 1976; two refinement passes) with every transcendental a
-bounded-domain polynomial, same dual-engine contract as functions/utm.py:
+bounded-domain polynomial, same dual-engine contract as functions/stages.py:
 
 * both atan2 calls (longitude; latitude numerator/denominator) use the
   reduce-to-[0,1] + two-halving + degree-15 Taylor quadrant tree from
@@ -24,8 +24,9 @@ import math
 
 import numpy as np
 
-from .polar_stereo import HALF_PI, PI, _atan_poly_np, sql_atan_poly
-from .utm import A, E2, RAD2DEG, _COS_COEF, _SIN_COEF, _dlit, sql_cos_poly, sql_sin_poly
+from .polar_stereo import HALF_PI, PI
+from .stages import atan_np, cos_np, dlit, sin_np, sql_atan_poly, sql_cos_poly, sql_sin_poly
+from .utm import A, E2, RAD2DEG
 
 B = A * math.sqrt(1.0 - E2)
 EP2B = (E2 / (1.0 - E2)) * B  # e'^2 * b
@@ -65,14 +66,14 @@ def _sql_atan2_stages(prefix: str, ycol: str, xcol: str) -> list[tuple[str, str]
         (
             f"{p}_raw",
             f"(CASE WHEN abs({ycol}) <= abs({xcol}) THEN {p}_b"
-            f" ELSE {_dlit(HALF_PI)} - {p}_b END)",
+            f" ELSE {dlit(HALF_PI)} - {p}_b END)",
         ),
         (
             f"{p}_ang",
             f"(CASE WHEN {xcol} >= 0.0 THEN"
             f" (CASE WHEN {ycol} >= 0.0 THEN {p}_raw ELSE 0.0 - {p}_raw END)"
-            f" ELSE (CASE WHEN {ycol} >= 0.0 THEN {_dlit(PI)} - {p}_raw"
-            f" ELSE {p}_raw - {_dlit(PI)} END) END)",
+            f" ELSE (CASE WHEN {ycol} >= 0.0 THEN {dlit(PI)} - {p}_raw"
+            f" ELSE {p}_raw - {dlit(PI)} END) END)",
         ),
     ]
 
@@ -89,25 +90,25 @@ def ecef_stages(xx: str, yy: str, zz: str,
         ("_t_p", "sqrt(_t_xx * _t_xx + _t_yy * _t_yy)"),
         *_sql_atan2_stages("_t_lo", "_t_yy", "_t_xx"),
         # Bowring pass 1: parametric latitude direct from the operands
-        ("_t_h1", f"sqrt(_t_zz * {_dlit(A)} * _t_zz * {_dlit(A)}"
-                  f" + _t_p * {_dlit(B)} * _t_p * {_dlit(B)})"),
-        ("_t_st", f"(_t_zz * {_dlit(A)} / _t_h1)"),
-        ("_t_ct", f"(_t_p * {_dlit(B)} / _t_h1)"),
-        ("_t_nu1", f"(_t_zz + {_dlit(EP2B)} * _t_st * _t_st * _t_st)"),
-        ("_t_de1", f"(_t_p - {_dlit(E2A)} * _t_ct * _t_ct * _t_ct)"),
+        ("_t_h1", f"sqrt(_t_zz * {dlit(A)} * _t_zz * {dlit(A)}"
+                  f" + _t_p * {dlit(B)} * _t_p * {dlit(B)})"),
+        ("_t_st", f"(_t_zz * {dlit(A)} / _t_h1)"),
+        ("_t_ct", f"(_t_p * {dlit(B)} / _t_h1)"),
+        ("_t_nu1", f"(_t_zz + {dlit(EP2B)} * _t_st * _t_st * _t_st)"),
+        ("_t_de1", f"(_t_p - {dlit(E2A)} * _t_ct * _t_ct * _t_ct)"),
         *_sql_atan2_stages("_t_f1", "_t_nu1", "_t_de1"),
         # Bowring pass 2: refine theta from phi1 (|phi1| <= pi/2 -> Taylor)
         ("_t_sf", sql_sin_poly("_t_f1_ang")),
         ("_t_cf", sql_cos_poly("_t_f1_ang")),
-        ("_t_h2", f"sqrt({_dlit(B)} * _t_sf * {_dlit(B)} * _t_sf"
-                  f" + {_dlit(A)} * _t_cf * {_dlit(A)} * _t_cf)"),
-        ("_t_st2", f"({_dlit(B)} * _t_sf / _t_h2)"),
-        ("_t_ct2", f"({_dlit(A)} * _t_cf / _t_h2)"),
-        ("_t_nu2", f"(_t_zz + {_dlit(EP2B)} * _t_st2 * _t_st2 * _t_st2)"),
-        ("_t_de2", f"(_t_p - {_dlit(E2A)} * _t_ct2 * _t_ct2 * _t_ct2)"),
+        ("_t_h2", f"sqrt({dlit(B)} * _t_sf * {dlit(B)} * _t_sf"
+                  f" + {dlit(A)} * _t_cf * {dlit(A)} * _t_cf)"),
+        ("_t_st2", f"({dlit(B)} * _t_sf / _t_h2)"),
+        ("_t_ct2", f"({dlit(A)} * _t_cf / _t_h2)"),
+        ("_t_nu2", f"(_t_zz + {dlit(EP2B)} * _t_st2 * _t_st2 * _t_st2)"),
+        ("_t_de2", f"(_t_p - {dlit(E2A)} * _t_ct2 * _t_ct2 * _t_ct2)"),
         *_sql_atan2_stages("_t_f2", "_t_nu2", "_t_de2"),
-        (f"{out_prefix}_lat", f"(_t_f2_ang * {_dlit(RAD2DEG)})"),
-        (f"{out_prefix}_lon", f"(_t_lo_ang * {_dlit(RAD2DEG)})"),
+        (f"{out_prefix}_lat", f"(_t_f2_ang * {dlit(RAD2DEG)})"),
+        (f"{out_prefix}_lon", f"(_t_lo_ang * {dlit(RAD2DEG)})"),
     ]
 
 
@@ -117,37 +118,13 @@ def ltp_stages(e: str, n: str, u: str, lat0_deg: float, lon0_deg: float,
     local ENU meters at the given origin."""
     (x0, y0, z0), r = ltp_origin(lat0_deg, lon0_deg, h0)
     return ecef_stages(
-        f"({_dlit(x0)} + {_dlit(r[0][0])} * ({e})"
-        f" + {_dlit(r[0][1])} * ({n}) + {_dlit(r[0][2])} * ({u}))",
-        f"({_dlit(y0)} + {_dlit(r[1][0])} * ({e})"
-        f" + {_dlit(r[1][1])} * ({n}) + {_dlit(r[1][2])} * ({u}))",
-        f"({_dlit(z0)} + {_dlit(r[2][1])} * ({n})"
-        f" + {_dlit(r[2][2])} * ({u}))",
+        f"({dlit(x0)} + {dlit(r[0][0])} * ({e})"
+        f" + {dlit(r[0][1])} * ({n}) + {dlit(r[0][2])} * ({u}))",
+        f"({dlit(y0)} + {dlit(r[1][0])} * ({e})"
+        f" + {dlit(r[1][1])} * ({n}) + {dlit(r[1][2])} * ({u}))",
+        f"({dlit(z0)} + {dlit(r[2][1])} * ({n})"
+        f" + {dlit(r[2][2])} * ({u}))",
     )
-
-
-def with_ltp_geodetic(df, e: str, n: str, u: str, lat0_deg: float,
-                      lon0_deg: float, h0: float = 0.0, block_inline: bool = False):
-    from pyspark.sql import functions as F
-
-    stages = ltp_stages(e, n, u, lat0_deg, lon0_deg, h0)
-    for name, expr in stages:
-        taint = (
-            " + rand(7) * 0.0"  # see utm.with_utm_geodetic docstring
-            if block_inline and not name.startswith("_t_")
-            else ""
-        )
-        df = df.withColumn(name, F.expr(expr + taint))
-    return df.drop(*[nm for nm, _ in stages if nm.startswith("_t_")])
-
-
-def oracle_ltp_subquery(inner_sql: str, e: str, n: str, u: str,
-                        lat0_deg: float, lon0_deg: float,
-                        h0: float = 0.0) -> str:
-    sql = f"({inner_sql})"
-    for name, expr in ltp_stages(e, n, u, lat0_deg, lon0_deg, h0):
-        sql = f"(SELECT *, {expr} AS {name} FROM {sql} AS _s_{name})"
-    return sql
 
 
 def _atan2_np(y, x):
@@ -156,29 +133,13 @@ def _atan2_np(y, x):
     z = np.where(ad == 0.0, 0.0, an / np.where(ad == 0.0, 1.0, ad))
     z1 = z / (1.0 + np.sqrt(1.0 + z * z))
     z2 = z1 / (1.0 + np.sqrt(1.0 + z1 * z1))
-    b = 4.0 * _atan_poly_np(z2)
+    b = 4.0 * atan_np(z2)
     raw = np.where(np.abs(y) <= np.abs(x), b, HALF_PI - b)
     return np.where(
         x >= 0.0,
         np.where(y >= 0.0, raw, -raw),
         np.where(y >= 0.0, PI - raw, raw - PI),
     )
-
-
-def _sinp_np(x):
-    x2 = x * x
-    body = np.float64(_SIN_COEF[-1])
-    for c in reversed(_SIN_COEF[:-1]):
-        body = c + x2 * body
-    return x * (1.0 + x2 * body)
-
-
-def _cosp_np(x):
-    x2 = x * x
-    body = np.float64(_COS_COEF[-1])
-    for c in reversed(_COS_COEF[:-1]):
-        body = c + x2 * body
-    return 1.0 + x2 * body
 
 
 def ltp_to_geodetic_np(e, n, u, lat0_deg: float, lon0_deg: float,
@@ -202,8 +163,8 @@ def ecef_to_geodetic_np(xx, yy, zz):
     st = zz * A / h1
     ct = p * B / h1
     phi1 = _atan2_np(zz + EP2B * st * st * st, p - E2A * ct * ct * ct)
-    sf = _sinp_np(phi1)
-    cf = _cosp_np(phi1)
+    sf = sin_np(phi1)
+    cf = cos_np(phi1)
     h2 = np.sqrt(B * sf * B * sf + A * cf * A * cf)
     st2 = B * sf / h2
     ct2 = A * cf / h2

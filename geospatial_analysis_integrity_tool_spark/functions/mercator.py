@@ -4,7 +4,7 @@
 Standard ellipsoidal Mercator inverse (Snyder 1987 eqs. 7-10/7-13: t from
 the exponential of the normalized northing, chi = pi/2 - 2 atan(t), then
 the conformal-latitude series eq. 3-5 shared with the polar stereographic
-kernel).  Same dual-engine contract as functions/utm.py: every
+kernel).  Same dual-engine contract as functions/stages.py: every
 transcendental becomes a bounded-domain polynomial so the identical
 expression tree evaluates bit-for-bit on Spark and DuckDB:
 
@@ -12,8 +12,8 @@ expression tree evaluates bit-for-bit on Spark and DuckDB:
   exp(x) = (exp(x/4))^4 brings |x/4| <= 0.83, then a degree-13 Taylor
   (truncation < 1e-12 relative);
 * atan(t) for t in (0, inf): fold t > 1 through
-  atan(t) = pi/2 - atan(1/t), then the two-halving degree-15 odd Taylor
-  from functions/polar_stereo.py;
+  atan(t) = pi/2 - atan(1/t), then two halvings and the degree-15 odd
+  Taylor from functions/stages.py;
 * the conformal-latitude sin multiples via the exact double-angle
   recurrences.
 """
@@ -22,38 +22,19 @@ from __future__ import annotations
 
 import numpy as np
 
-from .polar_stereo import (
-    CHI_A2,
-    CHI_A4,
-    CHI_A6,
-    CHI_A8,
-    HALF_PI,
-    _atan_poly_np,
-    _e,
+from .polar_stereo import CHI_A2, CHI_A4, CHI_A6, CHI_A8, HALF_PI, _e
+from .stages import (
+    atan_np,
+    cos_np,
+    dlit,
+    exp_quarter_np,
+    sin_np,
     sql_atan_poly,
+    sql_cos_poly,
+    sql_exp_poly_quarter,
+    sql_sin_poly,
 )
-from .utm import A, RAD2DEG, _COS_COEF, _SIN_COEF, _dlit, sql_cos_poly, sql_sin_poly
-
-_EXP_COEF = [
-    1.0, 1.0 / 2.0, 1.0 / 6.0, 1.0 / 24.0, 1.0 / 120.0, 1.0 / 720.0,
-    1.0 / 5040.0, 1.0 / 40320.0, 1.0 / 362880.0, 1.0 / 3628800.0,
-    1.0 / 39916800.0, 1.0 / 479001600.0, 1.0 / 6227020800.0,
-]
-
-
-def sql_exp_poly_quarter(x: str, prefix: str = "_m") -> list[tuple[str, str]]:
-    """Stages computing ``{prefix}_exp`` = exp(x) by quartering + degree-13
-    Taylor (|x| <= ~3.3 -> |x/4| <= 0.83, rel err < 1e-12)."""
-    p = prefix
-    body = repr(_EXP_COEF[-1])
-    for c in reversed(_EXP_COEF[:-1]):
-        body = f"({_dlit(c)} + {p}_q * {body})"
-    return [
-        (f"{p}_q", f"(({x}) / 4.0)"),
-        (f"{p}_e1", f"(1.0 + {p}_q * {body})"),
-        (f"{p}_e2", f"({p}_e1 * {p}_e1)"),
-        (f"{p}_exp", f"({p}_e2 * {p}_e2)"),
-    ]
+from .utm import A, RAD2DEG
 
 
 def mercator_stages(easting: str, northing: str, lon0_deg: float = 0.0,
@@ -61,14 +42,14 @@ def mercator_stages(easting: str, northing: str, lon0_deg: float = 0.0,
                     false_northing: float = 0.0) -> list[tuple[str, str]]:
     """(name, expr) chain computing ``merc_lon``/``merc_lat`` (degrees)."""
     ak = A * k0
-    x = (f"(({easting}) - {_dlit(false_easting)})" if false_easting
+    x = (f"(({easting}) - {dlit(false_easting)})" if false_easting
          else f"({easting})")
-    y = (f"(({northing}) - {_dlit(false_northing)})" if false_northing
+    y = (f"(({northing}) - {dlit(false_northing)})" if false_northing
          else f"({northing})")
     return [
         ("_m_x", x),
         ("_m_y", y),
-        *sql_exp_poly_quarter(f"((0.0 - _m_y) / {_dlit(ak)})"),
+        *sql_exp_poly_quarter(f"((0.0 - _m_y) / {dlit(ak)})"),
         ("_m_t", "_m_exp"),
         # atan(t), t in (0, inf): fold through the reciprocal, two halvings
         ("_m_z", "(CASE WHEN _m_t <= 1.0 THEN _m_t ELSE 1.0 / _m_t END)"),
@@ -78,9 +59,9 @@ def mercator_stages(easting: str, northing: str, lon0_deg: float = 0.0,
         (
             "_m_att",
             f"(CASE WHEN _m_t <= 1.0 THEN _m_base"
-            f" ELSE {_dlit(HALF_PI)} - _m_base END)",
+            f" ELSE {dlit(HALF_PI)} - _m_base END)",
         ),
-        ("_m_chi", f"({_dlit(HALF_PI)} - 2.0 * _m_att)"),
+        ("_m_chi", f"({dlit(HALF_PI)} - 2.0 * _m_att)"),
         ("_m_schi", sql_sin_poly("_m_chi")),
         ("_m_cchi", sql_cos_poly("_m_chi")),
         ("_m_s2", "(2.0 * _m_schi * _m_cchi)"),
@@ -91,87 +72,33 @@ def mercator_stages(easting: str, northing: str, lon0_deg: float = 0.0,
         ("_m_s8", "(2.0 * _m_s4 * _m_c4)"),
         (
             "merc_lat",
-            f"((_m_chi + {_dlit(CHI_A2)} * _m_s2 + {_dlit(CHI_A4)} * _m_s4"
-            f" + {_dlit(CHI_A6)} * _m_s6 + {_dlit(CHI_A8)} * _m_s8)"
-            f" * {_dlit(RAD2DEG)})",
+            f"((_m_chi + {dlit(CHI_A2)} * _m_s2 + {dlit(CHI_A4)} * _m_s4"
+            f" + {dlit(CHI_A6)} * _m_s6 + {dlit(CHI_A8)} * _m_s8)"
+            f" * {dlit(RAD2DEG)})",
         ),
         (
             "merc_lon",
-            f"({_dlit(lon0_deg)} + (_m_x / {_dlit(ak)}) * {_dlit(RAD2DEG)})",
+            f"({dlit(lon0_deg)} + (_m_x / {dlit(ak)}) * {dlit(RAD2DEG)})",
         ),
     ]
-
-
-def with_mercator_geodetic(df, easting: str, northing: str,
-                           lon0_deg: float = 0.0, k0: float = 1.0,
-                           false_easting: float = 0.0,
-                           false_northing: float = 0.0, block_inline: bool = False):
-    from pyspark.sql import functions as F
-
-    stages = mercator_stages(easting, northing, lon0_deg, k0,
-                             false_easting, false_northing)
-    for name, expr in stages:
-        taint = (
-            " + rand(7) * 0.0"  # see utm.with_utm_geodetic docstring
-            if block_inline and not name.startswith("_m")
-            else ""
-        )
-        df = df.withColumn(name, F.expr(expr + taint))
-    return df.drop(*[n for n, _ in stages if n.startswith("_m_")])
-
-
-def oracle_mercator_subquery(inner_sql: str, easting: str, northing: str,
-                             lon0_deg: float = 0.0, k0: float = 1.0,
-                             false_easting: float = 0.0,
-                             false_northing: float = 0.0) -> str:
-    sql = f"({inner_sql})"
-    for name, expr in mercator_stages(easting, northing, lon0_deg, k0,
-                                      false_easting, false_northing):
-        sql = f"(SELECT *, {expr} AS {name} FROM {sql} AS _s_{name})"
-    return sql
-
-
-def _exp_poly_np(x):
-    q = x / 4.0
-    body = np.float64(_EXP_COEF[-1])
-    for c in reversed(_EXP_COEF[:-1]):
-        body = c + q * body
-    e1 = 1.0 + q * body
-    e2 = e1 * e1
-    return e2 * e2
 
 
 def mercator_to_geodetic_np(easting, northing, lon0_deg: float = 0.0,
                             k0: float = 1.0, false_easting: float = 0.0,
                             false_northing: float = 0.0):
     """numpy twin (same polynomial + operation order)."""
-
-    def sinp(x):
-        x2 = x * x
-        body = np.float64(_SIN_COEF[-1])
-        for c in reversed(_SIN_COEF[:-1]):
-            body = c + x2 * body
-        return x * (1.0 + x2 * body)
-
-    def cosp(x):
-        x2 = x * x
-        body = np.float64(_COS_COEF[-1])
-        for c in reversed(_COS_COEF[:-1]):
-            body = c + x2 * body
-        return 1.0 + x2 * body
-
     ak = A * k0
     x = np.asarray(easting, dtype=np.float64) - false_easting
     y = np.asarray(northing, dtype=np.float64) - false_northing
-    t = _exp_poly_np((0.0 - y) / ak)
+    t = exp_quarter_np((0.0 - y) / ak)
     z = np.where(t <= 1.0, t, 1.0 / t)
     z1 = z / (1.0 + np.sqrt(1.0 + z * z))
     z2 = z1 / (1.0 + np.sqrt(1.0 + z1 * z1))
-    base = 4.0 * _atan_poly_np(z2)
+    base = 4.0 * atan_np(z2)
     att = np.where(t <= 1.0, base, HALF_PI - base)
     chi = HALF_PI - 2.0 * att
-    schi = sinp(chi)
-    cchi = cosp(chi)
+    schi = sin_np(chi)
+    cchi = cos_np(chi)
     s2 = 2.0 * schi * cchi
     c2 = 1.0 - 2.0 * schi * schi
     s4 = 2.0 * s2 * c2

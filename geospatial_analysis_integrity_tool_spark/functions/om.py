@@ -8,7 +8,7 @@ across it).  The constants B / A' / E / gamma0 / lon0 involve only the
 projection parameters and are Python-side literals, like the LCC cone
 constants.
 
-Per-row transcendentals, same dual-engine contract as functions/utm.py:
+Per-row transcendentals, same dual-engine contract as functions/stages.py:
 
 * Q' = exp(-B v / A') by the quartered degree-13 Taylor (|arg| <= ~3.3);
 * V' = sin(B u / A') and the cosine twin by the degree-15/14 Taylor
@@ -28,20 +28,21 @@ import math
 
 import numpy as np
 
-from .lcc import _atanh_poly_np, sql_atanh_poly
-from .mercator import _exp_poly_np, sql_exp_poly_quarter
-from .polar_stereo import (
-    CHI_A2,
-    CHI_A4,
-    CHI_A6,
-    CHI_A8,
-    HALF_PI,
-    PI,
-    _atan_poly_np,
-    _e,
+from .polar_stereo import CHI_A2, CHI_A4, CHI_A6, CHI_A8, HALF_PI, PI, _e
+from .stages import (
+    atan_np,
+    atanh_np,
+    cos_np,
+    dlit,
+    exp_quarter_np,
+    sin_np,
     sql_atan_poly,
+    sql_atanh_poly,
+    sql_cos_poly,
+    sql_exp_poly_quarter,
+    sql_sin_poly,
 )
-from .utm import A, E2, RAD2DEG, _COS_COEF, _SIN_COEF, _dlit, sql_cos_poly, sql_sin_poly
+from .utm import A, E2, RAD2DEG
 
 
 def om_constants(latc_deg: float, lonc_deg: float, azc_deg: float,
@@ -75,21 +76,21 @@ def om_stages(u: str, v: str, latc_deg: float, lonc_deg: float,
     sg, cg = math.sin(gamma0), math.cos(gamma0)
     lnE = math.log(E)
     return [
-        ("_o_vn", f"((0.0 - ({v})) * {_dlit(Bc / Ap)})"),
+        ("_o_vn", f"((0.0 - ({v})) * {dlit(Bc / Ap)})"),
         *sql_exp_poly_quarter("_o_vn", prefix="_o"),
         ("_o_qp", "_o_exp"),
         ("_o_sp", "((_o_qp - 1.0 / _o_qp) / 2.0)"),
         ("_o_tp", "((_o_qp + 1.0 / _o_qp) / 2.0)"),
-        ("_o_ua", f"(({u}) * {_dlit(Bc / Ap)})"),
+        ("_o_ua", f"(({u}) * {dlit(Bc / Ap)})"),
         ("_o_vp", sql_sin_poly("_o_ua")),
         ("_o_cu", sql_cos_poly("_o_ua")),
-        ("_o_up", f"((_o_vp * {_dlit(cg)} + _o_sp * {_dlit(sg)}) / _o_tp)"),
+        ("_o_up", f"((_o_vp * {dlit(cg)} + _o_sp * {dlit(sg)}) / _o_tp)"),
         # ln t = (ln E - atanh(U')) / B, atanh after two pull-out halvings
         ("_o_u1", "(_o_up / (1.0 + sqrt(1.0 - _o_up * _o_up)))"),
         ("_o_u2", "(_o_u1 / (1.0 + sqrt(1.0 - _o_u1 * _o_u1)))"),
         ("_o_u3", "(_o_u2 / (1.0 + sqrt(1.0 - _o_u2 * _o_u2)))"),
         ("_o_ath", f"(8.0 * {sql_atanh_poly('_o_u3')})"),
-        ("_o_lnt", f"(({_dlit(lnE)} - _o_ath) * {_dlit(1.0 / Bc)})"),
+        ("_o_lnt", f"(({dlit(lnE)} - _o_ath) * {dlit(1.0 / Bc)})"),
         *sql_exp_poly_quarter("_o_lnt", prefix="_o_t"),
         ("_o_tt", "_o_t_exp"),
         ("_o_z", "(CASE WHEN _o_tt <= 1.0 THEN _o_tt ELSE 1.0 / _o_tt END)"),
@@ -99,9 +100,9 @@ def om_stages(u: str, v: str, latc_deg: float, lonc_deg: float,
         (
             "_o_att",
             f"(CASE WHEN _o_tt <= 1.0 THEN _o_ab"
-            f" ELSE {_dlit(HALF_PI)} - _o_ab END)",
+            f" ELSE {dlit(HALF_PI)} - _o_ab END)",
         ),
-        ("_o_chi", f"({_dlit(HALF_PI)} - 2.0 * _o_att)"),
+        ("_o_chi", f"({dlit(HALF_PI)} - 2.0 * _o_att)"),
         ("_o_schi", sql_sin_poly("_o_chi")),
         ("_o_cchi", sql_cos_poly("_o_chi")),
         ("_o_s2", "(2.0 * _o_schi * _o_cchi)"),
@@ -112,12 +113,12 @@ def om_stages(u: str, v: str, latc_deg: float, lonc_deg: float,
         ("_o_s8", "(2.0 * _o_s4 * _o_c4)"),
         (
             "om_lat",
-            f"((_o_chi + {_dlit(CHI_A2)} * _o_s2 + {_dlit(CHI_A4)} * _o_s4"
-            f" + {_dlit(CHI_A6)} * _o_s6 + {_dlit(CHI_A8)} * _o_s8)"
-            f" * {_dlit(RAD2DEG)})",
+            f"((_o_chi + {dlit(CHI_A2)} * _o_s2 + {dlit(CHI_A4)} * _o_s4"
+            f" + {dlit(CHI_A6)} * _o_s6 + {dlit(CHI_A8)} * _o_s8)"
+            f" * {dlit(RAD2DEG)})",
         ),
         # lon = lon0 - atan2(S' cos g0 - V' sin g0, cos(Bu/A')) / B
-        ("_o_ny", f"(_o_sp * {_dlit(cg)} - _o_vp * {_dlit(sg)})"),
+        ("_o_ny", f"(_o_sp * {dlit(cg)} - _o_vp * {dlit(sg)})"),
         ("_o_an", "LEAST(abs(_o_ny), abs(_o_cu))"),
         ("_o_ad", "GREATEST(abs(_o_ny), abs(_o_cu))"),
         ("_o_az", "(CASE WHEN _o_ad = 0.0 THEN 0.0 ELSE _o_an / _o_ad END)"),
@@ -127,89 +128,50 @@ def om_stages(u: str, v: str, latc_deg: float, lonc_deg: float,
         (
             "_o_ar",
             f"(CASE WHEN abs(_o_ny) <= abs(_o_cu) THEN _o_bb"
-            f" ELSE {_dlit(HALF_PI)} - _o_bb END)",
+            f" ELSE {dlit(HALF_PI)} - _o_bb END)",
         ),
         (
             "_o_th",
             f"(CASE WHEN _o_cu >= 0.0 THEN"
             f" (CASE WHEN _o_ny >= 0.0 THEN _o_ar ELSE 0.0 - _o_ar END)"
-            f" ELSE (CASE WHEN _o_ny >= 0.0 THEN {_dlit(PI)} - _o_ar"
-            f" ELSE _o_ar - {_dlit(PI)} END) END)",
+            f" ELSE (CASE WHEN _o_ny >= 0.0 THEN {dlit(PI)} - _o_ar"
+            f" ELSE _o_ar - {dlit(PI)} END) END)",
         ),
         (
             "om_lon",
-            f"(({_dlit(lon0)} - _o_th * {_dlit(1.0 / Bc)}) * {_dlit(RAD2DEG)})",
+            f"(({dlit(lon0)} - _o_th * {dlit(1.0 / Bc)}) * {dlit(RAD2DEG)})",
         ),
     ]
-
-
-def with_om_geodetic(df, u: str, v: str, latc_deg: float, lonc_deg: float,
-                     azc_deg: float, k0: float = 1.0, block_inline: bool = False):
-    from pyspark.sql import functions as F
-
-    stages = om_stages(u, v, latc_deg, lonc_deg, azc_deg, k0)
-    for name, expr in stages:
-        taint = (
-            " + rand(7) * 0.0"  # see utm.with_utm_geodetic docstring
-            if block_inline and not name.startswith("_o")
-            else ""
-        )
-        df = df.withColumn(name, F.expr(expr + taint))
-    return df.drop(*[n for n, _ in stages if n.startswith("_o")])
-
-
-def oracle_om_subquery(inner_sql: str, u: str, v: str, latc_deg: float,
-                       lonc_deg: float, azc_deg: float,
-                       k0: float = 1.0) -> str:
-    sql = f"({inner_sql})"
-    for name, expr in om_stages(u, v, latc_deg, lonc_deg, azc_deg, k0):
-        sql = f"(SELECT *, {expr} AS {name} FROM {sql} AS _s_{name})"
-    return sql
 
 
 def om_to_geodetic_np(u, v, latc_deg: float, lonc_deg: float,
                       azc_deg: float, k0: float = 1.0):
     """numpy twin (same polynomial + operation order)."""
-
-    def sinp(x):
-        x2 = x * x
-        body = np.float64(_SIN_COEF[-1])
-        for c in reversed(_SIN_COEF[:-1]):
-            body = c + x2 * body
-        return x * (1.0 + x2 * body)
-
-    def cosp(x):
-        x2 = x * x
-        body = np.float64(_COS_COEF[-1])
-        for c in reversed(_COS_COEF[:-1]):
-            body = c + x2 * body
-        return 1.0 + x2 * body
-
     Bc, Ap, E, gamma0, lon0 = om_constants(latc_deg, lonc_deg, azc_deg, k0)
     sg, cg = math.sin(gamma0), math.cos(gamma0)
     lnE = math.log(E)
     u = np.asarray(u, dtype=np.float64)
     v = np.asarray(v, dtype=np.float64)
-    qp = _exp_poly_np((0.0 - v) * (Bc / Ap))
+    qp = exp_quarter_np((0.0 - v) * (Bc / Ap))
     spv = (qp - 1.0 / qp) / 2.0
     tpv = (qp + 1.0 / qp) / 2.0
     ua = u * (Bc / Ap)
-    vp = sinp(ua)
-    cu = cosp(ua)
+    vp = sin_np(ua)
+    cu = cos_np(ua)
     up = (vp * cg + spv * sg) / tpv
     u1 = up / (1.0 + np.sqrt(1.0 - up * up))
     u2 = u1 / (1.0 + np.sqrt(1.0 - u1 * u1))
     u3 = u2 / (1.0 + np.sqrt(1.0 - u2 * u2))
-    ath = 8.0 * _atanh_poly_np(u3)
-    tt = _exp_poly_np((lnE - ath) * (1.0 / Bc))
+    ath = 8.0 * atanh_np(u3)
+    tt = exp_quarter_np((lnE - ath) * (1.0 / Bc))
     z = np.where(tt <= 1.0, tt, 1.0 / tt)
     z1 = z / (1.0 + np.sqrt(1.0 + z * z))
     z2 = z1 / (1.0 + np.sqrt(1.0 + z1 * z1))
-    ab = 4.0 * _atan_poly_np(z2)
+    ab = 4.0 * atan_np(z2)
     att = np.where(tt <= 1.0, ab, HALF_PI - ab)
     chi = HALF_PI - 2.0 * att
-    schi = sinp(chi)
-    cchi = cosp(chi)
+    schi = sin_np(chi)
+    cchi = cos_np(chi)
     s2 = 2.0 * schi * cchi
     c2 = 1.0 - 2.0 * schi * schi
     s4 = 2.0 * s2 * c2
@@ -223,7 +185,7 @@ def om_to_geodetic_np(u, v, latc_deg: float, lonc_deg: float,
     az = np.where(ad == 0.0, 0.0, an / np.where(ad == 0.0, 1.0, ad))
     az1 = az / (1.0 + np.sqrt(1.0 + az * az))
     az2 = az1 / (1.0 + np.sqrt(1.0 + az1 * az1))
-    bb = 4.0 * _atan_poly_np(az2)
+    bb = 4.0 * atan_np(az2)
     ar = np.where(np.abs(ny) <= np.abs(cu), bb, HALF_PI - bb)
     th = np.where(
         cu >= 0.0,

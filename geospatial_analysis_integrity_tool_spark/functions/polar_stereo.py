@@ -10,10 +10,10 @@ Method: the standard ellipsoidal inverse (Snyder 1987 eqs. 21-33/15-11 for
 the t scale, then the conformal-latitude series eq. 3-5).  As in
 functions/utm.py, every transcendental is replaced so the whole transform is
 multiply/add/sqrt/divide and the SAME expression tree evaluates on Spark and
-DuckDB bit-identically:
+DuckDB bit-identically (functions/stages.py):
 
 * sin/cos of the conformal latitude: the shared degree-15/14 Taylor
-  polynomials from functions/utm.py (|chi| <= pi/2 < 1.6);
+  polynomials from functions/stages.py (|chi| <= pi/2 < 1.6);
 * atan(t) for the colatitude: direct odd degree-15 Taylor — the UPS domain
   (|lat| >= ~70 deg) bounds t = tan(pi/4 - chi/2) <= ~0.18, truncation
   < 3e-12 rad;
@@ -32,7 +32,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from .utm import A, E2, RAD2DEG, _dlit, sql_cos_poly, sql_sin_poly
+from .stages import atan_np, cos_np, dlit, sin_np, sql_atan_poly, sql_cos_poly, sql_sin_poly
+from .utm import A, E2, RAD2DEG
 
 K0_UPS = 0.994
 FE = 2000000.0
@@ -51,22 +52,6 @@ CHI_A4 = 7.0 * E2**2 / 48.0 + 29.0 * E2**3 / 240.0 + 811.0 * E2**4 / 11520.0
 CHI_A6 = 7.0 * E2**3 / 120.0 + 81.0 * E2**4 / 1120.0
 CHI_A8 = 4279.0 * E2**4 / 161280.0
 
-_ATAN_COEF = [
-    -1.0 / 3.0, 1.0 / 5.0, -1.0 / 7.0, 1.0 / 9.0,
-    -1.0 / 11.0, 1.0 / 13.0, -1.0 / 15.0,
-]
-
-
-def sql_atan_poly(x: str) -> str:
-    """atan(x) by odd degree-15 Taylor (|x| <= ~0.2: err < 1e-13;
-    still < 3e-12 out to |x| ~ 0.18 of the direct colatitude use)."""
-    x2 = f"({x} * {x})"
-    body = repr(_ATAN_COEF[-1])
-    for c in reversed(_ATAN_COEF[:-1]):
-        body = f"({_dlit(c)} + {x2} * {body})"
-    return f"(({x}) * (1.0 + {x2} * {body}))"
-
-
 def ps_stages(easting: str, northing: str, south: bool = False) -> list[tuple[str, str]]:
     """(name, expr) chain computing ``ps_lon``/``ps_lat`` (degrees) from UPS
     meters.  Same contract as utm.utm_stages: each expr references only
@@ -75,12 +60,12 @@ def ps_stages(easting: str, northing: str, south: bool = False) -> list[tuple[st
     # +y' at the south (Snyder 20-16/-17)
     lx = "(0.0 - _p_y)" if not south else "_p_y"
     return [
-        ("_p_x", f"(({easting}) - {_dlit(FE)})"),
-        ("_p_y", f"(({northing}) - {_dlit(FN)})"),
+        ("_p_x", f"(({easting}) - {dlit(FE)})"),
+        ("_p_y", f"(({northing}) - {dlit(FN)})"),
         ("_p_rho", "sqrt(_p_x * _p_x + _p_y * _p_y)"),
-        ("_p_t", f"(_p_rho * {_dlit(T_SCALE)})"),
+        ("_p_t", f"(_p_rho * {dlit(T_SCALE)})"),
         ("_p_att", sql_atan_poly("_p_t")),
-        ("_p_chi", f"({_dlit(HALF_PI)} - 2.0 * _p_att)"),
+        ("_p_chi", f"({dlit(HALF_PI)} - 2.0 * _p_att)"),
         ("_p_schi", sql_sin_poly("_p_chi")),
         ("_p_cchi", sql_cos_poly("_p_chi")),
         ("_p_s2", "(2.0 * _p_schi * _p_cchi)"),
@@ -91,8 +76,8 @@ def ps_stages(easting: str, northing: str, south: bool = False) -> list[tuple[st
         ("_p_s8", "(2.0 * _p_s4 * _p_c4)"),
         (
             "_p_phi",
-            f"(_p_chi + {_dlit(CHI_A2)} * _p_s2 + {_dlit(CHI_A4)} * _p_s4"
-            f" + {_dlit(CHI_A6)} * _p_s6 + {_dlit(CHI_A8)} * _p_s8)",
+            f"(_p_chi + {dlit(CHI_A2)} * _p_s2 + {dlit(CHI_A4)} * _p_s4"
+            f" + {dlit(CHI_A6)} * _p_s6 + {dlit(CHI_A8)} * _p_s8)",
         ),
         # longitude: atan2(x', lx) by reduce-halve-Taylor
         ("_p_lx", lx),
@@ -105,83 +90,32 @@ def ps_stages(easting: str, northing: str, south: bool = False) -> list[tuple[st
         (
             "_p_raw",
             f"(CASE WHEN abs(_p_x) <= abs(_p_lx) THEN _p_base"
-            f" ELSE {_dlit(HALF_PI)} - _p_base END)",
+            f" ELSE {dlit(HALF_PI)} - _p_base END)",
         ),
         (
             "ps_lon",
             f"((CASE WHEN _p_lx >= 0.0 THEN"
             f" (CASE WHEN _p_x >= 0.0 THEN _p_raw ELSE 0.0 - _p_raw END)"
-            f" ELSE (CASE WHEN _p_x >= 0.0 THEN {_dlit(PI)} - _p_raw"
-            f" ELSE _p_raw - {_dlit(PI)} END) END) * {_dlit(RAD2DEG)})",
+            f" ELSE (CASE WHEN _p_x >= 0.0 THEN {dlit(PI)} - _p_raw"
+            f" ELSE _p_raw - {dlit(PI)} END) END) * {dlit(RAD2DEG)})",
         ),
         (
             "ps_lat",
-            (f"((0.0 - _p_phi) * {_dlit(RAD2DEG)})" if south
-             else f"(_p_phi * {_dlit(RAD2DEG)})"),
+            (f"((0.0 - _p_phi) * {dlit(RAD2DEG)})" if south
+             else f"(_p_phi * {dlit(RAD2DEG)})"),
         ),
     ]
 
 
-def with_ps_geodetic(df, easting: str, northing: str, south: bool = False,
-                     block_inline: bool = False):
-    """Spark side: staged columns (same JVM-codegen/CollapseProject
-    considerations as utm.with_utm_geodetic — see its docstring for the
-    rand(7)*0.0 inline-blocker rationale)."""
-    from pyspark.sql import functions as F
-
-    stages = ps_stages(easting, northing, south)
-    for name, expr in stages:
-        taint = (
-            " + rand(7) * 0.0"
-            if block_inline and not name.startswith("_p_")
-            else ""
-        )
-        df = df.withColumn(name, F.expr(expr + taint))
-    return df.drop(*[n for n, _ in stages if n.startswith("_p_")])
-
-
-def oracle_ps_subquery(inner_sql: str, easting: str, northing: str,
-                       south: bool = False) -> str:
-    """DuckDB side: the SAME stage chain as nested subqueries."""
-    sql = f"({inner_sql})"
-    for name, expr in ps_stages(easting, northing, south):
-        sql = f"(SELECT *, {expr} AS {name} FROM {sql} AS _s_{name})"
-    return sql
-
-
-def _atan_poly_np(x):
-    x2 = x * x
-    body = np.float64(_ATAN_COEF[-1])
-    for c in reversed(_ATAN_COEF[:-1]):
-        body = c + x2 * body
-    return x * (1.0 + x2 * body)
-
-
 def ps_to_geodetic_np(easting, northing, south: bool = False):
     """numpy twin (same polynomial + operation order) for Arrow kernels."""
-    from .utm import _COS_COEF, _SIN_COEF
-
-    def sinp(x):
-        x2 = x * x
-        body = np.float64(_SIN_COEF[-1])
-        for c in reversed(_SIN_COEF[:-1]):
-            body = c + x2 * body
-        return x * (1.0 + x2 * body)
-
-    def cosp(x):
-        x2 = x * x
-        body = np.float64(_COS_COEF[-1])
-        for c in reversed(_COS_COEF[:-1]):
-            body = c + x2 * body
-        return 1.0 + x2 * body
-
     x = np.asarray(easting, dtype=np.float64) - FE
     y = np.asarray(northing, dtype=np.float64) - FN
     rho = np.sqrt(x * x + y * y)
     t = rho * T_SCALE
-    chi = HALF_PI - 2.0 * _atan_poly_np(t)
-    schi = sinp(chi)
-    cchi = cosp(chi)
+    chi = HALF_PI - 2.0 * atan_np(t)
+    schi = sin_np(chi)
+    cchi = cos_np(chi)
     s2 = 2.0 * schi * cchi
     c2 = 1.0 - 2.0 * schi * schi
     s4 = 2.0 * s2 * c2
@@ -195,7 +129,7 @@ def ps_to_geodetic_np(easting, northing, south: bool = False):
     z = np.where(ad == 0.0, 0.0, an / np.where(ad == 0.0, 1.0, ad))
     z1 = z / (1.0 + np.sqrt(1.0 + z * z))
     z2 = z1 / (1.0 + np.sqrt(1.0 + z1 * z1))
-    base = 4.0 * _atan_poly_np(z2)
+    base = 4.0 * atan_np(z2)
     raw = np.where(np.abs(x) <= np.abs(lx), base, HALF_PI - base)
     lon = np.where(
         lx >= 0.0,

@@ -38,7 +38,7 @@ import math
 import numpy as np
 
 from .ltp import ecef_stages, ecef_to_geodetic_np
-from .utm import _dlit
+from .stages import dlit
 
 # --- IGRF-13 epoch 2020.0 degree-1 coefficients (nT), published table -------
 G10 = -29404.8
@@ -148,34 +148,11 @@ def spaceframe_stages(frame: str, x: str, y: str, z: str,
 
     def row(i: int) -> str:
         return (
-            f"({_dlit(m[i][0])} * ({x}) + {_dlit(m[i][1])} * ({y})"
-            f" + {_dlit(m[i][2])} * ({z}))"
+            f"({dlit(m[i][0])} * ({x}) + {dlit(m[i][1])} * ({y})"
+            f" + {dlit(m[i][2])} * ({z}))"
         )
 
     return ecef_stages(row(0), row(1), row(2), out_prefix=pre)
-
-
-def with_spaceframe_geodetic(df, frame: str, x: str, y: str, z: str,
-                             epoch=SPEC_EPOCH, block_inline: bool = False):
-    from pyspark.sql import functions as F
-
-    stages = spaceframe_stages(frame, x, y, z, epoch)
-    for name, expr in stages:
-        taint = (
-            " + rand(7) * 0.0"  # see utm.with_utm_geodetic docstring
-            if block_inline and not name.startswith("_t_")
-            else ""
-        )
-        df = df.withColumn(name, F.expr(expr + taint))
-    return df.drop(*[nm for nm, _ in stages if nm.startswith("_t_")])
-
-
-def oracle_spaceframe_subquery(inner_sql: str, frame: str, x: str, y: str,
-                               z: str, epoch=SPEC_EPOCH) -> str:
-    sql = f"({inner_sql})"
-    for name, expr in spaceframe_stages(frame, x, y, z, epoch):
-        sql = f"(SELECT *, {expr} AS {name} FROM {sql} AS _s_{name})"
-    return sql
 
 
 def spaceframe_to_geodetic_np(frame: str, x, y, z, epoch=SPEC_EPOCH):

@@ -16,17 +16,19 @@ pure multiply/add/sqrt/divide.
 
 Why: the engine's dual-engine oracle method (see functions/geodesy.py)
 requires the Spark plan and the DuckDB oracle to evaluate the SAME IEEE-754
-expression tree.  ``UTM_STAGES`` is the single source of truth: the Spark
-side materializes it as staged columns (small codegen methods, like
-geodesy.with_point_seg_dist_m), the oracle renders it as a nested-subquery
-chain — bit-identical outputs by construction.  A numpy twin with the same
-operation order serves the Arrow-batched kernels, and its fidelity against
-true-trig inverse UTM is unit-tested to < 1e-8 deg (~1 mm).
+expression tree.  ``utm_stages`` is the single source of truth: the Spark
+side materializes it as staged columns (functions/stages.with_stages), the
+oracle renders it as a nested-subquery chain (stages.oracle_stages) —
+bit-identical outputs by construction.  A numpy twin with the same operation
+order serves the Arrow-batched kernels, and its fidelity against true-trig
+inverse UTM is unit-tested to < 1e-8 deg (~1 mm).
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from .stages import cos_np, dlit, sin_np, sql_cos_poly, sql_sin_poly
 
 K0 = 0.9996
 A = 6378137.0
@@ -44,41 +46,6 @@ J2 = 21.0 * E1**2 / 16.0 - 55.0 * E1**4 / 32.0
 J3 = 151.0 * E1**3 / 96.0
 J4 = 1097.0 * E1**4 / 512.0
 RAD2DEG = 57.29577951308232
-
-_SIN_COEF = [
-    -1.0 / 6.0, 1.0 / 120.0, -1.0 / 5040.0, 1.0 / 362880.0,
-    -1.0 / 39916800.0, 1.0 / 6227020800.0, -1.0 / 1307674368000.0,
-]
-_COS_COEF = [
-    -0.5, 1.0 / 24.0, -1.0 / 720.0, 1.0 / 40320.0,
-    -1.0 / 3628800.0, 1.0 / 479001600.0, -1.0 / 87178291200.0,
-]
-
-
-
-def _dlit(x: float) -> str:
-    """Float literal that parses as DOUBLE in BOTH engines: DuckDB treats
-    plain decimal literals as DECIMAL (constant products overflow), but
-    E-notation is DOUBLE everywhere."""
-    r = repr(float(x))
-    return r if ("e" in r or "E" in r or "inf" in r or "nan" in r) else r + "e0"
-
-def sql_sin_poly(x: str) -> str:
-    """sin(x) by degree-15 Taylor (|x| <= 1.6: err < 3e-12)."""
-    x2 = f"({x} * {x})"
-    body = repr(_SIN_COEF[-1])
-    for c in reversed(_SIN_COEF[:-1]):
-        body = f"({_dlit(c)} + {x2} * {body})"
-    return f"(({x}) * (1.0 + {x2} * {body}))"
-
-
-def sql_cos_poly(x: str) -> str:
-    """cos(x) by degree-14 Taylor (|x| <= 1.6: err < 3e-11 -> sub-mm)."""
-    x2 = f"({x} * {x})"
-    body = repr(_COS_COEF[-1])
-    for c in reversed(_COS_COEF[:-1]):
-        body = f"({_dlit(c)} + {x2} * {body})"
-    return f"(1.0 + {x2} * {body})"
 
 
 def utm_stages(
@@ -110,13 +77,13 @@ def tm_stages(
     zone-derived-lon0 special case).  Same stage-chain contract as
     utm_stages; ``lon0_expr`` is an SQL expression in DEGREES."""
     n_adj = (
-        f"(({northing}) - {_dlit(false_northing)})"
+        f"(({northing}) - {dlit(false_northing)})"
         if false_northing
         else f"({northing})"
     )
     return [
-        ("_u_x", f"(({easting}) - {_dlit(false_easting)})"),
-        ("_u_mu", f"({n_adj} / {_dlit(k0)} / {_dlit(MU_DEN)})"),
+        ("_u_x", f"(({easting}) - {dlit(false_easting)})"),
+        ("_u_mu", f"({n_adj} / {dlit(k0)} / {dlit(MU_DEN)})"),
         ("_u_smu", sql_sin_poly("_u_mu")),
         ("_u_cmu", sql_cos_poly("_u_mu")),
         ("_u_s2", "(2.0 * _u_smu * _u_cmu)"),
@@ -127,102 +94,39 @@ def tm_stages(
         ("_u_s8", "(2.0 * _u_s4 * _u_c4)"),
         (
             "_u_phi1",
-            f"(_u_mu + {_dlit(J1)} * _u_s2 + {_dlit(J2)} * _u_s4"
-            f" + {_dlit(J3)} * _u_s6 + {_dlit(J4)} * _u_s8)",
+            f"(_u_mu + {dlit(J1)} * _u_s2 + {dlit(J2)} * _u_s4"
+            f" + {dlit(J3)} * _u_s6 + {dlit(J4)} * _u_s8)",
         ),
         ("_u_sp", sql_sin_poly("_u_phi1")),
         ("_u_cp", sql_cos_poly("_u_phi1")),
         ("_u_sp2", "(_u_sp * _u_sp)"),
         ("_u_tp", "(_u_sp / _u_cp)"),
         ("_u_t1", "(_u_tp * _u_tp)"),
-        ("_u_c1", f"({_dlit(EP2)} * _u_cp * _u_cp)"),
-        ("_u_w", f"(1.0 - {_dlit(E2)} * _u_sp2)"),
-        ("_u_n1", f"({_dlit(A)} / sqrt(_u_w))"),
-        ("_u_r1", f"({_dlit(A)} * {_dlit(1.0 - E2)} / (_u_w * sqrt(_u_w)))"),
-        ("_u_d", f"(_u_x / (_u_n1 * {_dlit(k0)}))"),
+        ("_u_c1", f"({dlit(EP2)} * _u_cp * _u_cp)"),
+        ("_u_w", f"(1.0 - {dlit(E2)} * _u_sp2)"),
+        ("_u_n1", f"({dlit(A)} / sqrt(_u_w))"),
+        ("_u_r1", f"({dlit(A)} * {dlit(1.0 - E2)} / (_u_w * sqrt(_u_w)))"),
+        ("_u_d", f"(_u_x / (_u_n1 * {dlit(k0)}))"),
         ("_u_d2", "(_u_d * _u_d)"),
         (
             "utm_lat",
             f"((_u_phi1 - (_u_n1 * _u_tp / _u_r1) * (_u_d2 / 2.0"
             f" - (5.0 + 3.0 * _u_t1 + 10.0 * _u_c1 - 4.0 * _u_c1 * _u_c1"
-            f" - 9.0 * {_dlit(EP2)}) * _u_d2 * _u_d2 / 24.0"
+            f" - 9.0 * {dlit(EP2)}) * _u_d2 * _u_d2 / 24.0"
             f" + (61.0 + 90.0 * _u_t1 + 298.0 * _u_c1"
-            f" + 45.0 * _u_t1 * _u_t1 - 252.0 * {_dlit(EP2)}"
+            f" + 45.0 * _u_t1 * _u_t1 - 252.0 * {dlit(EP2)}"
             f" - 3.0 * _u_c1 * _u_c1) * _u_d2 * _u_d2 * _u_d2 / 720.0))"
-            f" * {_dlit(RAD2DEG)})",
+            f" * {dlit(RAD2DEG)})",
         ),
         (
             "utm_lon",
             f"({lon0_expr}"
             f" + ((_u_d - (1.0 + 2.0 * _u_t1 + _u_c1) * _u_d * _u_d2 / 6.0"
             f" + (5.0 - 2.0 * _u_c1 + 28.0 * _u_t1 - 3.0 * _u_c1 * _u_c1"
-            f" + 8.0 * {_dlit(EP2)} + 24.0 * _u_t1 * _u_t1)"
-            f" * _u_d * _u_d2 * _u_d2 / 120.0) / _u_cp) * {_dlit(RAD2DEG)})",
+            f" + 8.0 * {dlit(EP2)} + 24.0 * _u_t1 * _u_t1)"
+            f" * _u_d * _u_d2 * _u_d2 / 120.0) / _u_cp) * {dlit(RAD2DEG)})",
         ),
     ]
-
-
-def with_utm_geodetic(df, easting: str, northing: str, zone: str,
-                      south: bool = False, block_inline: bool = False):
-    """Spark side: staged columns (each intermediate its own projection, so
-    codegen methods stay under the JVM 64 KB limit — the
-    geodesy.with_point_seg_dist_m pattern).  Adds ``utm_lon``/``utm_lat``;
-    drops the scratch columns.
-
-    block_inline: when the outputs feed an operator that references them
-    several times (e.g. the PIP cell join: cell key + bbox filter + kernel),
-    CollapseProject re-inlines the whole 24-stage chain at EVERY reference —
-    the expression tree grows exponentially with stage depth and the
-    optimizer never finishes.  ``+ rand(7) * 0.0`` is numerically the
-    identity (x + 0.0 is bit-identical for every non-negative-zero double)
-    but marks the column non-deterministic, so Catalyst materializes the
-    chain ONCE and downstream operators reference the attribute."""
-    from pyspark.sql import functions as F
-
-    stages = utm_stages(easting, northing, zone, south)
-    for name, expr in stages:
-        taint = (
-            " + rand(7) * 0.0"
-            if block_inline and not name.startswith("_u_")
-            else ""
-        )
-        df = df.withColumn(name, F.expr(expr + taint))
-    return df.drop(*[n for n, _ in stages if n.startswith("_u_")])
-
-
-def oracle_utm_subquery(inner_sql: str, easting: str, northing: str,
-                        zone: str, south: bool = False) -> str:
-    """DuckDB side: the SAME stage chain as nested subqueries around
-    ``inner_sql`` — identical expression tree, bit-identical doubles."""
-    sql = f"({inner_sql})"
-    for name, expr in utm_stages(easting, northing, zone, south):
-        sql = f"(SELECT *, {expr} AS {name} FROM {sql} AS _s_{name})"
-    return sql
-
-
-def with_tm_geodetic(df, easting: str, northing: str, lon0_deg: float,
-                     k0: float = K0, false_easting: float = 500000.0,
-                     false_northing: float = 0.0):
-    """Spark side of the generalized TM inverse (staged columns)."""
-    from pyspark.sql import functions as F
-
-    stages = tm_stages(easting, northing, _dlit(lon0_deg), k0,
-                       false_easting, false_northing)
-    for name, expr in stages:
-        df = df.withColumn(name, F.expr(expr))
-    return df.drop(*[n for n, _ in stages if n.startswith("_u_")])
-
-
-def oracle_tm_subquery(inner_sql: str, easting: str, northing: str,
-                       lon0_deg: float, k0: float = K0,
-                       false_easting: float = 500000.0,
-                       false_northing: float = 0.0) -> str:
-    """DuckDB side of the generalized TM inverse."""
-    sql = f"({inner_sql})"
-    for name, expr in tm_stages(easting, northing, _dlit(lon0_deg), k0,
-                                false_easting, false_northing):
-        sql = f"(SELECT *, {expr} AS {name} FROM {sql} AS _s_{name})"
-    return sql
 
 
 def utm_to_geodetic_np(easting, northing, zone, south: bool = False):
@@ -241,26 +145,11 @@ def tm_to_geodetic_np(easting, northing, lon0_deg, k0: float = K0,
     e = np.asarray(easting, dtype=np.float64)
     n = np.asarray(northing, dtype=np.float64)
     lon0 = np.asarray(lon0_deg, dtype=np.float64)
-
-    def sinp(x):
-        x2 = x * x
-        body = np.float64(_SIN_COEF[-1])
-        for c in reversed(_SIN_COEF[:-1]):
-            body = c + x2 * body
-        return x * (1.0 + x2 * body)
-
-    def cosp(x):
-        x2 = x * x
-        body = np.float64(_COS_COEF[-1])
-        for c in reversed(_COS_COEF[:-1]):
-            body = c + x2 * body
-        return 1.0 + x2 * body
-
     x = e - false_easting
     nn = n - false_northing if false_northing else n
     mu = nn / k0 / MU_DEN
-    smu = sinp(mu)
-    cmu = cosp(mu)
+    smu = sin_np(mu)
+    cmu = cos_np(mu)
     s2 = 2.0 * smu * cmu
     c2 = 1.0 - 2.0 * smu * smu
     s4 = 2.0 * s2 * c2
@@ -268,8 +157,8 @@ def tm_to_geodetic_np(easting, northing, lon0_deg, k0: float = K0,
     s6 = s4 * c2 + c4 * s2
     s8 = 2.0 * s4 * c4
     phi1 = mu + J1 * s2 + J2 * s4 + J3 * s6 + J4 * s8
-    sp = sinp(phi1)
-    cp = cosp(phi1)
+    sp = sin_np(phi1)
+    cp = cos_np(phi1)
     sp2 = sp * sp
     tp = sp / cp
     t1 = tp * tp
@@ -360,7 +249,7 @@ def geodetic_to_tm_np(lon, lat, lon0_deg, k0: float = K0,
 def ec_stages(easting: str, northing: str, lon0_deg: float = 0.0) -> list[tuple[str, str]]:
     """(name, expr) chain computing ``ec_lon``/``ec_lat`` (degrees)."""
     return [
-        ("_c_mu", f"(({northing}) / {_dlit(MU_DEN)})"),
+        ("_c_mu", f"(({northing}) / {dlit(MU_DEN)})"),
         ("_c_smu", sql_sin_poly("_c_mu")),
         ("_c_cmu", sql_cos_poly("_c_mu")),
         ("_c_s2", "(2.0 * _c_smu * _c_cmu)"),
@@ -371,55 +260,23 @@ def ec_stages(easting: str, northing: str, lon0_deg: float = 0.0) -> list[tuple[
         ("_c_s8", "(2.0 * _c_s4 * _c_c4)"),
         (
             "ec_lat",
-            f"((_c_mu + {_dlit(J1)} * _c_s2 + {_dlit(J2)} * _c_s4"
-            f" + {_dlit(J3)} * _c_s6 + {_dlit(J4)} * _c_s8) * {_dlit(RAD2DEG)})",
+            f"((_c_mu + {dlit(J1)} * _c_s2 + {dlit(J2)} * _c_s4"
+            f" + {dlit(J3)} * _c_s6 + {dlit(J4)} * _c_s8) * {dlit(RAD2DEG)})",
         ),
         (
             "ec_lon",
-            f"({_dlit(lon0_deg)} + (({easting}) / {_dlit(A)}) * {_dlit(RAD2DEG)})",
+            f"({dlit(lon0_deg)} + (({easting}) / {dlit(A)}) * {dlit(RAD2DEG)})",
         ),
     ]
-
-
-def with_ec_geodetic(df, easting: str, northing: str, lon0_deg: float = 0.0):
-    from pyspark.sql import functions as F
-
-    stages = ec_stages(easting, northing, lon0_deg)
-    for name, expr in stages:
-        df = df.withColumn(name, F.expr(expr))
-    return df.drop(*[n for n, _ in stages if n.startswith("_c_")])
-
-
-def oracle_ec_subquery(inner_sql: str, easting: str, northing: str,
-                       lon0_deg: float = 0.0) -> str:
-    sql = f"({inner_sql})"
-    for name, expr in ec_stages(easting, northing, lon0_deg):
-        sql = f"(SELECT *, {expr} AS {name} FROM {sql} AS _s_{name})"
-    return sql
 
 
 def ec_to_geodetic_np(easting, northing, lon0_deg: float = 0.0):
     """numpy twin (same polynomial + operation order)."""
     e = np.asarray(easting, dtype=np.float64)
     n = np.asarray(northing, dtype=np.float64)
-
-    def sinp(x):
-        x2 = x * x
-        body = np.float64(_SIN_COEF[-1])
-        for c in reversed(_SIN_COEF[:-1]):
-            body = c + x2 * body
-        return x * (1.0 + x2 * body)
-
-    def cosp(x):
-        x2 = x * x
-        body = np.float64(_COS_COEF[-1])
-        for c in reversed(_COS_COEF[:-1]):
-            body = c + x2 * body
-        return 1.0 + x2 * body
-
     mu = n / MU_DEN
-    smu = sinp(mu)
-    cmu = cosp(mu)
+    smu = sin_np(mu)
+    cmu = cos_np(mu)
     s2 = 2.0 * smu * cmu
     c2 = 1.0 - 2.0 * smu * smu
     s4 = 2.0 * s2 * c2

@@ -62,6 +62,18 @@ def sql_side(p: tuple[str, str], a: tuple[str, str], b: tuple[str, str]) -> str:
     return f"(({px} - {bx}) * ({ay} - {by}) - ({ax} - {bx}) * ({py} - {by}))"
 
 
+def sql_in_triangle(px: str, py: str, tri: str = "z.") -> str:
+    """SQL text of "(px, py) strictly inside the triangle {tri}x1..{tri}y3":
+    the three sql_side signs agree and none is zero."""
+    p = (px, py)
+    v1, v2, v3 = ((f"{tri}x{i}", f"{tri}y{i}") for i in (1, 2, 3))
+    d1, d2, d3 = sql_side(p, v1, v2), sql_side(p, v2, v3), sql_side(p, v3, v1)
+    return (
+        f"(({d1} > 0 AND {d2} > 0 AND {d3} > 0)"
+        f" OR ({d1} < 0 AND {d2} < 0 AND {d3} < 0))"
+    )
+
+
 def sql_ray3(px: str, py: str, tri: str = "") -> str:
     """SQL text of the even-odd ray-cast parity of (px, py) against the
     triangle {tri}x1..{tri}y3 (PointInsidePoly, TT.c:6920): true inside."""

@@ -299,17 +299,7 @@ def point_seg_candidates(
     # staged-column refine: the flat sql_point_seg_dist_m text is ~49 KB and
     # fails janino's 64 KB method limit (interpreted fallback, ~8x slower on
     # the candidate volume); the staged twin is bit-identical (see geodesy).
-    pairs = with_point_seg_dist_m(
-        pairs,
-        "_px",
-        "_py",
-        "_sax",
-        "_say",
-        "_sbx",
-        "_sby",
-        out="_d",
-        block_pushdown=True,
-    )
+    pairs = with_point_seg_dist_m(pairs, "_px", "_py", "_sax", "_say", "_sbx", "_sby")
     lower = (
         (F.col("_d") > F.lit(0.0))
         if open_interval

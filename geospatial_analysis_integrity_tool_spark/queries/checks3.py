@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..conditions import consolidate_scalable
 from ..operators.checks_single import single_feature_checks
-from ..operators.pip import pip_join, sql_side
+from ..operators.pip import pip_join, sql_in_triangle
 from ..sources.synthetic import geo_zone_rings, oracle_cte
 from .conditionspipe import TOL, _CELL
 
@@ -100,18 +100,13 @@ def q_points_without_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
     return points.join(inside, "point_id", "left_anti").select("point_id", "fcode")
 
 
-_D1 = sql_side(("p.lon", "p.lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
-_D2 = sql_side(("p.lon", "p.lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
-_D3 = sql_side(("p.lon", "p.lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
-
 ORACLE_POINTS_WITHOUT = f"""
 {oracle_cte('geo_points', 'geo_zones')}
 SELECT p.point_id AS point_id, p.fcode AS fcode
 FROM geo_points p
 WHERE NOT EXISTS (
   SELECT 1 FROM geo_zones z
-  WHERE ({_D1} > 0 AND {_D2} > 0 AND {_D3} > 0)
-     OR ({_D1} < 0 AND {_D2} < 0 AND {_D3} < 0)
+  WHERE {sql_in_triangle("p.lon", "p.lat")}
 )
 """
 

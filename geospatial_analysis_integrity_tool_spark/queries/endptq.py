@@ -46,14 +46,12 @@ def q_endpoint_self_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The flat ~50 KB distance fragment overflows janino's 64 KB method limit
     # when inlined into the tolerance filter above this join (whole-stage
     # falls back to interpreted eval).  The staged-column twin computes the
-    # identical IEEE-754 sequence through small per-alias projections;
-    # block_pushdown keeps the filter from being re-inlined into the join
-    # condition.  Oracle hash unchanged.
+    # identical IEEE-754 sequence through small per-alias projections, and
+    # its rand(7) * 0.0 term keeps the filter from being re-inlined into the
+    # join condition.  Oracle hash unchanged.
     staged = with_point_seg_dist_m(
         ends.join(segs, "line_id").filter(F.col("seg_idx") != F.col("adj_seg")),
         "px", "py", "sax", "say", "sbx", "sby",
-        out="_d",
-        block_pushdown=True,
     )
     return (
         staged.filter(F.col("_d") < SELF_TOUCH_TOL_M)

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
-from ..operators.pip import pip_join, sql_side
+from ..operators.pip import pip_join, sql_in_triangle
 from ..operators.proximity import point_proximity_pairs, point_to_segment_proximity
 from ..sources.synthetic import geo_zone_rings, oracle_cte
 
@@ -48,16 +48,11 @@ def q_geo_pip_gait(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("point_id", "zone_id", "fcode")
 
 
-_D1 = sql_side(("p.lon", "p.lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
-_D2 = sql_side(("p.lon", "p.lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
-_D3 = sql_side(("p.lon", "p.lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
-
 ORACLE_GEO_PIP = f"""
 {oracle_cte('geo_points', 'geo_zones')}
 SELECT p.point_id AS point_id, z.zone_id AS zone_id, p.fcode AS fcode
 FROM geo_points p, geo_zones z
-WHERE ({_D1} > 0 AND {_D2} > 0 AND {_D3} > 0)
-   OR ({_D1} < 0 AND {_D2} < 0 AND {_D3} < 0)
+WHERE {sql_in_triangle("p.lon", "p.lat")}
 """
 
 

@@ -20,7 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.polar_stereo import oracle_ps_subquery, with_ps_geodetic
+from ..functions.polar_stereo import ps_stages
+from ..functions.stages import oracle_stages, with_stages
 
 N_FEATURES = 4000
 
@@ -34,24 +35,24 @@ SELECT c_custkey AS feature_id,
 FROM customer
 WHERE c_custkey < {N_FEATURES}
 """
+_NORTH = ps_stages("easting", "northing")
+_SOUTH = ps_stages("easting", "northing", south=True)
 
 
 def q_ups_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = spark.sql(_PS_FIXTURE_SQL)
-    north = with_ps_geodetic(feats.filter("hemi = 0"), "easting", "northing")
-    south = with_ps_geodetic(
-        feats.filter("hemi = 1"), "easting", "northing", south=True
-    )
+    north = with_stages(feats.filter("hemi = 0"), _NORTH)
+    south = with_stages(feats.filter("hemi = 1"), _SOUTH)
     out = north.unionByName(south)
     return out.select("feature_id", "hemi", "ps_lon", "ps_lat")
 
 
 ORACLE_UPS_INGEST = f"""
 SELECT feature_id, hemi, ps_lon, ps_lat
-FROM {oracle_ps_subquery(f"SELECT * FROM ({_PS_FIXTURE_SQL}) f WHERE hemi = 0", "easting", "northing")} q
+FROM {oracle_stages(f"SELECT * FROM ({_PS_FIXTURE_SQL}) f WHERE hemi = 0", _NORTH)} q
 UNION ALL
 SELECT feature_id, hemi, ps_lon, ps_lat
-FROM {oracle_ps_subquery(f"SELECT * FROM ({_PS_FIXTURE_SQL}) f WHERE hemi = 1", "easting", "northing", south=True)} q
+FROM {oracle_stages(f"SELECT * FROM ({_PS_FIXTURE_SQL}) f WHERE hemi = 1", _SOUTH)} q
 """
 
 QUERIES = {"ups_ingest_geodetic": q_ups_ingest_geodetic}

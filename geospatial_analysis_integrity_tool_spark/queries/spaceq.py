@@ -22,10 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.spaceframes import (
-    oracle_spaceframe_subquery,
-    with_spaceframe_geodetic,
-)
+from ..functions.spaceframes import spaceframe_stages
+from ..functions.stages import oracle_stages, with_stages
 
 N_FEATURES = 4000
 
@@ -52,7 +50,7 @@ WHERE (ux * ux + uy * uy + uz * uz) > 1000000.0
 def _make_query(frame: str):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats = spark.sql(_FRAME_FIXTURE_SQL)
-        out = with_spaceframe_geodetic(feats, frame, "fx", "fy", "fz")
+        out = with_stages(feats, spaceframe_stages(frame, "fx", "fy", "fz"))
         pre = frame.lower()
         return out.select("feature_id", f"{pre}_lon", f"{pre}_lat")
 
@@ -61,7 +59,7 @@ def _make_query(frame: str):
 
 def _make_oracle(frame: str) -> str:
     pre = frame.lower()
-    sub = oracle_spaceframe_subquery(_FRAME_FIXTURE_SQL, frame, "fx", "fy", "fz")
+    sub = oracle_stages(_FRAME_FIXTURE_SQL, spaceframe_stages(frame, "fx", "fy", "fz"))
     return f"SELECT feature_id, {pre}_lon, {pre}_lat FROM {sub} q"
 
 

@@ -439,12 +439,9 @@ def q_streaming_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pip_stream_oracle() -> str:
-    from ..operators.pip import sql_side
+    from ..operators.pip import sql_in_triangle
     from ..sources.synthetic import oracle_cte
 
-    d1 = sql_side(("p.lon", "p.lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
-    d2 = sql_side(("p.lon", "p.lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
-    d3 = sql_side(("p.lon", "p.lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
     return f"""
 {oracle_cte('geo_zones')},
 pts AS (
@@ -455,8 +452,7 @@ pts AS (
 )
 SELECT p.point_id, z.zone_id
 FROM pts p, geo_zones z
-WHERE ({d1} > 0 AND {d2} > 0 AND {d3} > 0)
-   OR ({d1} < 0 AND {d2} < 0 AND {d3} < 0)
+WHERE {sql_in_triangle("p.lon", "p.lat")}
 """
 
 
@@ -464,11 +460,11 @@ WHERE ({d1} > 0 AND {d2} > 0 AND {d3} > 0)
 #
 # The round-4 coordinate-system layer composed with the incremental path:
 # a UTM-meter point stream (file source, one parquet per micro-batch) is
-# inverse-transformed IN the stream (with_utm_geodetic — pure scalar
-# projection, stateless, so it adds nothing to streaming state) and
+# inverse-transformed IN the stream (the numpy twin of utm_stages — pure
+# scalar arithmetic, stateless, so it adds nothing to streaming state) and
 # stream-static-joined against geo_zones through the same pip_join.  The
-# oracle recomputes the identical transform chain (oracle_utm_subquery)
-# plus the sign-test join closed-form over unnest(range(...)).
+# oracle recomputes the identical transform chain (oracle_stages over
+# utm_stages) plus the sign-test join closed-form over unnest(range(...)).
 
 UTM_STREAM_N = 1200
 UTM_STREAM_BATCHES = 4
@@ -547,8 +543,9 @@ def q_streaming_utm_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _utm_stream_oracle() -> str:
-    from ..functions.utm import oracle_utm_subquery
-    from ..operators.pip import sql_side
+    from ..functions.stages import oracle_stages
+    from ..functions.utm import utm_stages
+    from ..operators.pip import sql_in_triangle
     from ..sources.synthetic import oracle_cte
 
     inner = f"""
@@ -558,15 +555,11 @@ def _utm_stream_oracle() -> str:
          CAST((i * 104729) % 8000000 AS DOUBLE) AS northing
   FROM (SELECT unnest(range(0, {UTM_STREAM_N})) AS i)
 """
-    d1 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
-    d2 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
-    d3 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
     return f"""
 {oracle_cte('geo_zones')}
 SELECT p.point_id, z.zone_id
-FROM {oracle_utm_subquery(inner, "easting", "northing", "zone")} p, geo_zones z
-WHERE ({d1} > 0 AND {d2} > 0 AND {d3} > 0)
-   OR ({d1} < 0 AND {d2} < 0 AND {d3} < 0)
+FROM {oracle_stages(inner, utm_stages("easting", "northing", "zone"))} p, geo_zones z
+WHERE {sql_in_triangle("p.utm_lon", "p.utm_lat")}
 """
 
 

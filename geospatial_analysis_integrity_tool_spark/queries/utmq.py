@@ -23,19 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.lcc import oracle_lcc_subquery, with_lcc_geodetic
-from ..functions.ltp import oracle_ltp_subquery, with_ltp_geodetic
-from ..functions.om import oracle_om_subquery, with_om_geodetic
-from ..functions.mercator import oracle_mercator_subquery, with_mercator_geodetic
-from ..functions.utm import (
-    oracle_ec_subquery,
-    oracle_tm_subquery,
-    oracle_utm_subquery,
-    with_ec_geodetic,
-    with_tm_geodetic,
-    with_utm_geodetic,
-)
-from ..operators.pip import pip_join, sql_side
+from ..functions.lcc import lcc_stages
+from ..functions.ltp import ltp_stages
+from ..functions.mercator import mercator_stages
+from ..functions.om import om_stages
+from ..functions.stages import dlit, oracle_stages, with_stages
+from ..functions.utm import ec_stages, tm_stages, utm_stages
+from ..operators.pip import pip_join, sql_in_triangle
 from ..sources.synthetic import geo_zone_rings, oracle_cte
 
 N_FEATURES = 4000
@@ -50,25 +44,24 @@ SELECT c_custkey AS feature_id,
 FROM customer
 WHERE c_custkey < {N_FEATURES}
 """
+_UTM_STAGES = utm_stages("easting", "northing", "zone")
 
 
 def q_utm_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = spark.sql(_UTM_FIXTURE_SQL)
-    out = with_utm_geodetic(feats, "easting", "northing", "zone")
+    out = with_stages(feats, _UTM_STAGES)
     return out.select("feature_id", "zone", "utm_lon", "utm_lat")
 
 
 ORACLE_UTM_INGEST = f"""
 SELECT feature_id, zone, utm_lon, utm_lat
-FROM {oracle_utm_subquery(_UTM_FIXTURE_SQL, "easting", "northing", "zone")} q
+FROM {oracle_stages(_UTM_FIXTURE_SQL, _UTM_STAGES)} q
 """
 
 
 def q_utm_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = spark.sql(_UTM_FIXTURE_SQL)
-    points = with_utm_geodetic(
-        feats, "easting", "northing", "zone", block_inline=True
-    ).select(
+    points = with_stages(feats, _UTM_STAGES, pin=True).select(
         F.col("feature_id").alias("point_id"),
         F.col("utm_lon").alias("lon"),
         F.col("utm_lat").alias("lat"),
@@ -79,17 +72,12 @@ def q_utm_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("point_id", "zone_id")
 
 
-_D1 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x1", "z.y1"), ("z.x2", "z.y2"))
-_D2 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x2", "z.y2"), ("z.x3", "z.y3"))
-_D3 = sql_side(("p.utm_lon", "p.utm_lat"), ("z.x3", "z.y3"), ("z.x1", "z.y1"))
-
 ORACLE_UTM_PIP = f"""
 {oracle_cte('geo_zones')}
 SELECT p.feature_id AS point_id, z.zone_id AS zone_id
-FROM {oracle_utm_subquery(_UTM_FIXTURE_SQL, "easting", "northing", "zone")} p,
+FROM {oracle_stages(_UTM_FIXTURE_SQL, _UTM_STAGES)} p,
      geo_zones z
-WHERE ({_D1} > 0 AND {_D2} > 0 AND {_D3} > 0)
-   OR ({_D1} < 0 AND {_D2} < 0 AND {_D3} < 0)
+WHERE {sql_in_triangle("p.utm_lon", "p.utm_lat")}
 """
 
 # --- tm_ingest_geodetic (generalized TM, reference coordinate system 3) --------
@@ -110,18 +98,18 @@ SELECT c_custkey AS feature_id,
 FROM customer
 WHERE c_custkey < {N_FEATURES}
 """
+_TM_STAGES = tm_stages("easting", "northing", dlit(TM_LON0), TM_K0, TM_FE, TM_FN)
 
 
 def q_tm_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = spark.sql(_TM_FIXTURE_SQL)
-    out = with_tm_geodetic(feats, "easting", "northing", TM_LON0, TM_K0,
-                           TM_FE, TM_FN)
+    out = with_stages(feats, _TM_STAGES)
     return out.select("feature_id", "utm_lon", "utm_lat")
 
 
 ORACLE_TM_INGEST = f"""
 SELECT feature_id, utm_lon, utm_lat
-FROM {oracle_tm_subquery(_TM_FIXTURE_SQL, "easting", "northing", TM_LON0, TM_K0, TM_FE, TM_FN)} q
+FROM {oracle_stages(_TM_FIXTURE_SQL, _TM_STAGES)} q
 """
 
 # --- ec_ingest_geodetic (Equidistant Cylindrical, reference system 5) ----------
@@ -136,17 +124,18 @@ SELECT c_custkey AS feature_id,
 FROM customer
 WHERE c_custkey < {N_FEATURES}
 """
+_EC_STAGES = ec_stages("easting", "northing")
 
 
 def q_ec_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = spark.sql(_EC_FIXTURE_SQL)
-    out = with_ec_geodetic(feats, "easting", "northing")
+    out = with_stages(feats, _EC_STAGES)
     return out.select("feature_id", "ec_lon", "ec_lat")
 
 
 ORACLE_EC_INGEST = f"""
 SELECT feature_id, ec_lon, ec_lat
-FROM {oracle_ec_subquery(_EC_FIXTURE_SQL, "easting", "northing")} q
+FROM {oracle_stages(_EC_FIXTURE_SQL, _EC_STAGES)} q
 """
 
 # --- mercator_ingest_geodetic ("M (Augmented Mercator)", system 13) ------------
@@ -168,18 +157,19 @@ SELECT c_custkey AS feature_id,
 FROM customer
 WHERE c_custkey < {N_FEATURES}
 """
+_MERC_STAGES = mercator_stages("easting", "northing", MERC_LON0, MERC_K0,
+                               MERC_FE, MERC_FN)
 
 
 def q_mercator_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = spark.sql(_MERC_FIXTURE_SQL)
-    out = with_mercator_geodetic(feats, "easting", "northing", MERC_LON0,
-                                 MERC_K0, MERC_FE, MERC_FN)
+    out = with_stages(feats, _MERC_STAGES)
     return out.select("feature_id", "merc_lon", "merc_lat")
 
 
 ORACLE_MERC_INGEST = f"""
 SELECT feature_id, merc_lon, merc_lat
-FROM {oracle_mercator_subquery(_MERC_FIXTURE_SQL, "easting", "northing", MERC_LON0, MERC_K0, MERC_FE, MERC_FN)} q
+FROM {oracle_stages(_MERC_FIXTURE_SQL, _MERC_STAGES)} q
 """
 
 # --- lcc_ingest_geodetic (Lambert Conformal Conic, system 4) -------------------
@@ -197,17 +187,18 @@ SELECT c_custkey AS feature_id,
 FROM customer
 WHERE c_custkey < {N_FEATURES}
 """
+_LCC_STAGES = lcc_stages("easting", "northing", *LCC_PARAMS)
 
 
 def q_lcc_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = spark.sql(_LCC_FIXTURE_SQL)
-    out = with_lcc_geodetic(feats, "easting", "northing", *LCC_PARAMS)
+    out = with_stages(feats, _LCC_STAGES)
     return out.select("feature_id", "lcc_lon", "lcc_lat")
 
 
 ORACLE_LCC_INGEST = f"""
 SELECT feature_id, lcc_lon, lcc_lat
-FROM {oracle_lcc_subquery(_LCC_FIXTURE_SQL, "easting", "northing", *LCC_PARAMS)} q
+FROM {oracle_stages(_LCC_FIXTURE_SQL, _LCC_STAGES)} q
 """
 
 # --- ltp_ingest_geodetic (Local Tangent Plane, system 12; LSR family 14) -------
@@ -225,17 +216,18 @@ SELECT c_custkey AS feature_id,
 FROM customer
 WHERE c_custkey < {N_FEATURES}
 """
+_LTP_STAGES = ltp_stages("le", "ln_", "lu", *LTP_ORIGIN)
 
 
 def q_ltp_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = spark.sql(_LTP_FIXTURE_SQL)
-    out = with_ltp_geodetic(feats, "le", "ln_", "lu", *LTP_ORIGIN)
+    out = with_stages(feats, _LTP_STAGES)
     return out.select("feature_id", "ltp_lon", "ltp_lat")
 
 
 ORACLE_LTP_INGEST = f"""
 SELECT feature_id, ltp_lon, ltp_lat
-FROM {oracle_ltp_subquery(_LTP_FIXTURE_SQL, "le", "ln_", "lu", *LTP_ORIGIN)} q
+FROM {oracle_stages(_LTP_FIXTURE_SQL, _LTP_STAGES)} q
 """
 
 # --- om_ingest_geodetic (Hotine Oblique Mercator, system 11) -------------------
@@ -253,17 +245,18 @@ SELECT c_custkey AS feature_id,
 FROM customer
 WHERE c_custkey < {N_FEATURES}
 """
+_OM_STAGES = om_stages("ucoord", "vcoord", *OM_PARAMS)
 
 
 def q_om_ingest_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = spark.sql(_OM_FIXTURE_SQL)
-    out = with_om_geodetic(feats, "ucoord", "vcoord", *OM_PARAMS)
+    out = with_stages(feats, _OM_STAGES)
     return out.select("feature_id", "om_lon", "om_lat")
 
 
 ORACLE_OM_INGEST = f"""
 SELECT feature_id, om_lon, om_lat
-FROM {oracle_om_subquery(_OM_FIXTURE_SQL, "ucoord", "vcoord", *OM_PARAMS)} q
+FROM {oracle_stages(_OM_FIXTURE_SQL, _OM_STAGES)} q
 """
 
 QUERIES = {

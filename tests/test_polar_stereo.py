@@ -62,9 +62,8 @@ def test_ps_numpy_twin_matches_sql_chain(spark):
     SQL stage chain — spot-verify bit-identity through Spark."""
     from pyspark.sql import functions as F
 
-    from geospatial_analysis_integrity_tool_spark.functions.polar_stereo import (
-        with_ps_geodetic,
-    )
+    from geospatial_analysis_integrity_tool_spark.functions.polar_stereo import ps_stages
+    from geospatial_analysis_integrity_tool_spark.functions.stages import with_stages
 
     rng = np.random.default_rng(5)
     e = 600000.0 + rng.uniform(0, 2800000, 200)
@@ -74,7 +73,7 @@ def test_ps_numpy_twin_matches_sql_chain(spark):
             list(zip(e.tolist(), n.tolist())), "easting double, northing double"
         )
         rows = (
-            with_ps_geodetic(df, "easting", "northing", south=south)
+            with_stages(df, ps_stages("easting", "northing", south=south))
             .orderBy(F.col("easting"))
             .collect()
         )
@@ -108,9 +107,10 @@ def test_mercator_numpy_twin_matches_sql_chain(spark):
     from pyspark.sql import functions as F
 
     from geospatial_analysis_integrity_tool_spark.functions.mercator import (
+        mercator_stages,
         mercator_to_geodetic_np,
-        with_mercator_geodetic,
     )
+    from geospatial_analysis_integrity_tool_spark.functions.stages import with_stages
 
     rng = np.random.default_rng(41)
     e = rng.uniform(-1.9e7, 1.9e7, 200)
@@ -119,7 +119,7 @@ def test_mercator_numpy_twin_matches_sql_chain(spark):
         list(zip(e.tolist(), n.tolist())), "easting double, northing double"
     )
     rows = (
-        with_mercator_geodetic(df, "easting", "northing", 12.0, 0.997, 3e5, 9e5)
+        with_stages(df, mercator_stages("easting", "northing", 12.0, 0.997, 3e5, 9e5))
         .orderBy(F.col("easting"))
         .collect()
     )
@@ -160,9 +160,10 @@ def test_lcc_numpy_twin_matches_sql_chain(spark):
     from pyspark.sql import functions as F
 
     from geospatial_analysis_integrity_tool_spark.functions.lcc import (
+        lcc_stages,
         lcc_to_geodetic_np,
-        with_lcc_geodetic,
     )
+    from geospatial_analysis_integrity_tool_spark.functions.stages import with_stages
 
     rng = np.random.default_rng(43)
     e = rng.uniform(-2.4e6, 2.4e6, 200)
@@ -172,7 +173,7 @@ def test_lcc_numpy_twin_matches_sql_chain(spark):
     )
     params = (-96.0, 33.0, 45.0, 39.0)
     rows = (
-        with_lcc_geodetic(df, "easting", "northing", *params)
+        with_stages(df, lcc_stages("easting", "northing", *params))
         .orderBy(F.col("easting"))
         .collect()
     )
@@ -207,9 +208,10 @@ def test_ltp_numpy_twin_matches_sql_chain(spark):
     from pyspark.sql import functions as F
 
     from geospatial_analysis_integrity_tool_spark.functions.ltp import (
+        ltp_stages,
         ltp_to_geodetic_np,
-        with_ltp_geodetic,
     )
+    from geospatial_analysis_integrity_tool_spark.functions.stages import with_stages
 
     rng = np.random.default_rng(53)
     e = rng.uniform(-1.5e5, 1.5e5, 200)
@@ -220,7 +222,7 @@ def test_ltp_numpy_twin_matches_sql_chain(spark):
         "le double, ln_ double, lu double",
     )
     rows = (
-        with_ltp_geodetic(df, "le", "ln_", "lu", 47.3, 8.5, 400.0)
+        with_stages(df, ltp_stages("le", "ln_", "lu", 47.3, 8.5, 400.0))
         .orderBy(F.col("le"))
         .collect()
     )
@@ -256,9 +258,10 @@ def test_om_numpy_twin_matches_sql_chain(spark):
     from pyspark.sql import functions as F
 
     from geospatial_analysis_integrity_tool_spark.functions.om import (
+        om_stages,
         om_to_geodetic_np,
-        with_om_geodetic,
     )
+    from geospatial_analysis_integrity_tool_spark.functions.stages import with_stages
 
     rng = np.random.default_rng(67)
     u = rng.uniform(-7e5, 2.1e6, 200)
@@ -268,7 +271,7 @@ def test_om_numpy_twin_matches_sql_chain(spark):
     )
     params = (4.0, 115.0, 53.316, 0.99984)
     rows = (
-        with_om_geodetic(df, "ucoord", "vcoord", *params)
+        with_stages(df, om_stages("ucoord", "vcoord", *params))
         .orderBy(F.col("ucoord"))
         .collect()
     )

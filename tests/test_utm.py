@@ -40,7 +40,8 @@ def test_utm_numpy_twin_matches_sql_chain(spark):
     SQL stage chain — spot-verify bit-identity through Spark."""
     from pyspark.sql import functions as F
 
-    from geospatial_analysis_integrity_tool_spark.functions.utm import with_utm_geodetic
+    from geospatial_analysis_integrity_tool_spark.functions.stages import with_stages
+    from geospatial_analysis_integrity_tool_spark.functions.utm import utm_stages
 
     rng = np.random.default_rng(3)
     e = 150000.0 + rng.uniform(0, 700000, 200)
@@ -51,7 +52,7 @@ def test_utm_numpy_twin_matches_sql_chain(spark):
         "easting double, northing double, zone int",
     )
     rows = (
-        with_utm_geodetic(df, "easting", "northing", "zone")
+        with_stages(df, utm_stages("easting", "northing", "zone"))
         .orderBy(F.col("easting"))
         .collect()
     )

@@ -3,7 +3,9 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on DuckDB
 at sf0.01, then compares row count, column names/sorted order, and an
 order-insensitive value hash (columns sorted by name, rows sorted, values
-stringified).  Usage::
+stringified).  Each result line carries the md5 of the oracle SQL text (first
+12 hex characters) ahead of the timings, which come last after ``|``, so two
+runs compare with ``diff`` once the timings are cut.  Usage::
 
     python tools/check_correctness.py [name ...]
 """
@@ -90,9 +92,10 @@ def main() -> int:
         status = "OK   " if ok else "FAIL "
         if not ok:
             failures.append(name)
+        sql_md5 = hashlib.md5(oracles[name].encode()).hexdigest()[:12]
         print(
-            f"{status}{name}: spark {sn} rows cols={sc} hash={sh} ({t_spark:.1f}s) | "
-            f"duck {on} rows cols={oc} hash={oh} ({t_duck:.1f}s)"
+            f"{status}{name}: sql={sql_md5} spark {sn} rows cols={sc} hash={sh} "
+            f"duck {on} rows cols={oc} hash={oh} | {t_spark:.1f}s / {t_duck:.1f}s"
         )
         if not ok and sn and on:
             scols = sorted(sdf.columns)
