@@ -11,8 +11,14 @@ refines exactly.  This module owns one implementation of each step:
 * ``with_point_cell`` puts a point in its single cell;
 * ``with_kring_cells`` copies a point into its 3x3 k-ring;
 * ``explode_bbox_cells`` copies a feature into every cell its bbox covers;
+* ``band_join`` is the 1-D k-ring: a join on adjacent bands of one
+  along-boundary coordinate (the edge-match checks);
 * ``cell_deg_for_tolerance`` sizes the cell so a k=1 ring captures every
   pair within a metric tolerance.
+
+The DuckDB oracles render the same cell keys as SQL text with
+``oracle_bbox_cells`` / ``oracle_seg_cells`` (bbox cover) and
+``oracle_kring_cells`` (3x3 k-ring), as (cellx, celly) column pairs.
 
 Point-in-polygon (replaces GAIT's per-region nested loop, CheckRegion
 TT.c:43916 + PointInsidePoly TT.c:6920):
@@ -146,6 +152,70 @@ def with_kring_cells(df: DataFrame, lon: str, lat: str, cell_deg: float) -> Data
     return df.withColumn(
         "cell", cell_id(ix + F.col("_dx"), iy + F.col("_dy"))
     ).drop("_dx", "_dy")
+
+
+#: band width (deg) of :func:`band_join`, ~11 m along a meridian
+BAND_DEG = 0.0001
+
+
+def band_join(left: DataFrame, right: DataFrame, left_u: str, right_u: str) -> DataFrame:
+    """The 1-D case of :func:`with_kring_cells`: ``left`` x ``right`` pairs
+    whose along-boundary coordinates ``left_u`` / ``right_u`` fall in the
+    same or adjacent ``BAND_DEG`` bands.  Each left row keeps its single
+    band and each right row is copied into its band and both neighbours, so
+    every pair less than ``BAND_DEG`` apart in u meets exactly once."""
+    band = F.floor(F.col(right_u) / F.lit(BAND_DEG))
+    banded_left = left.withColumn("_band", F.floor(F.col(left_u) / F.lit(BAND_DEG)))
+    banded_right = right.withColumn(
+        "_band", F.explode(F.array(band - 1, band, band + 1))
+    )
+    return banded_left.join(banded_right, "_band").drop("_band")
+
+
+def oracle_bbox_cells(
+    src: str, out: str, minx: str, maxx: str, miny: str, maxy: str, cell_deg: float
+) -> str:
+    """DuckDB twin of :func:`explode_bbox_cells`: the CTEs ``{out}_x`` and
+    ``{out}`` (materialized), one row of ``src`` per (cellx, celly) cell its
+    bbox covers."""
+    return f"""{out}_x AS (
+  SELECT *, unnest(generate_series(CAST(floor({minx} / {cell_deg}) AS BIGINT),
+                                   CAST(floor({maxx} / {cell_deg}) AS BIGINT))) AS cellx
+  FROM {src}
+),
+{out} AS MATERIALIZED (
+  SELECT *, unnest(generate_series(CAST(floor({miny} / {cell_deg}) AS BIGINT),
+                                   CAST(floor({maxy} / {cell_deg}) AS BIGINT))) AS celly
+  FROM {out}_x
+)"""
+
+
+def oracle_seg_cells(
+    src: str, out: str, cell_deg: float, ax="ax", ay="ay", bx="bx", by="by"
+) -> str:
+    """:func:`oracle_bbox_cells` of the segments (ax, ay)-(bx, by) of
+    ``src``: a ``{out}_pre`` CTE adds their bbox as _mnx, _mxx, _mny, _mxy."""
+    pre = f"""{out}_pre AS (
+  SELECT *, LEAST({ax}, {bx}) AS _mnx, GREATEST({ax}, {bx}) AS _mxx,
+         LEAST({ay}, {by}) AS _mny, GREATEST({ay}, {by}) AS _mxy
+  FROM {src}
+),
+"""
+    return pre + oracle_bbox_cells(
+        f"{out}_pre", out, "_mnx", "_mxx", "_mny", "_mxy", cell_deg
+    )
+
+
+def oracle_kring_cells(src: str, out: str, cell_deg: float, px="px", py="py") -> str:
+    """DuckDB twin of :func:`with_kring_cells`: the CTE ``{out}``
+    (materialized), one row of ``src`` per (cellx, celly) of its 3x3 k-ring."""
+    return f"""{out} AS MATERIALIZED (
+  SELECT p.*, CAST(floor(p.{px} / {cell_deg}) AS BIGINT) + d.dx AS cellx,
+         CAST(floor(p.{py} / {cell_deg}) AS BIGINT) + d.dy AS celly
+  FROM {src} p,
+       (SELECT dx.dx, dy.dy FROM (SELECT unnest([-1, 0, 1]) AS dx) dx,
+                                 (SELECT unnest([-1, 0, 1]) AS dy) dy) d
+)"""
 
 
 def cell_deg_for_tolerance(tol_m: float, max_abs_lat_deg: float) -> float:

@@ -7,8 +7,10 @@ parquet *partitioned by the tile cell column*, and a JSON manifest records,
 per partition, the rows written and a content hash.  Re-running the stage
 
 1. reads the manifest,
-2. skips partitions already marked done (their files are authoritative),
-3. recomputes only missing partitions, each written by idempotent
+2. deletes partition directories the manifest does not list (the
+   uncommitted output of a crashed run),
+3. skips partitions already marked done (their files are authoritative),
+4. recomputes only missing partitions, each written by idempotent
    dynamic-partition overwrite (exactly-once per partition key).
 
 On a real cluster the same structure maps onto Iceberg partition-level commits
@@ -19,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +48,18 @@ def write_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(tmp, _manifest_path(out_dir))
 
 
+def _drop_orphan_partitions(out_dir: str, partition_col: str, committed: set) -> None:
+    """Delete ``partition_col=<v>`` directories whose v the manifest does not
+    list: a crashed run wrote them but never committed them, and left on disk
+    they would be hashed into the manifest and read back as output."""
+    if not os.path.isdir(out_dir):
+        return
+    prefix = partition_col + "="
+    for name in os.listdir(out_dir):
+        if name.startswith(prefix) and name[len(prefix):] not in committed:
+            shutil.rmtree(os.path.join(out_dir, name))
+
+
 def run_stage_checkpointed(
     spark: SparkSession,
     stage: str,
@@ -60,6 +75,7 @@ def run_stage_checkpointed(
     manifest = read_manifest(out_dir)
     manifest["stage"] = stage
     done = set(manifest["partitions"])
+    _drop_orphan_partitions(out_dir, partition_col, done)
 
     done_vals = [int(v) for v in done]
     remaining = df

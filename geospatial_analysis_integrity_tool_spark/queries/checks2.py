@@ -1,9 +1,5 @@
 """Second wave of GAIT check families (SURVEY.md §2.3/§2.9 coverage):
 
-* geo_edge_match_unmatched — boundary edge matching (LGEOM_UNM_LON 168,
-  PerformEdgeMatchChecks geomchecks.c:2958): west-side line ends at a cell
-  meridian with no counterpart within tolerance across it.  The cross-tile
-  join the cell partitioning gives for free.
 * geo_duplicate_segments — canonicalized-edge hash groupBy (DUPLICATESEG 155,
   AddEdgeSegment/MatchAreaEdge geomchecks.c:37932/38163): explode segments,
   canonicalize endpoints, count parity.
@@ -30,49 +26,8 @@ from ..operators.pip import with_kring_cells, with_point_cell
 from ..sources.synthetic import oracle_cte
 from .conditionspipe import ORACLE_CONDITIONS_PIPELINE, q_conditions_pipeline
 
-EDGE_TOL_M = 1.0
 DANGLE_TOL_M = 5.0
 CONFLATE_RADIUS_M = 10000.0
-
-
-# --- geo_edge_match_unmatched -------------------------------------------------
-def q_edge_match_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = spark.table("geo_edges")
-    # west ends at the meridian; candidates on the east side (any eid)
-    west = edges.select("eid", F.col("xa").alias("px"), F.col("ya").alias("py"))
-    east = edges.filter(F.col("xb").isNotNull()).select(
-        F.col("eid").alias("eid_b"), F.col("xb").alias("qx"), F.col("yb").alias("qy")
-    )
-    band = 0.0001  # ~11 m bands along the meridian
-    w = west.withColumn("band", F.floor(F.col("py") / band))
-    e = east.withColumn("band0", F.floor(F.col("qy") / band))
-    e = e.withColumn("band", F.explode(F.expr("array(band0 - 1, band0, band0 + 1)"))).drop(
-        "band0"
-    )
-    d = F.expr(sql_dist_m("px", "py", "qx", "qy"))
-    matched = (
-        w.join(e, "band")
-        .filter(d < F.lit(EDGE_TOL_M))
-        .select("eid")
-        .distinct()
-    )
-    return west.join(matched, "eid", "left_anti").select(
-        "eid", F.expr("CAST(floor(py * 10000.0) AS BIGINT)").alias("band_key")
-    )
-
-
-_EM_D = sql_dist_m("a.xa", "a.ya", "b.xb", "b.yb")
-ORACLE_EDGE_MATCH = f"""
-{oracle_cte('geo_edges')}
-SELECT a.eid AS eid, CAST(floor(a.ya * 10000.0) AS BIGINT) AS band_key
-FROM geo_edges a
-WHERE NOT EXISTS (
-  SELECT 1 FROM geo_edges b
-  WHERE b.xb IS NOT NULL
-    AND b.yb BETWEEN a.ya - 0.001 AND a.ya + 0.001
-    AND {_EM_D} < {EDGE_TOL_M}
-)
-"""
 
 
 # --- geo_duplicate_segments (edge-hash) ---------------------------------------
@@ -272,7 +227,6 @@ FROM pipeline GROUP BY 1, 2
 
 
 QUERIES = {
-    "geo_edge_match_unmatched": q_edge_match_unmatched,
     "geo_duplicate_segments": q_duplicate_segments,
     "geo_dangles": q_dangles,
     "geo_conflation_best_match": q_conflation_best_match,
@@ -281,7 +235,6 @@ QUERIES = {
 }
 
 ORACLES = {
-    "geo_edge_match_unmatched": ORACLE_EDGE_MATCH,
     "geo_duplicate_segments": ORACLE_DUP_SEGMENTS,
     "geo_dangles": ORACLE_DANGLES,
     "geo_conflation_best_match": ORACLE_CONFLATION,

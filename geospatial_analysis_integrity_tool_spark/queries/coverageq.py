@@ -35,6 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
+from ..operators.pip import (
+    oracle_kring_cells,
+    oracle_seg_cells,
+    with_kring_cells,
+    with_point_cell,
+)
 from ..operators.proximity import point_seg_candidates
 from ..sources.synthetic import GEO_VIEWS, oracle_cte, oracle_materialized
 from .vgeomq import _EDGES_CTE, _area_edges
@@ -62,8 +68,6 @@ def q_pnocoverle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends = lines.selectExpr("x1 AS ex", "y1 AS ey").unionByName(
         lines.selectExpr("x3 AS ex", "y3 AS ey")
     )
-    from ..operators.pip import with_kring_cells, with_point_cell
-
     cell = 0.002  # >= 60 m in degrees at |lat| <= 66
     s = with_point_cell(sites, "lon", "lat", cell)
     e = with_kring_cells(ends, "ex", "ey", cell)
@@ -173,37 +177,6 @@ _PSD = sql_point_seg_dist_m("e.px", "e.py", "s.ax", "s.ay", "s.bx", "s.by")
 _CC = 0.01  # cell width (deg) >= every coverage tolerance in this module
 
 
-def _segc_sql(src: str, out: str, ax="ax", ay="ay", bx="bx", by="by") -> str:
-    return f"""
-{out}_pre AS (
-  SELECT *, LEAST({ax}, {bx}) AS _mnx, GREATEST({ax}, {bx}) AS _mxx,
-         LEAST({ay}, {by}) AS _mny, GREATEST({ay}, {by}) AS _mxy
-  FROM {src}
-),
-{out}_x AS (
-  SELECT *, unnest(generate_series(CAST(floor(_mnx / {_CC}) AS BIGINT),
-                                   CAST(floor(_mxx / {_CC}) AS BIGINT))) AS cellx
-  FROM {out}_pre
-),
-{out} AS MATERIALIZED (
-  SELECT *, unnest(generate_series(CAST(floor(_mny / {_CC}) AS BIGINT),
-                                   CAST(floor(_mxy / {_CC}) AS BIGINT))) AS celly
-  FROM {out}_x
-)
-"""
-
-
-def _pk_sql(src: str, out: str, px="px", py="py") -> str:
-    return f"""
-{out} AS MATERIALIZED (
-  SELECT p.*, CAST(floor(p.{px} / {_CC}) AS BIGINT) + d.dx AS cellx,
-         CAST(floor(p.{py} / {_CC}) AS BIGINT) + d.dy AS celly
-  FROM {src} p,
-       (SELECT dx.dx, dy.dy FROM (SELECT unnest([-1, 0, 1]) AS dx) dx,
-                                 (SELECT unnest([-1, 0, 1]) AS dy) dy) d
-)
-"""
-
 _ORACLE_SEG_CAND = f"""
   FROM ends e JOIN segs s
     ON e.px BETWEEN LEAST(s.ax, s.bx) - {_PRE} AND GREATEST(s.ax, s.bx) + {_PRE}
@@ -292,8 +265,8 @@ def q_lenocoverl(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_LENOCOVERL = f"""
 {oracle_cte('geo_lines')},
 {_ORACLE_ENDS.strip()},
-{_segc_sql('segs', 'segc').strip()},
-{_pk_sql('ends', 'pk').strip()},
+{oracle_seg_cells('segs', 'segc', _CC)},
+{oracle_kring_cells('ends', 'pk', _CC)},
 covered AS (
   SELECT DISTINCT e.pid
   FROM pk e JOIN segc s ON s.cellx = e.cellx AND s.celly = e.celly
@@ -342,8 +315,8 @@ def q_nolcovle(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_NOLCOVLE = f"""
 {oracle_cte('geo_lines')},
 {_ORACLE_ENDS.strip()},
-{_segc_sql('segs', 'segc').strip()},
-{_pk_sql('ends', 'pk').strip()},
+{oracle_seg_cells('segs', 'segc', _CC)},
+{oracle_kring_cells('ends', 'pk', _CC)},
 covered AS (
   SELECT DISTINCT e.pid
   FROM pk e JOIN segc s ON s.cellx = e.cellx AND s.celly = e.celly
@@ -405,8 +378,8 @@ lsegs AS (
   UNION ALL
   SELECT -1 - area_id, ex1, ey1, ex2, ey2 FROM edges
 ),
-{_segc_sql('lsegs', 'lsegc').strip()},
-{_pk_sql('probes', 'ppk').strip()},
+{oracle_seg_cells('lsegs', 'lsegc', _CC)},
+{oracle_kring_cells('probes', 'ppk', _CC)},
 covered AS (
   SELECT DISTINCT e.line_id
   FROM ppk e JOIN lsegc s ON s.cellx = e.cellx AND s.celly = e.celly
@@ -443,8 +416,8 @@ def _end_area_cover(spark: SparkSession) -> DataFrame:
 
 
 _ORACLE_END_AREA = f"""
-{_segc_sql('edges', 'edgec2', ax='ex1', ay='ey1', bx='ex2', by='ey2').strip()},
-{_pk_sql('ends', 'epk').strip()},
+{oracle_seg_cells('edges', 'edgec2', _CC, ax='ex1', ay='ey1', bx='ex2', by='ey2')},
+{oracle_kring_cells('ends', 'epk', _CC)},
 cover AS (
   SELECT DISTINCT e.pid, e.line_id, e.end_which, s.area_id
   FROM epk e JOIN edgec2 s ON s.cellx = e.cellx AND s.celly = e.celly

@@ -58,7 +58,12 @@ from pyspark.sql.window import Window
 
 from ..functions.geodesy import sql_coslat_poly, sql_dist_m
 from ..operators.intersections import sql_intersection_xy, sql_proper_cross
-from ..operators.pip import explode_bbox_cells, with_kring_cells, with_point_cell
+from ..operators.pip import (
+    explode_bbox_cells,
+    oracle_seg_cells,
+    with_kring_cells,
+    with_point_cell,
+)
 from ..sources.synthetic import oracle_cte
 from .compositionq import POLYS_SQL
 
@@ -79,29 +84,8 @@ _AB = {"_ax": "a.ax", "_ay": "a.ay", "_bx": "a.bx", "_by": "a.by",
        "_cx": "b.ax", "_cy": "b.ay", "_dx": "b.bx", "_dy": "b.by"}
 
 
-def _cellify_sql(src: str, out: str) -> str:
-    """DuckDB CTE: explode segment bboxes into 0.01-deg cells (hash-join key)."""
-    return f"""
-{out}_pre AS (
-  SELECT *, LEAST(ax, bx) AS _mnx, GREATEST(ax, bx) AS _mxx,
-         LEAST(ay, by) AS _mny, GREATEST(ay, by) AS _mxy
-  FROM {src}
-),
-{out}_x AS (
-  SELECT *, unnest(generate_series(CAST(floor(_mnx / {CELL}) AS BIGINT),
-                                   CAST(floor(_mxx / {CELL}) AS BIGINT))) AS cellx
-  FROM {out}_pre
-),
-{out} AS MATERIALIZED (
-  SELECT *, unnest(generate_series(CAST(floor(_mny / {CELL}) AS BIGINT),
-                                   CAST(floor(_mxy / {CELL}) AS BIGINT))) AS celly
-  FROM {out}_x
-)
-"""
-
-
 def _seg_cells(df: DataFrame) -> DataFrame:
-    """Spark twin of _cellify_sql over columns (ax, ay, bx, by)."""
+    """Spark twin of oracle_seg_cells over columns (ax, ay, bx, by)."""
     df = (
         df.withColumn("_mnx", F.least("ax", "bx"))
         .withColumn("_mxx", F.greatest("ax", "bx"))
@@ -329,7 +313,7 @@ _CROSS_AB = _sub(sql_proper_cross(), _AB)
 ORACLE_LFNOINT = f"""
 {oracle_cte('geo_lines')},
 segs AS ({LINE_SEGS_SQL}),
-{_cellify_sql('segs', 'segc').lstrip().rstrip()},
+{oracle_seg_cells('segs', 'segc', CELL)},
 crossing AS (
   SELECT DISTINCT a.sid AS line_id
   FROM segc a JOIN segc b
@@ -410,8 +394,8 @@ ORACLE_AREAINTAREA = f"""
 {oracle_cte('geo_areas')},
 ea AS ({AREA_EDGES_SQL}),
 eb AS ({AREA_B_EDGES_SQL}),
-{_cellify_sql('ea', 'eac').lstrip().rstrip()},
-{_cellify_sql('eb', 'ebc').lstrip().rstrip()},
+{oracle_seg_cells('ea', 'eac', CELL)},
+{oracle_seg_cells('eb', 'ebc', CELL)},
 xp AS (
   SELECT DISTINCT a.aid AS id_a, b.aid AS id_b,
          {_IX_AB2} AS ix, {_IY_AB2} AS iy
@@ -476,7 +460,7 @@ def q_llintnoend(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_LLINTNOEND = f"""
 {oracle_cte('geo_lines')},
 segs AS ({LINE_SEGS_SQL}),
-{_cellify_sql('segs', 'segc').lstrip().rstrip()},
+{oracle_seg_cells('segs', 'segc', CELL)},
 xp AS (
   SELECT DISTINCT a.sid AS id_a, b.sid AS id_b,
          {_IX_AB} AS ix, {_IY_AB} AS iy
@@ -538,8 +522,8 @@ ORACLE_LMINT = f"""
 {oracle_cte('geo_lines')},
 lsegs AS ({LINE_SEGS_SQL}),
 pedges AS ({POLY_EDGES_SQL}),
-{_cellify_sql('lsegs', 'lc').lstrip().rstrip()},
-{_cellify_sql('pedges', 'pc').lstrip().rstrip()}
+{oracle_seg_cells('lsegs', 'lc', CELL)},
+{oracle_seg_cells('pedges', 'pc', CELL)}
 SELECT DISTINCT l.sid AS line_id, p.pid AS poly_id, 'LMINT' AS errtype
 FROM lc l JOIN pc p
   ON l.cellx = p.cellx AND l.celly = p.celly
@@ -636,8 +620,8 @@ edges AS (
          ex1 AS ax, ey1 AS ay, ex2 AS bx, ey2 AS by
   FROM edges0
 ),
-{_cellify_sql('lines', 'lc').lstrip().rstrip()},
-{_cellify_sql('edges', 'ec').lstrip().rstrip()}
+{oracle_seg_cells('lines', 'lc', CELL)},
+{oracle_seg_cells('edges', 'ec', CELL)}
 SELECT l.lid, e.aid, 'NONODEOVLP' AS errtype,
        MAX(CAST(floor(({_OVLP_LE}) * 1000.0) AS BIGINT)) AS ovlp_mm
 FROM lc l JOIN ec e

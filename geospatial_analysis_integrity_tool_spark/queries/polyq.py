@@ -45,13 +45,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.intersections import sql_proper_cross
-from ..operators.pip import explode_bbox_cells, with_point_cell
+from ..operators.pip import (
+    explode_bbox_cells,
+    oracle_bbox_cells,
+    oracle_seg_cells,
+    with_point_cell,
+)
 from ..sources.synthetic import oracle_cte
 from .compositionq import POLYS_SQL
 from .intvariants import (
     AREA_EDGES_SQL,
     POLY_EDGES_SQL,
-    _cellify_sql,
     _seg_cells,
     _sub,
 )
@@ -91,16 +95,7 @@ bbox AS (
   SELECT area_id, MIN(x) AS mnx, MAX(x) AS mxx, MIN(y) AS mny, MAX(y) AS mxy
   FROM geo_vareas GROUP BY 1
 ),
-bbx AS (
-  SELECT *, unnest(generate_series(CAST(floor(mnx / {CELL}) AS BIGINT),
-                                   CAST(floor(mxx / {CELL}) AS BIGINT))) AS cellx
-  FROM bbox
-),
-bc AS MATERIALIZED (
-  SELECT *, unnest(generate_series(CAST(floor(mny / {CELL}) AS BIGINT),
-                                   CAST(floor(mxy / {CELL}) AS BIGINT))) AS celly
-  FROM bbx
-),
+{oracle_bbox_cells('bbox', 'bc', 'mnx', 'mxx', 'mny', 'mxy', CELL)},
 probes AS (
   SELECT site_id, lon AS px, lat AS py,
          CAST(floor(lon / {CELL}) AS BIGINT) AS cellx,
@@ -308,8 +303,8 @@ pedges AS (SELECT * FROM ({POLY_EDGES_SQL}) WHERE pid % 5 = 0),
 aedges AS ({AREA_EDGES_SQL}),
 pe2 AS (SELECT pid, ax, ay, bx, by FROM pedges),
 ae2 AS (SELECT aid, ax, ay, bx, by FROM aedges),
-{_cellify_sql('pe2', 'pc').lstrip().rstrip()},
-{_cellify_sql('ae2', 'ac').lstrip().rstrip()},
+{oracle_seg_cells('pe2', 'pc', CELL)},
+{oracle_seg_cells('ae2', 'ac', CELL)},
 corner_in AS (
   SELECT DISTINCT c.poly_id
   FROM corners c JOIN geo_areas a
@@ -380,8 +375,8 @@ _CROSS_AB2 = _sub(
 ORACLE_POLYINTPOLY = f"""
 WITH ea AS (SELECT pid, ax, ay, bx, by FROM ({POLY_EDGES_SQL})),
 eb AS ({POLYS_B_EDGES_SQL}),
-{_cellify_sql('ea', 'eac').lstrip().rstrip()},
-{_cellify_sql('eb', 'ebc').lstrip().rstrip()}
+{oracle_seg_cells('ea', 'eac', CELL)},
+{oracle_seg_cells('eb', 'ebc', CELL)}
 SELECT DISTINCT a.pid AS id_a, b.pid AS id_b, 'POLYINTPOLY' AS errtype
 FROM eac a JOIN ebc b ON a.cellx = b.cellx AND a.celly = b.celly
 WHERE a._mnx <= b._mxx AND a._mxx >= b._mnx
@@ -416,8 +411,8 @@ ORACLE_POLYINTAREA = f"""
 {oracle_cte('geo_areas')},
 pe AS (SELECT pid, ax, ay, bx, by FROM ({POLY_EDGES_SQL})),
 ae AS (SELECT aid, ax, ay, bx, by FROM ({AREA_EDGES_SQL})),
-{_cellify_sql('pe', 'pc').lstrip().rstrip()},
-{_cellify_sql('ae', 'ac').lstrip().rstrip()}
+{oracle_seg_cells('pe', 'pc', CELL)},
+{oracle_seg_cells('ae', 'ac', CELL)}
 SELECT DISTINCT p.pid AS poly_id, a.aid AS area_id, 'POLYINTAREA' AS errtype
 FROM pc p JOIN ac a ON p.cellx = a.cellx AND p.celly = a.celly
 WHERE p._mnx <= a._mxx AND p._mxx >= a._mnx
@@ -562,8 +557,8 @@ ORACLE_LSPINT = f"""
 {oracle_cte('geo_lines')},
 lsegs AS ({LSP_LINE_SEGS_SQL}),
 sedges AS ({STEEP_EDGES_SQL}),
-{_cellify_sql('lsegs', 'lc').lstrip().rstrip()},
-{_cellify_sql('sedges', 'sc').lstrip().rstrip()},
+{oracle_seg_cells('lsegs', 'lc', CELL)},
+{oracle_seg_cells('sedges', 'sc', CELL)},
 xings AS (
   SELECT DISTINCT l.sid, s.pid, {_IX_LS} AS ix, {_IY_LS} AS iy
   FROM lc l JOIN sc s ON l.cellx = s.cellx AND l.celly = s.celly

@@ -53,7 +53,12 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
 from ..operators.intersections import sql_intersection_xy, sql_proper_cross
-from ..operators.pip import explode_bbox_cells, with_kring_cells, with_point_cell
+from ..operators.pip import (
+    explode_bbox_cells,
+    oracle_seg_cells,
+    with_kring_cells,
+    with_point_cell,
+)
 from ..operators.proximity import point_seg_candidates, point_to_segment_proximity
 from ..sources.synthetic import oracle_cte
 
@@ -421,21 +426,7 @@ def _sub_ab(s: str) -> str:
 ORACLE_PLP_FAIL = f"""
 {oracle_cte('geo_sites', 'geo_lines')},
 segs AS ({LINE_SEGS_SQL}),
-segc_pre AS (
-  SELECT *, LEAST(sax, sbx) AS _mnx, GREATEST(sax, sbx) AS _mxx,
-         LEAST(say, sby) AS _mny, GREATEST(say, sby) AS _mxy
-  FROM segs
-),
-segc_x AS (
-  SELECT *, unnest(generate_series(CAST(floor(_mnx / 0.01) AS BIGINT),
-                                   CAST(floor(_mxx / 0.01) AS BIGINT))) AS cellx
-  FROM segc_pre
-),
-segc AS MATERIALIZED (
-  SELECT *, unnest(generate_series(CAST(floor(_mny / 0.01) AS BIGINT),
-                                   CAST(floor(_mxy / 0.01) AS BIGINT))) AS celly
-  FROM segc_x
-),
+{oracle_seg_cells('segs', 'segc', 0.01, ax='sax', ay='say', bx='sbx', by='sby')},
 xings AS (
   SELECT DISTINCT {_sub_ab(_guarded_xy()[0])} AS cx,
          {_sub_ab(_guarded_xy()[1])} AS cy

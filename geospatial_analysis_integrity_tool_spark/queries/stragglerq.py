@@ -42,7 +42,7 @@ from ..operators.intersections import (
     segments_of_vertices,
     self_intersections_of_segments,
 )
-from ..operators.pip import with_kring_cells, with_point_cell
+from ..operators.pip import oracle_bbox_cells, with_kring_cells, with_point_cell
 from ..operators.proximity import point_to_segment_proximity
 from ..sources.synthetic import oracle_cte, oracle_materialized
 from .vgeomq import (
@@ -50,7 +50,6 @@ from .vgeomq import (
     RAY_CROSS,
     _EDGES_CTE,
     _area_edges,
-    _cells,
     _inside_pairs,
 )
 
@@ -277,7 +276,7 @@ abbox AS (
   SELECT area_id, MIN(x) AS mnx, MAX(x) AS mxx, MIN(y) AS mny, MAX(y) AS mxy
   FROM geo_vareas GROUP BY area_id
 ),
-{_cells('abbox', 'abc').strip()},
+{oracle_bbox_cells('abbox', 'abc', 'mnx', 'mxx', 'mny', 'mxy', CELL)},
 cand AS (
   SELECT s.site_id, s.lon AS px, s.lat AS py, a.area_id
   FROM geo_sites s JOIN abc a
@@ -361,7 +360,7 @@ abbox AS (
   SELECT area_id, MIN(x) AS mnx, MAX(x) AS mxx, MIN(y) AS mny, MAX(y) AS mxy
   FROM geo_vareas_pia GROUP BY area_id
 ),
-{_cells('abbox', 'abc').strip()},
+{oracle_bbox_cells('abbox', 'abc', 'mnx', 'mxx', 'mny', 'mxy', CELL)},
 cand AS (
   SELECT v.area_id AS inner_id, v.ring, v.vidx, v.x AS px, v.y AS py, a.area_id
   FROM geo_vareas_pia v JOIN abc a

@@ -52,12 +52,18 @@ from ..operators.intersections import (
     sql_proper_cross,
 )
 from ..operators.networks import endpoint_nodes, line_adjacency
+from ..operators.pip import (
+    oracle_kring_cells,
+    oracle_seg_cells,
+    with_kring_cells,
+    with_point_cell,
+)
 from ..operators.proximity import (
     point_proximity_pairs,
     point_to_segment_proximity,
 )
 from ..sources.synthetic import oracle_cte, oracle_materialized
-from .coverageq import _line_ends, _line_segs, _pk_sql, _segc_sql
+from .coverageq import _line_ends, _line_segs
 
 LLINTAWAY_TOL_M = 40.0
 FEATNOTCUT_TOL_M = 30.0
@@ -412,8 +418,8 @@ ends AS MATERIALIZED (
   UNION ALL
   SELECT line_id, x3, y3 FROM geo_lines
 ),
-{_segc_sql('edges', 'edgec2', ax='ex1', ay='ey1', bx='ex2', by='ey2').strip()},
-{_pk_sql('ends', 'epk').strip()},
+{oracle_seg_cells('edges', 'edgec2', 0.01, ax='ex1', ay='ey1', bx='ex2', by='ey2')},
+{oracle_kring_cells('ends', 'epk', 0.01)},
 near AS (
   SELECT DISTINCT e.line_id, s.area_id,
          CAST(floor({sql_point_seg_dist_m('e.px', 'e.py', 's.ex1', 's.ey1', 's.ex2', 's.ey2')}
@@ -546,8 +552,6 @@ def q_plproxex(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     near = point_to_segment_proximity(sites, segs, tol_m=PLPROXEX_TOL_M)
     ends = _line_ends(lines)
-    from ..operators.pip import with_kring_cells, with_point_cell
-
     cell = 0.004
     s = with_point_cell(
         spark.table("geo_sites").select("site_id", "lon", "lat"), "lon", "lat", cell

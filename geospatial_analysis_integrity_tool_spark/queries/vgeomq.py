@@ -39,7 +39,7 @@ from ..operators.intersections import (
     sql_proper_cross,
     vertices_to_lines,
 )
-from ..operators.pip import explode_bbox_cells
+from ..operators.pip import explode_bbox_cells, oracle_bbox_cells
 from ..sources.synthetic import oracle_cte
 
 CELL = 0.01
@@ -126,22 +126,6 @@ edges AS (
 """
 
 
-def _cells(src: str, out: str, cell: float = CELL) -> str:
-    """DuckDB: explode bbox cell cover of CTE `src` (mnx..mxy) into `out`."""
-    return f"""
-{out}_x AS (
-  SELECT s.*, unnest(generate_series(CAST(floor(mnx / {cell}) AS BIGINT),
-                                     CAST(floor(mxx / {cell}) AS BIGINT))) AS cellx
-  FROM {src} s
-),
-{out} AS (
-  SELECT c.*, unnest(generate_series(CAST(floor(mny / {cell}) AS BIGINT),
-                                     CAST(floor(mxy / {cell}) AS BIGINT))) AS celly
-  FROM {out}_x c
-)
-"""
-
-
 # --- geo_line_intersections (LLINT 118, re-gated on geo_vlines) ----------------
 
 
@@ -155,7 +139,7 @@ _IX, _IY = sql_intersection_xy()
 ORACLE_LLINT_V = f"""
 {oracle_cte('geo_vlines')},
 {_SEGS_CTE.strip()},
-{_cells('segs', 'segc', SEGCELL).strip()},
+{oracle_bbox_cells('segs', 'segc', 'mnx', 'mxx', 'mny', 'mxy', SEGCELL)},
 pairs AS (
   SELECT a.line_id AS id_a, b.line_id AS id_b,
          a.seg_idx AS seg_a, b.seg_idx AS seg_b,
@@ -368,8 +352,8 @@ ORACLE_LINE_AREA_V = f"""
 {oracle_cte('geo_vlines', 'geo_vareas')},
 {_SEGS_CTE.strip()},
 {_EDGES_CTE.strip()},
-{_cells('segs', 'segc', EDGECELL).strip()},
-{_cells('edges', 'edgec', EDGECELL).strip()},
+{oracle_bbox_cells('segs', 'segc', 'mnx', 'mxx', 'mny', 'mxy', EDGECELL)},
+{oracle_bbox_cells('edges', 'edgec', 'mnx', 'mxx', 'mny', 'mxy', EDGECELL)},
 laint AS (
   SELECT DISTINCT s.line_id, e.area_id
   FROM segc s JOIN edgec e
@@ -384,7 +368,7 @@ abbox AS (
   SELECT area_id, MIN(x) AS mnx, MAX(x) AS mxx, MIN(y) AS mny, MAX(y) AS mxy
   FROM geo_vareas GROUP BY area_id
 ),
-{_cells('abbox', 'abc').strip()},
+{oracle_bbox_cells('abbox', 'abc', 'mnx', 'mxx', 'mny', 'mxy', CELL)},
 cand AS (
   SELECT v.line_id, v.vidx, v.x AS px, v.y AS py, a.area_id
   FROM geo_vlines v JOIN abc a
@@ -482,7 +466,7 @@ ORACLE_AREA_OVERLAP_V = f"""
 {oracle_cte('geo_vareas')},
 geo_vareas_ov AS MATERIALIZED ({_AREAS_OV_SQL}),
 {_EDGES_CTE.strip().replace("geo_vareas", "geo_vareas_ov")},
-{_cells('edges', 'edgec', EDGECELL).strip()},
+{oracle_bbox_cells('edges', 'edgec', 'mnx', 'mxx', 'mny', 'mxy', EDGECELL)},
 crossed AS (
   SELECT DISTINCT a.area_id AS id_a, b.area_id AS id_b
   FROM edgec a JOIN edgec b
@@ -498,7 +482,7 @@ abbox AS (
   SELECT area_id, MIN(x) AS mnx, MAX(x) AS mxx, MIN(y) AS mny, MAX(y) AS mxy
   FROM geo_vareas_ov GROUP BY area_id
 ),
-{_cells('abbox', 'abc').strip()},
+{oracle_bbox_cells('abbox', 'abc', 'mnx', 'mxx', 'mny', 'mxy', CELL)},
 rep AS (
   SELECT area_id AS probe_id, x AS px, y AS py
   FROM geo_vareas_ov WHERE ring = 0 AND vidx = 0

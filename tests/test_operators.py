@@ -67,6 +67,81 @@ def test_pip_join_shipped_matches_broadcast(spark):
         assert shipped.count() > 0
 
 
+def test_band_join_matches_brute_force(spark):
+    """band_join (the edge-match checks' 1-D k-ring) against a brute-force
+    cross join: pairs straddling band edges, negative u, and pairs just
+    inside and just outside a tolerance; each pair less than BAND_DEG apart
+    is a candidate exactly once, so each in-tolerance pair is found once."""
+    from geospatial_analysis_integrity_tool_spark.operators.pip import (
+        BAND_DEG,
+        band_join,
+    )
+
+    tol = 0.6 * BAND_DEG
+    eps = 0.01 * BAND_DEG
+    left_u = [0.0, BAND_DEG - eps, 3 * BAND_DEG, -eps, -2 * BAND_DEG + eps,
+              -7.5 * BAND_DEG, 41.0 + 0.3 * BAND_DEG]
+    right_u = []
+    for u in left_u:  # just inside and just outside the tolerance, each side
+        right_u += [u + tol - eps, u - tol + eps, u + tol + eps, u - tol - eps]
+    for k in (-3, 0, 1, 4):  # straddling a band edge
+        left_u.append(k * BAND_DEG - eps)
+        right_u.append(k * BAND_DEG + eps)
+    left = spark.createDataFrame(list(enumerate(left_u)), "lid int, lu double")
+    right = spark.createDataFrame(list(enumerate(right_u)), "rid int, ru double")
+
+    cands = band_join(left, right, "lu", "ru")
+    assert cands.columns == ["lid", "lu", "rid", "ru"]
+    pairs = [(r.lid, r.rid) for r in cands.collect()]
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) >= {
+        (i, j)
+        for i, a in enumerate(left_u)
+        for j, b in enumerate(right_u)
+        if abs(a - b) < BAND_DEG
+    }
+
+    got = sorted(
+        (r.lid, r.rid)
+        for r in cands.filter(F.abs(F.col("lu") - F.col("ru")) < tol).collect()
+    )
+    want = sorted(
+        (i, j)
+        for i, a in enumerate(left_u)
+        for j, b in enumerate(right_u)
+        if abs(a - b) < tol
+    )
+    assert got == want
+    assert len(want) >= 2 * 7 + 4
+
+
+def test_only_pip_builds_band_and_cell_grids():
+    """One band join and one set of DuckDB cell renderers: only
+    operators/pip.py builds the +-1 band array, no queries/ module defines
+    its own banded join or cell-cover renderer, and the edge-match module
+    registers no view."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "geospatial_analysis_integrity_tool_spark"
+    band_array = re.compile(r"band\w*\s*-\s*1\b")
+    builders = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if band_array.search(p.read_text())
+    ]
+    assert builders == ["operators/pip.py"]
+
+    private = re.compile(
+        r"^def (_banded_\w*|_cellify_sql|_segc_sql|_pk_sql|_cells)\(", re.M
+    )
+    assert [
+        p.name for p in sorted((pkg / "queries").glob("*.py"))
+        if private.search(p.read_text())
+    ] == []
+    assert "createOrReplaceTempView" not in (pkg / "queries" / "edgematch.py").read_text()
+
+
 def test_proximity_planted(spark):
     """knn_prox_01 analogue: 1.5 m apart under 5 m tolerance."""
     from geospatial_analysis_integrity_tool_spark.operators.proximity import (

@@ -69,6 +69,56 @@ def test_checkpoint_resume_skips_done_partitions(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_checkpoint_drops_orphan_partitions(spark):
+    """A partition a crashed run left on disk (parquet committed, manifest
+    never written) that the current input does not produce goes neither
+    into the manifest nor into the returned frame."""
+    from geospatial_analysis_integrity_tool_spark.plans.checkpointing import (
+        lineage,
+        run_stage_checkpointed,
+    )
+
+    def rows(frame):
+        return sorted(map(tuple, frame.select("cell", "v").collect()))
+
+    def plant_orphan(cell, out):
+        (
+            spark.range(5)
+            .select(F.lit(cell).cast("bigint").alias("cell"), (F.col("id") + 500).alias("v"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("cell")
+            .parquet(out)
+        )
+
+    out = tempfile.mkdtemp(prefix="gait_ckpt_")
+    try:
+        df = spark.range(40).select(
+            (F.col("id") % 4).alias("cell"), F.col("id").alias("v")
+        )
+        # crashed run before any manifest: cell 7 on disk only
+        plant_orphan(7, out)
+        full = run_stage_checkpointed(spark, "s1", df, "cell", out)
+        assert set(lineage(out)) == {"0", "1", "2", "3"}
+        assert rows(full) == rows(df)
+
+        # crashed run after a committed one; the resume has nothing to compute
+        plant_orphan(8, out)
+        assert rows(run_stage_checkpointed(spark, "s1", df, "cell", out)) == rows(df)
+        assert set(lineage(out)) == {"0", "1", "2", "3"}
+
+        # ... and a resume that computes a new partition
+        plant_orphan(8, out)
+        df9 = df.unionByName(
+            spark.range(3).select(F.lit(9).cast("bigint").alias("cell"), F.col("id").alias("v"))
+        )
+        full9 = run_stage_checkpointed(spark, "s1", df9, "cell", out)
+        assert set(lineage(out)) == {"0", "1", "2", "3", "9"}
+        assert rows(full9) == rows(df9)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_stream_extract_matches_batch(spark):
     import tempfile
 
