@@ -65,16 +65,28 @@ def consolidate_scalable(
     order_keys: list[str] = ("magnitude_mm", "sedrisid"),
     dedup_keys: list[str] | None = None,
     dedup: bool = True,
+    number_within: tuple[str, ...] = ("errtype", "instance"),
 ) -> DataFrame:
     """Scale-safe ordinal numbering: two-phase (per-cell rank + cell offsets).
 
     ``consolidate`` windows over (errtype, instance) — a handful of partitions,
     so at 10^8 conditions the sort serializes on a few tasks.  This variant
     ranks within (errtype, instance, cell) — thousands of tasks — then adds
-    per-cell offsets computed on the tiny counts table.  The resulting total
-    order is (cell, *order_keys), which is exactly GAIT's region-major
-    numbering contract (conditions numbered in region-scan order,
-    errors.c:12480; SURVEY.md §7.3 note 2).
+    per-cell offsets: one running sum over the counts table (one row per
+    (errtype, instance, cell)) in (errtype, instance, cell) order.  The
+    resulting total order is (errtype, instance, cell, *order_keys), which is
+    exactly GAIT's region-major numbering contract (conditions numbered in
+    region-scan order, errors.c:12480; SURVEY.md §7.3 note 2).
+
+    ``number_within`` names the keys the numbering restarts at: the default
+    numbers 1..n within each (errtype, instance); ``()`` numbers the whole
+    report 1..N.  Only the running sum over the tiny counts table sees that
+    partitioning, never the conditions themselves.
+
+    The (deduped) input is materialized once (``localCheckpoint``, eager)
+    and both the rank window and the counts read that one frame, so the
+    input plan — a whole suite's union of check families — runs once, not
+    once per consumer.
     """
     if dedup:
         if dedup_keys is None:
@@ -84,16 +96,17 @@ def consolidate_scalable(
         # caller guarantees uniqueness (no tile-overlap duplication upstream):
         # skips one full shuffle of the condition set
         deduped = conditions
+    frame = deduped.localCheckpoint(eager=True)
     w_local = Window.partitionBy("errtype", "instance", cell_col).orderBy(
         *[F.col(k).asc() for k in order_keys]
     )
-    local = deduped.withColumn("_rk", F.row_number().over(w_local))
-    counts = deduped.groupBy("errtype", "instance", cell_col).agg(
+    local = frame.withColumn("_rk", F.row_number().over(w_local))
+    counts = frame.groupBy("errtype", "instance", cell_col).agg(
         F.count("*").alias("_n")
     )
     w_off = (
-        Window.partitionBy("errtype", "instance")
-        .orderBy(F.col(cell_col).asc())
+        Window.partitionBy(*number_within)
+        .orderBy(*[F.col(k).asc() for k in ("errtype", "instance", cell_col)])
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = counts.withColumn(

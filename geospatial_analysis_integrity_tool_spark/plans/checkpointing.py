@@ -98,13 +98,12 @@ def run_stage_checkpointed(
         wall = time.time() - t0
         # Lineage comes from reading BACK the committed files (cheap columnar
         # scan), not from a second evaluation of the stage plan — at 100 TB a
-        # pre-write stats pass would double the stage's compute.  Partition
-        # values round-trip through directory names, so cast the read-back
-        # columns to the stage schema before hashing (parquet partition
-        # inference narrows types and moves the column last).
-        back = spark.read.parquet(out_dir).select(
-            *[F.col(c).cast(df.schema[c].dataType) for c in df.columns]
-        )
+        # pre-write stats pass would double the stage's compute.  The read
+        # takes the stage schema, so there is no schema-inference job and the
+        # partition column comes back with its stage type (inference would
+        # narrow it); the select restores the stage column order (the
+        # partition column is read last).
+        back = spark.read.schema(df.schema).parquet(out_dir).select(*df.columns)
         if done:
             back = back.filter(~F.col(partition_col).isin(done_vals))
         cols = ", ".join(df.columns)

@@ -58,8 +58,10 @@ exact-literal division so Spark and DuckDB agree bitwise.  The engine runs
 the band join with the JVM equirect distance, the corridor point->segment
 cell join (operators/proximity.py) for the at-area checks and a broadcast
 allowed-pairs table; the oracles reproduce each predicate with BETWEEN
-prefilters (or the cell renderers of operators/pip.py) over the same derived
-relations.
+prefilters over the same derived relations, except the point->segment
+candidates (LUNM_ACRS_A and the end->bottom-edge check of L_UNM_A and
+LUNM_ATTR_A), which render the engine's cell join through the DuckDB cell
+renderers of operators/pip.py.
 """
 
 from __future__ import annotations
@@ -608,17 +610,26 @@ def q_l_unm_a(spark: SparkSession, sf_dir: str) -> DataFrame:
 _D_RESCUE = sql_dist_m("e.ex", "e.ey", "r.rx", "r.ry")
 _PSD_EDGE = sql_point_seg_dist_m("e.ex", "e.ey", "g.ax", "g.ay", "g.bx", "g.by")
 
+# DuckDB twin of _near_bottom_edge's candidates: the CTEs ``edgec`` (the
+# ``edges`` bottom edges over their bbox cells) and ``endc`` (the ``ends``
+# over their 3x3 k-ring), joined per cell as ``e`` and ``g``.  A pair may
+# meet in several cells; both users aggregate or DISTINCT it.
+_NEAR_EDGE_CELLS = (
+    oracle_seg_cells("edges", "edgec", 0.001)
+    + ",\n"
+    + oracle_kring_cells("ends", "endc", 0.001, "ex", "ey")
+)
+_NEAR_EDGE_JOIN = "endc e JOIN edgec g ON e.cellx = g.cellx AND e.celly = g.celly"
+
 ORACLE_L_UNM_A = f"""
 {oracle_cte('geo_areas')},
 ends AS ({LUA_ENDS_SQL}),
 rescue AS ({LUA_RESCUE_SQL}),
 edges AS ({BOT_EDGES_SQL}),
+{_NEAR_EDGE_CELLS},
 near_edge AS (
   SELECT e.lid, MIN(CAST(floor({_PSD_EDGE} * 1000.0) AS BIGINT)) AS edge_mm
-  FROM ends e
-  JOIN edges g
-    ON g.ay BETWEEN e.ey - 0.0001 AND e.ey + 0.0001
-   AND e.ex >= g.ax - 0.0001 AND e.ex <= g.bx + 0.0001
+  FROM {_NEAR_EDGE_JOIN}
   WHERE {_PSD_EDGE} < {LUA_EDGE_TOL_M}
   GROUP BY e.lid
 ),
@@ -743,12 +754,10 @@ edges AS (
   SELECT g.aid, g.ax, g.ay, g.bx, g.by, a.fcode AS afcode
   FROM ({BOT_EDGES_SQL}) g JOIN geo_areas a ON a.area_id = g.aid
 ),
+{_NEAR_EDGE_CELLS},
 allowed(fcode, afcode) AS (VALUES {_ALLOWED_VALUES})
 SELECT DISTINCT e.lid AS fid, g.aid AS other_id, 'LUNM_ATTR_A' AS errtype
-FROM ends e
-JOIN edges g
-  ON g.ay BETWEEN e.ey - 0.0001 AND e.ey + 0.0001
- AND e.ex >= g.ax - 0.0001 AND e.ex <= g.bx + 0.0001
+FROM {_NEAR_EDGE_JOIN}
 WHERE {_PSD_EDGE} < {LUA_EDGE_TOL_M}
   AND NOT EXISTS (SELECT 1 FROM allowed al
                   WHERE al.fcode = e.fcode AND al.afcode = g.afcode)

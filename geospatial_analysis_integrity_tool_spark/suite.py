@@ -22,7 +22,10 @@ the conditions schema via a generic adapter:
 * cell       = the family's cell column if it has one, else a hash bucket
 
 then numbers everything with the scale-safe two-phase consolidation
-(conditions.consolidate_scalable) — no single-partition window anywhere.
+(conditions.consolidate_scalable), which evaluates the family union once.
+The one unpartitioned window is the running sum over its counts table (one
+row per (errtype, instance, cell)); the conditions themselves are ranked
+within (errtype, instance, cell).
 
 tools/run_suite.py executes this at sf1 under local[8] and local[32] and
 asserts the bit_xor content hash is identical (the parallelism-invariance
@@ -31,7 +34,7 @@ contract), publishing suite-level features/s in SCALE.md.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ByteType,
@@ -148,32 +151,13 @@ def suite_conditions(
     for p in parts[1:]:
         conds = conds.unionByName(p)
     # family outputs are distinct by construction (each errtype is one
-    # family, witnesses unique within it) -> skip the dedup shuffle
-    numbered = consolidate_scalable(
+    # family, witnesses unique within it) -> skip the dedup shuffle.  The
+    # consolidated report is one global 1..N sequence in (errtype, instance,
+    # cell, magnitude, sedrisid) order — report-major by family, region-major
+    # within it — so the numbering never restarts.
+    out = consolidate_scalable(
         conds, cell_col="cell", order_keys=["magnitude_mm", "sedrisid"],
-        dedup=False,
-    )
-    # consolidate_scalable numbers densely WITHIN (errtype, instance); the
-    # consolidated report needs one global 1..N sequence.  Per-family totals
-    # are a tiny table (one row per family), so the running offset is a
-    # driver-free broadcast join, never a wide shuffle.  Resulting total
-    # order: (errtype, instance, cell, magnitude, sedrisid) — report-major
-    # by family, region-major within it.
-    totals = numbered.groupBy("errtype", "instance").agg(
-        F.count("*").alias("_n")
-    )
-    w_glob = Window.orderBy(
-        F.col("errtype").asc(), F.col("instance").asc()
-    ).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "_goff", F.coalesce(F.sum("_n").over(w_glob), F.lit(0))
-    ).drop("_n")
-    out = (
-        numbered.join(F.broadcast(offsets), ["errtype", "instance"])
-        .withColumn(
-            "cond_num", (F.col("cond_num") + F.col("_goff")).cast("bigint")
-        )
-        .drop("_goff")
+        dedup=False, number_within=(),
     )
     # pin the sink's canonical column order regardless of join-key placement
     return out.select(

@@ -3,11 +3,16 @@ checkpointed export with lineage; resumability asserted."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import subprocess
 import sys
 import tempfile
 import json
+
+RUN_PIPELINE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "run_pipeline.py"
+)
 
 
 def test_pipeline_end_to_end_and_resume():
@@ -15,7 +20,7 @@ def test_pipeline_end_to_end_and_resume():
     try:
         def run():
             p = subprocess.run(
-                [sys.executable, "/root/repo/tools/run_pipeline.py", "600", out],
+                [sys.executable, RUN_PIPELINE, "600", out],
                 capture_output=True,
                 text=True,
                 check=True,

@@ -82,3 +82,85 @@ def test_conditionize_cell_and_magnitude_rules(spark):
     assert by_wit["5|~"]["magnitude_mm"] == 5
     for r in rows:
         assert 0 <= r["cell"] < 4096  # hash bucket when no cell column
+
+
+def _counted(spark, rows, schema):
+    """(frame, accumulator): ``rows`` passed through a mapInPandas kernel that
+    adds every row it emits to the accumulator — how many times the input
+    plan runs, in rows."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def kernel(it):
+        for pdf in it:
+            acc.add(len(pdf))
+            yield pdf
+
+    return spark.createDataFrame(rows, schema).mapInPandas(kernel, schema), acc
+
+
+_COND_SCHEMA = (
+    "errtype string, instance int, cond_num bigint, magnitude_mm bigint, "
+    "sedrisid string, cell bigint"
+)
+
+
+def _multi_family_rows():
+    """Three families, two instances of one, several cells each, magnitude
+    ties broken by sedrisid, and cells that do not sort like their families."""
+    rows = []
+    for fam, inst, n in (("BETA", 1, 23), ("ALPHA", 1, 17), ("ALPHA", 2, 9), ("GAMMA", 1, 11)):
+        for i in range(n):
+            rows.append((fam, inst, 0, (i * 7) % 5, f"{fam}{inst}-{i:03d}", (i * 5) % 4 - 1))
+    return rows
+
+
+def test_consolidate_scalable_evaluates_its_input_once(spark):
+    from geospatial_analysis_integrity_tool_spark.conditions import consolidate_scalable
+
+    rows = _multi_family_rows()
+    conds, acc = _counted(spark, rows, _COND_SCHEMA)
+    out = consolidate_scalable(conds, dedup=False).collect()
+    assert len(out) == len(rows)
+    # one evaluation of the input: the rank window and the per-cell counts
+    # read one materialized frame
+    assert acc.value == len(rows)
+
+
+def test_suite_evaluates_each_family_once(spark, monkeypatch):
+    import __spark_entry__ as entrymod
+
+    n = 40
+    fam, acc = _counted(
+        spark, [(i, float(i) / 7.0, i % 3) for i in range(n)], "k long, dist double, cell long"
+    )
+    registry = {
+        "counted_family": lambda s, sf: fam,
+        "plain_family": lambda s, sf: s.range(12).selectExpr("id AS k", "id % 2 AS cell"),
+    }
+    monkeypatch.setattr(entrymod, "queries", lambda: registry)
+    out = suite.suite_conditions(spark, SF_SMALL, families=tuple(registry))
+    rows = out.collect()
+    assert len(rows) == n + 12
+    assert sorted(r["cond_num"] for r in rows) == list(range(1, n + 13))
+    # the family kernel ran once for the whole suite, not once per consumer
+    # of the union
+    assert acc.value == n
+
+
+@pytest.mark.parametrize("number_within", [("errtype", "instance"), ()])
+def test_consolidate_scalable_matches_one_window(spark, number_within):
+    from pyspark.sql import Window
+
+    from geospatial_analysis_integrity_tool_spark.conditions import consolidate_scalable
+
+    conds = spark.createDataFrame(_multi_family_rows(), _COND_SCHEMA)
+    order = ["errtype", "instance", "cell", "magnitude_mm", "sedrisid"]
+    # the reference: one row_number over the full numbering order
+    w = Window.partitionBy(*number_within).orderBy(
+        *[c for c in order if c not in number_within]
+    )
+    want = conds.withColumn("cond_num", F.row_number().over(w).cast("bigint"))
+    got = consolidate_scalable(conds, dedup=False, number_within=number_within)
+    assert sorted(got.columns) == sorted(conds.columns)
+    got = got.select(*conds.columns)
+    assert sorted(got.collect()) == sorted(want.collect())

@@ -9,11 +9,12 @@ from __future__ import annotations
 
 import contextlib
 import io
-import os
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -467,7 +468,7 @@ def main() -> None:
         out.append(f"_{spec['note']}_; Exchange count: {n_exchanges}\n")
         out.extend(checks)
         out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
-    with open("/root/repo/EXPLAIN.md", "w") as f:
+    with open(ROOT / "EXPLAIN.md", "w") as f:
         f.write("\n".join(out))
     print("failures:", failures if failures else "none")
 

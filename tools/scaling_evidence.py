@@ -26,8 +26,10 @@ import statistics
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 INPUT_DIR = os.environ.get("GAIT_SCALING_INPUT", "/tmp/gait_scaling_input")
 N_POINTS = 16_000_000
@@ -369,7 +371,7 @@ def main() -> None:
         "per_stage": per_stage,
         "runs": results,
     }
-    with open("/root/repo/BENCH_SCALING.json", "w") as fp:
+    with open(ROOT / "BENCH_SCALING.json", "w") as fp:
         json.dump(report, fp, indent=1)
     print(json.dumps({k: v for k, v in report.items() if k != "runs"}))
 
