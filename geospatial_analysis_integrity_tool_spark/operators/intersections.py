@@ -14,6 +14,11 @@ Spark-native shape: explode lines into segments, cell-join on segment bbox
 cover, then the orientation tests run as **pure column expressions**
 (whole-stage codegen) — the same arithmetic text the DuckDB oracle evaluates,
 so the crossing decision and the reported intersection point are bit-identical.
+That text is rendered once per call site as a function of the two segments'
+columns: ``sql_proper_cross(s1, s2)`` / ``sql_intersection_xy(s1, s2)``
+default to the join frames' ``SEG_A`` / ``SEG_B`` columns, and each oracle
+passes its own aliased columns (``seg_cols``) — no SQL text is rewritten
+after it is rendered.
 Pair memoization (CheckThisLinePair, geomchecks.c:10703) becomes the
 declarative ``id_a < id_b`` predicate + dropDuplicates.
 """
@@ -31,24 +36,40 @@ def _d(ax, ay, bx, by, px, py) -> str:
     return f"(({bx} - {ax}) * ({py} - {ay}) - ({by} - {ay}) * ({px} - {ax}))"
 
 
-def sql_proper_cross() -> str:
-    """Strict proper-crossing predicate over columns _ax.._dy (both engines)."""
-    d1 = _d("_ax", "_ay", "_bx", "_by", "_cx", "_cy")
-    d2 = _d("_ax", "_ay", "_bx", "_by", "_dx", "_dy")
-    d3 = _d("_cx", "_cy", "_dx", "_dy", "_ax", "_ay")
-    d4 = _d("_cx", "_cy", "_dx", "_dy", "_bx", "_by")
+#: column names of the two segments (_ax, _ay)-(_bx, _by) and
+#: (_cx, _cy)-(_dx, _dy) that the Spark join frames carry
+SEG_A = ("_ax", "_ay", "_bx", "_by")
+SEG_B = ("_cx", "_cy", "_dx", "_dy")
+
+
+def seg_cols(alias: str, ax="ax", ay="ay", bx="bx", by="by") -> tuple[str, ...]:
+    """The (ax, ay, bx, by) columns of one segment, qualified by ``alias``."""
+    return tuple(f"{alias}.{c}" for c in (ax, ay, bx, by))
+
+
+def sql_proper_cross(s1=SEG_A, s2=SEG_B) -> str:
+    """Strict proper-crossing predicate of segments s1 and s2, each given as
+    its (ax, ay, bx, by) columns (both engines)."""
+    ax, ay, bx, by = s1
+    cx, cy, dx, dy = s2
+    d1 = _d(ax, ay, bx, by, cx, cy)
+    d2 = _d(ax, ay, bx, by, dx, dy)
+    d3 = _d(cx, cy, dx, dy, ax, ay)
+    d4 = _d(cx, cy, dx, dy, bx, by)
     return (
         f"((({d1} > 0) <> ({d2} > 0)) AND (({d3} > 0) <> ({d4} > 0))"
         f" AND {d1} <> 0 AND {d2} <> 0 AND {d3} <> 0 AND {d4} <> 0)"
     )
 
 
-def sql_intersection_xy() -> tuple[str, str]:
-    """Intersection point of the (properly crossing) segment pair."""
-    rpx = "(_bx - _ax)"
-    rpy = "(_by - _ay)"
-    spx = "(_dx - _cx)"
-    spy = "(_dy - _cy)"
+def sql_intersection_xy(s1=SEG_A, s2=SEG_B) -> tuple[str, str]:
+    """Intersection point of the (properly crossing) segment pair s1, s2."""
+    ax, ay, bx, by = s1
+    cx, cy, dx, dy = s2
+    rpx = f"({bx} - {ax})"
+    rpy = f"({by} - {ay})"
+    spx = f"({dx} - {cx})"
+    spy = f"({dy} - {cy})"
     # CASE-guard the parallel-segments denominator: callers filter on
     # sql_proper_cross() first (denom != 0 on every surviving row, so the
     # branch never changes a value), but under ANSI mode the optimizer may
@@ -58,8 +79,8 @@ def sql_intersection_xy() -> tuple[str, str]:
     # dropped.  Identical expression on the DuckDB side, so hashes agree.
     denom = f"({rpx} * {spy} - {rpy} * {spx})"
     safe_denom = f"(CASE WHEN {denom} = 0.0 THEN 1.0 ELSE {denom} END)"
-    t = f"(((_cx - _ax) * {spy} - (_cy - _ay) * {spx}) / {safe_denom})"
-    return f"(_ax + {t} * {rpx})", f"(_ay + {t} * {rpy})"
+    t = f"((({cx} - {ax}) * {spy} - ({cy} - {ay}) * {spx}) / {safe_denom})"
+    return f"({ax} + {t} * {rpx})", f"({ay} + {t} * {rpy})"
 
 
 def vertices_to_lines(

@@ -10,15 +10,19 @@ refines exactly.  This module owns one implementation of each step:
 * ``cell_id`` packs (ix, iy) into one BIGINT key;
 * ``with_point_cell`` puts a point in its single cell;
 * ``with_kring_cells`` copies a point into its 3x3 k-ring;
-* ``explode_bbox_cells`` copies a feature into every cell its bbox covers;
+* ``explode_bbox_cells`` copies a feature into every cell its bbox covers,
+  and ``explode_seg_cells`` does so for a segment;
 * ``band_join`` is the 1-D k-ring: a join on adjacent bands of one
   along-boundary coordinate (the edge-match checks);
 * ``cell_deg_for_tolerance`` sizes the cell so a k=1 ring captures every
   pair within a metric tolerance.
 
 The DuckDB oracles render the same cell keys as SQL text with
-``oracle_bbox_cells`` / ``oracle_seg_cells`` (bbox cover) and
-``oracle_kring_cells`` (3x3 k-ring), as (cellx, celly) column pairs.
+``oracle_point_cell`` (single cell), ``oracle_bbox_cells`` /
+``oracle_seg_cells`` (bbox cover) and ``oracle_kring_cells`` (3x3 k-ring),
+as (cellx, celly) column pairs.  The exact refines ``sql_ray_edge`` /
+``sql_ray3`` (ray-cast parity) and ``sql_in_triangle`` are functions of the
+columns they read, so every oracle passes its own (aliased) column names.
 
 Point-in-polygon (replaces GAIT's per-region nested loop, CheckRegion
 TT.c:43916 + PointInsidePoly TT.c:6920):
@@ -80,16 +84,26 @@ def sql_in_triangle(px: str, py: str, tri: str = "z.") -> str:
     )
 
 
+def sql_ray_edge(px: str, py: str, x1: str, y1: str, x2: str, y2: str) -> str:
+    """SQL text of PointInsidePoly's per-edge test (TT.c:6920-6977): 1 when
+    the eastward ray from (px, py) crosses the edge (x1, y1)-(x2, y2), else
+    0.  The outer CASE guards the division (a straddle implies y1 <> y2) in
+    both engines' ANSI modes; the parity of the sum over all ring edges is
+    even-odd (hole-aware) containment."""
+    return (
+        f"CASE WHEN ({y1} > {py}) <> ({y2} > {py})"
+        f" THEN CASE WHEN {px} < {x1} + ({py} - {y1}) * ({x2} - {x1})"
+        f" / ({y2} - {y1}) THEN 1 ELSE 0 END ELSE 0 END"
+    )
+
+
 def sql_ray3(px: str, py: str, tri: str = "") -> str:
     """SQL text of the even-odd ray-cast parity of (px, py) against the
     triangle {tri}x1..{tri}y3 (PointInsidePoly, TT.c:6920): true inside."""
 
     def edge(i: int, j: int) -> str:
-        x1, y1, x2, y2 = f"{tri}x{i}", f"{tri}y{i}", f"{tri}x{j}", f"{tri}y{j}"
-        return (
-            f"CASE WHEN ({y1} > {py}) <> ({y2} > {py})"
-            f" THEN CASE WHEN {px} < {x1} + ({py} - {y1}) * ({x2} - {x1})"
-            f" / ({y2} - {y1}) THEN 1 ELSE 0 END ELSE 0 END"
+        return sql_ray_edge(
+            px, py, f"{tri}x{i}", f"{tri}y{i}", f"{tri}x{j}", f"{tri}y{j}"
         )
 
     return f"(({edge(1, 2)} + {edge(2, 3)} + {edge(3, 1)}) % 2 = 1)"
@@ -137,6 +151,22 @@ def explode_bbox_cells(
         .withColumn("cell", cell_id(F.col("_ix"), F.col("_iy")))
         .drop("_ix", "_iy")
     )
+
+
+def explode_seg_cells(
+    df: DataFrame, cell_deg: float, ax="ax", ay="ay", bx="bx", by="by", suffix=""
+) -> DataFrame:
+    """:func:`explode_bbox_cells` of the segments (ax, ay)-(bx, by) of
+    ``df``, whose bbox is added as the columns _mnx, _mxx, _mny, _mxy (each
+    name + ``suffix``) — the Spark twin of :func:`oracle_seg_cells`."""
+    mnx, mxx, mny, mxy = (f"_{c}{suffix}" for c in ("mnx", "mxx", "mny", "mxy"))
+    df = (
+        df.withColumn(mnx, F.least(ax, bx))
+        .withColumn(mxx, F.greatest(ax, bx))
+        .withColumn(mny, F.least(ay, by))
+        .withColumn(mxy, F.greatest(ay, by))
+    )
+    return explode_bbox_cells(df, mnx, mxx, mny, mxy, cell_deg)
 
 
 def with_kring_cells(df: DataFrame, lon: str, lat: str, cell_deg: float) -> DataFrame:
@@ -203,6 +233,15 @@ def oracle_seg_cells(
 """
     return pre + oracle_bbox_cells(
         f"{out}_pre", out, "_mnx", "_mxx", "_mny", "_mxy", cell_deg
+    )
+
+
+def oracle_point_cell(px: str, py: str, cell_deg: float) -> str:
+    """DuckDB twin of :func:`with_point_cell`: the select items ``cellx`` and
+    ``celly`` of the single cell the point (px, py) falls in."""
+    return (
+        f"CAST(floor({px} / {cell_deg}) AS BIGINT) AS cellx,"
+        f" CAST(floor({py} / {cell_deg}) AS BIGINT) AS celly"
     )
 
 

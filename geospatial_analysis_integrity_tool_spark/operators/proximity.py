@@ -151,6 +151,24 @@ def knn_points(
     )
 
 
+def _sql_seg_dist2_deg(px: str, py: str, ax: str, ay: str, bx: str, by: str) -> str:
+    """SQL text of the squared point-to-segment distance in raw degrees."""
+    vx, vy = f"({bx} - {ax})", f"({by} - {ay})"
+    wx, wy = f"({px} - {ax})", f"({py} - {ay})"
+    c1 = f"({vx} * {wx} + {vy} * {wy})"
+    c2 = f"({vx} * {vx} + {vy} * {vy})"
+    return (
+        f"(CASE WHEN ({c2}) <= 0.0 THEN ({wx}) * ({wx}) + ({wy}) * ({wy})"
+        f" WHEN ({c1}) <= 0.0 THEN ({wx}) * ({wx}) + ({wy}) * ({wy})"
+        f" WHEN ({c1}) >= ({c2}) THEN"
+        f"  ({px} - {bx}) * ({px} - {bx}) + ({py} - {by}) * ({py} - {by})"
+        f" ELSE (({wx}) - ({c1}) / ({c2}) * ({vx}))"
+        f"      * (({wx}) - ({c1}) / ({c2}) * ({vx}))"
+        f"      + (({wy}) - ({c1}) / ({c2}) * ({vy}))"
+        f"      * (({wy}) - ({c1}) / ({c2}) * ({vy})) END)"
+    )
+
+
 def point_seg_candidates(
     points: DataFrame,
     segments: DataFrame,
@@ -273,28 +291,7 @@ def point_seg_candidates(
     # outnumber true candidates — this one-line filter cut a 285M-pair join
     # to the true corridor at sf0.1.
     tol_deg = tol_m / 45000.0
-    pre = (
-        "(CASE WHEN (_c2p) <= 0.0 THEN (_wxp) * (_wxp) + (_wyp) * (_wyp)"
-        " WHEN (_c1p) <= 0.0 THEN (_wxp) * (_wxp) + (_wyp) * (_wyp)"
-        " WHEN (_c1p) >= (_c2p) THEN"
-        "  (_px - _sbx) * (_px - _sbx) + (_py - _sby) * (_py - _sby)"
-        " ELSE ((_wxp) - (_c1p) / (_c2p) * (_vxp))"
-        "      * ((_wxp) - (_c1p) / (_c2p) * (_vxp))"
-        "      + ((_wyp) - (_c1p) / (_c2p) * (_vyp))"
-        "      * ((_wyp) - (_c1p) / (_c2p) * (_vyp)) END)"
-        .replace("_vxp", "(_sbx - _sax)")
-        .replace("_vyp", "(_sby - _say)")
-        .replace("_wxp", "(_px - _sax)")
-        .replace("_wyp", "(_py - _say)")
-        .replace(
-            "_c1p",
-            "((_sbx - _sax) * (_px - _sax) + (_sby - _say) * (_py - _say))",
-        )
-        .replace(
-            "_c2p",
-            "((_sbx - _sax) * (_sbx - _sax) + (_sby - _say) * (_sby - _say))",
-        )
-    )
+    pre = _sql_seg_dist2_deg("_px", "_py", "_sax", "_say", "_sbx", "_sby")
     pairs = pairs.filter(F.expr(f"{pre} < {tol_deg * tol_deg}"))
     # staged-column refine: the flat sql_point_seg_dist_m text is ~49 KB and
     # fails janino's 64 KB method limit (interpreted fallback, ~8x slower on

@@ -42,8 +42,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.intersections import sql_proper_cross
-from ..operators.pip import explode_bbox_cells, sql_ray3, with_point_cell
+from ..operators.intersections import SEG_A, SEG_B, sql_proper_cross
+from ..operators.pip import (
+    explode_bbox_cells,
+    explode_seg_cells,
+    oracle_bbox_cells,
+    oracle_point_cell,
+    oracle_seg_cells,
+    sql_ray3,
+    with_point_cell,
+)
 from ..sources.synthetic import oracle_cte
 
 CELL = 0.01
@@ -69,6 +77,9 @@ FROM geo_areas WHERE area_id % 8 = 0
 
 
 _INSIDE_K = sql_ray3("vx", "vy")
+#: the geo_areas / aug triangle bbox (minx, maxx, miny, maxy) expressions
+_TRI_BBOX = ("LEAST(x1, x2, x3)", "GREATEST(x1, x2, x3)",
+             "LEAST(y1, y2, y3)", "GREATEST(y1, y2, y3)")
 
 
 def q_area_cover_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,29 +135,14 @@ verts AS (
   UNION ALL SELECT kid, kx2, ky2 FROM kids
   UNION ALL SELECT kid, kx3, ky3 FROM kids
 ),
-vertc AS (
-  SELECT *, CAST(floor(vx / {CELL}) AS BIGINT) AS cx,
-            CAST(floor(vy / {CELL}) AS BIGINT) AS cy
-  FROM verts
-),
-areac AS (
-  SELECT * FROM (
-    SELECT a.*, unnest(generate_series(
-        CAST(floor(LEAST(a.x1, a.x2, a.x3) / {CELL}) AS BIGINT),
-        CAST(floor(GREATEST(a.x1, a.x2, a.x3) / {CELL}) AS BIGINT))) AS cx
-    FROM geo_areas a
-  ) ax, LATERAL (
-    SELECT unnest(generate_series(
-        CAST(floor(LEAST(ax.y1, ax.y2, ax.y3) / {CELL}) AS BIGINT),
-        CAST(floor(GREATEST(ax.y1, ax.y2, ax.y3) / {CELL}) AS BIGINT))) AS cy
-  ) ay
-),
+vertc AS (SELECT *, {oracle_point_cell('vx', 'vy', CELL)} FROM verts),
+{oracle_bbox_cells('geo_areas', 'areac', *_TRI_BBOX, CELL)},
 covered AS MATERIALIZED (
   SELECT kid, aid FROM (
     SELECT DISTINCT v.kid, a.area_id AS aid, v.vx, v.vy,
            a.x1, a.y1, a.x2, a.y2, a.x3, a.y3
     FROM vertc v
-    JOIN areac a ON v.cx = a.cx AND v.cy = a.cy
+    JOIN areac a ON v.cellx = a.cellx AND v.celly = a.celly
     WHERE v.vx >= LEAST(a.x1, a.x2, a.x3) AND v.vx <= GREATEST(a.x1, a.x2, a.x3)
       AND v.vy >= LEAST(a.y1, a.y2, a.y3) AND v.vy <= GREATEST(a.y1, a.y2, a.y3)
   )
@@ -254,16 +250,13 @@ def q_area_share_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # PART_ISF: properly-crossing edge pair AND a vertex of one inside the other
-    lseg = _with_bbox(edges.selectExpr(
-        "aid AS id1", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"),
-        "_ax", "_ay", "_bx", "_by", "_mnx", "_mxx", "_mny", "_mxy")
-    rseg = _with_bbox(edges.selectExpr(
-        "aid AS id2", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"),
-        "_cx", "_cy", "_dx", "_dy", "_mnx2", "_mxx2", "_mny2", "_mxy2")
+    lseg = edges.selectExpr(
+        "aid AS id1", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by")
+    rseg = edges.selectExpr(
+        "aid AS id2", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy")
     xpairs = (
-        explode_bbox_cells(lseg, "_mnx", "_mxx", "_mny", "_mxy", CELL)
-        .join(explode_bbox_cells(rseg, "_mnx2", "_mxx2", "_mny2", "_mxy2", CELL),
-              "cell")
+        explode_seg_cells(lseg, CELL, *SEG_A)
+        .join(explode_seg_cells(rseg, CELL, *SEG_B, suffix="2"), "cell")
         .filter(F.col("id1") < F.col("id2"))
         .filter(
             (F.col("_mnx") <= F.col("_mxx2")) & (F.col("_mxx") >= F.col("_mnx2"))
@@ -306,15 +299,6 @@ def q_area_share_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _with_bbox(df, ax, ay, bx, by, mnx, mxx, mny, mxy):
-    return (
-        df.withColumn(mnx, F.least(ax, bx))
-        .withColumn(mxx, F.greatest(ax, bx))
-        .withColumn(mny, F.least(ay, by))
-        .withColumn(mxy, F.greatest(ay, by))
-    )
-
-
 ORACLE_AREA_SHARE = f"""
 {oracle_cte('geo_areas')},
 aug AS MATERIALIZED ({AUG_SHARE_SQL}),
@@ -335,53 +319,27 @@ nshared AS (
     FROM edges a JOIN edges b ON a.ekey = b.ekey AND a.aid <> b.aid
   ) GROUP BY aid
 ),
-edgec AS MATERIALIZED (
-  SELECT * FROM (
-    SELECT e.aid, e.ax, e.ay, e.bx, e.by,
-           unnest(generate_series(
-               CAST(floor(LEAST(e.ax, e.bx) / {CELL}) AS BIGINT),
-               CAST(floor(GREATEST(e.ax, e.bx) / {CELL}) AS BIGINT))) AS cx
-    FROM edges e
-  ) ex, LATERAL (
-    SELECT unnest(generate_series(
-        CAST(floor(LEAST(ex.ay, ex.by) / {CELL}) AS BIGINT),
-        CAST(floor(GREATEST(ex.ay, ex.by) / {CELL}) AS BIGINT))) AS cy
-  ) ey
-),
+esegs AS (SELECT aid, ax, ay, bx, by FROM edges),
+{oracle_seg_cells('esegs', 'edgec', CELL)},
 xpairs AS MATERIALIZED (
   SELECT DISTINCT id1, id2 FROM (
     SELECT l.aid AS id1, r.aid AS id2,
            l.ax AS _ax, l.ay AS _ay, l.bx AS _bx, l.by AS _by,
            r.ax AS _cx, r.ay AS _cy, r.bx AS _dx, r.by AS _dy
     FROM edgec l JOIN edgec r
-      ON l.cx = r.cx AND l.cy = r.cy AND l.aid < r.aid
+      ON l.cellx = r.cellx AND l.celly = r.celly AND l.aid < r.aid
   ) WHERE {sql_proper_cross()}
 ),
-augc AS (
-  SELECT * FROM (
-    SELECT a.*, unnest(generate_series(
-        CAST(floor(LEAST(a.x1, a.x2, a.x3) / {CELL}) AS BIGINT),
-        CAST(floor(GREATEST(a.x1, a.x2, a.x3) / {CELL}) AS BIGINT))) AS cx
-    FROM aug a
-  ) ax, LATERAL (
-    SELECT unnest(generate_series(
-        CAST(floor(LEAST(ax.y1, ax.y2, ax.y3) / {CELL}) AS BIGINT),
-        CAST(floor(GREATEST(ax.y1, ax.y2, ax.y3) / {CELL}) AS BIGINT))) AS cy
-  ) ay
-),
+{oracle_bbox_cells('aug', 'augc', *_TRI_BBOX, CELL)},
 vin AS MATERIALIZED (
   SELECT DISTINCT LEAST(v.vid, a.aid) AS id1, GREATEST(v.vid, a.aid) AS id2
   FROM (
-    SELECT aid AS vid, x1 AS vx, y1 AS vy,
-           CAST(floor(x1 / {CELL}) AS BIGINT) AS cx,
-           CAST(floor(y1 / {CELL}) AS BIGINT) AS cy FROM aug
-    UNION ALL SELECT aid, x2, y2, CAST(floor(x2 / {CELL}) AS BIGINT),
-                     CAST(floor(y2 / {CELL}) AS BIGINT) FROM aug
-    UNION ALL SELECT aid, x3, y3, CAST(floor(x3 / {CELL}) AS BIGINT),
-                     CAST(floor(y3 / {CELL}) AS BIGINT) FROM aug
+    SELECT aid AS vid, x1 AS vx, y1 AS vy, {oracle_point_cell('x1', 'y1', CELL)} FROM aug
+    UNION ALL SELECT aid, x2, y2, {oracle_point_cell('x2', 'y2', CELL)} FROM aug
+    UNION ALL SELECT aid, x3, y3, {oracle_point_cell('x3', 'y3', CELL)} FROM aug
   ) v
   JOIN augc a
-    ON v.cx = a.cx AND v.cy = a.cy AND v.vid <> a.aid
+    ON v.cellx = a.cellx AND v.celly = a.celly AND v.vid <> a.aid
    AND v.vx >= LEAST(a.x1, a.x2, a.x3) AND v.vx <= GREATEST(a.x1, a.x2, a.x3)
    AND v.vy >= LEAST(a.y1, a.y2, a.y3) AND v.vy <= GREATEST(a.y1, a.y2, a.y3)
   WHERE {_INSIDE_K}

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .overlay import _ELEV, _GX, _GY, _Z
+from .overlay import _GX, _GY, _elev, _z
 
 GRID_N = 60          # 60x60 squares -> 7200 triangles
 HOLE_MOD = 97        # every 97th triangle removed -> a hole
@@ -66,14 +66,15 @@ edges AS (
 
 # mosaic boundary edges are legitimately single-sided: exclude edges lying on
 # i=0, i=GRID_N, j=0, j=GRID_N lattice lines
-_BOUNDARY_PRED = f"""
-NOT (
-  (CAST(floor(a / 100000.0) AS BIGINT) = 0 AND CAST(floor(b / 100000.0) AS BIGINT) = 0)
-  OR (CAST(floor(a / 100000.0) AS BIGINT) = {GRID_N} AND CAST(floor(b / 100000.0) AS BIGINT) = {GRID_N})
-  OR (a % 100000 = 0 AND b % 100000 = 0)
-  OR (a % 100000 = {GRID_N} AND b % 100000 = {GRID_N})
+_BOUNDARY_PRED = (
+    " NOT ("
+    "   (CAST(floor(a / 100000.0) AS BIGINT) = 0 AND CAST(floor(b / 100000.0) AS BIGINT) = 0)"
+    f"   OR (CAST(floor(a / 100000.0) AS BIGINT) = {GRID_N}"
+    f" AND CAST(floor(b / 100000.0) AS BIGINT) = {GRID_N})"
+    "   OR (a % 100000 = 0 AND b % 100000 = 0)"
+    f"   OR (a % 100000 = {GRID_N} AND b % 100000 = {GRID_N})"
+    " ) "
 )
-"""
 
 
 def q_coverage_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,7 +93,7 @@ WITH {_EDGES_SQL}
 SELECT a, b, MIN(tri_id) AS border_tri
 FROM edges
 GROUP BY a, b
-HAVING COUNT(*) = 1 AND {_BOUNDARY_PRED.replace(chr(10), ' ')}
+HAVING COUNT(*) = 1 AND {_BOUNDARY_PRED}
 """
 
 
@@ -104,7 +105,7 @@ def q_raster_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
             "site_id",
             # dif in exact deci-meters: z and elev are multiples of 0.1 (+0.05
             # for the 25.5 plant, still exact in deci-m)
-            f"CAST(round(({_Z} - {_ELEV}) * 10.0) AS BIGINT) AS dif_decim",
+            f"CAST(round(({_z()} - {_elev()}) * 10.0) AS BIGINT) AS dif_decim",
         )
     )
     return pts.agg(
@@ -126,7 +127,7 @@ pts AS (
   SELECT site_id, {_GX} AS gx, {_GY} AS gy FROM geo_sites
 ),
 difs AS (
-  SELECT site_id, CAST(round(({_Z} - {_ELEV}) * 10.0) AS BIGINT) AS dif_decim
+  SELECT site_id, CAST(round(({_z()} - {_elev()}) * 10.0) AS BIGINT) AS dif_decim
   FROM pts
 )
 SELECT COUNT(*) AS n_points,

@@ -43,7 +43,7 @@ from ..operators.pip import (
 )
 from ..operators.proximity import point_seg_candidates
 from ..sources.synthetic import GEO_VIEWS, oracle_cte, oracle_materialized
-from .vgeomq import _EDGES_CTE, _area_edges
+from .vgeomq import _area_edges, _edges_cte
 
 PCOVER_TOL_M = 60.0     # PNOCOVERLE: end node must sit within 60 m
 LCOVER_TOL_M = 150.0    # LENOCOVERL / NOLCOVLE / LNOCOVERLA
@@ -367,7 +367,7 @@ def q_lnocoverla(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_LNOCOVERLA = f"""
 {oracle_cte('geo_lines', 'geo_vareas')},
-{_EDGES_CTE.strip().replace('edges AS (', 'edges AS MATERIALIZED (')},
+{_edges_cte(materialized=True)},
 probes AS (
   SELECT line_id, (x1 + x2) * 0.5 AS px, (y1 + y2) * 0.5 AS py FROM geo_lines
 ),
@@ -448,7 +448,7 @@ def q_lspanfail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_LSPANFAIL = f"""
 {oracle_cte('geo_lines', 'geo_vareas')},
-{_EDGES_CTE.strip().replace('edges AS (', 'edges AS MATERIALIZED (')},
+{_edges_cte(materialized=True)},
 {_ORACLE_ENDS.strip()},
 {_ORACLE_END_AREA.strip()},
 per_line AS (
@@ -477,7 +477,7 @@ def q_lnocov2a(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_LNOCOV2A = f"""
 {oracle_cte('geo_lines', 'geo_vareas')},
-{_EDGES_CTE.strip().replace('edges AS (', 'edges AS MATERIALIZED (')},
+{_edges_cte(materialized=True)},
 {_ORACLE_ENDS.strip()},
 {_ORACLE_END_AREA.strip()},
 per_line AS (

@@ -134,11 +134,11 @@ def q_lenocovera(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lenocovera_oracle() -> str:
     from .coverageq import _ORACLE_END_AREA, _ORACLE_ENDS
-    from .vgeomq import _EDGES_CTE
+    from .vgeomq import _edges_cte
 
     return f"""
 {oracle_cte('geo_lines', 'geo_vareas')},
-{_EDGES_CTE.strip().replace('edges AS (', 'edges AS MATERIALIZED (')},
+{_edges_cte(materialized=True)},
 {_ORACLE_ENDS.strip()},
 {_ORACLE_END_AREA.strip()}
 SELECT e.line_id, CAST(e.end_which AS INT) AS end_which FROM ends e

@@ -48,6 +48,10 @@ _FP = 65536
 #: the target-domain sample: two of the twenty synthetic sources (~10%)
 TARGET_SOURCES = ("src0", "src1")
 SELECT_K = 50
+#: the Gumbel jitter: the Knuth hash (doc_id * 2654435761 mod 2^32) mod 2^16
+#: reduced first, so no product leaves BIGINT (31153 = 2654435761 mod 2^16);
+#: one text for both engines
+GUMBEL_FP = f"CAST(((doc_id % {_FP}) * 31153) % {_FP} AS BIGINT)"
 
 _TOKS = "filter(split(text, '\\\\s+'), t -> t <> '')"
 
@@ -125,7 +129,7 @@ def q_docs_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.expr("c * s")).alias("logw_fp"))
         .withColumn(
             "gumbel_fp",
-            F.expr(f"((doc_id * 2654435761) % 4294967296) % {_FP}"),
+            F.expr(GUMBEL_FP),
         )
     )
     w = Window.orderBy(F.desc(F.expr("logw_fp + gumbel_fp")), F.asc("doc_id"))
@@ -174,8 +178,7 @@ scores AS (
 ),
 logw AS (
   SELECT doc_id, CAST(SUM(c * s) AS BIGINT) AS logw_fp,
-         CAST(((doc_id * 2654435761) % 4294967296) % {_FP} AS BIGINT)
-           AS gumbel_fp
+         {GUMBEL_FP} AS gumbel_fp
   FROM (
     SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS c FROM feats
     WHERE source NOT IN ({", ".join(f"'{s}'" for s in TARGET_SOURCES)})

@@ -53,16 +53,20 @@ SELECT line_id, vidx, x, y,
 FROM geo_vlines
 """
 
-_IS_SENT = (
-    "((z >= -32768.0 AND z <= -32764.0 AND z = CAST(CAST(z AS BIGINT) AS DOUBLE))"
-    " OR z = -50000.0)"
-)
+
+def _is_sent(z: str = "z") -> str:
+    """``z`` is a sentinel elevation (IsSentinelZvalue TT.c:1589)."""
+    return (
+        f"(({z} >= -32768.0 AND {z} <= -32764.0"
+        f" AND {z} = CAST(CAST({z} AS BIGINT) AS DOUBLE))"
+        f" OR {z} = -50000.0)"
+    )
 
 
 def q_elev_range_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     zl = spark.sql(_ZL)
     zl.createOrReplaceTempView("_elevr_zl")
-    sent = F.expr(_IS_SENT)
+    sent = F.expr(_is_sent())
 
     gt = (
         zl.filter(~sent & (F.col("z") > ELEVGT_T))
@@ -89,15 +93,9 @@ def q_elev_range_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM _elevr_zl
         """
     ).filter(F.col("z2").isNotNull())
-    s1 = F.expr(_IS_SENT)
-    s2 = F.expr(_IS_SENT.replace("z", "z2"))
-
     def _interval(lo, hi, op_lo, op_hi, name):
-        in1 = f"(NOT {_IS_SENT}) AND z {op_lo} {lo} AND z {op_hi} {hi}"
-        in2 = (
-            f"(NOT {_IS_SENT.replace('z', 'z2')}) AND z2 {op_lo} {lo} "
-            f"AND z2 {op_hi} {hi}"
-        )
+        in1 = f"(NOT {_is_sent()}) AND z {op_lo} {lo} AND z {op_hi} {hi}"
+        in2 = f"(NOT {_is_sent('z2')}) AND z2 {op_lo} {lo} AND z2 {op_hi} {hi}"
         return (
             segs.filter(F.expr(f"({in1}) OR ({in2})"))
             .withColumn("mag", F.expr(f"CASE WHEN {in1} THEN z ELSE z2 END"))
@@ -131,8 +129,8 @@ def q_elev_range_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gt.unionByName(lt).unionByName(eq).unionByName(eqopen).unionByName(multi)
 
 
-_NOT1 = f"(NOT {_IS_SENT})"
-_NOT2 = "(NOT " + _IS_SENT.replace("z", "z2") + ")"
+_NOT1 = f"(NOT {_is_sent()})"
+_NOT2 = f"(NOT {_is_sent('z2')})"
 
 ORACLE_ELEV_RANGE = f"""
 {oracle_cte('geo_vlines')},
@@ -168,7 +166,7 @@ GROUP BY line_id
 UNION ALL
 SELECT line_id, CAST(MIN(vidx) AS INT), 'MULTISENTINEL',
        CAST(COUNT(DISTINCT z) AS DOUBLE)
-FROM zl WHERE {_IS_SENT} GROUP BY line_id HAVING COUNT(DISTINCT z) >= 2
+FROM zl WHERE {_is_sent()} GROUP BY line_id HAVING COUNT(DISTINCT z) >= 2
 """
 
 QUERIES = {

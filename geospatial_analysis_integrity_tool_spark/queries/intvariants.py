@@ -43,7 +43,7 @@ overlap segment that shares no node.  All arithmetic is integer-modulo ->
 exact-literal division so both engines agree bitwise.
 
 Engine shapes: per-feature equi-join for the cutout-vs-own-ring test
-(intrinsically same-feature), codegen cell joins (explode_bbox_cells +
+(intrinsically same-feature), codegen cell joins (explode_seg_cells +
 proper-cross) for every cross-feature crossing, k-ring point joins for the
 exception suppression — no UDFs.  DuckDB oracles use the same 0.01-deg
 cell equi-key for self-joins (IEJoin avoidance + speed, see
@@ -57,9 +57,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.geodesy import sql_coslat_poly, sql_dist_m
-from ..operators.intersections import sql_intersection_xy, sql_proper_cross
+from ..operators.intersections import seg_cols, sql_intersection_xy, sql_proper_cross
 from ..operators.pip import (
-    explode_bbox_cells,
+    explode_seg_cells,
     oracle_seg_cells,
     with_kring_cells,
     with_point_cell,
@@ -74,25 +74,8 @@ QTR_EPS = 0.0000004      # quarter-degree-line membership (in quarter units)
 COLL_EPS = 1e-12         # collinearity cross-product bound (deg^2)
 
 
-def _sub(s: str, amap: dict[str, str]) -> str:
-    for old, new in amap.items():
-        s = s.replace(old, new)
-    return s
-
-
-_AB = {"_ax": "a.ax", "_ay": "a.ay", "_bx": "a.bx", "_by": "a.by",
-       "_cx": "b.ax", "_cy": "b.ay", "_dx": "b.bx", "_dy": "b.by"}
-
-
-def _seg_cells(df: DataFrame) -> DataFrame:
-    """Spark twin of oracle_seg_cells over columns (ax, ay, bx, by)."""
-    df = (
-        df.withColumn("_mnx", F.least("ax", "bx"))
-        .withColumn("_mxx", F.greatest("ax", "bx"))
-        .withColumn("_mny", F.least("ay", "by"))
-        .withColumn("_mxy", F.greatest("ay", "by"))
-    )
-    return explode_bbox_cells(df, "_mnx", "_mxx", "_mny", "_mxy", CELL)
+#: the a/b segment self-join aliases of the oracles
+_AB = (seg_cols("a"), seg_cols("b"))
 
 
 # --- geo_cut_int (CUT_INT 15) -----------------------------------------------------
@@ -147,9 +130,7 @@ def q_cut_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CROSS_HO = _sub(sql_proper_cross(),
-                 {"_ax": "h.ax", "_ay": "h.ay", "_bx": "h.bx", "_by": "h.by",
-                  "_cx": "o.ax", "_cy": "o.ay", "_dx": "o.bx", "_dy": "o.by"})
+_CROSS_HO = sql_proper_cross(seg_cols("h"), seg_cols("o"))
 
 ORACLE_CUT_INT = f"""
 {oracle_cte('geo_vareas')},
@@ -201,10 +182,10 @@ def q_laiex(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lid", "lx AS ax", "ya AS ay", "lx AS bx", "yb AS by"
     )
     edges = spark.sql(AREA_EDGES_SQL)
-    lc = _seg_cells(lines).selectExpr(
+    lc = explode_seg_cells(lines, CELL).selectExpr(
         "cell", "lid", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
     )
-    ec = _seg_cells(edges).selectExpr(
+    ec = explode_seg_cells(edges, CELL).selectExpr(
         "cell", "aid", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
     )
     xings = (
@@ -233,13 +214,8 @@ def q_laiex(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CROSS_LE = _sub(sql_proper_cross(),
-                 {"_ax": "l.ax", "_ay": "l.ay", "_bx": "l.bx", "_by": "l.by",
-                  "_cx": "e.ax", "_cy": "e.ay", "_dx": "e.bx", "_dy": "e.by"})
-_IX_LE = _sub(_IX, {"_ax": "l.ax", "_ay": "l.ay", "_bx": "l.bx", "_by": "l.by",
-                    "_cx": "e.ax", "_cy": "e.ay", "_dx": "e.bx", "_dy": "e.by"})
-_IY_LE = _sub(_IY, {"_ax": "l.ax", "_ay": "l.ay", "_bx": "l.bx", "_by": "l.by",
-                    "_cx": "e.ax", "_cy": "e.ay", "_dx": "e.bx", "_dy": "e.by"})
+_LE = (seg_cols("l"), seg_cols("e"))
+_IX_LE, _IY_LE = sql_intersection_xy(*_LE)
 _D_XE = sql_dist_m("x.ix", "x.iy", "p.ex", "p.ey")
 
 ORACLE_LAIEX = f"""
@@ -254,7 +230,7 @@ xings AS (
     ON l.ax >= LEAST(e.ax, e.bx) - 0.01 AND l.ax <= GREATEST(e.ax, e.bx) + 0.01
    AND LEAST(l.ay, l.by) <= GREATEST(e.ay, e.by)
    AND GREATEST(l.ay, l.by) >= LEAST(e.ay, e.by)
-  WHERE {_CROSS_LE}
+  WHERE {sql_proper_cross(*_LE)}
 )
 SELECT DISTINCT x.lid, x.aid, 'LAIEX' AS errtype
 FROM xings x
@@ -286,10 +262,10 @@ _END_ON_QTR = (
 
 def q_lfnoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = spark.sql(LINE_SEGS_SQL)
-    a = _seg_cells(segs).selectExpr(
+    a = explode_seg_cells(segs, CELL).selectExpr(
         "cell", "sid AS id_a", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
     )
-    b = _seg_cells(segs).selectExpr(
+    b = explode_seg_cells(segs, CELL).selectExpr(
         "cell", "sid AS id_b", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
     )
     crossing = (
@@ -308,7 +284,7 @@ def q_lfnoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CROSS_AB = _sub(sql_proper_cross(), _AB)
+_CROSS_AB = sql_proper_cross(*_AB)
 
 ORACLE_LFNOINT = f"""
 {oracle_cte('geo_lines')},
@@ -357,10 +333,10 @@ SELECT aid, ax3, ay3, ax1, ay1 FROM ({AREAS_B_SQL})
 def q_areaintarea(spark: SparkSession, sf_dir: str) -> DataFrame:
     ea = spark.sql(AREA_EDGES_SQL)
     eb = spark.sql(AREA_B_EDGES_SQL)
-    a = _seg_cells(ea).selectExpr(
+    a = explode_seg_cells(ea, CELL).selectExpr(
         "cell", "aid AS id_a", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
     )
-    b = _seg_cells(eb).selectExpr(
+    b = explode_seg_cells(eb, CELL).selectExpr(
         "cell", "aid AS id_b", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
     )
     pairs = (
@@ -380,15 +356,7 @@ def q_areaintarea(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IX_AB = _sub(_IX, _AB)
-_IY_AB = _sub(_IY, _AB)
-_CROSS_AB2 = _sub(sql_proper_cross(),
-                  {"_ax": "a.ax", "_ay": "a.ay", "_bx": "a.bx", "_by": "a.by",
-                   "_cx": "b.ax", "_cy": "b.ay", "_dx": "b.bx", "_dy": "b.by"})
-_IX_AB2 = _sub(_IX, {"_ax": "a.ax", "_ay": "a.ay", "_bx": "a.bx", "_by": "a.by",
-                     "_cx": "b.ax", "_cy": "b.ay", "_dx": "b.bx", "_dy": "b.by"})
-_IY_AB2 = _sub(_IY, {"_ax": "a.ax", "_ay": "a.ay", "_bx": "a.bx", "_by": "a.by",
-                     "_cx": "b.ax", "_cy": "b.ay", "_dx": "b.bx", "_dy": "b.by"})
+_IX_AB, _IY_AB = sql_intersection_xy(*_AB)
 
 ORACLE_AREAINTAREA = f"""
 {oracle_cte('geo_areas')},
@@ -398,12 +366,12 @@ eb AS ({AREA_B_EDGES_SQL}),
 {oracle_seg_cells('eb', 'ebc', CELL)},
 xp AS (
   SELECT DISTINCT a.aid AS id_a, b.aid AS id_b,
-         {_IX_AB2} AS ix, {_IY_AB2} AS iy
+         {_IX_AB} AS ix, {_IY_AB} AS iy
   FROM eac a JOIN ebc b
     ON a.cellx = b.cellx AND a.celly = b.celly
   WHERE a._mnx <= b._mxx AND a._mxx >= b._mnx
     AND a._mny <= b._mxy AND a._mxy >= b._mny
-    AND {_CROSS_AB2}
+    AND {_CROSS_AB}
 )
 SELECT id_a, id_b, 'AREAINTAREA' AS errtype, CAST(COUNT(*) AS BIGINT) AS ncross
 FROM xp GROUP BY id_a, id_b
@@ -426,10 +394,10 @@ def q_llintnoend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends = lines.selectExpr(
         "line_id AS sid", "x1 AS ex1", "y1 AS ey1", "x3 AS ex2", "y3 AS ey2"
     )
-    a = _seg_cells(segs).selectExpr(
+    a = explode_seg_cells(segs, CELL).selectExpr(
         "cell", "sid AS id_a", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
     )
-    b = _seg_cells(segs).selectExpr(
+    b = explode_seg_cells(segs, CELL).selectExpr(
         "cell", "sid AS id_b", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
     )
     xp = (
@@ -499,10 +467,10 @@ SELECT poly_id, x3, y3, x1, y1 FROM ({POLYS_SQL})
 def q_lmint(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsegs = spark.sql(LINE_SEGS_SQL)
     pedges = spark.sql(POLY_EDGES_SQL)
-    lc = _seg_cells(lsegs).selectExpr(
+    lc = explode_seg_cells(lsegs, CELL).selectExpr(
         "cell", "sid", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
     )
-    pc = _seg_cells(pedges).selectExpr(
+    pc = explode_seg_cells(pedges, CELL).selectExpr(
         "cell", "pid", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
     )
     return (
@@ -513,10 +481,6 @@ def q_lmint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("line_id", "poly_id", "'LMINT' AS errtype")
     )
 
-
-_CROSS_LP = _sub(sql_proper_cross(),
-                 {"_ax": "l.ax", "_ay": "l.ay", "_bx": "l.bx", "_by": "l.by",
-                  "_cx": "p.ax", "_cy": "p.ay", "_dx": "p.bx", "_dy": "p.by"})
 
 ORACLE_LMINT = f"""
 {oracle_cte('geo_lines')},
@@ -529,7 +493,7 @@ FROM lc l JOIN pc p
   ON l.cellx = p.cellx AND l.celly = p.celly
 WHERE l._mnx <= p._mxx AND l._mxx >= p._mnx
   AND l._mny <= p._mxy AND l._mxy >= p._mny
-  AND {_CROSS_LP}
+  AND {sql_proper_cross(seg_cols('l'), seg_cols('p'))}
 """
 
 
@@ -547,47 +511,62 @@ SELECT
 FROM geo_areas WHERE area_id % 11 = 0
 """
 
-_COLL = (
-    "abs((bx - ax) * (ey1 - ay) - (by - ay) * (ex1 - ax)) < {eps}"
-    " AND abs((bx - ax) * (ey2 - ay) - (by - ay) * (ex2 - ax)) < {eps}"
-).format(eps=COLL_EPS)
+#: the line segment and area edge columns of the NONODEOVLP refine
+_LINE = ("ax", "ay", "bx", "by")
+_EDGE = ("ex1", "ey1", "ex2", "ey2")
 
-# overlap length along the dominant axis (meter frame)
-_OVLP_M = (
-    "CASE WHEN abs(bx - ax) >= abs(by - ay)"
-    " THEN greatest(0.0, LEAST(GREATEST(ax, bx), GREATEST(ex1, ex2))"
-    "                 - GREATEST(LEAST(ax, bx), LEAST(ex1, ex2)))"
-    f"      * (111319.5 * {sql_coslat_poly('ay')})"
-    " ELSE greatest(0.0, LEAST(GREATEST(ay, by), GREATEST(ey1, ey2))"
-    "                 - GREATEST(LEAST(ay, by), LEAST(ey1, ey2)))"
-    "      * 111319.5 END"
-)
 
-_NO_SHARED_NODE = (
-    "NOT ((CAST(floor(ax * 1000000.0) AS BIGINT) = CAST(floor(ex1 * 1000000.0) AS BIGINT)"
-    "      AND CAST(floor(ay * 1000000.0) AS BIGINT) = CAST(floor(ey1 * 1000000.0) AS BIGINT))"
-    " OR (CAST(floor(ax * 1000000.0) AS BIGINT) = CAST(floor(ex2 * 1000000.0) AS BIGINT)"
-    "      AND CAST(floor(ay * 1000000.0) AS BIGINT) = CAST(floor(ey2 * 1000000.0) AS BIGINT))"
-    " OR (CAST(floor(bx * 1000000.0) AS BIGINT) = CAST(floor(ex1 * 1000000.0) AS BIGINT)"
-    "      AND CAST(floor(by * 1000000.0) AS BIGINT) = CAST(floor(ey1 * 1000000.0) AS BIGINT))"
-    " OR (CAST(floor(bx * 1000000.0) AS BIGINT) = CAST(floor(ex2 * 1000000.0) AS BIGINT)"
-    "      AND CAST(floor(by * 1000000.0) AS BIGINT) = CAST(floor(ey2 * 1000000.0) AS BIGINT)))"
-)
+def _coll(line=_LINE, edge=_EDGE) -> str:
+    """Both edge ends on the line's carrier (cross product below COLL_EPS)."""
+    ax, ay, bx, by = line
+    ex1, ey1, ex2, ey2 = edge
+    return (
+        f"abs(({bx} - {ax}) * ({ey1} - {ay}) - ({by} - {ay}) * ({ex1} - {ax})) < {COLL_EPS}"
+        f" AND abs(({bx} - {ax}) * ({ey2} - {ay}) - ({by} - {ay}) * ({ex2} - {ax})) < {COLL_EPS}"
+    )
+
+
+def _ovlp_m(line=_LINE, edge=_EDGE) -> str:
+    """Overlap length along the dominant axis (meter frame)."""
+    ax, ay, bx, by = line
+    ex1, ey1, ex2, ey2 = edge
+    return (
+        f"CASE WHEN abs({bx} - {ax}) >= abs({by} - {ay})"
+        f" THEN greatest(0.0, LEAST(GREATEST({ax}, {bx}), GREATEST({ex1}, {ex2}))"
+        f"                 - GREATEST(LEAST({ax}, {bx}), LEAST({ex1}, {ex2})))"
+        f"      * (111319.5 * {sql_coslat_poly(ay)})"
+        f" ELSE greatest(0.0, LEAST(GREATEST({ay}, {by}), GREATEST({ey1}, {ey2}))"
+        f"                 - GREATEST(LEAST({ay}, {by}), LEAST({ey1}, {ey2})))"
+        "      * 111319.5 END"
+    )
+
+
+def _no_shared_node(line=_LINE, edge=_EDGE) -> str:
+    """No line end shares a micro-degree-quantized node with an edge end."""
+    ax, ay, bx, by = line
+    ex1, ey1, ex2, ey2 = edge
+
+    def u(v: str) -> str:
+        return f"CAST(floor({v} * 1000000.0) AS BIGINT)"
+
+    same = [
+        f"({u(px)} = {u(qx)}      AND {u(py)} = {u(qy)})"
+        for px, py in ((ax, ay), (bx, by))
+        for qx, qy in ((ex1, ey1), (ex2, ey2))
+    ]
+    return f"NOT ({' OR '.join(same)})"
 
 
 def q_nonodeovlp(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = spark.sql(OVLP_LINES_SQL)
-    edges = spark.sql(AREA_EDGES_SQL).selectExpr(
-        "aid", "ax AS ex1", "ay AS ey1", "bx AS ex2", "by AS ey2"
+    lc = explode_seg_cells(lines, CELL)
+    ec = explode_seg_cells(spark.sql(AREA_EDGES_SQL), CELL).selectExpr(
+        "cell", "aid", "ax AS ex1", "ay AS ey1", "bx AS ex2", "by AS ey2"
     )
-    lc = _seg_cells(lines)
-    ec = _seg_cells(
-        edges.selectExpr("aid", "ex1 AS ax", "ey1 AS ay", "ex2 AS bx", "ey2 AS by")
-    ).selectExpr("cell", "aid", "ax AS ex1", "ay AS ey1", "bx AS ex2", "by AS ey2")
-    joined = lc.join(ec, "cell").filter(F.expr(_COLL))
+    joined = lc.join(ec, "cell").filter(F.expr(_coll()))
     out = (
-        joined.withColumn("ovlp_m", F.expr(_OVLP_M))
-        .filter((F.col("ovlp_m") > 0.0) & F.expr(_NO_SHARED_NODE))
+        joined.withColumn("ovlp_m", F.expr(_ovlp_m()))
+        .filter((F.col("ovlp_m") > 0.0) & F.expr(_no_shared_node()))
         .select(
             "lid", "aid", F.lit("NONODEOVLP").alias("errtype"),
             F.expr("CAST(floor(ovlp_m * 1000.0) AS BIGINT)").alias("ovlp_mm"),
@@ -598,16 +577,8 @@ def q_nonodeovlp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_COLL_LE = _sub(_COLL, {"ax": "l.ax", "ay": "l.ay", "bx": "l.bx", "by": "l.by",
-                        "ex1": "e.ex1", "ey1": "e.ey1",
-                        "ex2": "e.ex2", "ey2": "e.ey2"})
-_OVLP_LE = _sub(_OVLP_M, {"ax": "l.ax", "ay": "l.ay", "bx": "l.bx", "by": "l.by",
-                          "ex1": "e.ex1", "ey1": "e.ey1",
-                          "ex2": "e.ex2", "ey2": "e.ey2"})
-_NSN_LE = _sub(_NO_SHARED_NODE,
-               {"ax": "l.ax", "ay": "l.ay", "bx": "l.bx", "by": "l.by",
-                "ex1": "e.ex1", "ey1": "e.ey1",
-                "ex2": "e.ex2", "ey2": "e.ey2"})
+_LE_OVLP = (seg_cols("l"), seg_cols("e", *_EDGE))
+_OVLP_LE = _ovlp_m(*_LE_OVLP)
 
 ORACLE_NONODEOVLP = f"""
 {oracle_cte('geo_areas')},
@@ -626,9 +597,9 @@ SELECT l.lid, e.aid, 'NONODEOVLP' AS errtype,
        MAX(CAST(floor(({_OVLP_LE}) * 1000.0) AS BIGINT)) AS ovlp_mm
 FROM lc l JOIN ec e
   ON l.cellx = e.cellx AND l.celly = e.celly
-WHERE {_COLL_LE}
+WHERE {_coll(*_LE_OVLP)}
   AND ({_OVLP_LE}) > 0.0
-  AND {_NSN_LE}
+  AND {_no_shared_node(*_LE_OVLP)}
 GROUP BY l.lid, e.aid
 """
 

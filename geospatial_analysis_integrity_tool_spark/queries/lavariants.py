@@ -34,7 +34,7 @@ a colinear cover segment on every 7th bottom edge.  All arithmetic is
 integer-modulo -> exact-literal division, so Spark and DuckDB agree bitwise.
 
 Engine shapes: the crossing family runs the real cell join
-(explode_bbox_cells both sides + codegen proper-cross, the
+(explode_seg_cells both sides + codegen proper-cross, the
 segment_intersections pattern); containment runs a point-cell x area-cover
 join with the inline 3-edge ray-cast parity; LEINSIDEA refines with an
 equi-join to the area's own edges (3 rows) — no driver work anywhere.
@@ -46,8 +46,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_point_seg_dist_m
-from ..operators.intersections import sql_intersection_xy, sql_proper_cross
-from ..operators.pip import explode_bbox_cells, sql_ray3, with_point_cell
+from ..operators.intersections import (
+    SEG_A,
+    SEG_B,
+    sql_intersection_xy,
+    sql_proper_cross,
+)
+from ..operators.pip import (
+    explode_bbox_cells,
+    explode_seg_cells,
+    sql_ray3,
+    with_point_cell,
+)
 from ..sources.synthetic import oracle_cte
 
 CELL = 0.01
@@ -110,16 +120,6 @@ _IXU = f"CAST(floor(({_IX}) * 1000000.0) AS BIGINT)"
 _IYU = f"CAST(floor(({_IY}) * 1000000.0) AS BIGINT)"
 
 
-def _seg_bbox(df: DataFrame, ax: str, ay: str, bx: str, by: str,
-              mnx: str, mxx: str, mny: str, mxy: str) -> DataFrame:
-    return (
-        df.withColumn(mnx, F.least(ax, bx))
-        .withColumn(mxx, F.greatest(ax, bx))
-        .withColumn(mny, F.least(ay, by))
-        .withColumn(mxy, F.greatest(ay, by))
-    )
-
-
 # --- geo_line_area_cut_checks (LACUTFAIL 121 / LAINTNOEND 127 / LSLICEA 131) ----
 
 
@@ -136,18 +136,13 @@ def q_line_area_cut_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("lid", "seg_idx", "xl AS _ax", "say AS _ay",
                     "xl AS _bx", "sby AS _by")
     )
-    lsegs = _seg_bbox(lsegs, "_ax", "_ay", "_bx", "_by",
-                      "_mnx", "_mxx", "_mny", "_mxy")
-    esegs = _seg_bbox(
-        edges.selectExpr("aid", "eidx", "ex1 AS _cx", "ey1 AS _cy",
-                         "ex2 AS _dx", "ey2 AS _dy"),
-        "_cx", "_cy", "_dx", "_dy", "_mnx2", "_mxx2", "_mny2", "_mxy2",
-    )
+    esegs = edges.selectExpr("aid", "eidx", "ex1 AS _cx", "ey1 AS _cy",
+                             "ex2 AS _dx", "ey2 AS _dy")
 
     # cell join (duplicated bbox cover both sides, the GAIT neighbor-region
     # duplication TT.c:44027 analogue) + bbox prefilter + codegen proper cross
-    lc = explode_bbox_cells(lsegs, "_mnx", "_mxx", "_mny", "_mxy", CELL)
-    ec = explode_bbox_cells(esegs, "_mnx2", "_mxx2", "_mny2", "_mxy2", CELL)
+    lc = explode_seg_cells(lsegs, CELL, *SEG_A)
+    ec = explode_seg_cells(esegs, CELL, *SEG_B, suffix="2")
     xings = (
         lc.join(ec, "cell")
         .filter(
@@ -346,13 +341,9 @@ def q_line_in_area_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # LSEGCOVERA: cover segs x edges cell join, colinear + overlap refine
-    cseg = _seg_bbox(cover, "ax", "ay", "bx", "by", "_mnx", "_mxx", "_mny", "_mxy")
-    eseg = _seg_bbox(
-        edges, "ex1", "ey1", "ex2", "ey2", "_mnx2", "_mxx2", "_mny2", "_mxy2"
-    )
     segcover = (
-        explode_bbox_cells(cseg, "_mnx", "_mxx", "_mny", "_mxy", CELL)
-        .join(explode_bbox_cells(eseg, "_mnx2", "_mxx2", "_mny2", "_mxy2", CELL),
+        explode_seg_cells(cover, CELL)
+        .join(explode_seg_cells(edges, CELL, "ex1", "ey1", "ex2", "ey2", suffix="2"),
               "cell")
         .filter(F.expr(_COVER_PRED))
         .select("lid", "aid")

@@ -20,9 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.intersections import line_intersections, segments_of_vertices, vertices_to_lines
-from ..operators.pip import explode_bbox_cells, with_point_cell
+from ..operators.pip import explode_bbox_cells, sql_ray_edge, with_point_cell
 from ..sources.synthetic import GEO_VIEWS, oracle_cte
-from .vgeomq import CELL, ORACLE_LLINT_V, RAY_CROSS
+from .vgeomq import CELL, ORACLE_LLINT_V, _E_EDGE
 
 # --- geo_lines_no_intersection (LLNOINT 115) -----------------------------------
 
@@ -141,7 +141,7 @@ def q_inside_hole(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     parity = (
         cand.join(hedges, "hole_area_id")
-        .withColumn("_c", F.expr(RAY_CROSS))
+        .withColumn("_c", F.expr(sql_ray_edge("px", "py", "ex1", "ey1", "ex2", "ey2")))
         .groupBy("inner_id", "vidx", "hole_area_id")
         .agg(F.sum("_c").alias("_nc"))
         .filter(F.col("_nc") % 2 == 1)
@@ -185,9 +185,7 @@ cand AS (
 ),
 parity AS (
   SELECT c.inner_id, c.vidx, c.hole_area_id,
-         SUM({RAY_CROSS.replace('px', 'c.px').replace('py', 'c.py')
-                        .replace('ex1', 'e.ex1').replace('ey1', 'e.ey1')
-                        .replace('ex2', 'e.ex2').replace('ey2', 'e.ey2')}) AS nc
+         SUM({sql_ray_edge('c.px', 'c.py', *_E_EDGE)}) AS nc
   FROM cand c JOIN hedges e ON e.hole_area_id = c.hole_area_id
   GROUP BY 1, 2, 3
 ),

@@ -24,11 +24,19 @@ DIF_TOL_M = 10.0
 
 _GX = "CAST(floor((lon - 10.0) / 0.01) AS BIGINT)"
 _GY = "CAST(floor((lat - 40.0) / 0.01) AS BIGINT)"
-_ELEV = "(CAST(((gx * 7919 + gy * 104729) % 4000) AS DOUBLE) / 10.0)"
-_Z = (
-    f"({_ELEV} + CASE WHEN site_id % 17 = 0 THEN 25.5 ELSE 0.0 END"
-    f" + CAST(site_id % 7 AS DOUBLE) / 10.0)"
-)
+
+
+def _elev(gx: str = "gx", gy: str = "gy") -> str:
+    """The DEM post elevation at grid indexes (gx, gy)."""
+    return f"(CAST((({gx} * 7919 + {gy} * 104729) % 4000) AS DOUBLE) / 10.0)"
+
+
+def _z(gx: str = "gx", gy: str = "gy") -> str:
+    """A site's z: a function of its own post indexes (shared text)."""
+    return (
+        f"({_elev(gx, gy)} + CASE WHEN site_id % 17 = 0 THEN 25.5 ELSE 0.0 END"
+        f" + CAST(site_id % 7 AS DOUBLE) / 10.0)"
+    )
 
 _TILES_EXPR = (
     "transform(sequence(0, {nn}), k -> "
@@ -56,10 +64,7 @@ def q_raster_point_grid_dif(spark: SparkSession, sf_dir: str) -> DataFrame:
             "site_id",
             "lon",
             "lat",
-            # z is a function of the point's own post indexes (shared text)
-            f"({_ELEV.replace('gx', 'gx0').replace('gy', 'gy0')}"
-            " + CASE WHEN site_id % 17 = 0 THEN 25.5 ELSE 0.0 END"
-            " + CAST(site_id % 7 AS DOUBLE) / 10.0) AS z",
+            f"{_z('gx0', 'gy0')} AS z",
         )
     )
     tiles = build_raster_tiles(spark)
@@ -84,7 +89,7 @@ pts AS (
   SELECT site_id, {_GX} AS gx, {_GY} AS gy FROM geo_sites
 ),
 zz AS (
-  SELECT site_id, gx, gy, {_Z} AS z, {_ELEV} AS elev FROM pts
+  SELECT site_id, gx, gy, {_z()} AS z, {_elev()} AS elev FROM pts
 )
 SELECT site_id, gx, gy, CAST(floor((z - elev) * 1000.0) AS BIGINT) AS dif_mm
 FROM zz WHERE abs(z - elev) > {DIF_TOL_M}

@@ -33,8 +33,10 @@ turns inward -> excluded); a shifted model-poly twin layer; 13 exception
 strip-triangles over the window (even strips) for LSPIEXP.
 
 Engine shapes: the hole-aware containment reuses vgeomq._inside_pairs
-(cell-cover candidates + RAY_CROSS parity equi-join); crossings run the
-codegen cell join; everything is window/join/agg — no UDFs.  DuckDB
+(cell-cover candidates + ray-crossing parity equi-join, the per-edge term
+``operators/pip.sql_ray_edge``); triangle containment is
+``operators/pip.sql_ray3``; crossings run the codegen cell join over
+``explode_seg_cells``; everything is window/join/agg — no UDFs.  DuckDB
 oracles use the 0.01-deg cell equi-key for segment joins (IEJoin
 avoidance, see queries/intvariants.py).
 """
@@ -44,22 +46,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.intersections import sql_proper_cross
+from ..operators.intersections import seg_cols, sql_intersection_xy, sql_proper_cross
 from ..operators.pip import (
     explode_bbox_cells,
+    explode_seg_cells,
     oracle_bbox_cells,
+    oracle_point_cell,
     oracle_seg_cells,
+    sql_ray3,
+    sql_ray_edge,
     with_point_cell,
 )
 from ..sources.synthetic import oracle_cte
 from .compositionq import POLYS_SQL
-from .intvariants import (
-    AREA_EDGES_SQL,
-    POLY_EDGES_SQL,
-    _seg_cells,
-    _sub,
-)
-from .vgeomq import RAY_CROSS, _inside_pairs
+from .intvariants import AREA_EDGES_SQL, POLY_EDGES_SQL
+from .vgeomq import _inside_pairs
 
 CELL = 0.01
 ON_EDGE_M = 0.01        # LEAON_NOTIN end-on-perimeter band (1 cm)
@@ -97,9 +98,7 @@ bbox AS (
 ),
 {oracle_bbox_cells('bbox', 'bc', 'mnx', 'mxx', 'mny', 'mxy', CELL)},
 probes AS (
-  SELECT site_id, lon AS px, lat AS py,
-         CAST(floor(lon / {CELL}) AS BIGINT) AS cellx,
-         CAST(floor(lat / {CELL}) AS BIGINT) AS celly
+  SELECT site_id, lon AS px, lat AS py, {oracle_point_cell('lon', 'lat', CELL)}
   FROM geo_sites WHERE fcode = 'AT010'
 ),
 cand AS (
@@ -111,7 +110,7 @@ inside AS (
   SELECT c.site_id
   FROM cand c JOIN edges e ON c.area_id = e.area_id
   GROUP BY c.site_id, c.area_id
-  HAVING SUM({RAY_CROSS}) % 2 = 1
+  HAVING SUM({sql_ray_edge('px', 'py', 'ex1', 'ey1', 'ex2', 'ey2')}) % 2 = 1
 )
 SELECT site_id, 'PTOSIDEREGION' AS errtype
 FROM geo_sites
@@ -134,22 +133,6 @@ SELECT
        ELSE y1 - 0.0003 END AS by
 FROM geo_areas WHERE area_id % 6 = 0
 """
-
-# strictly-inside test for the geo_areas triangle (same-side sign tests;
-# vertices (x1,y1) (x2,y2) (x3,y3) are in CCW or CW order — use parity of
-# the eastward ray cast over the 3 edges for hole-free robustness)
-_TRI_RAY = (
-    "((CASE WHEN (y1 > py) <> (y2 > py)"
-    " THEN CASE WHEN px < x1 + (py - y1) * (x2 - x1) / (y2 - y1) THEN 1 ELSE 0 END"
-    " ELSE 0 END)"
-    " + (CASE WHEN (y2 > py) <> (y3 > py)"
-    " THEN CASE WHEN px < x2 + (py - y2) * (x3 - x2) / (y3 - y2) THEN 1 ELSE 0 END"
-    " ELSE 0 END)"
-    " + (CASE WHEN (y3 > py) <> (y1 > py)"
-    " THEN CASE WHEN px < x3 + (py - y3) * (x1 - x3) / (y1 - y3) THEN 1 ELSE 0 END"
-    " ELSE 0 END)) % 2 = 1"
-)
-
 
 def q_leaon_notin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.proximity import point_seg_candidates
@@ -185,7 +168,7 @@ def q_leaon_notin(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("px") >= F.col("_mnx")) & (F.col("px") <= F.col("_mxx"))
             & (F.col("py") >= F.col("_mny")) & (F.col("py") <= F.col("_mxy"))
         )
-        .filter(F.expr(_TRI_RAY))
+        .filter(F.expr(sql_ray3("px", "py")))
         .select("lid", F.col("area_id").alias("tgt_id"))
         .distinct()
     )
@@ -199,11 +182,6 @@ def q_leaon_notin(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..functions.geodesy import sql_point_seg_dist_m  # noqa: E402
 
 _PSD_S = sql_point_seg_dist_m("s.ax", "s.ay", "e.ax", "e.ay", "e.bx", "e.by")
-_TRI_RAY_SA = _sub(
-    _TRI_RAY,
-    {"px": "s.bx", "py": "s.by", "x1": "a.x1", "y1": "a.y1",
-     "x2": "a.x2", "y2": "a.y2", "x3": "a.x3", "y3": "a.y3"},
-)
 
 ORACLE_LEAON_NOTIN = f"""
 {oracle_cte('geo_areas')},
@@ -220,7 +198,7 @@ WHERE {_PSD_S} >= 0.0 AND {_PSD_S} < {ON_EDGE_M}
     WHERE a.area_id = e.aid
       AND s.bx >= LEAST(a.x1, a.x2, a.x3) AND s.bx <= GREATEST(a.x1, a.x2, a.x3)
       AND s.by >= LEAST(a.y1, a.y2, a.y3) AND s.by <= GREATEST(a.y1, a.y2, a.y3)
-      AND {_TRI_RAY_SA}
+      AND {sql_ray3('s.bx', 's.by', 'a.')}
   )
 """
 
@@ -258,16 +236,16 @@ def q_polyoside(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("px") >= F.col("_mnx")) & (F.col("px") <= F.col("_mxx"))
             & (F.col("py") >= F.col("_mny")) & (F.col("py") <= F.col("_mxy"))
         )
-        .filter(F.expr(_TRI_RAY))
+        .filter(F.expr(sql_ray3("px", "py")))
         .select("poly_id")
         .distinct()
     )
     pedges = spark.sql(POLY_EDGES_SQL).filter("pid % 5 = 0")
     aedges = spark.sql(AREA_EDGES_SQL)
-    pc = _seg_cells(pedges).selectExpr(
+    pc = explode_seg_cells(pedges, CELL).selectExpr(
         "cell", "pid", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
     )
-    ac = _seg_cells(aedges).selectExpr(
+    ac = explode_seg_cells(aedges, CELL).selectExpr(
         "cell", "aid", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
     )
     edge_x = (
@@ -284,16 +262,7 @@ def q_polyoside(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRI_RAY_CA = _sub(
-    _TRI_RAY,
-    {"px": "c.px", "py": "c.py", "x1": "a.x1", "y1": "a.y1",
-     "x2": "a.x2", "y2": "a.y2", "x3": "a.x3", "y3": "a.y3"},
-)
-_CROSS_PA = _sub(
-    sql_proper_cross(),
-    {"_ax": "p.ax", "_ay": "p.ay", "_bx": "p.bx", "_by": "p.by",
-     "_cx": "a.ax", "_cy": "a.ay", "_dx": "a.bx", "_dy": "a.by"},
-)
+_CROSS_PA = sql_proper_cross(seg_cols("p"), seg_cols("a"))
 
 ORACLE_POLYOSIDE = f"""
 {oracle_cte('geo_areas')},
@@ -310,7 +279,7 @@ corner_in AS (
   FROM corners c JOIN geo_areas a
     ON c.px >= LEAST(a.x1, a.x2, a.x3) AND c.px <= GREATEST(a.x1, a.x2, a.x3)
    AND c.py >= LEAST(a.y1, a.y2, a.y3) AND c.py <= GREATEST(a.y1, a.y2, a.y3)
-  WHERE {_TRI_RAY_CA}
+  WHERE {sql_ray3('c.px', 'c.py', 'a.')}
 ),
 edge_x AS (
   SELECT DISTINCT p.pid AS poly_id
@@ -351,10 +320,10 @@ FROM ({POLYS_SQL}) WHERE poly_id % 3 = 0
 def q_polyintpoly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ea = spark.sql(POLY_EDGES_SQL)
     eb = spark.sql(POLYS_B_EDGES_SQL)
-    a = _seg_cells(ea).selectExpr(
+    a = explode_seg_cells(ea, CELL).selectExpr(
         "cell", "pid AS id_a", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
     )
-    b = _seg_cells(eb).selectExpr(
+    b = explode_seg_cells(eb, CELL).selectExpr(
         "cell", "pid AS id_b", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
     )
     return (
@@ -366,12 +335,6 @@ def q_polyintpoly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CROSS_AB2 = _sub(
-    sql_proper_cross(),
-    {"_ax": "a.ax", "_ay": "a.ay", "_bx": "a.bx", "_by": "a.by",
-     "_cx": "b.ax", "_cy": "b.ay", "_dx": "b.bx", "_dy": "b.by"},
-)
-
 ORACLE_POLYINTPOLY = f"""
 WITH ea AS (SELECT pid, ax, ay, bx, by FROM ({POLY_EDGES_SQL})),
 eb AS ({POLYS_B_EDGES_SQL}),
@@ -381,7 +344,7 @@ SELECT DISTINCT a.pid AS id_a, b.pid AS id_b, 'POLYINTPOLY' AS errtype
 FROM eac a JOIN ebc b ON a.cellx = b.cellx AND a.celly = b.celly
 WHERE a._mnx <= b._mxx AND a._mxx >= b._mnx
   AND a._mny <= b._mxy AND a._mxy >= b._mny
-  AND {_CROSS_AB2}
+  AND {sql_proper_cross(seg_cols('a'), seg_cols('b'))}
 """
 
 
@@ -391,10 +354,10 @@ WHERE a._mnx <= b._mxx AND a._mxx >= b._mnx
 def q_polyintarea(spark: SparkSession, sf_dir: str) -> DataFrame:
     pe = spark.sql(POLY_EDGES_SQL)
     ae = spark.sql(AREA_EDGES_SQL)
-    p = _seg_cells(pe).selectExpr(
+    p = explode_seg_cells(pe, CELL).selectExpr(
         "cell", "pid", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
     )
-    a = _seg_cells(ae).selectExpr(
+    a = explode_seg_cells(ae, CELL).selectExpr(
         "cell", "aid", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
     )
     return (
@@ -417,7 +380,7 @@ SELECT DISTINCT p.pid AS poly_id, a.aid AS area_id, 'POLYINTAREA' AS errtype
 FROM pc p JOIN ac a ON p.cellx = a.cellx AND p.celly = a.celly
 WHERE p._mnx <= a._mxx AND p._mxx >= a._mnx
   AND p._mny <= a._mxy AND p._mxy >= a._mny
-  AND {_sub(sql_proper_cross(), {"_ax": "p.ax", "_ay": "p.ay", "_bx": "p.bx", "_by": "p.by", "_cx": "a.ax", "_cy": "a.ay", "_dx": "a.bx", "_dy": "a.by"})}
+  AND {_CROSS_PA}
 """
 
 
@@ -459,23 +422,13 @@ SELECT n_nationkey AS eid,
 FROM nation WHERE n_nationkey % 2 = 0
 """
 
-_IN_EXC = _sub(
-    _TRI_RAY,
-    {"px": "ix", "py": "iy", "x1": "tx1", "y1": "ty1",
-     "x2": "tx2", "y2": "ty2", "x3": "tx3", "y3": "ty3"},
-)
+_IX, _IY = sql_intersection_xy()
 
 LSP_LINE_SEGS_SQL = """
 SELECT line_id AS sid, x1 AS ax, y1 AS ay, x2 AS bx, y2 AS by FROM geo_lines
 UNION ALL
 SELECT line_id, x2, y2, x3, y3 FROM geo_lines
 """
-
-# zero-denominator-guarded intersection point (ANSI mode can evaluate the
-# projection speculatively on rows the proper-cross filter would drop)
-from .proxvariants import _guarded_xy  # noqa: E402
-
-_IXS, _IYS = _guarded_xy()
 
 
 def q_lspint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,10 +458,10 @@ def q_lspint(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e"),
     ).select("pid", "e.ax", "e.ay", "e.bx", "e.by")
-    lc = _seg_cells(lsegs).selectExpr(
+    lc = explode_seg_cells(lsegs, CELL).selectExpr(
         "cell", "sid", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
     )
-    sc = _seg_cells(sedges).selectExpr(
+    sc = explode_seg_cells(sedges, CELL).selectExpr(
         "cell", "pid", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
     )
     xings = (
@@ -516,7 +469,7 @@ def q_lspint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.expr(sql_proper_cross()))
         .select(
             "sid", "pid",
-            F.expr(_IXS).alias("ix"), F.expr(_IYS).alias("iy"),
+            F.expr(_IX).alias("ix"), F.expr(_IY).alias("iy"),
         )
         .dropDuplicates(["sid", "pid", "ix", "iy"])
     )
@@ -528,7 +481,7 @@ def q_lspint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter("eid % 2 = 0")
     in_exc = (
         xings.join(F.broadcast(exc))
-        .filter(F.expr(_IN_EXC))
+        .filter(F.expr(sql_ray3("ix", "iy", "t")))
         .select("sid", "pid", "ix", "iy")
         .distinct()
     )
@@ -543,15 +496,8 @@ def q_lspint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lspint.unionByName(lspiexp)
 
 
-_CROSS_LS = _sub(
-    sql_proper_cross(),
-    {"_ax": "l.ax", "_ay": "l.ay", "_bx": "l.bx", "_by": "l.by",
-     "_cx": "s.ax", "_cy": "s.ay", "_dx": "s.bx", "_dy": "s.by"},
-)
-_IX_LS = _sub(_IXS, {"_ax": "l.ax", "_ay": "l.ay", "_bx": "l.bx", "_by": "l.by",
-                     "_cx": "s.ax", "_cy": "s.ay", "_dx": "s.bx", "_dy": "s.by"})
-_IY_LS = _sub(_IYS, {"_ax": "l.ax", "_ay": "l.ay", "_bx": "l.bx", "_by": "l.by",
-                     "_cx": "s.ax", "_cy": "s.ay", "_dx": "s.bx", "_dy": "s.by"})
+_LS = (seg_cols("l"), seg_cols("s"))
+_IX_LS, _IY_LS = sql_intersection_xy(*_LS)
 
 ORACLE_LSPINT = f"""
 {oracle_cte('geo_lines')},
@@ -564,7 +510,7 @@ xings AS (
   FROM lc l JOIN sc s ON l.cellx = s.cellx AND l.celly = s.celly
   WHERE l._mnx <= s._mxx AND l._mxx >= s._mnx
     AND l._mny <= s._mxy AND l._mxy >= s._mny
-    AND {_CROSS_LS}
+    AND {sql_proper_cross(*_LS)}
 ),
 exc AS ({EXC_AREAS_SQL})
 SELECT DISTINCT sid, pid, 'LSPINT' AS errtype FROM xings
@@ -572,7 +518,7 @@ UNION ALL
 SELECT DISTINCT sid, pid, 'LSPIEXP' FROM xings x
 WHERE NOT EXISTS (
   SELECT 1 FROM exc
-  WHERE {_sub(_IN_EXC, {"ix": "x.ix", "iy": "x.iy"})}
+  WHERE {sql_ray3('x.ix', 'x.iy', 't')}
 )
 """
 

@@ -52,9 +52,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
-from ..operators.intersections import sql_intersection_xy, sql_proper_cross
+from ..operators.intersections import (
+    SEG_A,
+    SEG_B,
+    seg_cols,
+    sql_intersection_xy,
+    sql_proper_cross,
+)
 from ..operators.pip import (
-    explode_bbox_cells,
+    explode_seg_cells,
     oracle_seg_cells,
     with_kring_cells,
     with_point_cell,
@@ -309,23 +315,6 @@ GROUP BY v.line_id, t.tid
 # --- geo_plp_fail (PLPFAIL 93 / PLLPROXFAIL 96) ----------------------------------
 
 
-def _guarded_xy() -> tuple[str, str]:
-    """sql_intersection_xy with a zero-denominator guard.
-
-    Mathematically the proper-cross filter already implies denom <> 0, but
-    under ANSI mode a physical plan is free to evaluate the projection on
-    rows a later filter would drop (observed once under AQE), which raises
-    DIVIDE_BY_ZERO.  The CASE is a no-op for every surviving row and is
-    applied verbatim in the oracle, so values stay bit-identical.
-    """
-    ix, iy = sql_intersection_xy()
-    denom = "((_bx - _ax) * (_dy - _cy) - (_by - _ay) * (_dx - _cx))"
-    return (
-        f"CASE WHEN {denom} = 0.0 THEN 0.0 ELSE {ix} END",
-        f"CASE WHEN {denom} = 0.0 THEN 0.0 ELSE {iy} END",
-    )
-
-
 def _crossings(spark: SparkSession) -> DataFrame:
     """Proper crossings among geo_lines segments (codegen cell join)."""
     segs = spark.sql(LINE_SEGS_SQL)
@@ -333,25 +322,13 @@ def _crossings(spark: SparkSession) -> DataFrame:
         "seg_line AS id_a", "seg_idx AS si_a",
         "sax AS _ax", "say AS _ay", "sbx AS _bx", "sby AS _by",
     )
-    a = (
-        a.withColumn("_mnx", F.least("_ax", "_bx"))
-        .withColumn("_mxx", F.greatest("_ax", "_bx"))
-        .withColumn("_mny", F.least("_ay", "_by"))
-        .withColumn("_mxy", F.greatest("_ay", "_by"))
-    )
     b = segs.selectExpr(
         "seg_line AS id_b", "seg_idx AS si_b",
         "sax AS _cx", "say AS _cy", "sbx AS _dx", "sby AS _dy",
     )
-    b = (
-        b.withColumn("_mnx2", F.least("_cx", "_dx"))
-        .withColumn("_mxx2", F.greatest("_cx", "_dx"))
-        .withColumn("_mny2", F.least("_cy", "_dy"))
-        .withColumn("_mxy2", F.greatest("_cy", "_dy"))
-    )
-    ac = explode_bbox_cells(a, "_mnx", "_mxx", "_mny", "_mxy", 0.01)
-    bc = explode_bbox_cells(b, "_mnx2", "_mxx2", "_mny2", "_mxy2", 0.01)
-    ix, iy = _guarded_xy()
+    ac = explode_seg_cells(a, 0.01, *SEG_A)
+    bc = explode_seg_cells(b, 0.01, *SEG_B, suffix="2")
+    ix, iy = sql_intersection_xy()
     return (
         ac.join(bc, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -408,18 +385,13 @@ _PSD_P = sql_point_seg_dist_m("p.lon", "p.lat", "s.sax", "s.say", "s.sbx", "s.sb
 _D_PX = sql_dist_m("p.lon", "p.lat", "x.cx", "x.cy")
 
 
-def _sub_ab(s: str) -> str:
-    """Rebind kernel placeholders to the a/b self-join aliases."""
-    for old, new in (
-        ("_ax", "a.sax"), ("_ay", "a.say"), ("_bx", "a.sbx"), ("_by", "a.sby"),
-        ("_cx", "b.sax"), ("_cy", "b.say"), ("_dx", "b.sbx"), ("_dy", "b.sby"),
-    ):
-        s = s.replace(old, new)
-    return s
+#: the a/b segment self-join aliases of the xings oracle
+_AB = tuple(seg_cols(t, "sax", "say", "sbx", "sby") for t in ("a", "b"))
+_IX_AB, _IY_AB = sql_intersection_xy(*_AB)
 
 
 # The xings self-join carries an equi cell key (same 0.01-deg grid as the
-# engine's explode_bbox_cells) rather than a pure interval ON: DuckDB's
+# engine's explode_seg_cells) rather than a pure interval ON: DuckDB's
 # IEJoin path hits an internal "flat vector" assertion on this join shape,
 # and the hash cell join is also the faster plan — same trade as the
 # coverage-family oracles (queries/coverageq.py).
@@ -428,13 +400,13 @@ ORACLE_PLP_FAIL = f"""
 segs AS ({LINE_SEGS_SQL}),
 {oracle_seg_cells('segs', 'segc', 0.01, ax='sax', ay='say', bx='sbx', by='sby')},
 xings AS (
-  SELECT DISTINCT {_sub_ab(_guarded_xy()[0])} AS cx,
-         {_sub_ab(_guarded_xy()[1])} AS cy
+  SELECT DISTINCT {_IX_AB} AS cx,
+         {_IY_AB} AS cy
   FROM segc a JOIN segc b
     ON a.cellx = b.cellx AND a.celly = b.celly AND a.seg_line < b.seg_line
   WHERE a._mnx <= b._mxx AND a._mxx >= b._mnx
     AND a._mny <= b._mxy AND a._mxy >= b._mny
-    AND {_sub_ab(sql_proper_cross())}
+    AND {sql_proper_cross(*_AB)}
 )
 SELECT p.site_id, 'PLPFAIL' AS errtype
 FROM geo_sites p

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.checkspec import SENSITIVITY_OPS
+from ..operators.pip import sql_ray_edge
 from ..sources.synthetic import oracle_cte
 
 # --- sensitivity_ops -----------------------------------------------------------
@@ -228,10 +229,7 @@ cand AS (
 ),
 parity AS (
   SELECT c.hole_area_id, c.area_id,
-         SUM(CASE WHEN (e.ey1 > c.py) <> (e.ey2 > c.py)
-              THEN CASE WHEN c.px < e.ex1 + (c.py - e.ey1) * (e.ex2 - e.ex1) / (e.ey2 - e.ey1)
-                   THEN 1 ELSE 0 END
-              ELSE 0 END) AS nc
+         SUM({sql_ray_edge('c.px', 'c.py', 'e.ex1', 'e.ey1', 'e.ex2', 'e.ey2')}) AS nc
   FROM cand c JOIN edges e ON e.area_id = c.area_id
   GROUP BY 1, 2
 )

@@ -42,14 +42,19 @@ from ..operators.intersections import (
     segments_of_vertices,
     self_intersections_of_segments,
 )
-from ..operators.pip import oracle_bbox_cells, with_kring_cells, with_point_cell
+from ..operators.pip import (
+    oracle_bbox_cells,
+    sql_ray_edge,
+    with_kring_cells,
+    with_point_cell,
+)
 from ..operators.proximity import point_to_segment_proximity
 from ..sources.synthetic import oracle_cte, oracle_materialized
 from .vgeomq import (
     CELL,
-    RAY_CROSS,
-    _EDGES_CTE,
+    _E_EDGE,
     _area_edges,
+    _edges_cte,
     _inside_pairs,
 )
 
@@ -271,7 +276,7 @@ def q_ptinproper(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_PTINPROPER = f"""
 {oracle_cte('geo_sites', 'geo_vareas')},
-{_EDGES_CTE.strip().replace('edges AS (', 'edges AS MATERIALIZED (')},
+{_edges_cte(materialized=True)},
 abbox AS (
   SELECT area_id, MIN(x) AS mnx, MAX(x) AS mxx, MIN(y) AS mny, MAX(y) AS mxy
   FROM geo_vareas GROUP BY area_id
@@ -286,9 +291,7 @@ cand AS (
 ),
 parity AS (
   SELECT c.site_id, c.area_id,
-         SUM({RAY_CROSS.replace('px', 'c.px').replace('py', 'c.py')
-                        .replace('ex1', 'e.ex1').replace('ey1', 'e.ey1')
-                        .replace('ex2', 'e.ex2').replace('ey2', 'e.ey2')}) AS nc
+         SUM({sql_ray_edge('c.px', 'c.py', *_E_EDGE)}) AS nc
   FROM cand c JOIN edges e ON e.area_id = c.area_id
   GROUP BY 1, 2
 ),
@@ -355,7 +358,7 @@ def q_polyinarea(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_POLYINAREA = f"""
 {oracle_cte('geo_vareas')},
 geo_vareas_pia AS MATERIALIZED ({_AREAS_PIA_SQL}),
-{_EDGES_CTE.strip().replace('geo_vareas', 'geo_vareas_pia')},
+{_edges_cte('geo_vareas_pia')},
 abbox AS (
   SELECT area_id, MIN(x) AS mnx, MAX(x) AS mxx, MIN(y) AS mny, MAX(y) AS mxy
   FROM geo_vareas_pia GROUP BY area_id
@@ -371,9 +374,7 @@ cand AS (
 ),
 parity AS (
   SELECT c.inner_id, c.ring, c.vidx, c.area_id,
-         SUM({RAY_CROSS.replace('px', 'c.px').replace('py', 'c.py')
-                        .replace('ex1', 'e.ex1').replace('ey1', 'e.ey1')
-                        .replace('ex2', 'e.ex2').replace('ey2', 'e.ey2')}) AS nc
+         SUM({sql_ray_edge('c.px', 'c.py', *_E_EDGE)}) AS nc
   FROM cand c JOIN edges e ON e.area_id = c.area_id
   GROUP BY 1, 2, 3, 4
 ),

@@ -46,10 +46,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.geodesy import sql_coslat_poly, sql_dist_m, sql_trunc3_mm
+from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m, sql_trunc3_mm
 from ..operators.proximity import point_seg_candidates
 from ..sources.synthetic import oracle_cte
-from .intvariants import _sub
 
 GRID_N = 60
 HOLE_MOD = 97
@@ -200,12 +199,18 @@ UNION ALL
 SELECT line_id, 1, x2, y2, x3, y3 FROM geo_lines
 """
 
-#: near-parallel: sin^2(angle between src dir (sdx,sdy) and tgt dir
-#: (tdx,tdy)) below the 5-degree gate, cross/dot squared form
-_PAR = (
-    "((sdx * tdy - sdy * tdx) * (sdx * tdy - sdy * tdx))"
-    f" < {SIN2_PAR} * ((sdx * sdx + sdy * sdy) * (tdx * tdx + tdy * tdy))"
-)
+
+def _near_parallel(sin2: float, sdx="sdx", sdy="sdy", tdx="tdx", tdy="tdy") -> str:
+    """sin^2 of the angle between the src direction (sdx, sdy) and the tgt
+    direction (tdx, tdy) below ``sin2``, in cross/dot squared form."""
+    return (
+        f"(({sdx} * {tdy} - {sdy} * {tdx}) * ({sdx} * {tdy} - {sdy} * {tdx}))"
+        f" < {sin2} * (({sdx} * {sdx} + {sdy} * {sdy}) * ({tdx} * {tdx} + {tdy} * {tdy}))"
+    )
+
+
+#: the oracles' src direction and tgt segment direction columns
+_ES_DIRS = ("e.sdx", "e.sdy", "(s.bx - s.ax)", "(s.by - s.ay)")
 
 
 def _sliver_pairs(
@@ -243,7 +248,7 @@ def _sliver_pairs(
         F.broadcast(ends.select("pkey", "sdx", "sdy").distinct()), "pkey"
     )
     both = (
-        cand.filter(F.expr(_PAR))
+        cand.filter(F.expr(_near_parallel(SIN2_PAR)))
         .withColumn("src_id", F.expr("CAST(floor(pkey / 2.0) AS BIGINT)"))
         .groupBy("src_id", "tgt_id")
         .agg(F.countDistinct("pkey").alias("nend"))
@@ -272,11 +277,7 @@ def q_llsliver(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..functions.geodesy import sql_point_seg_dist_m  # noqa: E402
-
-_PSD_LA = sql_point_seg_dist_m("e.px", "e.py", "s.ax", "s.ay", "s.bx", "s.by")
-_PAR_ES = _sub(_PAR, {"sdx": "e.sdx", "sdy": "e.sdy",
-                      "tdx": "(s.bx - s.ax)", "tdy": "(s.by - s.ay)"})
+_PSD_ES = sql_point_seg_dist_m("e.px", "e.py", "s.ax", "s.ay", "s.bx", "s.by")
 
 
 def _sliver_oracle(lines_sql: str, segs_sql: str, src_id: str,
@@ -297,8 +298,8 @@ FROM ends e JOIN segs s
  AND e.px <= GREATEST(s.ax, s.bx) + 0.0001
  AND e.py >= LEAST(s.ay, s.by) - 0.0001
  AND e.py <= GREATEST(s.ay, s.by) + 0.0001
-WHERE {_PSD_LA} > 0.0 AND {_PSD_LA} < {SLIVER_TOL_M}
-  AND {_PAR_ES}
+WHERE {_PSD_ES} > 0.0 AND {_PSD_ES} < {SLIVER_TOL_M}
+  AND {_near_parallel(SIN2_PAR, *_ES_DIRS)}
 GROUP BY e.src_id, s.tgt_id
 HAVING COUNT(DISTINCT e.end_idx) >= 2
 """
@@ -330,11 +331,6 @@ SELECT
 FROM geo_areas WHERE area_id % 10 = 0
 """
 
-_TANGENT = (
-    "((sdx * tdy - sdy * tdx) * (sdx * tdy - sdy * tdx))"
-    f" < {SIN2_KINK} * ((sdx * sdx + sdy * sdy) * (tdx * tdx + tdy * tdy))"
-)
-
 
 def q_la_kink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stubs = spark.sql(KINK_STUBS_SQL)
@@ -355,15 +351,11 @@ def q_la_kink(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(ends.select("src_id", "sdx", "sdy").distinct()), "src_id"
     )
     return (
-        cand.filter(F.expr(_TANGENT))
+        cand.filter(F.expr(_near_parallel(SIN2_KINK)))
         .select("src_id", "tgt_id", F.lit("L_A_KINK").alias("errtype"))
         .distinct()
     )
 
-
-_PSD_K = sql_point_seg_dist_m("e.px", "e.py", "s.ax", "s.ay", "s.bx", "s.by")
-_TAN_ES = _sub(_TANGENT, {"sdx": "e.sdx", "sdy": "e.sdy",
-                          "tdx": "(s.bx - s.ax)", "tdy": "(s.by - s.ay)"})
 
 ORACLE_LA_KINK = f"""
 {oracle_cte('geo_areas')},
@@ -380,8 +372,8 @@ FROM ends e JOIN segs s
  AND e.px <= GREATEST(s.ax, s.bx) + 0.0001
  AND e.py >= LEAST(s.ay, s.by) - 0.0001
  AND e.py <= GREATEST(s.ay, s.by) + 0.0001
-WHERE {_PSD_K} >= 0.0 AND {_PSD_K} < 0.01
-  AND {_TAN_ES}
+WHERE {_PSD_ES} >= 0.0 AND {_PSD_ES} < 0.01
+  AND {_near_parallel(SIN2_KINK, *_ES_DIRS)}
 """
 
 

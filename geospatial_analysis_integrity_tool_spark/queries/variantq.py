@@ -761,13 +761,9 @@ WHERE {_DFD} > 0.0 AND {_DFD} < {LUSHTL_DF_TOL_M}
 
 
 def _oracle_laprox() -> str:
-    from .vgeomq import _EDGES_CTE
+    from .vgeomq import _edges_cte
 
-    return ORACLE_LAPROX.format(
-        edges_cte=_EDGES_CTE.strip().replace(
-            'edges AS (', 'edges AS MATERIALIZED ('
-        )
-    )
+    return ORACLE_LAPROX.format(edges_cte=_edges_cte(materialized=True))
 
 
 QUERIES = {

@@ -108,9 +108,9 @@ def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the oracle is one explicit CTE chain with the two iterations unrolled
-_ASSIGN_SQL = """
-{name} AS (
+def _assign_cte(name: str, cen: str, materialized: bool = False) -> str:
+    """The CTE ``name``: each vector's nearest centroid of the CTE ``cen``."""
+    return f"""{name} AS {'MATERIALIZED ' if materialized else ''}(
   SELECT vec_id, k, dist FROM (
     SELECT vec_id, k, dist,
            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, k) AS rn
@@ -120,21 +120,22 @@ _ASSIGN_SQL = """
       GROUP BY 1, 2
     )
   ) WHERE rn = 1
-)
-"""
+)"""
 
+
+# the oracle is one explicit CTE chain with the two iterations unrolled
 ORACLE_KMEANS = f"""
 WITH {_VERTS_SQL.strip()},
 cen0 AS (
   SELECT vec_id AS k, d, qv AS cv FROM verts WHERE vec_id < {K_CLUSTERS}
 ),
-{_ASSIGN_SQL.format(name='a1', cen='cen0').strip()},
+{_assign_cte('a1', 'cen0')},
 cen1 AS (
   SELECT a1.k, v.d, SUM(v.qv) // COUNT(*) AS cv
   FROM verts v JOIN a1 USING (vec_id)
   GROUP BY 1, 2
 ),
-{_ASSIGN_SQL.format(name='a2', cen='cen1').strip()}
+{_assign_cte('a2', 'cen1')}
 SELECT k AS cluster_id, COUNT(*) AS n_members,
        CAST(SUM(dist) AS BIGINT) AS inertia
 FROM a2 GROUP BY 1
@@ -242,11 +243,6 @@ SELECT query_id, neighbor_id, adc_dist, rank FROM (
 # sf0.01 fixture (assignment a_14 == a_13, all 8 clusters alive throughout).
 
 KMEANS_MAX_ITERS = 100
-
-
-def _mat(cte: str, name: str) -> str:
-    """Rewrite `name AS (` to `name AS MATERIALIZED (` in a CTE string."""
-    return cte.replace(f"{name} AS (", f"{name} AS MATERIALIZED (", 1)
 
 
 def kmeans_converged(
@@ -367,7 +363,7 @@ def _oracle_kmeans_converged(iters: int) -> str:
     """
     parts = [
         f"cen0 AS MATERIALIZED (\n  SELECT vec_id AS k, d, qv AS cv FROM verts WHERE vec_id < {K_CLUSTERS}\n)",
-        _mat(_ASSIGN_SQL.format(name="a1", cen="cen0").strip(), "a1"),
+        _assign_cte("a1", "cen0", materialized=True),
     ]
     for r in range(1, iters):
         parts.append(
@@ -377,12 +373,7 @@ def _oracle_kmeans_converged(iters: int) -> str:
   GROUP BY 1, 2
 )"""
         )
-        parts.append(
-            _mat(
-                _ASSIGN_SQL.format(name=f"a{r + 1}", cen=f"cen{r}").strip(),
-                f"a{r + 1}",
-            )
-        )
+        parts.append(_assign_cte(f"a{r + 1}", f"cen{r}", materialized=True))
     body = ",\n".join(parts)
     return f"""
 WITH {_VERTS_SQL.strip()},

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.intersections import (
+    seg_cols,
     segment_intersections,
     segments_of_vertices,
     self_intersections_of_segments,
@@ -39,7 +40,7 @@ from ..operators.intersections import (
     sql_proper_cross,
     vertices_to_lines,
 )
-from ..operators.pip import explode_bbox_cells, oracle_bbox_cells
+from ..operators.pip import explode_bbox_cells, oracle_bbox_cells, sql_ray_edge
 from ..sources.synthetic import oracle_cte
 
 CELL = 0.01
@@ -66,17 +67,6 @@ SEGCELL = 0.005
 EDGECELL = 0.0025
 
 # --- shared predicate texts ----------------------------------------------------
-
-#: eastward ray-cast crossing test for one edge vs one probe point; the CASE
-#: guards the division (straddle implies ey1 <> ey2) in both engines' ANSI
-#: modes.  Mirrors PointInsidePoly's per-edge test (TT.c:6920-6977); parity
-#: over ALL ring edges gives even-odd (hole-aware) containment.
-RAY_CROSS = (
-    "CASE WHEN (ey1 > py) <> (ey2 > py)"
-    " THEN CASE WHEN px < ex1 + (py - ey1) * (ex2 - ex1) / (ey2 - ey1)"
-    "      THEN 1 ELSE 0 END"
-    " ELSE 0 END"
-)
 
 #: fold-back > 170 deg: cos(angle) < -cos(10deg); sqrt-free via squared dot.
 KICKBACK_PRED = (
@@ -108,22 +98,26 @@ segs AS (
 )
 """
 
-# ring edges of geo_vareas incl. the closing edge (vidx + 1 mod ring size)
-_EDGES_CTE = """
-nv AS (
-  SELECT area_id, ring, COUNT(*) AS n FROM geo_vareas GROUP BY area_id, ring
+#: the ring-edge columns (ex1, ey1)-(ex2, ey2) of _edges_cte, qualified by e
+_E_EDGE = seg_cols("e", "ex1", "ey1", "ex2", "ey2")
+
+
+def _edges_cte(view: str = "geo_vareas", materialized: bool = False) -> str:
+    """The CTEs ``nv`` and ``edges``: ring edges of the areal vertex view
+    ``view`` incl. the closing edge (vidx + 1 mod ring size)."""
+    return f"""nv AS (
+  SELECT area_id, ring, COUNT(*) AS n FROM {view} GROUP BY area_id, ring
 ),
-edges AS (
+edges AS {'MATERIALIZED ' if materialized else ''}(
   SELECT v.area_id, v.ring, v.vidx AS eidx,
          v.x AS ex1, v.y AS ey1, w.x AS ex2, w.y AS ey2,
          LEAST(v.x, w.x) AS mnx, GREATEST(v.x, w.x) AS mxx,
          LEAST(v.y, w.y) AS mny, GREATEST(v.y, w.y) AS mxy
-  FROM geo_vareas v
+  FROM {view} v
   JOIN nv ON nv.area_id = v.area_id AND nv.ring = v.ring
-  JOIN geo_vareas w ON w.area_id = v.area_id AND w.ring = v.ring
+  JOIN {view} w ON w.area_id = v.area_id AND w.ring = v.ring
        AND w.vidx = (v.vidx + 1) % nv.n
-)
-"""
+)"""
 
 
 # --- geo_line_intersections (LLINT 118, re-gated on geo_vlines) ----------------
@@ -253,7 +247,9 @@ def _inside_pairs(spark: SparkSession, edges: DataFrame, probes: DataFrame,
         )
         .select(*probe_keys, "px", "py", "area_id")
     )
-    crossings = cand.join(edges, "area_id").withColumn("_c", F.expr(RAY_CROSS))
+    crossings = cand.join(edges, "area_id").withColumn(
+        "_c", F.expr(sql_ray_edge("px", "py", "ex1", "ey1", "ex2", "ey2"))
+    )
     parity = (
         crossings.groupBy(*probe_keys, "area_id")
         .agg(F.sum("_c").alias("_nc"))
@@ -331,7 +327,7 @@ def q_line_area(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.select("line_id", "vidx", F.col("x").alias("px"), F.col("y").alias("py"))
         .join(pairs, "line_id")
         .join(edges, "area_id")
-        .withColumn("_c", F.expr(RAY_CROSS))
+        .withColumn("_c", F.expr(sql_ray_edge("px", "py", "ex1", "ey1", "ex2", "ey2")))
         .groupBy("line_id", "area_id", "_nv", "vidx")
         .agg(F.sum("_c").alias("_ncross"))
         .filter(F.col("_ncross") % 2 == 1)
@@ -351,18 +347,14 @@ def q_line_area(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_LINE_AREA_V = f"""
 {oracle_cte('geo_vlines', 'geo_vareas')},
 {_SEGS_CTE.strip()},
-{_EDGES_CTE.strip()},
+{_edges_cte()},
 {oracle_bbox_cells('segs', 'segc', 'mnx', 'mxx', 'mny', 'mxy', EDGECELL)},
 {oracle_bbox_cells('edges', 'edgec', 'mnx', 'mxx', 'mny', 'mxy', EDGECELL)},
 laint AS (
   SELECT DISTINCT s.line_id, e.area_id
   FROM segc s JOIN edgec e
     ON s.cellx = e.cellx AND s.celly = e.celly
-  WHERE {sql_proper_cross()
-         .replace('_ax', 's.sax').replace('_ay', 's.say')
-         .replace('_bx', 's.sbx').replace('_by', 's.sby')
-         .replace('_cx', 'e.ex1').replace('_cy', 'e.ey1')
-         .replace('_dx', 'e.ex2').replace('_dy', 'e.ey2')}
+  WHERE {sql_proper_cross(seg_cols('s', 'sax', 'say', 'sbx', 'sby'), _E_EDGE)}
 ),
 abbox AS (
   SELECT area_id, MIN(x) AS mnx, MAX(x) AS mxx, MIN(y) AS mny, MAX(y) AS mxy
@@ -378,9 +370,7 @@ cand AS (
 ),
 parity AS (
   SELECT c.line_id, c.vidx, c.area_id,
-         SUM({RAY_CROSS.replace('px', 'c.px').replace('py', 'c.py')
-                        .replace('ex1', 'e.ex1').replace('ey1', 'e.ey1')
-                        .replace('ex2', 'e.ex2').replace('ey2', 'e.ey2')}) AS nc
+         SUM({sql_ray_edge('c.px', 'c.py', *_E_EDGE)}) AS nc
   FROM cand c JOIN edges e ON e.area_id = c.area_id
   GROUP BY c.line_id, c.vidx, c.area_id
 ),
@@ -465,18 +455,15 @@ def q_area_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_AREA_OVERLAP_V = f"""
 {oracle_cte('geo_vareas')},
 geo_vareas_ov AS MATERIALIZED ({_AREAS_OV_SQL}),
-{_EDGES_CTE.strip().replace("geo_vareas", "geo_vareas_ov")},
+{_edges_cte('geo_vareas_ov')},
 {oracle_bbox_cells('edges', 'edgec', 'mnx', 'mxx', 'mny', 'mxy', EDGECELL)},
 crossed AS (
   SELECT DISTINCT a.area_id AS id_a, b.area_id AS id_b
   FROM edgec a JOIN edgec b
     ON a.cellx = b.cellx AND a.celly = b.celly
    AND a.area_id < b.area_id
-  WHERE {sql_proper_cross()
-         .replace('_ax', 'a.ex1').replace('_ay', 'a.ey1')
-         .replace('_bx', 'a.ex2').replace('_by', 'a.ey2')
-         .replace('_cx', 'b.ex1').replace('_cy', 'b.ey1')
-         .replace('_dx', 'b.ex2').replace('_dy', 'b.ey2')}
+  WHERE {sql_proper_cross(seg_cols('a', 'ex1', 'ey1', 'ex2', 'ey2'),
+                          seg_cols('b', 'ex1', 'ey1', 'ex2', 'ey2'))}
 ),
 abbox AS (
   SELECT area_id, MIN(x) AS mnx, MAX(x) AS mxx, MIN(y) AS mny, MAX(y) AS mxy
@@ -497,9 +484,7 @@ cand AS (
 ),
 parity AS (
   SELECT c.probe_id, c.area_id,
-         SUM({RAY_CROSS.replace('px', 'c.px').replace('py', 'c.py')
-                        .replace('ex1', 'e.ex1').replace('ey1', 'e.ey1')
-                        .replace('ex2', 'e.ex2').replace('ey2', 'e.ey2')}) AS nc
+         SUM({sql_ray_edge('c.px', 'c.py', *_E_EDGE)}) AS nc
   FROM cand c JOIN edges e ON e.area_id = c.area_id
   GROUP BY c.probe_id, c.area_id
 ),
@@ -644,7 +629,7 @@ def q_areakink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_AREAKINK = f"""
 {oracle_cte('geo_vareas')},
-{_EDGES_CTE.strip()},
+{_edges_cte()},
 turns AS (
   SELECT a.area_id, a.ring, b.eidx AS vidx,
          a.ex2 - a.ex1 AS ux, a.ey2 - a.ey1 AS uy,

@@ -42,7 +42,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.pip import explode_bbox_cells, sql_ray3, with_point_cell
+from ..operators.pip import (
+    explode_bbox_cells,
+    explode_seg_cells,
+    oracle_point_cell,
+    oracle_seg_cells,
+    sql_ray3,
+    with_point_cell,
+)
 from ..sources.synthetic import oracle_cte
 
 CELL = 0.01
@@ -171,13 +178,16 @@ UNION ALL
 SELECT area_id, 2, x3, y3, x1, y1 FROM geo_areas
 """
 
-#: exact on-segment predicate: zero cross product + bbox membership
-#: (PointOnLineSegment share_linux.h:999 semantics on raw degrees).
-_ON_SEG = (
-    "(bx - ax) * (py - ay) - (by - ay) * (px - ax) = 0"
-    " AND px >= LEAST(ax, bx) AND px <= GREATEST(ax, bx)"
-    " AND py >= LEAST(ay, by) AND py <= GREATEST(ay, by)"
-)
+
+def _on_seg(px="px", py="py", ax="ax", ay="ay", bx="bx", by="by") -> str:
+    """Exact on-segment predicate: zero cross product + bbox membership
+    (PointOnLineSegment share_linux.h:999 semantics on raw degrees)."""
+    return (
+        f"({bx} - {ax}) * ({py} - {ay}) - ({by} - {ay}) * ({px} - {ax}) = 0"
+        f" AND {px} >= LEAST({ax}, {bx}) AND {px} <= GREATEST({ax}, {bx})"
+        f" AND {py} >= LEAST({ay}, {by}) AND {py} <= GREATEST({ay}, {by})"
+    )
+
 
 # both line end nodes with raw coords (for the perimeter refine)
 ENDPTS_SQL = """
@@ -192,17 +202,10 @@ def q_perimeter_connect_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = spark.sql(AREA_EDGES_SQL).localCheckpoint()
     sites = spark.sql(SITES_SQL).localCheckpoint()
 
-    eseg = (
-        edges.withColumn("_mnx", F.least("ax", "bx"))
-        .withColumn("_mxx", F.greatest("ax", "bx"))
-        .withColumn("_mny", F.least("ay", "by"))
-        .withColumn("_mxy", F.greatest("ay", "by"))
-    )
-    ecov = explode_bbox_cells(eseg, "_mnx", "_mxx", "_mny", "_mxy", CELL)
     hits = (
         with_point_cell(endpts, "px", "py", CELL)
-        .join(ecov, "cell")
-        .filter(F.expr(_ON_SEG))
+        .join(explode_seg_cells(edges, CELL), "cell")
+        .filter(F.expr(_on_seg()))
         .select("line_id", "which", "px", "py", "aid")
         .distinct()
         .localCheckpoint()
@@ -277,27 +280,12 @@ ORACLE_PERIM_CONNECT = f"""
 endpts AS MATERIALIZED ({ENDPTS_SQL}),
 edges AS MATERIALIZED ({AREA_EDGES_SQL}),
 sites AS MATERIALIZED ({SITES_SQL}),
-endc AS (
-  SELECT *, CAST(floor(px / {CELL}) AS BIGINT) AS cx,
-            CAST(floor(py / {CELL}) AS BIGINT) AS cy
-  FROM endpts
-),
-edgec AS (
-  SELECT * FROM (
-    SELECT e.*, unnest(generate_series(
-        CAST(floor(LEAST(e.ax, e.bx) / {CELL}) AS BIGINT),
-        CAST(floor(GREATEST(e.ax, e.bx) / {CELL}) AS BIGINT))) AS cx
-    FROM edges e
-  ) ex, LATERAL (
-    SELECT unnest(generate_series(
-        CAST(floor(LEAST(ex.ay, ex.by) / {CELL}) AS BIGINT),
-        CAST(floor(GREATEST(ex.ay, ex.by) / {CELL}) AS BIGINT))) AS cy
-  ) ey
-),
+endc AS (SELECT *, {oracle_point_cell('px', 'py', CELL)} FROM endpts),
+{oracle_seg_cells('edges', 'edgec', CELL)},
 hits AS MATERIALIZED (
   SELECT DISTINCT p.line_id, p.which, p.px, p.py, e.aid
-  FROM endc p JOIN edgec e ON p.cx = e.cx AND p.cy = e.cy
-  WHERE {_ON_SEG.replace('ax', 'e.ax').replace('ay', 'e.ay').replace('bx', 'e.bx').replace('by', 'e.by').replace('px', 'p.px').replace('py', 'p.py')}
+  FROM endc p JOIN edgec e ON p.cellx = e.cellx AND p.celly = e.celly
+  WHERE {_on_seg('p.px', 'p.py', 'e.ax', 'e.ay', 'e.bx', 'e.by')}
 ),
 nodes AS (
   SELECT px, py, aid, COUNT(DISTINCT line_id) AS nl, MIN(line_id) AS lid

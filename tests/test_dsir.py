@@ -22,6 +22,34 @@ def test_log2fp_is_monotone_and_close():
         prev = v
         assert abs(v / 65536 - math.log2(n)) < 0.09
 
+def test_gumbel_jitter_agrees_across_engines(spark):
+    """The DSIR jitter evaluates to the same value in Spark and DuckDB for
+    every BIGINT doc id (the Knuth product once overflowed INT64 from
+    doc_id ~ 3.47e9), and keeps the old hash's value wherever that was
+    computable."""
+    import duckdb
+
+    from geospatial_analysis_integrity_tool_spark.queries.dsirq import GUMBEL_FP
+
+    ids = [0, 1, 987654321, 2**31 - 1, 2_999_999_999, 3 * 10**9, 4 * 10**9, 2**62]
+    spark_vals = dict(
+        spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
+        .selectExpr("doc_id", f"{GUMBEL_FP} AS g")
+        .collect()
+    )
+    con = duckdb.connect()
+    duck_vals = dict(
+        con.sql(
+            f"SELECT doc_id, {GUMBEL_FP} AS g"
+            f" FROM (SELECT unnest({ids}::BIGINT[]) AS doc_id)"
+        ).fetchall()
+    )
+    assert spark_vals == duck_vals
+    for d in ids:
+        if d < 3 * 10**9:
+            assert spark_vals[d] == ((d * 2654435761) % 2**32) % 65536
+
+
 def test_lm_perplexity_invariants(spark):
     """Bigram-LM scores: one row per doc with >= 2 tokens, positive NLL,
     ppl = truncating mean of per-bigram bits."""

@@ -133,13 +133,99 @@ def test_only_pip_builds_band_and_cell_grids():
     assert builders == ["operators/pip.py"]
 
     private = re.compile(
-        r"^def (_banded_\w*|_cellify_sql|_segc_sql|_pk_sql|_cells)\(", re.M
+        r"^def (_banded_\w*|_cellify_sql|_segc_sql|_pk_sql|_cells|_seg_cells|_seg_bbox)\(",
+        re.M,
     )
     assert [
         p.name for p in sorted((pkg / "queries").glob("*.py"))
         if private.search(p.read_text())
     ] == []
+    # vgeomq keeps its own bbox helper: it feeds the benchmarked geo_line_area
+    assert [
+        p.name for p in sorted((pkg / "queries").glob("*.py"))
+        if re.search(r"^def _with_bbox\(", p.read_text(), re.M)
+    ] == ["vgeomq.py"]
     assert "createOrReplaceTempView" not in (pkg / "queries" / "edgematch.py").read_text()
+
+
+def test_geometry_sql_is_never_rewritten():
+    """Geometry SQL is rendered by argument: no module under queries/ or
+    operators/ keeps a substring-rebinding helper or a hand copy of a
+    renderer, and none calls .replace( on SQL text.  The exceptions escape
+    ' in SQL literals and build misc.py's checkpoint path key."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "geospatial_analysis_integrity_tool_spark"
+    files = sorted([*(pkg / "queries").glob("*.py"), *(pkg / "operators").glob("*.py")])
+    rebind = re.compile(r"^def (_sub|_sub_ab|_mat)\(", re.M)
+    copies = re.compile(r"\b(RAY_CROSS|_TRI_RAY|_guarded_xy)\b")
+    quote_escape = re.compile(r"""\.replace\("'", "''"\)""")
+    escapers = {"nunanpoq.py", "modeldomains.py", "mgcpq.py", "conditionspipe.py"}
+    offenders = []
+    for p in files:
+        text = p.read_text()
+        if rebind.search(text) or copies.search(text):
+            offenders.append(p.name)
+        if p.name in escapers:
+            text = quote_escape.sub("", text)
+        if p.name == "misc.py":
+            text = text.replace('.replace("/", "_")', "", 1)
+        if ".replace(" in text:
+            offenders.append(p.name)
+    assert offenders == []
+
+
+def test_renderers_bind_aliased_columns():
+    """The crossing predicate, the intersection point and the ray-edge term
+    rendered over aliased columns (l. / e.) agree row for row with their
+    default-named rendering, over fixed segments that include a crossing, a
+    parallel (zero-denominator) and a collinear pair."""
+    import duckdb
+
+    from geospatial_analysis_integrity_tool_spark.operators.intersections import (
+        seg_cols,
+        sql_intersection_xy,
+        sql_proper_cross,
+    )
+    from geospatial_analysis_integrity_tool_spark.operators.pip import sql_ray_edge
+
+    con = duckdb.connect()
+    con.sql(
+        "CREATE TABLE l AS SELECT * FROM (VALUES (1, 0.0, 0.0, 2.0, 2.0),"
+        " (2, 0.0, 0.0, 2.0, 0.0), (3, 0.5, 0.5, 0.5, 1.5))"
+        " t(id, ax, ay, bx, by)"
+    )
+    con.sql(
+        "CREATE TABLE e AS SELECT * FROM (VALUES (1, 0.0, 2.0, 2.0, 0.0),"
+        " (2, 0.0, 1.0, 2.0, 1.0), (3, 1.0, 0.0, 3.0, 0.0))"
+        " t(id, ax, ay, bx, by)"
+    )
+    le = (seg_cols("l"), seg_cols("e"))
+    ix, iy = sql_intersection_xy(*le)
+    aliased = con.sql(
+        f"SELECT l.id, e.id, {sql_proper_cross(*le)}, {ix}, {iy},"
+        f" {sql_ray_edge('l.ax', 'l.ay', *seg_cols('e'))}"
+        " FROM l, e ORDER BY 1, 2"
+    ).fetchall()
+    ix, iy = sql_intersection_xy()
+    default = con.sql(
+        f"SELECT id_a, id_b, {sql_proper_cross()}, {ix}, {iy},"
+        f" {sql_ray_edge('px', 'py', 'ex1', 'ey1', 'ex2', 'ey2')}"
+        " FROM (SELECT l.id AS id_a, e.id AS id_b,"
+        " l.ax AS _ax, l.ay AS _ay, l.bx AS _bx, l.by AS _by,"
+        " e.ax AS _cx, e.ay AS _cy, e.bx AS _dx, e.by AS _dy,"
+        " l.ax AS px, l.ay AS py, e.ax AS ex1, e.ay AS ey1, e.bx AS ex2, e.by AS ey2"
+        " FROM l, e) ORDER BY 1, 2"
+    ).fetchall()
+    assert aliased == default
+    cross = {(a, b): (c, x, y) for a, b, c, x, y, _ in aliased}
+    assert cross[(1, 1)] == (True, 1.0, 1.0)
+    assert cross[(2, 2)][0] is False  # parallel: guarded denominator, no error
+    assert cross[(2, 3)][0] is False  # collinear overlap is no proper crossing
+    assert cross[(3, 2)][0] is True
+    rays = {(a, b): r for a, b, *_, r in aliased}
+    assert (rays[(3, 1)], rays[(3, 2)]) == (1, 0)  # eastward ray from (0.5, 0.5)
 
 
 def test_proximity_planted(spark):

@@ -57,3 +57,25 @@ def test_last_record_per_cpu_wins(tmp_path):
     p = tmp_path / "log.txt"
     p.write_text(json.dumps(older) + "\n" + json.dumps(LEG8) + "\n")
     assert load_cached_legs([str(p)])[8]["suite_wall_sec"] == 1789.9
+
+
+def test_suite_driver_memory_comes_from_environment(monkeypatch):
+    """The suite takes spark.driver.memory from session.get_spark
+    (SPARK_GRAFT_DRIVER_MEM), like every other entry point: its own
+    extra_conf sets no driver-memory key."""
+    from types import SimpleNamespace
+
+    import run_suite
+
+    from geospatial_analysis_integrity_tool_spark import session
+
+    captured = {}
+
+    def fake_get_spark(app_name, master=None, shuffle_partitions=None, extra_conf=None):
+        captured.update(extra_conf or {})
+        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    run_suite._spark(2)
+    assert captured, "run_suite._spark passed no extra_conf"
+    assert [k for k in captured if "driver.memory" in k] == []

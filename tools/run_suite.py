@@ -42,7 +42,6 @@ def _spark(cpus: int):
         shuffle_partitions=256,
         extra_conf={
             "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
-            "spark.driver.memory": "48g",
             # shuffle/cache blocks live under the repo, not /tmp: a ~30 min
             # leg must survive ambient tmp cleaners (one 32-core leg died to
             # blockmgr files vanishing mid-job)
