@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from ..functions.geodesy import (
     sql_dist_m,
     sql_euclidean_dist,
-    sql_point_seg_dist_m,
     with_point_seg_dist_m,
 )
 from .pip import (

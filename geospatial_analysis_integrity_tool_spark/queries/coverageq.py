@@ -42,7 +42,7 @@ from ..operators.pip import (
     with_point_cell,
 )
 from ..operators.proximity import point_seg_candidates
-from ..sources.synthetic import GEO_VIEWS, oracle_cte, oracle_materialized
+from ..sources.synthetic import GEO_VIEWS, oracle_cte
 from .vgeomq import _area_edges, _edges_cte
 
 PCOVER_TOL_M = 60.0     # PNOCOVERLE: end node must sit within 60 m
@@ -85,7 +85,7 @@ def q_pnocoverle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_PNOCOVERLE = f"""
-{oracle_cte('geo_sites', 'geo_lines')},
+{oracle_cte('geo_sites', 'geo_lines', materialized=True)},
 ends AS (
   SELECT x1 AS ex, y1 AS ey FROM geo_lines
   UNION ALL
@@ -263,7 +263,7 @@ def q_lenocoverl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LENOCOVERL = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 {_ORACLE_ENDS.strip()},
 {oracle_seg_cells('segs', 'segc', _CC)},
 {oracle_kring_cells('ends', 'pk', _CC)},
@@ -313,7 +313,7 @@ def q_nolcovle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_NOLCOVLE = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 {_ORACLE_ENDS.strip()},
 {oracle_seg_cells('segs', 'segc', _CC)},
 {oracle_kring_cells('ends', 'pk', _CC)},
@@ -366,7 +366,7 @@ def q_lnocoverla(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LNOCOVERLA = f"""
-{oracle_cte('geo_lines', 'geo_vareas')},
+{oracle_cte('geo_lines', 'geo_vareas', materialized=True)},
 {_edges_cte(materialized=True)},
 probes AS (
   SELECT line_id, (x1 + x2) * 0.5 AS px, (y1 + y2) * 0.5 AS py FROM geo_lines
@@ -447,7 +447,7 @@ def q_lspanfail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LSPANFAIL = f"""
-{oracle_cte('geo_lines', 'geo_vareas')},
+{oracle_cte('geo_lines', 'geo_vareas', materialized=True)},
 {_edges_cte(materialized=True)},
 {_ORACLE_ENDS.strip()},
 {_ORACLE_END_AREA.strip()},
@@ -476,7 +476,7 @@ def q_lnocov2a(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LNOCOV2A = f"""
-{oracle_cte('geo_lines', 'geo_vareas')},
+{oracle_cte('geo_lines', 'geo_vareas', materialized=True)},
 {_edges_cte(materialized=True)},
 {_ORACLE_ENDS.strip()},
 {_ORACLE_END_AREA.strip()},
@@ -534,7 +534,7 @@ def q_coincidefail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_COINCIDEFAIL = f"""
-WITH geo_lines_dup AS ({GEO_VIEWS['geo_lines_dup']}),
+WITH geo_lines_dup AS MATERIALIZED ({GEO_VIEWS['geo_lines_dup']}),
 targets AS (
   SELECT line_id, {_DUPKEY} AS k FROM geo_lines_dup WHERE line_id < 997
 ),
@@ -571,6 +571,3 @@ ORACLES = {
     "geo_coincidefail": ORACLE_COINCIDEFAIL,
 }
 
-# DuckDB planning explodes when the UNION/CROSS-JOIN fixture views are
-# re-derived per reference (round-2 memory note): materialize them.
-ORACLES = {k: oracle_materialized(v) for k, v in ORACLES.items()}

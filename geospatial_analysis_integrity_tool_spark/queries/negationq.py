@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.intersections import line_intersections, segments_of_vertices, vertices_to_lines
+from ..operators.intersections import line_intersections, vertices_to_lines
 from ..operators.pip import explode_bbox_cells, sql_ray_edge, with_point_cell
 from ..sources.synthetic import GEO_VIEWS, oracle_cte
 from .vgeomq import CELL, ORACLE_LLINT_V, _E_EDGE

@@ -59,7 +59,7 @@ from ..operators.pip import (
 )
 from ..sources.synthetic import oracle_cte
 from .compositionq import POLYS_SQL
-from .intvariants import AREA_EDGES_SQL, POLY_EDGES_SQL
+from .intvariants import AREA_EDGES_SQL, LINE_SEGS_SQL, POLY_EDGES_SQL
 from .vgeomq import _inside_pairs
 
 CELL = 0.01
@@ -424,15 +424,8 @@ FROM nation WHERE n_nationkey % 2 = 0
 
 _IX, _IY = sql_intersection_xy()
 
-LSP_LINE_SEGS_SQL = """
-SELECT line_id AS sid, x1 AS ax, y1 AS ay, x2 AS bx, y2 AS by FROM geo_lines
-UNION ALL
-SELECT line_id, x2, y2, x3, y3 FROM geo_lines
-"""
-
-
 def q_lspint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lsegs = spark.sql(LSP_LINE_SEGS_SQL)
+    lsegs = spark.sql(LINE_SEGS_SQL)
     # materialize the (small) poly layer once: the fixture synthesis CASEs
     # plus the steep predicate inlined 3x per edge branch blow the codegen
     # unit past the JIT limit (132 s -> ~10 s); after the checkpoint the
@@ -501,7 +494,7 @@ _IX_LS, _IY_LS = sql_intersection_xy(*_LS)
 
 ORACLE_LSPINT = f"""
 {oracle_cte('geo_lines')},
-lsegs AS ({LSP_LINE_SEGS_SQL}),
+lsegs AS ({LINE_SEGS_SQL}),
 sedges AS ({STEEP_EDGES_SQL}),
 {oracle_seg_cells('lsegs', 'lc', CELL)},
 {oracle_seg_cells('sedges', 'sc', CELL)},

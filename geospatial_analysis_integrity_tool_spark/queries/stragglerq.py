@@ -49,7 +49,7 @@ from ..operators.pip import (
     with_point_cell,
 )
 from ..operators.proximity import point_to_segment_proximity
-from ..sources.synthetic import oracle_cte, oracle_materialized
+from ..sources.synthetic import oracle_cte
 from .vgeomq import (
     CELL,
     _E_EDGE,
@@ -134,7 +134,7 @@ def q_internalkink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_INTERNALKINK = f"""
-{oracle_cte('geo_vlines')},
+{oracle_cte('geo_vlines', materialized=True)},
 {_ORACLE_TURNS.strip()}
 SELECT line_id, vidx FROM turns
 WHERE {KINK_STRONG} AND vidx >= 2 AND vidx <= n - 3
@@ -165,7 +165,7 @@ def q_context_kink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_CONTEXT_KINK = f"""
-{oracle_cte('geo_vlines')},
+{oracle_cte('geo_vlines', materialized=True)},
 {_ORACLE_TURNS.strip()},
 classed AS (
   SELECT line_id, vidx,
@@ -209,7 +209,7 @@ def q_isoturn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_ISOTURN = f"""
-{oracle_cte('geo_vlines', 'geo_sites')},
+{oracle_cte('geo_vlines', 'geo_sites', materialized=True)},
 {_ORACLE_TURNS.strip()},
 strong AS (SELECT line_id, vidx, px, py FROM turns WHERE {KINK_STRONG})
 SELECT s.line_id, s.vidx FROM strong s
@@ -238,6 +238,10 @@ def q_p_o_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_p_o_loop() -> str:
+    # ORACLE_LOOPS carries its own geo_vlines CTE inside a subquery;
+    # materializing BOTH scopes makes DuckDB hoist them into one query and
+    # fail with "Duplicate alias" — keep this one unmaterialized (it was
+    # already fast)
     from .vgeomq import ORACLE_LOOPS
 
     return f"""
@@ -275,7 +279,7 @@ def q_ptinproper(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_PTINPROPER = f"""
-{oracle_cte('geo_sites', 'geo_vareas')},
+{oracle_cte('geo_sites', 'geo_vareas', materialized=True)},
 {_edges_cte(materialized=True)},
 abbox AS (
   SELECT area_id, MIN(x) AS mnx, MAX(x) AS mxx, MIN(y) AS mny, MAX(y) AS mxy
@@ -356,7 +360,7 @@ def q_polyinarea(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_POLYINAREA = f"""
-{oracle_cte('geo_vareas')},
+{oracle_cte('geo_vareas', materialized=True)},
 geo_vareas_pia AS MATERIALIZED ({_AREAS_PIA_SQL}),
 {_edges_cte('geo_vareas_pia')},
 abbox AS (
@@ -540,7 +544,7 @@ def q_featbridge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_FEATBRIDGE = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 lines_aug AS MATERIALIZED ({_LINES_AUG_SQL}),
 nodes AS MATERIALIZED (
   SELECT line_id, fcode, {_NODE_KEY.format(x='x1', y='y1')} AS node_key FROM lines_aug
@@ -611,7 +615,7 @@ def q_lhang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LHANG = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 ends AS MATERIALIZED (
   SELECT line_id, 0 AS end_which,
          CAST(floor(x1 * 1000000.0) AS BIGINT) AS qx,
@@ -662,7 +666,7 @@ def q_ahang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_AHANG = f"""
-{oracle_cte('geo_vareas')},
+{oracle_cte('geo_vareas', materialized=True)},
 verts AS MATERIALIZED (
   SELECT area_id, ring, vidx,
          CAST(floor(x * 1000000.0) AS BIGINT) AS qx,
@@ -814,12 +818,3 @@ ORACLES = {
     "vvt_1way": _oracle_vvt_1way(),
     "attr_tportrayf": _oracle_tportrayf(),
 }
-
-# DuckDB planning explodes when the UNION/CROSS-JOIN fixture views are
-# re-derived per reference (round-2 memory note): materialize them.
-ORACLES = {k: oracle_materialized(v) for k, v in ORACLES.items()}
-# P_O_LOOP nests ORACLE_LOOPS (which carries its own geo_vlines CTE) inside a
-# subquery; materializing BOTH scopes makes DuckDB hoist them into one query
-# and fail with "Duplicate alias" — keep this one unmaterialized (it was
-# already fast).
-ORACLES["geo_p_o_loop"] = _oracle_p_o_loop()

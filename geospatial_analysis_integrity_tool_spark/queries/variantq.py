@@ -62,7 +62,7 @@ from ..operators.proximity import (
     point_proximity_pairs,
     point_to_segment_proximity,
 )
-from ..sources.synthetic import oracle_cte, oracle_materialized
+from ..sources.synthetic import oracle_cte
 from .coverageq import _line_ends, _line_segs
 
 LLINTAWAY_TOL_M = 40.0
@@ -144,7 +144,7 @@ def q_lliex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LLIEX = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 {_ORACLE_XINGS.strip()}
 SELECT DISTINCT id_a, id_b, seg_a, seg_b
 FROM xings WHERE fcode_a <> fcode_b
@@ -189,7 +189,7 @@ def q_llintaway(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LLINTAWAY = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 {_ORACLE_XINGS.strip()}
 SELECT DISTINCT id_a, id_b, seg_a, seg_b
 FROM xings WHERE {_AWAY_PRED}
@@ -217,7 +217,7 @@ def q_llnoendint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LLNOENDINT = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 {_ORACLE_XINGS.strip()}
 SELECT DISTINCT id_a, id_b, seg_a, seg_b
 FROM xings WHERE {_NOEND_PRED}
@@ -248,7 +248,7 @@ def q_lli_angle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LLI_ANGLE = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 {_ORACLE_XINGS.strip()}
 SELECT DISTINCT id_a, id_b, seg_a, seg_b
 FROM xings WHERE {_ANGLE_PRED}
@@ -295,7 +295,7 @@ def q_featnotcut(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_FEATNOTCUT = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 ends AS MATERIALIZED (
   SELECT line_id * 2 AS pid, line_id, 0 AS end_which, x1 AS px, y1 AS py
   FROM geo_lines
@@ -375,7 +375,7 @@ def q_badfeatcut(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_BADFEATCUT = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 arrivals AS MATERIALIZED ({_ARRIVALS_SQL})
 SELECT DISTINCT a.line_id AS line_a, b.line_id AS line_b
 FROM arrivals a
@@ -411,7 +411,7 @@ def q_laprox(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LAPROX = f"""
-{oracle_cte('geo_lines', 'geo_vareas')},
+{oracle_cte('geo_lines', 'geo_vareas', materialized=True)},
 {{edges_cte}},
 ends AS MATERIALIZED (
   SELECT line_id, x1 AS px, y1 AS py FROM geo_lines
@@ -453,7 +453,7 @@ def q_lvprox(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_LVPROX = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 segs AS MATERIALIZED (
   SELECT line_id, x1 AS ax, y1 AS ay, x2 AS bx, y2 AS by FROM geo_lines
   UNION ALL
@@ -502,7 +502,7 @@ def q_en_en_prox(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_EN_EN_PROX = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 ends AS MATERIALIZED (
   SELECT line_id, x1 AS px, y1 AS py FROM geo_lines
   UNION ALL
@@ -574,7 +574,7 @@ def q_plproxex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_PLPROXEX = f"""
-{oracle_cte('geo_sites', 'geo_lines')},
+{oracle_cte('geo_sites', 'geo_lines', materialized=True)},
 segs AS MATERIALIZED (
   SELECT line_id, x1 AS ax, y1 AS ay, x2 AS bx, y2 AS by FROM geo_lines
   UNION ALL
@@ -665,7 +665,7 @@ def _oracle_pshootl() -> str:
     foot = _foot_case("s.lon", "s.lat", "g.ax", "g.ay", "g.bx", "g.by")
     d = sql_point_seg_dist_m("s.lon", "s.lat", "g.ax", "g.ay", "g.bx", "g.by")
     return f"""
-{oracle_cte('geo_sites', 'geo_lines')},
+{oracle_cte('geo_sites', 'geo_lines', materialized=True)},
 segs AS MATERIALIZED (
   SELECT line_id, x1 AS ax, y1 AS ay, x2 AS bx, y2 AS by FROM geo_lines
   UNION ALL
@@ -711,7 +711,7 @@ def q_bndryundersht(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_BNDRYUNDERSHT = f"""
-{oracle_cte('geo_lines')},
+{oracle_cte('geo_lines', materialized=True)},
 ends AS MATERIALIZED (
   SELECT line_id, 0 AS end_which, x1 AS px, y1 AS py FROM geo_lines
   UNION ALL
@@ -748,7 +748,7 @@ def q_lushtl_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DFD = sql_point_seg_dist_m("a.x3", "a.y3", "b.x1", "b.y1", "b.x2", "b.y2")
 ORACLE_LUSHTL_DF = f"""
-{oracle_cte('geo_lines')}
+{oracle_cte('geo_lines', materialized=True)}
 SELECT a.line_id AS src_id, b.line_id AS tgt_id,
        CAST(floor({_DFD} * 1000.0) AS BIGINT) AS dist_mm
 FROM geo_lines a JOIN geo_lines b
@@ -798,9 +798,6 @@ ORACLES = {
     "geo_lushtl_df": ORACLE_LUSHTL_DF,
 }
 
-# DuckDB planning explodes when the UNION/CROSS-JOIN fixture views are
-# re-derived per reference (round-2 memory note): materialize them.
-ORACLES = {k: oracle_materialized(v) for k, v in ORACLES.items()}
 
 
 # --- geo_loc_multint (LOC_MULTINT 127) ------------------------------------------
@@ -828,10 +825,10 @@ def q_loc_multint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_loc_multint() -> str:
-    from .vgeomq import ORACLE_LLINT_V
+    from .vgeomq import oracle_llint_v
 
     return f"""
-WITH llint AS ({ORACLE_LLINT_V})
+WITH llint AS ({oracle_llint_v(materialized=True)})
 SELECT id_a, id_b, CAST(COUNT(*) AS BIGINT) AS n_crossings
 FROM llint WHERE id_a % 5 = id_b % 5
 GROUP BY 1, 2 HAVING COUNT(*) > 1
@@ -839,4 +836,4 @@ GROUP BY 1, 2 HAVING COUNT(*) > 1
 
 
 QUERIES["geo_loc_multint"] = q_loc_multint
-ORACLES["geo_loc_multint"] = oracle_materialized(_oracle_loc_multint())
+ORACLES["geo_loc_multint"] = _oracle_loc_multint()

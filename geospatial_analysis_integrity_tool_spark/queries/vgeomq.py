@@ -40,7 +40,12 @@ from ..operators.intersections import (
     sql_proper_cross,
     vertices_to_lines,
 )
-from ..operators.pip import explode_bbox_cells, oracle_bbox_cells, sql_ray_edge
+from ..operators.pip import (
+    explode_bbox_cells,
+    explode_seg_cells,
+    oracle_bbox_cells,
+    sql_ray_edge,
+)
 from ..sources.synthetic import oracle_cte
 
 CELL = 0.01
@@ -130,8 +135,11 @@ def q_line_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IX, _IY = sql_intersection_xy()
 
-ORACLE_LLINT_V = f"""
-{oracle_cte('geo_vlines')},
+def oracle_llint_v(materialized: bool = False) -> str:
+    """The geo_line_intersections oracle; ``materialized`` as for
+    :func:`oracle_cte`."""
+    return f"""
+{oracle_cte('geo_vlines', materialized=materialized)},
 {_SEGS_CTE.strip()},
 {oracle_bbox_cells('segs', 'segc', 'mnx', 'mxx', 'mny', 'mxy', SEGCELL)},
 pairs AS (
@@ -151,6 +159,9 @@ SELECT DISTINCT id_a, id_b, seg_a, seg_b,
 FROM pairs
 WHERE {sql_proper_cross()}
 """
+
+
+ORACLE_LLINT_V = oracle_llint_v()
 
 
 # --- geo_loops (LOOPS 108) -----------------------------------------------------
@@ -207,15 +218,6 @@ def _area_edges(spark: SparkSession, view: str = "geo_vareas") -> DataFrame:
     )
 
 
-def _with_bbox(df: DataFrame, xs: tuple[str, str], ys: tuple[str, str]) -> DataFrame:
-    return (
-        df.withColumn("_minx", F.least(*xs))
-        .withColumn("_maxx", F.greatest(*xs))
-        .withColumn("_miny", F.least(*ys))
-        .withColumn("_maxy", F.greatest(*ys))
-    )
-
-
 def _inside_pairs(spark: SparkSession, edges: DataFrame, probes: DataFrame,
                   probe_keys: list[str], view: str = "geo_vareas") -> DataFrame:
     """(probe, area) pairs where the probe point is inside the areal
@@ -259,15 +261,12 @@ def _inside_pairs(spark: SparkSession, edges: DataFrame, probes: DataFrame,
 
 
 def q_line_area(spark: SparkSession, sf_dir: str) -> DataFrame:
-    segs = _with_bbox(
-        segments_of_vertices(spark.table("geo_vlines")), ("sax", "sbx"), ("say", "sby")
-    )
+    segs = segments_of_vertices(spark.table("geo_vlines"))
     edges = _area_edges(spark)
-    ecells = explode_bbox_cells(
-        _with_bbox(edges, ("ex1", "ex2"), ("ey1", "ey2")),
-        "_minx", "_maxx", "_miny", "_maxy", EDGECELL,
-    ).select("cell", "area_id", "ex1", "ey1", "ex2", "ey2")
-    scells = explode_bbox_cells(segs, "_minx", "_maxx", "_miny", "_maxy", EDGECELL).select(
+    ecells = explode_seg_cells(edges, EDGECELL, "ex1", "ey1", "ex2", "ey2").select(
+        "cell", "area_id", "ex1", "ey1", "ex2", "ey2"
+    )
+    scells = explode_seg_cells(segs, EDGECELL, "sax", "say", "sbx", "sby").select(
         "cell", "line_id",
         F.col("sax").alias("_ax"), F.col("say").alias("_ay"),
         F.col("sbx").alias("_bx"), F.col("sby").alias("_by"),
@@ -416,10 +415,7 @@ FROM geo_vareas WHERE area_id % 11 = 0
 def q_area_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(_AREAS_OV_SQL).createOrReplaceTempView("geo_vareas_ov")
     edges = _area_edges(spark, view="geo_vareas_ov")
-    ec = explode_bbox_cells(
-        _with_bbox(edges, ("ex1", "ex2"), ("ey1", "ey2")),
-        "_minx", "_maxx", "_miny", "_maxy", EDGECELL,
-    )
+    ec = explode_seg_cells(edges, EDGECELL, "ex1", "ey1", "ex2", "ey2")
     a = ec.select(
         "cell", F.col("area_id").alias("id_a"),
         F.col("ex1").alias("_ax"), F.col("ey1").alias("_ay"),

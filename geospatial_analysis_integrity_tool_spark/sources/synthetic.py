@@ -362,16 +362,10 @@ def register_geo_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-def oracle_cte(*names: str) -> str:
-    """DuckDB CTE prefix defining the requested geometry views."""
-    parts = [f"{n} AS ({GEO_VIEWS[n]})" for n in names]
+def oracle_cte(*names: str, materialized: bool = False) -> str:
+    """DuckDB CTE prefix defining the requested geometry views;
+    ``materialized`` marks them MATERIALIZED, so DuckDB synthesizes each once
+    instead of inlining it per reference."""
+    kw = "MATERIALIZED " if materialized else ""
+    parts = [f"{n} AS {kw}({GEO_VIEWS[n]})" for n in names]
     return "WITH " + ",\n".join(parts)
-
-
-def oracle_materialized(sql: str) -> str:
-    """Mark the heavy geometry-view CTEs of an oracle MATERIALIZED, so DuckDB
-    synthesizes each once instead of inlining it per reference."""
-    for v in ("geo_lines", "geo_vlines", "geo_vareas", "geo_sites",
-              "geo_lines_dup", "geo_points"):
-        sql = sql.replace(f"{v} AS (", f"{v} AS MATERIALIZED (")
-    return sql

@@ -133,32 +133,28 @@ def test_only_pip_builds_band_and_cell_grids():
     assert builders == ["operators/pip.py"]
 
     private = re.compile(
-        r"^def (_banded_\w*|_cellify_sql|_segc_sql|_pk_sql|_cells|_seg_cells|_seg_bbox)\(",
+        r"^def (_banded_\w*|_cellify_sql|_segc_sql|_pk_sql|_cells|_seg_cells|_seg_bbox"
+        r"|_with_bbox)\(",
         re.M,
     )
     assert [
         p.name for p in sorted((pkg / "queries").glob("*.py"))
         if private.search(p.read_text())
     ] == []
-    # vgeomq keeps its own bbox helper: it feeds the benchmarked geo_line_area
-    assert [
-        p.name for p in sorted((pkg / "queries").glob("*.py"))
-        if re.search(r"^def _with_bbox\(", p.read_text(), re.M)
-    ] == ["vgeomq.py"]
     assert "createOrReplaceTempView" not in (pkg / "queries" / "edgematch.py").read_text()
 
 
 def test_geometry_sql_is_never_rewritten():
-    """Geometry SQL is rendered by argument: no module under queries/ or
-    operators/ keeps a substring-rebinding helper or a hand copy of a
+    """Geometry SQL is rendered by argument: no module under queries/,
+    operators/ or sources/ keeps a substring-rebinding helper or a hand copy of a
     renderer, and none calls .replace( on SQL text.  The exceptions escape
     ' in SQL literals and build misc.py's checkpoint path key."""
     import re
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "geospatial_analysis_integrity_tool_spark"
-    files = sorted([*(pkg / "queries").glob("*.py"), *(pkg / "operators").glob("*.py")])
-    rebind = re.compile(r"^def (_sub|_sub_ab|_mat)\(", re.M)
+    files = sorted(p for d in ("queries", "operators", "sources") for p in (pkg / d).glob("*.py"))
+    rebind = re.compile(r"^def (_sub|_sub_ab|_mat|oracle_materialized)\(", re.M)
     copies = re.compile(r"\b(RAY_CROSS|_TRI_RAY|_guarded_xy)\b")
     quote_escape = re.compile(r"""\.replace\("'", "''"\)""")
     escapers = {"nunanpoq.py", "modeldomains.py", "mgcpq.py", "conditionspipe.py"}

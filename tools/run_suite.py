@@ -10,6 +10,12 @@ evidenced the only way a single-box sandbox can).
     python tools/run_suite.py run 8        # one timed run -> JSON line
     python tools/run_suite.py main         # 8 + 32, hash assert, report
 
+The driver heap comes from ``SPARK_GRAFT_DRIVER_MEM`` (default 8g, as for
+every entry point).  The sf1 legs were run at 48g and ran out of memory
+there once, so set it for them:
+
+    SPARK_GRAFT_DRIVER_MEM=48g python tools/run_suite.py main
+
 features/s denominator: the geo feature layers the suite inspects (points,
 lines, areas, sites, zones) plus attr/metadata rows — counted untimed.
 """
