@@ -39,32 +39,25 @@ CONDITION_COLUMNS = [
 ]
 
 
-def consolidate(
-    conditions: DataFrame,
-    order_keys: list[str] = ("magnitude_mm", "sedrisid"),
-    dedup_keys: list[str] | None = None,
-) -> DataFrame:
+def consolidate(conditions: DataFrame) -> DataFrame:
     """Dedup + deterministic ordinal numbering (errors.c:12480 semantics).
 
-    dedup_keys default: the full condition identity minus cond_num — exact
-    duplicate drop, like DC_FreadFwrite* over re-read per-check files.
+    The dedup key is the full condition identity minus cond_num — exact
+    duplicate drop, like DC_FreadFwrite* over re-read per-check files; the
+    numbering order within (errtype, instance) is (magnitude_mm, sedrisid).
     """
-    if dedup_keys is None:
-        dedup_keys = [c for c in conditions.columns if c != "cond_num"]
-    deduped = conditions.dropDuplicates(dedup_keys)
-    w = (
-        Window.partitionBy("errtype", "instance")
-        .orderBy(*[F.col(k).asc() for k in order_keys])
+    deduped = conditions.dropDuplicates(
+        [c for c in conditions.columns if c != "cond_num"]
+    )
+    w = Window.partitionBy("errtype", "instance").orderBy(
+        F.col("magnitude_mm").asc(), F.col("sedrisid").asc()
     )
     return deduped.withColumn("cond_num", F.row_number().over(w).cast("bigint"))
 
 
 def consolidate_scalable(
     conditions: DataFrame,
-    cell_col: str = "cell",
     order_keys: list[str] = ("magnitude_mm", "sedrisid"),
-    dedup_keys: list[str] | None = None,
-    dedup: bool = True,
     number_within: tuple[str, ...] = ("errtype", "instance"),
 ) -> DataFrame:
     """Scale-safe ordinal numbering: two-phase (per-cell rank + cell offsets).
@@ -83,37 +76,31 @@ def consolidate_scalable(
     report 1..N.  Only the running sum over the tiny counts table sees that
     partitioning, never the conditions themselves.
 
-    The (deduped) input is materialized once (``localCheckpoint``, eager)
-    and both the rank window and the counts read that one frame, so the
-    input plan — a whole suite's union of check families — runs once, not
-    once per consumer.
+    The input carries a ``cell`` column and no duplicate conditions (every
+    caller's families are distinct by construction, so no dedup shuffle
+    runs).  It is materialized once (``localCheckpoint``, eager) and both
+    the rank window and the counts read that one frame, so the input plan —
+    a whole suite's union of check families — runs once, not once per
+    consumer.
     """
-    if dedup:
-        if dedup_keys is None:
-            dedup_keys = [c for c in conditions.columns if c != "cond_num"]
-        deduped = conditions.dropDuplicates(dedup_keys)
-    else:
-        # caller guarantees uniqueness (no tile-overlap duplication upstream):
-        # skips one full shuffle of the condition set
-        deduped = conditions
-    frame = deduped.localCheckpoint(eager=True)
-    w_local = Window.partitionBy("errtype", "instance", cell_col).orderBy(
+    frame = conditions.localCheckpoint(eager=True)
+    w_local = Window.partitionBy("errtype", "instance", "cell").orderBy(
         *[F.col(k).asc() for k in order_keys]
     )
     local = frame.withColumn("_rk", F.row_number().over(w_local))
-    counts = frame.groupBy("errtype", "instance", cell_col).agg(
+    counts = frame.groupBy("errtype", "instance", "cell").agg(
         F.count("*").alias("_n")
     )
     w_off = (
         Window.partitionBy(*number_within)
-        .orderBy(*[F.col(k).asc() for k in ("errtype", "instance", cell_col)])
+        .orderBy("errtype", "instance", "cell")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = counts.withColumn(
         "_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
     ).drop("_n")
     return (
-        local.join(F.broadcast(offsets), ["errtype", "instance", cell_col])
+        local.join(F.broadcast(offsets), ["errtype", "instance", "cell"])
         .withColumn("cond_num", (F.col("_off") + F.col("_rk")).cast("bigint"))
         .drop("_rk", "_off")
     )

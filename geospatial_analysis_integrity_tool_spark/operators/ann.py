@@ -30,6 +30,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+#: bound on the collected query side: it is broadcast whole, and each Arrow
+#: batch forms a (batch x queries) cosine matrix, so a larger query set is
+#: refused instead of collected
+MAX_QUERY_ROWS = 10_000
+
+
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str) -> pd.DataFrame:
+    """The query side as pandas, at most MAX_QUERY_ROWS rows (one job)."""
+    qpd = queries.select(id_col, vec_col).limit(MAX_QUERY_ROWS + 1).toPandas()
+    if len(qpd) > MAX_QUERY_ROWS:
+        raise ValueError(
+            f"ANN query side has more than MAX_QUERY_ROWS = {MAX_QUERY_ROWS} rows;"
+            " it is collected and broadcast whole"
+        )
+    return qpd
+
+
 def _normalize(mat: np.ndarray) -> np.ndarray:
     norms = np.sqrt((mat * mat).sum(axis=1, keepdims=True))
     norms[norms == 0.0] = 1.0
@@ -49,7 +66,7 @@ def cosine_topk(
     descending, ties broken by neighbor id ascending.
     """
     spark = emb.sparkSession
-    qpd = queries.select(id_col, vec_col).toPandas()
+    qpd = _collect_queries(queries, id_col, vec_col)
     q_ids = qpd[id_col].to_numpy()
     Q = _normalize(np.stack(qpd[vec_col].to_numpy()).astype(np.float64))
     bq = spark.sparkContext.broadcast((q_ids, Q))
@@ -123,7 +140,7 @@ def cosine_topk_ivf(
         .toPandas()
     )
     C = _normalize(np.stack(cpd[vec_col].to_numpy()).astype(np.float64))
-    qpd = queries.select(id_col, vec_col).toPandas()
+    qpd = _collect_queries(queries, id_col, vec_col)
     q_ids = qpd[id_col].to_numpy()
     Q = _normalize(np.stack(qpd[vec_col].to_numpy()).astype(np.float64))
     # query -> probed buckets (driver-side, tiny)

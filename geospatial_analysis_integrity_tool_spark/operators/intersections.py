@@ -10,10 +10,15 @@ vertex arrays.  Lines arrive as ``(id, xs: array<double>, ys: array<double>)``
 rows; segments come from JVM-side ``slice`` + ``arrays_zip`` + ``posexplode``
 — no UDF, no fixed vertex count.
 
-Spark-native shape: explode lines into segments, cell-join on segment bbox
-cover, then the orientation tests run as **pure column expressions**
-(whole-stage codegen) — the same arithmetic text the DuckDB oracle evaluates,
-so the crossing decision and the reported intersection point are bit-identical.
+Spark-native shape: explode lines into segments, then ``crossing_pairs`` —
+the one segment-crossing join every cell crossing check uses — covers both
+segment sets with ``explode_seg_cells``, equi-joins on ``cell``, keeps the
+bbox-overlapping pairs and filters on the orientation tests.  Those run as
+**pure column expressions** (whole-stage codegen) — the same arithmetic text
+the DuckDB oracle evaluates, so the crossing decision and the reported
+intersection point are bit-identical.  ``segment_crossings`` (the crossing
+segment pairs) runs it over lines' segments with the long segments split
+off; ``segment_intersections`` projects its pairs onto the crossing points.
 That text is rendered once per call site as a function of the two segments'
 columns: ``sql_proper_cross(s1, s2)`` / ``sql_intersection_xy(s1, s2)``
 default to the join frames' ``SEG_A`` / ``SEG_B`` columns, and each oracle
@@ -28,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pip import explode_bbox_cells
+from .pip import explode_seg_cells
 
 
 def _d(ax, ay, bx, by, px, py) -> str:
@@ -172,67 +177,100 @@ def segments_of_vertices(
     )
 
 
-def _left_side(df):
-    # column names match sql_proper_cross: segment A = (_ax,_ay)-(_bx,_by)
-    return df.select(
-        F.col("line_id").alias("id_a"),
-        F.col("seg_idx").alias("seg_a"),
-        F.col("sax").alias("_ax"),
-        F.col("say").alias("_ay"),
-        F.col("sbx").alias("_bx"),
-        F.col("sby").alias("_by"),
-        F.least("sax", "sbx").alias("_minx"),
-        F.greatest("sax", "sbx").alias("_maxx"),
-        F.least("say", "sby").alias("_miny"),
-        F.greatest("say", "sby").alias("_maxy"),
-    )
-
-
-def _right_side(df):
-    # segment B = (_cx,_cy)-(_dx,_dy)
-    return df.select(
-        F.col("line_id").alias("id_b"),
-        F.col("seg_idx").alias("seg_b"),
-        F.col("sax").alias("_cx"),
-        F.col("say").alias("_cy"),
-        F.col("sbx").alias("_dx"),
-        F.col("sby").alias("_dy"),
-        F.least("sax", "sbx").alias("_minx2"),
-        F.greatest("sax", "sbx").alias("_maxx2"),
-        F.least("say", "sby").alias("_miny2"),
-        F.greatest("say", "sby").alias("_maxy2"),
-    )
+def _renamed(df: DataFrame, seg, names) -> DataFrame:
+    """``df`` with its segment columns ``seg`` renamed to ``names``."""
+    keep = [c for c in df.columns if c not in seg]
+    return df.select(*keep, *[F.col(c).alias(n) for c, n in zip(seg, names)])
 
 
 def _bbox_overlap():
+    """Bboxes of the segments SEG_A and SEG_B overlap (computed from the
+    coordinates, so no bbox column travels through the join's shuffle)."""
+    ax, ay, bx, by = SEG_A
+    cx, cy, dx, dy = SEG_B
     return (
-        (F.col("_minx") <= F.col("_maxx2"))
-        & (F.col("_maxx") >= F.col("_minx2"))
-        & (F.col("_miny") <= F.col("_maxy2"))
-        & (F.col("_maxy") >= F.col("_miny2"))
+        (F.least(ax, bx) <= F.greatest(cx, dx))
+        & (F.greatest(ax, bx) >= F.least(cx, dx))
+        & (F.least(ay, by) <= F.greatest(cy, dy))
+        & (F.greatest(ay, by) >= F.least(cy, dy))
     )
 
 
-def segment_intersections(
-    segs: DataFrame,
-    cell_deg: float = 0.01,
-    long_cells_cutoff: int = 4,
+def crossing_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    cell_deg: float,
+    a_seg=("ax", "ay", "bx", "by"),
+    b_seg=("ax", "ay", "bx", "by"),
 ) -> DataFrame:
-    """Proper crossings between segments of DIFFERENT lines.
+    """Properly crossing segment pairs of ``a`` x ``b`` — the one cell
+    crossing join.
 
-    Input: segments from :func:`segments_of_lines`.  Returns (id_a, id_b,
-    seg_a, seg_b, ix_udeg, iy_udeg): ids ordered, and the intersection point
-    in integer micro-degrees (floor) as the annotation.
+    ``a``'s segment columns ``a_seg`` become ``SEG_A`` and ``b``'s ``b_seg``
+    become ``SEG_B``, so :func:`sql_proper_cross` and
+    :func:`sql_intersection_xy` apply to the output with their defaults.
+    Each side is covered by ``explode_seg_cells`` and the two are equi-joined
+    on ``cell``; the bbox-overlapping pairs are kept, then the properly
+    crossing ones.  Every other column of both sides is carried (callers
+    rename clashing ids).  One row per (pair, shared cell): callers
+    deduplicate and add their own id-order filters, which Catalyst pushes
+    into the join condition.
+    """
+    ac = explode_seg_cells(_renamed(a, a_seg, SEG_A), cell_deg, *SEG_A)
+    bc = explode_seg_cells(_renamed(b, b_seg, SEG_B), cell_deg, *SEG_B, suffix="2")
+    return (
+        ac.drop("_mnx", "_mxx", "_mny", "_mxy")
+        .join(bc.drop("_mnx2", "_mxx2", "_mny2", "_mxy2"), "cell")
+        .filter(_bbox_overlap())
+        .filter(F.expr(sql_proper_cross()))
+        .drop("cell")
+    )
+
+
+#: the segment columns of :func:`segments_of_lines` / :func:`segments_of_vertices`
+_SEG = ("sax", "say", "sbx", "sby")
+
+#: segments covering more cells than this are "long" (see segment_crossings)
+LONG_CELLS = 4
+
+
+def _ordered(df: DataFrame, pairs) -> DataFrame:
+    """``df`` with the columns of each (a, b) pair swapped where id_a > id_b."""
+    swap = F.col("id_a") > F.col("id_b")
+    other = {a: b for a, b in pairs} | {b: a for a, b in pairs}
+    return df.select(
+        *[
+            F.when(swap, F.col(other[c])).otherwise(F.col(c)).alias(c) if c in other else c
+            for c in df.columns
+        ]
+    )
+
+
+def segment_crossings(segs: DataFrame, cell_deg: float) -> DataFrame:
+    """Proper crossings between segments of DIFFERENT lines, with the
+    segments themselves.
+
+    Input: segments from :func:`segments_of_lines`, plus any other columns.
+    One row per crossing pair, id_a < id_b: line_id -> id_a / id_b, seg_idx
+    -> seg_a / seg_b, the two segments as SEG_A / SEG_B and every other
+    column c of ``segs`` as c_a / c_b.
 
     Giant-feature skew handling (GAIT's AreaSizeCutoff special path,
     TT.c:44196, per SCALE.md): segments covering more than
-    ``long_cells_cutoff`` cells would pair with everything along their path
+    ``LONG_CELLS`` cells would pair with everything along their path
     and blow the cell join up quadratically (measured 930M candidates at
-    sf0.1).  They are split off: short x short runs the normal cell join;
-    long x short joins the exploded long covers against short cells; and
+    sf0.1).  They are split off: short x short runs the normal cell join
+    with id_a < id_b; long x short joins the exploded long covers against
+    short cells in any id order, and its pairs are ordered afterwards; and
     long x long — a tiny set by construction — runs as a broadcast
     bbox-predicate join.
     """
+    renamed = {"line_id": "id", "seg_idx": "seg"}
+    cols = [c for c in segs.columns if c not in _SEG]
+
+    def side(df, s):
+        return df.select(*[F.col(c).alias(f"{renamed.get(c, c)}_{s}") for c in cols], *_SEG)
+
     segs = segs.withColumn(
         "_ncells",
         (
@@ -248,64 +286,47 @@ def segment_intersections(
     # persisted — the upstream is codegen arithmetic (cheaper than block
     # serialization + memory pressure).  Re-evaluate only if the input comes
     # from an expensive non-columnar source.
-    short = segs.filter(F.col("_ncells") <= long_cells_cutoff)
-    long = segs.filter(F.col("_ncells") > long_cells_cutoff)
-
-    def lcells(df):
-        return explode_bbox_cells(df, "_minx", "_maxx", "_miny", "_maxy", cell_deg)
-
-    def rcells(df):
-        return explode_bbox_cells(df, "_minx2", "_maxx2", "_miny2", "_maxy2", cell_deg)
-
-    # short x short: plain cell join, ordered ids
-    ss = (
-        lcells(_left_side(short))
-        .join(rcells(_right_side(short)), "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(_bbox_overlap())
+    short = segs.filter(F.col("_ncells") <= LONG_CELLS)
+    long = segs.filter(F.col("_ncells") > LONG_CELLS)
+    ss = crossing_pairs(side(short, "a"), side(short, "b"), cell_deg, _SEG, _SEG).filter(
+        F.col("id_a") < F.col("id_b")
     )
-    # long x short: long covers exploded against short cells; any id order
-    ls = (
-        lcells(_left_side(long))
-        .join(rcells(_right_side(short)), "cell")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .filter(_bbox_overlap())
+    ls = crossing_pairs(side(long, "a"), side(short, "b"), cell_deg, _SEG, _SEG).filter(
+        F.col("id_a") != F.col("id_b")
     )
-    # long x long: tiny side — broadcast bbox join, no cells
     ll = (
-        _left_side(long)
-        .join(F.broadcast(_right_side(long)), F.col("id_a") < F.col("id_b"))
+        _renamed(side(long, "a"), _SEG, SEG_A)
+        .join(
+            F.broadcast(_renamed(side(long, "b"), _SEG, SEG_B)),
+            F.col("id_a") < F.col("id_b"),
+        )
         .filter(_bbox_overlap())
+        .filter(F.expr(sql_proper_cross()))
+    )
+    pairs = [(c, c[:-1] + "b") for c in ss.columns if c.endswith("_a")]
+    return (
+        ss.unionByName(_ordered(ls, pairs + list(zip(SEG_A, SEG_B))))
+        .unionByName(ll)
+        .dropDuplicates(["id_a", "id_b", "seg_a", "seg_b"])
     )
 
-    def finish(pairs, normalize_order: bool):
-        crossed = pairs.filter(F.expr(sql_proper_cross()))
-        ix, iy = sql_intersection_xy()
-        out = crossed.select(
-            "id_a",
-            "id_b",
-            "seg_a",
-            "seg_b",
-            F.expr(f"CAST(floor({ix} * 1000000.0) AS BIGINT)").alias("ix_udeg"),
-            F.expr(f"CAST(floor({iy} * 1000000.0) AS BIGINT)").alias("iy_udeg"),
-        )
-        if normalize_order:
-            swap = F.col("id_a") > F.col("id_b")
-            out = out.select(
-                F.when(swap, F.col("id_b")).otherwise(F.col("id_a")).alias("id_a"),
-                F.when(swap, F.col("id_a")).otherwise(F.col("id_b")).alias("id_b"),
-                F.when(swap, F.col("seg_b")).otherwise(F.col("seg_a")).alias("seg_a"),
-                F.when(swap, F.col("seg_a")).otherwise(F.col("seg_b")).alias("seg_b"),
-                "ix_udeg",
-                "iy_udeg",
-            )
-        return out
 
-    return (
-        finish(ss, False)
-        .unionByName(finish(ls, True))
-        .unionByName(finish(ll, False))
-        .dropDuplicates(["id_a", "id_b", "seg_a", "seg_b"])
+def segment_intersections(segs: DataFrame, cell_deg: float = 0.01) -> DataFrame:
+    """Proper crossings between segments of DIFFERENT lines (see
+    :func:`segment_crossings`).
+
+    Input: segments from :func:`segments_of_lines`.  Returns (id_a, id_b,
+    seg_a, seg_b, ix_udeg, iy_udeg): ids ordered, and the intersection point
+    in integer micro-degrees (floor) as the annotation.
+    """
+    ix, iy = sql_intersection_xy()
+    return segment_crossings(segs.select("line_id", "seg_idx", *_SEG), cell_deg).select(
+        "id_a",
+        "id_b",
+        "seg_a",
+        "seg_b",
+        F.expr(f"CAST(floor({ix} * 1000000.0) AS BIGINT)").alias("ix_udeg"),
+        F.expr(f"CAST(floor({iy} * 1000000.0) AS BIGINT)").alias("iy_udeg"),
     )
 
 
@@ -313,11 +334,10 @@ def line_intersections(
     lines: DataFrame,
     id_col: str = "line_id",
     cell_deg: float = 0.01,
-    long_cells_cutoff: int = 4,
 ) -> DataFrame:
     """Proper crossings between segments of different array-form lines."""
     segs = segments_of_lines(lines, id_col)
-    return segment_intersections(segs, cell_deg, long_cells_cutoff)
+    return segment_intersections(segs, cell_deg)
 
 
 def self_intersections(lines: DataFrame, id_col: str = "line_id") -> DataFrame:

@@ -11,7 +11,8 @@ refines exactly.  This module owns one implementation of each step:
 * ``with_point_cell`` puts a point in its single cell;
 * ``with_kring_cells`` copies a point into its 3x3 k-ring;
 * ``explode_bbox_cells`` copies a feature into every cell its bbox covers,
-  and ``explode_seg_cells`` does so for a segment;
+  and ``explode_seg_cells`` / ``explode_tri_cells`` do so for a segment /
+  a triangle;
 * ``band_join`` is the 1-D k-ring: a join on adjacent bands of one
   along-boundary coordinate (the edge-match checks);
 * ``cell_deg_for_tolerance`` sizes the cell so a k=1 ring captures every
@@ -167,6 +168,20 @@ def explode_seg_cells(
         .withColumn(mxy, F.greatest(ay, by))
     )
     return explode_bbox_cells(df, mnx, mxx, mny, mxy, cell_deg)
+
+
+def explode_tri_cells(df: DataFrame, cell_deg: float) -> DataFrame:
+    """:func:`explode_bbox_cells` of the triangles (x1, y1)-(x2, y2)-(x3, y3)
+    of ``df``, whose bbox is added as the columns _mnx, _mxx, _mny, _mxy."""
+    df = df.withColumns(
+        {
+            "_mnx": F.least("x1", "x2", "x3"),
+            "_mxx": F.greatest("x1", "x2", "x3"),
+            "_mny": F.least("y1", "y2", "y3"),
+            "_mxy": F.greatest("y1", "y2", "y3"),
+        }
+    )
+    return explode_bbox_cells(df, "_mnx", "_mxx", "_mny", "_mxy", cell_deg)
 
 
 def with_kring_cells(df: DataFrame, lon: str, lat: str, cell_deg: float) -> DataFrame:

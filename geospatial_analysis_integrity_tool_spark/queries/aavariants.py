@@ -34,7 +34,8 @@ shared edge; same fcode on the %18 residue), every 21st an overlapping copy
 shifted +w/4 east.  Organic co-located lattice triangles contribute
 additional generic pairs.  Engine shapes: vertex-cell x area-bbox-cover
 parity joins, quantized canonical-edge groupBy (the coverage2 edge-hash
-pattern), and the explode_bbox_cells crossing join.
+pattern), and the cell crossing join
+(``operators/intersections.crossing_pairs``).
 """
 
 from __future__ import annotations
@@ -42,10 +43,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.intersections import SEG_A, SEG_B, sql_proper_cross
+from ..operators.intersections import crossing_pairs, sql_proper_cross
 from ..operators.pip import (
-    explode_bbox_cells,
-    explode_seg_cells,
+    explode_tri_cells,
     oracle_bbox_cells,
     oracle_point_cell,
     oracle_seg_cells,
@@ -89,13 +89,8 @@ def q_area_cover_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     verts = kids.selectExpr(
         "kid", "stack(3, kx1, ky1, kx2, ky2, kx3, ky3) AS (vx, vy)"
     )
-    acov = explode_bbox_cells(
-        areas.selectExpr("area_id AS aid", "x1", "y1", "x2", "y2", "x3", "y3")
-        .withColumn("_mnx", F.expr("LEAST(x1, x2, x3)"))
-        .withColumn("_mxx", F.expr("GREATEST(x1, x2, x3)"))
-        .withColumn("_mny", F.expr("LEAST(y1, y2, y3)"))
-        .withColumn("_mxy", F.expr("GREATEST(y1, y2, y3)")),
-        "_mnx", "_mxx", "_mny", "_mxy", CELL,
+    acov = explode_tri_cells(
+        areas.selectExpr("area_id AS aid", "x1", "y1", "x2", "y2", "x3", "y3"), CELL
     )
     covered = (
         with_point_cell(verts, "vx", "vy", CELL)
@@ -250,31 +245,21 @@ def q_area_share_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # PART_ISF: properly-crossing edge pair AND a vertex of one inside the other
-    lseg = edges.selectExpr(
-        "aid AS id1", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by")
-    rseg = edges.selectExpr(
-        "aid AS id2", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy")
+    segs = edges.select("aid", "ax", "ay", "bx", "by")
     xpairs = (
-        explode_seg_cells(lseg, CELL, *SEG_A)
-        .join(explode_seg_cells(rseg, CELL, *SEG_B, suffix="2"), "cell")
-        .filter(F.col("id1") < F.col("id2"))
-        .filter(
-            (F.col("_mnx") <= F.col("_mxx2")) & (F.col("_mxx") >= F.col("_mnx2"))
-            & (F.col("_mny") <= F.col("_mxy2")) & (F.col("_mxy") >= F.col("_mny2"))
+        crossing_pairs(
+            segs.withColumnRenamed("aid", "id1"),
+            segs.withColumnRenamed("aid", "id2"),
+            CELL,
         )
-        .filter(F.expr(sql_proper_cross()))
+        .filter(F.col("id1") < F.col("id2"))
         .select("id1", "id2")
         .distinct()
     )
     # vertex-of-one-inside-the-other pairs over the aug set
     avert = aug.selectExpr("aid AS vid", "stack(3, x1, y1, x2, y2, x3, y3) AS (vx, vy)")
-    acov = explode_bbox_cells(
-        aug.selectExpr("aid", "x1", "y1", "x2", "y2", "x3", "y3")
-        .withColumn("_mnx", F.expr("LEAST(x1, x2, x3)"))
-        .withColumn("_mxx", F.expr("GREATEST(x1, x2, x3)"))
-        .withColumn("_mny", F.expr("LEAST(y1, y2, y3)"))
-        .withColumn("_mxy", F.expr("GREATEST(y1, y2, y3)")),
-        "_mnx", "_mxx", "_mny", "_mxy", CELL,
+    acov = explode_tri_cells(
+        aug.selectExpr("aid", "x1", "y1", "x2", "y2", "x3", "y3"), CELL
     )
     vin = (
         with_point_cell(avert, "vx", "vy", CELL)

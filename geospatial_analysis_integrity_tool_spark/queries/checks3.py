@@ -24,20 +24,13 @@ from ..conditions import consolidate_scalable
 from ..operators.checks_single import single_feature_checks
 from ..operators.pip import pip_join, sql_in_triangle
 from ..sources.synthetic import geo_zone_rings, oracle_cte
-from .conditionspipe import TOL, _CELL
+from .conditionspipe import TOL, _CELL, feature_frame
 
 # --- conditions_pipeline_scalable ---------------------------------------------
 
 
 def q_conditions_pipeline_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lines = spark.table("geo_lines").selectExpr(
-        "line_id * 10 + 2 AS feature_id",
-        "fcode",
-        "CAST(2 AS INT) AS geom_type",
-        "array(x1, x2, x3) AS xs",
-        "array(y1, y2, y3) AS ys",
-        f"{_CELL} AS cell",
-    )
+    lines = feature_frame(spark, "geo_lines", "line_id", 2)
     conds = single_feature_checks(lines, TOL)
     cells = lines.select("feature_id", "cell")
     conds = conds.join(cells, "feature_id").select(
@@ -49,7 +42,7 @@ def q_conditions_pipeline_scalable(spark: SparkSession, sf_dir: str) -> DataFram
         "cell",
     )
     return consolidate_scalable(
-        conds, cell_col="cell", order_keys=["magnitude_mm", "sedrisid"], dedup=False
+        conds, order_keys=["magnitude_mm", "sedrisid"]
     ).select("errtype", "instance", "cond_num", "magnitude_mm", "sedrisid", "cell")
 
 

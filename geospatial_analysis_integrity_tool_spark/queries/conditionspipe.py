@@ -24,24 +24,23 @@ TOL = SingleFeatureTolerances()
 _CELL = "(CAST(floor(x1 * 10.0) AS BIGINT) + 2000) * 10000 + CAST(floor(y1 * 10.0) AS BIGINT) + 2000"
 
 
+def feature_frame(spark: SparkSession, view: str, id_col: str, geom_type: int) -> DataFrame:
+    """The 3-vertex features of ``view`` as single-feature check input:
+    (feature_id = id * 10 + geom_type, fcode, geom_type, xs, ys, cell)."""
+    return spark.table(view).selectExpr(
+        f"{id_col} * 10 + {geom_type} AS feature_id",
+        "fcode",
+        f"CAST({geom_type} AS INT) AS geom_type",
+        "array(x1, x2, x3) AS xs",
+        "array(y1, y2, y3) AS ys",
+        f"{_CELL} AS cell",
+    )
+
+
 def q_conditions_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lines = spark.table("geo_lines").selectExpr(
-        "line_id * 10 + 2 AS feature_id",
-        "fcode",
-        "CAST(2 AS INT) AS geom_type",
-        "array(x1, x2, x3) AS xs",
-        "array(y1, y2, y3) AS ys",
-        f"{_CELL} AS cell",
+    features = feature_frame(spark, "geo_lines", "line_id", 2).unionByName(
+        feature_frame(spark, "geo_areas", "area_id", 3)
     )
-    areas = spark.table("geo_areas").selectExpr(
-        "area_id * 10 + 3 AS feature_id",
-        "fcode",
-        "CAST(3 AS INT) AS geom_type",
-        "array(x1, x2, x3) AS xs",
-        "array(y1, y2, y3) AS ys",
-        f"{_CELL} AS cell",
-    )
-    features = lines.unionByName(areas)
     conds = single_feature_checks(features, TOL)
     cells = features.select("feature_id", "cell")
     conds = (
@@ -57,7 +56,7 @@ def q_conditions_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell",
         )
     )
-    return consolidate(conds, order_keys=["magnitude_mm", "sedrisid"])
+    return consolidate(conds)
 
 
 def _line_stats() -> str:

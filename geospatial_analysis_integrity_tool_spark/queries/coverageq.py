@@ -142,15 +142,15 @@ def _line_ends(lines: DataFrame) -> DataFrame:
     )
 
 
-def _line_segs(lines: DataFrame) -> DataFrame:
-    """(line_id, seg_which 1|2, ax, ay, bx, by) — single-scan inline()
+def _line_segs(lines: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(line_id, *carry, seg_which 1|2, ax, ay, bx, by) — single-scan inline()
     Generate for the same anti-join-pushdown reason as _line_ends."""
     return lines.selectExpr(
-        "line_id",
+        "line_id", *carry,
         "inline(array("
         "named_struct('seg_which', 1, 'ax', x1, 'ay', y1, 'bx', x2, 'by', y2),"
         " named_struct('seg_which', 2, 'ax', x2, 'ay', y2, 'bx', x3, 'by', y3)))",
-    ).select("line_id", "seg_which", "ax", "ay", "bx", "by")
+    ).select("line_id", *carry, "seg_which", "ax", "ay", "bx", "by")
 
 
 _ORACLE_ENDS = """

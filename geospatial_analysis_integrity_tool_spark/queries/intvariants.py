@@ -43,8 +43,9 @@ overlap segment that shares no node.  All arithmetic is integer-modulo ->
 exact-literal division so both engines agree bitwise.
 
 Engine shapes: per-feature equi-join for the cutout-vs-own-ring test
-(intrinsically same-feature), codegen cell joins (explode_seg_cells +
-proper-cross) for every cross-feature crossing, k-ring point joins for the
+(intrinsically same-feature), the cell crossing join
+(``operators/intersections.crossing_pairs``) for every cross-feature
+crossing, k-ring point joins for the
 exception suppression — no UDFs.  DuckDB oracles use the same 0.01-deg
 cell equi-key for self-joins (IEJoin avoidance + speed, see
 queries/coverageq.py).
@@ -57,7 +58,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.geodesy import sql_coslat_poly, sql_dist_m
-from ..operators.intersections import seg_cols, sql_intersection_xy, sql_proper_cross
+from ..operators.intersections import (
+    crossing_pairs,
+    seg_cols,
+    sql_intersection_xy,
+    sql_proper_cross,
+)
 from ..operators.pip import (
     explode_seg_cells,
     oracle_seg_cells,
@@ -178,19 +184,10 @@ _IX, _IY = sql_intersection_xy()
 
 
 def q_laiex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lines = spark.sql(LAIEX_LINES_SQL).selectExpr(
-        "lid", "lx AS ax", "ya AS ay", "lx AS bx", "yb AS by"
-    )
+    lines = spark.sql(LAIEX_LINES_SQL)
     edges = spark.sql(AREA_EDGES_SQL)
-    lc = explode_seg_cells(lines, CELL).selectExpr(
-        "cell", "lid", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
-    )
-    ec = explode_seg_cells(edges, CELL).selectExpr(
-        "cell", "aid", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
-    )
     xings = (
-        lc.join(ec, "cell")
-        .filter(F.expr(sql_proper_cross()))
+        crossing_pairs(lines, edges, CELL, a_seg=("lx", "ya", "lx", "yb"))
         .select(
             "lid", "aid",
             F.expr(_IX).alias("ix"), F.expr(_IY).alias("iy"),
@@ -262,16 +259,13 @@ _END_ON_QTR = (
 
 def q_lfnoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = spark.sql(LINE_SEGS_SQL)
-    a = explode_seg_cells(segs, CELL).selectExpr(
-        "cell", "sid AS id_a", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
-    )
-    b = explode_seg_cells(segs, CELL).selectExpr(
-        "cell", "sid AS id_b", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
-    )
     crossing = (
-        a.join(b, "cell")
+        crossing_pairs(
+            segs.withColumnRenamed("sid", "id_a"),
+            segs.withColumnRenamed("sid", "id_b"),
+            CELL,
+        )
         .filter(F.col("id_a") != F.col("id_b"))
-        .filter(F.expr(sql_proper_cross()))
         .select(F.col("id_a").alias("line_id"))
         .distinct()
     )
@@ -333,15 +327,12 @@ SELECT aid, ax3, ay3, ax1, ay1 FROM ({AREAS_B_SQL})
 def q_areaintarea(spark: SparkSession, sf_dir: str) -> DataFrame:
     ea = spark.sql(AREA_EDGES_SQL)
     eb = spark.sql(AREA_B_EDGES_SQL)
-    a = explode_seg_cells(ea, CELL).selectExpr(
-        "cell", "aid AS id_a", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
-    )
-    b = explode_seg_cells(eb, CELL).selectExpr(
-        "cell", "aid AS id_b", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
-    )
     pairs = (
-        a.join(b, "cell")
-        .filter(F.expr(sql_proper_cross()))
+        crossing_pairs(
+            ea.withColumnRenamed("aid", "id_a"),
+            eb.withColumnRenamed("aid", "id_b"),
+            CELL,
+        )
         .select(
             "id_a", "id_b",
             F.expr(_IX).alias("ix"), F.expr(_IY).alias("iy"),
@@ -394,16 +385,13 @@ def q_llintnoend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends = lines.selectExpr(
         "line_id AS sid", "x1 AS ex1", "y1 AS ey1", "x3 AS ex2", "y3 AS ey2"
     )
-    a = explode_seg_cells(segs, CELL).selectExpr(
-        "cell", "sid AS id_a", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
-    )
-    b = explode_seg_cells(segs, CELL).selectExpr(
-        "cell", "sid AS id_b", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
-    )
     xp = (
-        a.join(b, "cell")
+        crossing_pairs(
+            segs.withColumnRenamed("sid", "id_a"),
+            segs.withColumnRenamed("sid", "id_b"),
+            CELL,
+        )
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.expr(sql_proper_cross()))
         .select(
             "id_a", "id_b",
             F.expr(_IX).alias("ix"), F.expr(_IY).alias("iy"),
@@ -467,15 +455,8 @@ SELECT poly_id, x3, y3, x1, y1 FROM ({POLYS_SQL})
 def q_lmint(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsegs = spark.sql(LINE_SEGS_SQL)
     pedges = spark.sql(POLY_EDGES_SQL)
-    lc = explode_seg_cells(lsegs, CELL).selectExpr(
-        "cell", "sid", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
-    )
-    pc = explode_seg_cells(pedges, CELL).selectExpr(
-        "cell", "pid", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
-    )
     return (
-        lc.join(pc, "cell")
-        .filter(F.expr(sql_proper_cross()))
+        crossing_pairs(lsegs, pedges, CELL)
         .select(F.col("sid").alias("line_id"), F.col("pid").alias("poly_id"))
         .distinct()
         .selectExpr("line_id", "poly_id", "'LMINT' AS errtype")

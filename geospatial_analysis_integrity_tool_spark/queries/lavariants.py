@@ -33,9 +33,9 @@ with planted cut-vertex / end-at-crossing variants keyed on residues, a
 a colinear cover segment on every 7th bottom edge.  All arithmetic is
 integer-modulo -> exact-literal division, so Spark and DuckDB agree bitwise.
 
-Engine shapes: the crossing family runs the real cell join
-(explode_seg_cells both sides + codegen proper-cross, the
-segment_intersections pattern); containment runs a point-cell x area-cover
+Engine shapes: the crossing family runs the cell crossing join
+(``operators/intersections.crossing_pairs``, as segment_intersections
+does); containment runs a point-cell x area-cover
 join with the inline 3-edge ray-cast parity; LEINSIDEA refines with an
 equi-join to the area's own edges (3 rows) — no driver work anywhere.
 """
@@ -47,14 +47,13 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_point_seg_dist_m
 from ..operators.intersections import (
-    SEG_A,
-    SEG_B,
+    crossing_pairs,
     sql_intersection_xy,
     sql_proper_cross,
 )
 from ..operators.pip import (
-    explode_bbox_cells,
     explode_seg_cells,
+    explode_tri_cells,
     sql_ray3,
     with_point_cell,
 )
@@ -133,23 +132,17 @@ def q_line_area_cut_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lid", "xl", "yb", "ym", "yt",
             "stack(2, 1, yb, ym, 2, ym, yt) AS (seg_idx, say, sby)",
         )
-        .selectExpr("lid", "seg_idx", "xl AS _ax", "say AS _ay",
-                    "xl AS _bx", "sby AS _by")
+        .select("lid", "seg_idx", "xl", "say", "sby")
     )
-    esegs = edges.selectExpr("aid", "eidx", "ex1 AS _cx", "ey1 AS _cy",
-                             "ex2 AS _dx", "ey2 AS _dy")
+    esegs = edges.select("aid", "eidx", "ex1", "ey1", "ex2", "ey2")
 
     # cell join (duplicated bbox cover both sides, the GAIT neighbor-region
     # duplication TT.c:44027 analogue) + bbox prefilter + codegen proper cross
-    lc = explode_seg_cells(lsegs, CELL, *SEG_A)
-    ec = explode_seg_cells(esegs, CELL, *SEG_B, suffix="2")
     xings = (
-        lc.join(ec, "cell")
-        .filter(
-            (F.col("_mnx") <= F.col("_mxx2")) & (F.col("_mxx") >= F.col("_mnx2"))
-            & (F.col("_mny") <= F.col("_mxy2")) & (F.col("_mxy") >= F.col("_mny2"))
+        crossing_pairs(
+            lsegs, esegs, CELL,
+            a_seg=("xl", "say", "xl", "sby"), b_seg=("ex1", "ey1", "ex2", "ey2"),
         )
-        .filter(F.expr(sql_proper_cross()))
         .select(
             "lid", "aid", "seg_idx", "eidx",
             F.expr(_IXU).alias("ix_udeg"), F.expr(_IYU).alias("iy_udeg"),
@@ -291,13 +284,8 @@ def q_line_in_area_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lid", "stack(2, 0, ax, ay, 1, bx, by) AS (vidx, vx, vy)"
     )
     # point-cell x area-bbox-cover join + inline 3-edge parity
-    acov = explode_bbox_cells(
-        areas.selectExpr("area_id AS aid", "x1", "y1", "x2", "y2", "x3", "y3")
-        .withColumn("_mnx", F.expr("LEAST(x1, x2, x3)"))
-        .withColumn("_mxx", F.expr("GREATEST(x1, x2, x3)"))
-        .withColumn("_mny", F.expr("LEAST(y1, y2, y3)"))
-        .withColumn("_mxy", F.expr("GREATEST(y1, y2, y3)")),
-        "_mnx", "_mxx", "_mny", "_mxy", CELL,
+    acov = explode_tri_cells(
+        areas.selectExpr("area_id AS aid", "x1", "y1", "x2", "y2", "x3", "y3"), CELL
     )
     hits = (
         with_point_cell(verts, "vx", "vy", CELL)

@@ -35,8 +35,8 @@ strip-triangles over the window (even strips) for LSPIEXP.
 Engine shapes: the hole-aware containment reuses vgeomq._inside_pairs
 (cell-cover candidates + ray-crossing parity equi-join, the per-edge term
 ``operators/pip.sql_ray_edge``); triangle containment is
-``operators/pip.sql_ray3``; crossings run the codegen cell join over
-``explode_seg_cells``; everything is window/join/agg — no UDFs.  DuckDB
+``operators/pip.sql_ray3``; crossings run the cell crossing join
+``operators/intersections.crossing_pairs``; everything is window/join/agg — no UDFs.  DuckDB
 oracles use the 0.01-deg cell equi-key for segment joins (IEJoin
 avoidance, see queries/intvariants.py).
 """
@@ -46,10 +46,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.intersections import seg_cols, sql_intersection_xy, sql_proper_cross
+from ..operators.intersections import (
+    crossing_pairs,
+    seg_cols,
+    sql_intersection_xy,
+    sql_proper_cross,
+)
 from ..operators.pip import (
-    explode_bbox_cells,
-    explode_seg_cells,
+    explode_tri_cells,
     oracle_bbox_cells,
     oracle_point_cell,
     oracle_seg_cells,
@@ -152,15 +156,7 @@ def q_leaon_notin(spark: SparkSession, sf_dir: str) -> DataFrame:
     areas = spark.table("geo_areas").select(
         "area_id", "x1", "y1", "x2", "y2", "x3", "y3"
     )
-    ab = areas.withColumns(
-        {
-            "_mnx": F.least("x1", "x2", "x3"),
-            "_mxx": F.greatest("x1", "x2", "x3"),
-            "_mny": F.least("y1", "y2", "y3"),
-            "_mxy": F.greatest("y1", "y2", "y3"),
-        }
-    )
-    acells = explode_bbox_cells(ab, "_mnx", "_mxx", "_mny", "_mxy", CELL)
+    acells = explode_tri_cells(areas, CELL)
     pcells = with_point_cell(other, "px", "py", CELL)
     inside = (
         pcells.join(acells, "cell")
@@ -220,15 +216,7 @@ def q_polyoside(spark: SparkSession, sf_dir: str) -> DataFrame:
     areas = spark.table("geo_areas").select(
         "area_id", "x1", "y1", "x2", "y2", "x3", "y3"
     )
-    ab = areas.withColumns(
-        {
-            "_mnx": F.least("x1", "x2", "x3"),
-            "_mxx": F.greatest("x1", "x2", "x3"),
-            "_mny": F.least("y1", "y2", "y3"),
-            "_mxy": F.greatest("y1", "y2", "y3"),
-        }
-    )
-    acells = explode_bbox_cells(ab, "_mnx", "_mxx", "_mny", "_mxy", CELL)
+    acells = explode_tri_cells(areas, CELL)
     pcells = with_point_cell(corners, "px", "py", CELL)
     corner_in = (
         pcells.join(acells, "cell")
@@ -242,15 +230,8 @@ def q_polyoside(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pedges = spark.sql(POLY_EDGES_SQL).filter("pid % 5 = 0")
     aedges = spark.sql(AREA_EDGES_SQL)
-    pc = explode_seg_cells(pedges, CELL).selectExpr(
-        "cell", "pid", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
-    )
-    ac = explode_seg_cells(aedges, CELL).selectExpr(
-        "cell", "aid", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
-    )
     edge_x = (
-        pc.join(ac, "cell")
-        .filter(F.expr(sql_proper_cross()))
+        crossing_pairs(pedges, aedges, CELL)
         .select(F.col("pid").alias("poly_id"))
         .distinct()
     )
@@ -320,15 +301,12 @@ FROM ({POLYS_SQL}) WHERE poly_id % 3 = 0
 def q_polyintpoly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ea = spark.sql(POLY_EDGES_SQL)
     eb = spark.sql(POLYS_B_EDGES_SQL)
-    a = explode_seg_cells(ea, CELL).selectExpr(
-        "cell", "pid AS id_a", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
-    )
-    b = explode_seg_cells(eb, CELL).selectExpr(
-        "cell", "pid AS id_b", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
-    )
     return (
-        a.join(b, "cell")
-        .filter(F.expr(sql_proper_cross()))
+        crossing_pairs(
+            ea.withColumnRenamed("pid", "id_a"),
+            eb.withColumnRenamed("pid", "id_b"),
+            CELL,
+        )
         .select("id_a", "id_b")
         .distinct()
         .selectExpr("id_a", "id_b", "'POLYINTPOLY' AS errtype")
@@ -354,15 +332,8 @@ WHERE a._mnx <= b._mxx AND a._mxx >= b._mnx
 def q_polyintarea(spark: SparkSession, sf_dir: str) -> DataFrame:
     pe = spark.sql(POLY_EDGES_SQL)
     ae = spark.sql(AREA_EDGES_SQL)
-    p = explode_seg_cells(pe, CELL).selectExpr(
-        "cell", "pid", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
-    )
-    a = explode_seg_cells(ae, CELL).selectExpr(
-        "cell", "aid", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
-    )
     return (
-        p.join(a, "cell")
-        .filter(F.expr(sql_proper_cross()))
+        crossing_pairs(pe, ae, CELL)
         .select("pid", "aid")
         .distinct()
         .selectExpr("pid AS poly_id", "aid AS area_id",
@@ -451,15 +422,8 @@ def q_lspint(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e"),
     ).select("pid", "e.ax", "e.ay", "e.bx", "e.by")
-    lc = explode_seg_cells(lsegs, CELL).selectExpr(
-        "cell", "sid", "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by"
-    )
-    sc = explode_seg_cells(sedges, CELL).selectExpr(
-        "cell", "pid", "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy"
-    )
     xings = (
-        lc.join(sc, "cell")
-        .filter(F.expr(sql_proper_cross()))
+        crossing_pairs(lsegs, sedges, CELL)
         .select(
             "sid", "pid",
             F.expr(_IX).alias("ix"), F.expr(_IY).alias("iy"),

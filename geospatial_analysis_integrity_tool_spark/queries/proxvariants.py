@@ -53,14 +53,12 @@ from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m, sql_point_seg_dist_m
 from ..operators.intersections import (
-    SEG_A,
-    SEG_B,
+    crossing_pairs,
     seg_cols,
     sql_intersection_xy,
     sql_proper_cross,
 )
 from ..operators.pip import (
-    explode_seg_cells,
     oracle_seg_cells,
     with_kring_cells,
     with_point_cell,
@@ -317,26 +315,16 @@ GROUP BY v.line_id, t.tid
 
 def _crossings(spark: SparkSession) -> DataFrame:
     """Proper crossings among geo_lines segments (codegen cell join)."""
-    segs = spark.sql(LINE_SEGS_SQL)
-    a = segs.selectExpr(
-        "seg_line AS id_a", "seg_idx AS si_a",
-        "sax AS _ax", "say AS _ay", "sbx AS _bx", "sby AS _by",
-    )
-    b = segs.selectExpr(
-        "seg_line AS id_b", "seg_idx AS si_b",
-        "sax AS _cx", "say AS _cy", "sbx AS _dx", "sby AS _dy",
-    )
-    ac = explode_seg_cells(a, 0.01, *SEG_A)
-    bc = explode_seg_cells(b, 0.01, *SEG_B, suffix="2")
+    segs = spark.sql(LINE_SEGS_SQL).select("seg_line", "sax", "say", "sbx", "sby")
+    seg = ("sax", "say", "sbx", "sby")
     ix, iy = sql_intersection_xy()
     return (
-        ac.join(bc, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            (F.col("_mnx") <= F.col("_mxx2")) & (F.col("_mxx") >= F.col("_mnx2"))
-            & (F.col("_mny") <= F.col("_mxy2")) & (F.col("_mxy") >= F.col("_mny2"))
+        crossing_pairs(
+            segs.withColumnRenamed("seg_line", "id_a"),
+            segs.withColumnRenamed("seg_line", "id_b"),
+            0.01, seg, seg,
         )
-        .filter(F.expr(sql_proper_cross()))
+        .filter(F.col("id_a") < F.col("id_b"))
         .select(F.expr(ix).alias("cx"), F.expr(iy).alias("cy"))
         .dropDuplicates(["cx", "cy"])
     )
@@ -391,7 +379,7 @@ _IX_AB, _IY_AB = sql_intersection_xy(*_AB)
 
 
 # The xings self-join carries an equi cell key (same 0.01-deg grid as the
-# engine's explode_seg_cells) rather than a pure interval ON: DuckDB's
+# engine's crossing_pairs) rather than a pure interval ON: DuckDB's
 # IEJoin path hits an internal "flat vector" assertion on this join shape,
 # and the hash cell join is also the faster plan — same trade as the
 # coverage-family oracles (queries/coverageq.py).

@@ -47,6 +47,7 @@ from ..functions.geodesy import (
     sql_point_seg_dist_m,
 )
 from ..operators.intersections import (
+    segment_crossings,
     segment_intersections,
     sql_intersection_xy,
     sql_proper_cross,
@@ -108,27 +109,11 @@ xings AS MATERIALIZED (
 
 def _xings(spark: SparkSession) -> DataFrame:
     """Engine-side crossings of geo_lines segments with coords + fcodes."""
-    lines = spark.table("geo_lines")
-    segs = _line_segs(lines).selectExpr(
-        "line_id", "seg_which AS seg_idx", "ax AS sax", "ay AS say",
-        "bx AS sbx", "by AS sby",
+    segs = _line_segs(spark.table("geo_lines"), carry=("fcode",)).selectExpr(
+        "line_id", "seg_which AS seg_idx", "fcode",
+        "ax AS sax", "ay AS say", "bx AS sbx", "by AS sby",
     )
-    x = segment_intersections(segs, cell_deg=0.005)
-    sa = _line_segs(lines).selectExpr(
-        "line_id AS id_a", "seg_which AS seg_a",
-        "ax AS _ax", "ay AS _ay", "bx AS _bx", "by AS _by",
-    )
-    sb = _line_segs(lines).selectExpr(
-        "line_id AS id_b", "seg_which AS seg_b",
-        "ax AS _cx", "ay AS _cy", "bx AS _dx", "by AS _dy",
-    )
-    fc = lines.select("line_id", "fcode")
-    return (
-        x.join(sa, ["id_a", "seg_a"])
-        .join(sb, ["id_b", "seg_b"])
-        .join(fc.selectExpr("line_id AS id_a", "fcode AS fcode_a"), "id_a")
-        .join(fc.selectExpr("line_id AS id_b", "fcode AS fcode_b"), "id_b")
-    )
+    return segment_crossings(segs, cell_deg=0.005)
 
 
 # --- geo_lliex (LLIEX 117) ------------------------------------------------------

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.intersections import (
+    crossing_pairs,
     seg_cols,
     segment_intersections,
     segments_of_vertices,
@@ -42,7 +43,6 @@ from ..operators.intersections import (
 )
 from ..operators.pip import (
     explode_bbox_cells,
-    explode_seg_cells,
     oracle_bbox_cells,
     sql_ray_edge,
 )
@@ -263,25 +263,14 @@ def _inside_pairs(spark: SparkSession, edges: DataFrame, probes: DataFrame,
 def q_line_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = segments_of_vertices(spark.table("geo_vlines"))
     edges = _area_edges(spark)
-    ecells = explode_seg_cells(edges, EDGECELL, "ex1", "ey1", "ex2", "ey2").select(
-        "cell", "area_id", "ex1", "ey1", "ex2", "ey2"
-    )
-    scells = explode_seg_cells(segs, EDGECELL, "sax", "say", "sbx", "sby").select(
-        "cell", "line_id",
-        F.col("sax").alias("_ax"), F.col("say").alias("_ay"),
-        F.col("sbx").alias("_bx"), F.col("sby").alias("_by"),
-    )
-    cross_pred = sql_proper_cross()
     laint = (
-        scells.join(
-            ecells.select(
-                "cell", "area_id",
-                F.col("ex1").alias("_cx"), F.col("ey1").alias("_cy"),
-                F.col("ex2").alias("_dx"), F.col("ey2").alias("_dy"),
-            ),
-            "cell",
+        crossing_pairs(
+            segs.select("line_id", "sax", "say", "sbx", "sby"),
+            edges.select("area_id", "ex1", "ey1", "ex2", "ey2"),
+            EDGECELL,
+            a_seg=("sax", "say", "sbx", "sby"),
+            b_seg=("ex1", "ey1", "ex2", "ey2"),
         )
-        .filter(F.expr(cross_pred))
         .select("line_id", "area_id")
         .dropDuplicates(["line_id", "area_id"])
     )
@@ -415,21 +404,15 @@ FROM geo_vareas WHERE area_id % 11 = 0
 def q_area_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(_AREAS_OV_SQL).createOrReplaceTempView("geo_vareas_ov")
     edges = _area_edges(spark, view="geo_vareas_ov")
-    ec = explode_seg_cells(edges, EDGECELL, "ex1", "ey1", "ex2", "ey2")
-    a = ec.select(
-        "cell", F.col("area_id").alias("id_a"),
-        F.col("ex1").alias("_ax"), F.col("ey1").alias("_ay"),
-        F.col("ex2").alias("_bx"), F.col("ey2").alias("_by"),
-    )
-    b = ec.select(
-        "cell", F.col("area_id").alias("id_b"),
-        F.col("ex1").alias("_cx"), F.col("ey1").alias("_cy"),
-        F.col("ex2").alias("_dx"), F.col("ey2").alias("_dy"),
-    )
+    seg = ("ex1", "ey1", "ex2", "ey2")
+    segs = edges.select("area_id", *seg)
     crossed = (
-        a.join(b, "cell")
+        crossing_pairs(
+            segs.withColumnRenamed("area_id", "id_a"),
+            segs.withColumnRenamed("area_id", "id_b"),
+            EDGECELL, seg, seg,
+        )
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.expr(sql_proper_cross()))
         .select("id_a", "id_b")
     )
     # representative-vertex containment (outer ring vertex 0) either way

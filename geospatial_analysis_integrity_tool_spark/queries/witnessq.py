@@ -43,8 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.pip import (
-    explode_bbox_cells,
     explode_seg_cells,
+    explode_tri_cells,
     oracle_point_cell,
     oracle_seg_cells,
     sql_ray3,
@@ -244,13 +244,7 @@ def q_perimeter_connect_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # OBJ_WO_TWO: zone contains an AL015 point but no GB005 point
     zones = spark.table("geo_zones")
-    zcov = explode_bbox_cells(
-        zones.withColumn("_mnx", F.expr("LEAST(x1, x2, x3)"))
-        .withColumn("_mxx", F.expr("GREATEST(x1, x2, x3)"))
-        .withColumn("_mny", F.expr("LEAST(y1, y2, y3)"))
-        .withColumn("_mxy", F.expr("GREATEST(y1, y2, y3)")),
-        "_mnx", "_mxx", "_mny", "_mxy", ZCELL,
-    )
+    zcov = explode_tri_cells(zones, ZCELL)
     pin = (
         with_point_cell(
             spark.table("geo_points").selectExpr("point_id", "fcode",

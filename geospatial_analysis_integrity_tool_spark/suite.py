@@ -156,8 +156,7 @@ def suite_conditions(
     # cell, magnitude, sedrisid) order — report-major by family, region-major
     # within it — so the numbering never restarts.
     out = consolidate_scalable(
-        conds, cell_col="cell", order_keys=["magnitude_mm", "sedrisid"],
-        dedup=False, number_within=(),
+        conds, order_keys=["magnitude_mm", "sedrisid"], number_within=()
     )
     # pin the sink's canonical column order regardless of join-key placement
     return out.select(

@@ -172,6 +172,121 @@ def test_geometry_sql_is_never_rewritten():
     assert offenders == []
 
 
+def test_one_crossing_join_and_one_triangle_cover():
+    """Spark crossing joins go through operators/intersections.crossing_pairs:
+    outside that module, the only Spark function that applies
+    sql_proper_cross is intvariants.q_cut_int (a per-area equi-join, not a
+    cell join), whether it calls the renderer or evaluates a module-level
+    name bound to its text, and the only Spark functions joining an
+    explode_seg_cells cover are the three that are not crossing joins.
+    Triangle cell covers go through operators/pip.explode_tri_cells: no
+    queries/ module builds a triangle bbox column by hand."""
+    import ast
+    import re
+    from pathlib import Path
+
+    def calls(node, name):
+        return [
+            c for c in ast.walk(node)
+            if isinstance(c, ast.Call)
+            and name in (getattr(c.func, "id", None), getattr(c.func, "attr", None))
+        ]
+
+    pkg = Path(__file__).resolve().parents[1] / "geospatial_analysis_integrity_tool_spark"
+    trees = {
+        str(p.relative_to(pkg)): (p.read_text(), ast.parse(p.read_text()))
+        for p in sorted(pkg.rglob("*.py"))
+        if str(p.relative_to(pkg)) != "operators/intersections.py"
+    }
+    # module-level names bound to a text that renders the predicate
+    cross_names = {
+        t.id
+        for _, tree in trees.values()
+        for node in tree.body
+        if isinstance(node, ast.Assign) and calls(node.value, "sql_proper_cross")
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    }
+    spark_cross, seg_joins = [], []
+    for rel, (text, tree) in trees.items():
+        for node in tree.body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            body = ast.get_source_segment(text, node)
+            bound = any(
+                isinstance(n, ast.Name) and n.id in cross_names
+                for c in calls(node, "expr") + calls(node, "filter") + calls(node, "where")
+                for a in c.args
+                for n in ast.walk(a)
+            )
+            if bound or ("sql_proper_cross(" in body and "F." in body):
+                spark_cross.append((rel, node.name))
+            if calls(node, "explode_seg_cells") and calls(node, "join"):
+                seg_joins.append((rel, node.name))
+    assert spark_cross == [("queries/intvariants.py", "q_cut_int")]
+    # collinear overlap (NONODEOVLP, LSEGCOVERA) and point-on-perimeter joins
+    assert seg_joins == [
+        ("queries/intvariants.py", "q_nonodeovlp"),
+        ("queries/lavariants.py", "q_line_in_area_checks"),
+        ("queries/witnessq.py", "q_perimeter_connect_checks"),
+    ]
+
+    tri_bbox = re.compile(
+        r'F\.least\(\s*"x1",\s*"x2",\s*"x3"\s*\)|F\.expr\(\s*"LEAST\(x1, x2, x3\)"\s*\)'
+    )
+    assert [
+        rel for rel, (text, _) in trees.items()
+        if rel.startswith("queries/") and tri_bbox.search(text)
+    ] == []
+
+
+def test_crossing_pairs_matches_brute_force(spark):
+    """The cell crossing join finds exactly the properly crossing pairs of a
+    cross join, over segments that span several cells, a touching (T) pair,
+    a collinear-overlap pair and a parallel pair."""
+    from geospatial_analysis_integrity_tool_spark.operators.intersections import (
+        SEG_A,
+        SEG_B,
+        crossing_pairs,
+        sql_proper_cross,
+    )
+
+    schema = "id long, ax double, ay double, bx double, by double"
+    a = spark.createDataFrame(
+        [
+            (1, 0.5, 0.5, 3.5, 2.5),      # spans 4 x 3 cells
+            (2, 5.0, 5.0, 7.0, 5.0),      # collinear overlap with 12
+            (3, 5.0, 7.0, 7.0, 9.0),      # parallel to 13
+            (4, 10.2, 10.2, 12.8, 10.4),  # crosses 14 in one of 3 cells
+        ],
+        schema,
+    ).withColumnRenamed("id", "id_a")
+    b = spark.createDataFrame(
+        [
+            (10, 0.5, 2.5, 3.5, 0.5),     # crosses 1
+            (11, 2.0, 1.5, 2.0, 3.5),     # ends on 1: touching, no crossing
+            (12, 6.0, 5.0, 8.5, 5.0),
+            (13, 5.0, 7.5, 7.0, 9.5),
+            (14, 11.5, 9.5, 11.6, 11.5),
+        ],
+        schema,
+    ).withColumnRenamed("id", "id_b")
+    got = crossing_pairs(a, b, 1.0)
+    assert set(got.columns) == {"id_a", "id_b", *SEG_A, *SEG_B}
+    got = sorted(tuple(r) for r in got.select("id_a", "id_b").distinct().collect())
+
+    def seg(names):
+        return [F.col(c).alias(n) for c, n in zip(("ax", "ay", "bx", "by"), names)]
+
+    brute = (
+        a.select("id_a", *seg(SEG_A))
+        .crossJoin(b.select("id_b", *seg(SEG_B)))
+        .filter(F.expr(sql_proper_cross()))
+        .select("id_a", "id_b")
+    )
+    assert got == sorted(tuple(r) for r in brute.collect()) == [(1, 10), (4, 14)]
+
+
 def test_renderers_bind_aliased_columns():
     """The crossing predicate, the intersection point and the ray-edge term
     rendered over aliased columns (l. / e.) agree row for row with their
@@ -256,6 +371,24 @@ def test_ann_topk_self_excluded_and_ranked(spark):
     rows = cosine_topk(emb, q, k=2).collect()
     by_rank = {r.rank: r.neighbor_id for r in rows}
     assert by_rank == {1: 3, 2: 1}  # closest first, self excluded
+
+
+def test_ann_query_side_is_bounded(spark, monkeypatch):
+    """The ANN query side is collected with a row bound: a query set over
+    MAX_QUERY_ROWS raises instead of being collected whole."""
+    import pytest
+
+    from geospatial_analysis_integrity_tool_spark.operators import ann
+
+    emb = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(5)], "vec_id long, embedding array<double>"
+    )
+    monkeypatch.setattr(ann, "MAX_QUERY_ROWS", 3)
+    with pytest.raises(ValueError, match="MAX_QUERY_ROWS = 3"):
+        ann.cosine_topk(emb, emb, k=2)
+    with pytest.raises(ValueError, match="MAX_QUERY_ROWS = 3"):
+        ann.cosine_topk_ivf(emb, emb, k=2, nlist=2, nprobe=1)
+    assert ann.cosine_topk(emb, emb.filter("vec_id < 3"), k=2).count() == 6
 
 
 def test_entry_smoke(spark):

@@ -119,7 +119,7 @@ def test_consolidate_scalable_evaluates_its_input_once(spark):
 
     rows = _multi_family_rows()
     conds, acc = _counted(spark, rows, _COND_SCHEMA)
-    out = consolidate_scalable(conds, dedup=False).collect()
+    out = consolidate_scalable(conds).collect()
     assert len(out) == len(rows)
     # one evaluation of the input: the rank window and the per-cell counts
     # read one materialized frame
@@ -160,7 +160,7 @@ def test_consolidate_scalable_matches_one_window(spark, number_within):
         *[c for c in order if c not in number_within]
     )
     want = conds.withColumn("cond_num", F.row_number().over(w).cast("bigint"))
-    got = consolidate_scalable(conds, dedup=False, number_within=number_within)
+    got = consolidate_scalable(conds, number_within=number_within)
     assert sorted(got.columns) == sorted(conds.columns)
     got = got.select(*conds.columns)
     assert sorted(got.collect()) == sorted(want.collect())

@@ -94,9 +94,7 @@ def main(n_pages: int, out_dir: str) -> dict:
         F.col("zone_id").cast("string").alias("code2"),
         F.col("pcell").alias("cell"),
     )
-    consolidated = consolidate_scalable(
-        conds, cell_col="cell", order_keys=["sedrisid"], dedup=False
-    )
+    consolidated = consolidate_scalable(conds, order_keys=["sedrisid"])
 
     # 5. export with per-partition lineage + resume (16 cell-hash buckets —
     # at scale this is the hex_r7 cell itself)

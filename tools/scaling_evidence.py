@@ -168,9 +168,7 @@ def run(cpus: int) -> dict:
         "geom_kind",
         F.expr("pmod(xxhash64(feature_id), 1024)").alias("cell"),
     )
-    consolidated = consolidate_scalable(
-        conds, cell_col="cell", order_keys=["magnitude_mm", "sedrisid"], dedup=False
-    )
+    consolidated = consolidate_scalable(conds, order_keys=["magnitude_mm", "sedrisid"])
 
     # ONE action for all three stage DAGs: branches overlap (python-kernel
     # stages run while JVM shuffle stages proceed), fixed costs paid once
