@@ -12,13 +12,15 @@ rows; segments come from JVM-side ``slice`` + ``arrays_zip`` + ``posexplode``
 
 Spark-native shape: explode lines into segments, then ``crossing_pairs`` —
 the one segment-crossing join every cell crossing check uses — covers both
-segment sets with ``explode_seg_cells``, equi-joins on ``cell``, keeps the
-bbox-overlapping pairs and filters on the orientation tests.  Those run as
-**pure column expressions** (whole-stage codegen) — the same arithmetic text
-the DuckDB oracle evaluates, so the crossing decision and the reported
-intersection point are bit-identical.  ``segment_crossings`` (the crossing
-segment pairs) runs it over lines' segments with the long segments split
-off; ``segment_intersections`` projects its pairs onto the crossing points.
+segment sets with ``explode_path_cells`` (the cells each segment's path
+crosses, so a long segment costs its length, not its bbox area),
+equi-joins on ``cell``, keeps the bbox-overlapping pairs and filters on the
+orientation tests.  Those run as **pure column expressions** (whole-stage
+codegen) — the same arithmetic text the DuckDB oracle evaluates, so the
+crossing decision and the reported intersection point are bit-identical.
+``segment_crossings`` (the crossing segment pairs) is its self-join over
+lines' segments; ``segment_intersections`` projects its pairs onto the
+crossing points.
 That text is rendered once per call site as a function of the two segments'
 columns: ``sql_proper_cross(s1, s2)`` / ``sql_intersection_xy(s1, s2)``
 default to the join frames' ``SEG_A`` / ``SEG_B`` columns, and each oracle
@@ -33,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pip import explode_seg_cells
+from .pip import explode_path_cells
 
 
 def _d(ax, ay, bx, by, px, py) -> str:
@@ -209,18 +211,18 @@ def crossing_pairs(
     ``a``'s segment columns ``a_seg`` become ``SEG_A`` and ``b``'s ``b_seg``
     become ``SEG_B``, so :func:`sql_proper_cross` and
     :func:`sql_intersection_xy` apply to the output with their defaults.
-    Each side is covered by ``explode_seg_cells`` and the two are equi-joined
-    on ``cell``; the bbox-overlapping pairs are kept, then the properly
-    crossing ones.  Every other column of both sides is carried (callers
-    rename clashing ids).  One row per (pair, shared cell): callers
-    deduplicate and add their own id-order filters, which Catalyst pushes
-    into the join condition.
+    Each side is covered by ``explode_path_cells`` (the cells its path
+    crosses, linear in its length; two crossing segments share the cell of
+    their crossing point) and the two are equi-joined on ``cell``; the
+    bbox-overlapping pairs are kept, then the properly crossing ones.  Every
+    other column of both sides is carried (callers rename clashing ids).
+    One row per (pair, shared cell): callers deduplicate and add their own
+    id-order filters, which Catalyst pushes into the join condition.
     """
-    ac = explode_seg_cells(_renamed(a, a_seg, SEG_A), cell_deg, *SEG_A)
-    bc = explode_seg_cells(_renamed(b, b_seg, SEG_B), cell_deg, *SEG_B, suffix="2")
+    ac = explode_path_cells(_renamed(a, a_seg, SEG_A), cell_deg, *SEG_A)
+    bc = explode_path_cells(_renamed(b, b_seg, SEG_B), cell_deg, *SEG_B)
     return (
-        ac.drop("_mnx", "_mxx", "_mny", "_mxy")
-        .join(bc.drop("_mnx2", "_mxx2", "_mny2", "_mxy2"), "cell")
+        ac.join(bc, "cell")
         .filter(_bbox_overlap())
         .filter(F.expr(sql_proper_cross()))
         .drop("cell")
@@ -230,83 +232,30 @@ def crossing_pairs(
 #: the segment columns of :func:`segments_of_lines` / :func:`segments_of_vertices`
 _SEG = ("sax", "say", "sbx", "sby")
 
-#: segments covering more cells than this are "long" (see segment_crossings)
-LONG_CELLS = 4
-
-
-def _ordered(df: DataFrame, pairs) -> DataFrame:
-    """``df`` with the columns of each (a, b) pair swapped where id_a > id_b."""
-    swap = F.col("id_a") > F.col("id_b")
-    other = {a: b for a, b in pairs} | {b: a for a, b in pairs}
-    return df.select(
-        *[
-            F.when(swap, F.col(other[c])).otherwise(F.col(c)).alias(c) if c in other else c
-            for c in df.columns
-        ]
-    )
-
 
 def segment_crossings(segs: DataFrame, cell_deg: float) -> DataFrame:
     """Proper crossings between segments of DIFFERENT lines, with the
-    segments themselves.
+    segments themselves: the :func:`crossing_pairs` self-join of ``segs``.
 
     Input: segments from :func:`segments_of_lines`, plus any other columns.
     One row per crossing pair, id_a < id_b: line_id -> id_a / id_b, seg_idx
     -> seg_a / seg_b, the two segments as SEG_A / SEG_B and every other
     column c of ``segs`` as c_a / c_b.
 
-    Giant-feature skew handling (GAIT's AreaSizeCutoff special path,
-    TT.c:44196, per SCALE.md): segments covering more than
-    ``LONG_CELLS`` cells would pair with everything along their path
-    and blow the cell join up quadratically (measured 930M candidates at
-    sf0.1).  They are split off: short x short runs the normal cell join
-    with id_a < id_b; long x short joins the exploded long covers against
-    short cells in any id order, and its pairs are ordered afterwards; and
-    long x long — a tiny set by construction — runs as a broadcast
-    bbox-predicate join.
+    Giant features (GAIT's AreaSizeCutoff special path, TT.c:44196, per
+    SCALE.md) need no path of their own: the path cover grows with a
+    segment's length, not with its bbox area: about (|dx| + |dy|) /
+    ``cell_deg`` cells, not (|dx| / ``cell_deg``) x (|dy| / ``cell_deg``).
     """
     renamed = {"line_id": "id", "seg_idx": "seg"}
     cols = [c for c in segs.columns if c not in _SEG]
 
-    def side(df, s):
-        return df.select(*[F.col(c).alias(f"{renamed.get(c, c)}_{s}") for c in cols], *_SEG)
+    def side(s):
+        return segs.select(*[F.col(c).alias(f"{renamed.get(c, c)}_{s}") for c in cols], *_SEG)
 
-    segs = segs.withColumn(
-        "_ncells",
-        (
-            (F.floor(F.greatest("sax", "sbx") / cell_deg)
-             - F.floor(F.least("sax", "sbx") / cell_deg) + 1)
-            * (F.floor(F.greatest("say", "sby") / cell_deg)
-               - F.floor(F.least("say", "sby") / cell_deg) + 1)
-        ),
-    )
-    # NOTE: the three join paths below reference the segment frame five times
-    # (short twice, long three times).  A .persist() here was tried and
-    # REJECTED: A/B at sf0.1 showed warm runs 8-9 s recomputing vs 9.5-12 s
-    # persisted — the upstream is codegen arithmetic (cheaper than block
-    # serialization + memory pressure).  Re-evaluate only if the input comes
-    # from an expensive non-columnar source.
-    short = segs.filter(F.col("_ncells") <= LONG_CELLS)
-    long = segs.filter(F.col("_ncells") > LONG_CELLS)
-    ss = crossing_pairs(side(short, "a"), side(short, "b"), cell_deg, _SEG, _SEG).filter(
-        F.col("id_a") < F.col("id_b")
-    )
-    ls = crossing_pairs(side(long, "a"), side(short, "b"), cell_deg, _SEG, _SEG).filter(
-        F.col("id_a") != F.col("id_b")
-    )
-    ll = (
-        _renamed(side(long, "a"), _SEG, SEG_A)
-        .join(
-            F.broadcast(_renamed(side(long, "b"), _SEG, SEG_B)),
-            F.col("id_a") < F.col("id_b"),
-        )
-        .filter(_bbox_overlap())
-        .filter(F.expr(sql_proper_cross()))
-    )
-    pairs = [(c, c[:-1] + "b") for c in ss.columns if c.endswith("_a")]
     return (
-        ss.unionByName(_ordered(ls, pairs + list(zip(SEG_A, SEG_B))))
-        .unionByName(ll)
+        crossing_pairs(side("a"), side("b"), cell_deg, _SEG, _SEG)
+        .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b", "seg_a", "seg_b"])
     )
 

@@ -13,6 +13,8 @@ refines exactly.  This module owns one implementation of each step:
 * ``explode_bbox_cells`` copies a feature into every cell its bbox covers,
   and ``explode_seg_cells`` / ``explode_tri_cells`` do so for a segment /
   a triangle;
+* ``explode_path_cells`` copies a segment into the cells its path crosses
+  (the crossing join's cover: linear in the segment's length);
 * ``band_join`` is the 1-D k-ring: a join on adjacent bands of one
   along-boundary coordinate (the edge-match checks);
 * ``cell_deg_for_tolerance`` sizes the cell so a k=1 ring captures every
@@ -168,6 +170,50 @@ def explode_seg_cells(
         .withColumn(mxy, F.greatest(ay, by))
     )
     return explode_bbox_cells(df, mnx, mxx, mny, mxy, cell_deg)
+
+
+#: slack (deg) of :func:`explode_path_cells`: far above double rounding at
+#: |coord| <= 360, far below any cell width
+PATH_SLACK_DEG = 1e-9
+
+
+def explode_path_cells(
+    df: DataFrame, cell_deg: float, ax="ax", ay="ay", bx="bx", by="by"
+) -> DataFrame:
+    """One row per (segment (ax, ay)-(bx, by) of ``df``, cell its path
+    crosses): linear in the segment's length and a subset of
+    :func:`explode_seg_cells`' bbox cover (GAIT clips a line to the regions
+    it passes through, ClipLineToRegion geomchecks.c:201).
+
+    In each column of the bbox, the segment's y-range between the column's
+    x-edges is widened by ``PATH_SLACK_DEG`` (as are the edges), clipped to
+    the bbox and exploded into rows; a vertical segment spans its bbox.  Two
+    properly crossing segments share the cell of their crossing point.  The
+    edges' y values are projected as their own columns, which keeps each
+    generated method small enough for the JIT."""
+    c, e, ix = F.lit(cell_deg), F.lit(PATH_SLACK_DEG), F.col("_ix")
+    mnx, mxx = F.least(ax, bx), F.greatest(ax, bx)
+    mny, mxy = F.least(ay, by), F.greatest(ay, by)
+
+    def y_at(x: Column, vertical_y: Column) -> Column:
+        # (x - ax) / dx is in [0, 1]: no overflow for a near-vertical segment
+        t = (x - F.col(ax)) / (F.col(bx) - F.col(ax))
+        y = F.col(ay) + t * (F.col(by) - F.col(ay))
+        return F.when(F.col(ax) == F.col(bx), vertical_y).otherwise(y)
+
+    lo = F.greatest(mny, F.least("_y0", "_y1") - e)
+    hi = F.least(mxy, F.greatest("_y0", "_y1") + e)
+    return (
+        df.withColumn("_ix", F.explode(F.sequence(F.floor(mnx / c), F.floor(mxx / c))))
+        .withColumns(
+            {
+                "_y0": y_at(F.greatest(mnx, ix * c - e), mny),
+                "_y1": y_at(F.least(mxx, (ix + 1) * c + e), mxy),
+            }
+        )
+        .withColumn("_iy", F.explode(F.sequence(F.floor(lo / c), F.floor(hi / c))))
+        .select(*df.columns, cell_id(ix, F.col("_iy")).alias("cell"))
+    )
 
 
 def explode_tri_cells(df: DataFrame, cell_deg: float) -> DataFrame:

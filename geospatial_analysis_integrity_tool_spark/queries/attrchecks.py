@@ -19,7 +19,6 @@ dimension tables (broadcast side).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.checks_attr import attr_conformance
 

@@ -39,7 +39,6 @@ then groupBy counts — no distance joins, no UDFs.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_dist_m
 

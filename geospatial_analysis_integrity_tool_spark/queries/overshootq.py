@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..operators.intersections import segment_intersections, segments_of_vertices
 from ..sources.synthetic import GEO_VIEWS, oracle_cte
-from .vgeomq import CELL, SEGCELL, ORACLE_LLINT_V
+from .vgeomq import SEGCELL, ORACLE_LLINT_V
 
 OVERSHOOT_UDEG = 500  # ~55 m Manhattan in integer micro-degrees
 

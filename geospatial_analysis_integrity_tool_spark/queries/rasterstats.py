@@ -36,9 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .overlay import NTILES, POSTS
+from .overlay import POSTS
 from .rasterhydro import _ORACLE_POSTS, G, SHELF, WATER, _hposts
-from .rastermask import _ed, _ed2, _posts
+from .rastermask import _ed, _posts
 
 CONF2_TOL_DECIM = 900
 LOS_T = 200               # target post (LOS_T, LOS_T)

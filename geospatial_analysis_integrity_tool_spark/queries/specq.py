@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.synthetic import oracle_cte
-
 # --- inspection_spec_roles ----------------------------------------------------
 
 SPEC_TEXT = """

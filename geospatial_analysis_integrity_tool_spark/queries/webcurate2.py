@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.pages import extract_text, synth_pages
-from .nonsql import _n_pages, _oracle_pages_text, _URL_SQL, _WORDS_SQL
+from .nonsql import _n_pages, _URL_SQL, _WORDS_SQL
 
 
 # --- pages_line_dedup (CCNet corpus line dedup) --------------------------------

@@ -242,8 +242,9 @@ def test_one_crossing_join_and_one_triangle_cover():
 
 def test_crossing_pairs_matches_brute_force(spark):
     """The cell crossing join finds exactly the properly crossing pairs of a
-    cross join, over segments that span several cells, a touching (T) pair,
-    a collinear-overlap pair and a parallel pair."""
+    cross join, over segments that span several cells, a long diagonal,
+    vertical segments, a touching (T) pair, a collinear-overlap pair and a
+    parallel pair."""
     from geospatial_analysis_integrity_tool_spark.operators.intersections import (
         SEG_A,
         SEG_B,
@@ -258,6 +259,8 @@ def test_crossing_pairs_matches_brute_force(spark):
             (2, 5.0, 5.0, 7.0, 5.0),      # collinear overlap with 12
             (3, 5.0, 7.0, 7.0, 9.0),      # parallel to 13
             (4, 10.2, 10.2, 12.8, 10.4),  # crosses 14 in one of 3 cells
+            (5, -3.7, -2.2, 9.3, 8.6),    # long diagonal: 13 x 11 bbox cells
+            (6, 8.5, -1.0, 8.5, 12.0),    # vertical, 14 cells
         ],
         schema,
     ).withColumnRenamed("id", "id_a")
@@ -268,6 +271,8 @@ def test_crossing_pairs_matches_brute_force(spark):
             (12, 6.0, 5.0, 8.5, 5.0),
             (13, 5.0, 7.5, 7.0, 9.5),
             (14, 11.5, 9.5, 11.6, 11.5),
+            (15, 4.0, -3.0, 4.0, 9.0),    # vertical: crosses 5 (as 10 and 11 do)
+            (16, 7.0, 7.5, 9.5, 7.0),     # crosses 5 and 6
         ],
         schema,
     ).withColumnRenamed("id", "id_b")
@@ -284,7 +289,120 @@ def test_crossing_pairs_matches_brute_force(spark):
         .filter(F.expr(sql_proper_cross()))
         .select("id_a", "id_b")
     )
-    assert got == sorted(tuple(r) for r in brute.collect()) == [(1, 10), (4, 14)]
+    assert got == sorted(tuple(r) for r in brute.collect()) == [
+        (1, 10), (4, 14), (5, 10), (5, 11), (5, 15), (5, 16), (6, 16)
+    ]
+
+
+def _crossing_segments(spark):
+    """Segments at 0.1 deg cells: crossings on grid lines and corners,
+    vertical, horizontal and near-vertical segments, negative coordinates,
+    long diagonals, and seeded random segments snapped to a 0.05 grid."""
+    import random
+
+    fixed = [
+        (0.0, 0.0, 0.2, 0.2), (0.0, 0.2, 0.2, 0.0),            # cross on a corner
+        (0.05, 0.3, 0.55, 0.3), (0.3, 0.05, 0.3, 0.55),        # grid-line cross
+        (0.15, 0.45, 0.35, 0.15),                              # crosses y = 0.3 line
+        (0.3, -0.7, 0.3 + 1e-12, 0.9), (0.1, 0.2, 0.5, 0.2),   # near-vertical
+        (-0.35, -0.35, -0.05, -0.15), (-0.3, -0.1, -0.1, -0.4),
+        (-1.23, -0.77, 2.41, 1.93), (2.4, -0.9, -1.1, 1.7),    # long diagonals
+        (0.7, -1.0, 0.7, 1.0), (-1.0, 0.6, 1.0, 0.6),
+    ]
+    rng = random.Random(7)
+    snap = [round(rng.uniform(-1.0, 1.0) / 0.05) * 0.05 for _ in range(480)]
+    segs = fixed + list(zip(snap[0::4], snap[1::4], snap[2::4], snap[3::4]))
+    return spark.createDataFrame(
+        [(i, *s) for i, s in enumerate(segs)],
+        "id long, ax double, ay double, bx double, by double",
+    )
+
+
+def test_path_cover_is_in_bbox_cover_and_meets_every_crossing(spark):
+    """explode_path_cells covers a subset of explode_seg_cells' bbox cover,
+    and every properly crossing pair (a cross join with sql_proper_cross)
+    has a cell in both path covers."""
+    from geospatial_analysis_integrity_tool_spark.operators.intersections import (
+        SEG_A,
+        SEG_B,
+        sql_proper_cross,
+    )
+    from geospatial_analysis_integrity_tool_spark.operators.pip import (
+        explode_path_cells,
+        explode_seg_cells,
+    )
+
+    segs = _crossing_segments(spark)
+    path = explode_path_cells(segs, 0.1).select("id", "cell")
+    bbox = explode_seg_cells(segs, 0.1).select("id", "cell")
+    assert path.subtract(bbox).count() == 0
+    assert path.count() < bbox.count()
+
+    def side(names, s):
+        return segs.select(
+            F.col("id").alias(f"id_{s}"),
+            *[F.col(c).alias(n) for c, n in zip(("ax", "ay", "bx", "by"), names)],
+        )
+
+    crossing = (
+        side(SEG_A, "a")
+        .crossJoin(side(SEG_B, "b"))
+        .filter((F.col("id_a") < F.col("id_b")) & F.expr(sql_proper_cross()))
+        .select("id_a", "id_b")
+    )
+    shared = path.select(F.col("id").alias("id_a"), "cell").join(
+        path.select(F.col("id").alias("id_b"), "cell"), "cell"
+    )
+    assert crossing.count() > 100
+    assert crossing.join(shared, ["id_a", "id_b"], "left_anti").count() == 0
+
+
+def test_segment_crossings_matches_brute_force(spark):
+    """segment_crossings over lines whose segments span more than 4 cells
+    (long diagonals, verticals, one line crossing many) finds exactly the
+    properly crossing segment pairs of different lines, once each, with
+    id_a < id_b and every carried column on both sides."""
+    from geospatial_analysis_integrity_tool_spark.operators.intersections import (
+        SEG_A,
+        SEG_B,
+        segment_crossings,
+        segments_of_lines,
+        sql_proper_cross,
+    )
+
+    segs = _crossing_segments(spark)
+    lines = segs.select(
+        (F.col("id") % 37).alias("line_id"),
+        F.array("ax", "bx").alias("xs"),
+        F.array("ay", "by").alias("ys"),
+    )
+    # 37 lines; one segment each per input row, zig-zagging between rows
+    lines = lines.groupBy("line_id").agg(
+        F.flatten(F.collect_list("xs")).alias("xs"),
+        F.flatten(F.collect_list("ys")).alias("ys"),
+    )
+    s = segments_of_lines(lines).withColumn("tag", F.col("line_id") * 10)
+    got = segment_crossings(s, 0.1)
+    assert set(got.columns) == {"id_a", "seg_a", "tag_a", "id_b", "seg_b", "tag_b", *SEG_A, *SEG_B}
+    rows = got.select("id_a", "seg_a", "id_b", "seg_b", "tag_a", "tag_b").collect()
+    assert all(r.id_a < r.id_b and r.tag_a == 10 * r.id_a and r.tag_b == 10 * r.id_b for r in rows)
+    pairs = sorted(tuple(r)[:4] for r in rows)
+
+    def side(s_, names, n):
+        return s_.select(
+            F.col("line_id").alias(f"id_{n}"),
+            F.col("seg_idx").alias(f"seg_{n}"),
+            *[F.col(c).alias(m) for c, m in zip(("sax", "say", "sbx", "sby"), names)],
+        )
+
+    brute = (
+        side(s, SEG_A, "a")
+        .crossJoin(side(s, SEG_B, "b"))
+        .filter((F.col("id_a") < F.col("id_b")) & F.expr(sql_proper_cross()))
+        .select("id_a", "seg_a", "id_b", "seg_b")
+    )
+    assert len(pairs) > 200
+    assert pairs == sorted(tuple(r) for r in brute.collect())
 
 
 def test_renderers_bind_aliased_columns():
