@@ -305,37 +305,31 @@ ORACLES = {
 # from range() (same as raster_tile_stats) — any header/ordering/format
 # defect in the writer or reader changes the stats and fails the hash.
 
-def write_asc_fixture(dirpath: str | None = None) -> str:
+def write_asc_fixture() -> str:
     import os
-
-    from ..sources.fixtures import fixture_dir
-
-    if dirpath is None:
-        dirpath = fixture_dir("asc_v1")
 
     import numpy as np
 
     from ..sources.dem import write_gridascii
+    from ..sources.fixtures import write_once
 
-    if os.path.exists(os.path.join(dirpath, "_done")):
-        return dirpath
-    os.makedirs(dirpath, exist_ok=True)
-    gx = np.arange(POSTS, dtype=np.int64)
-    for tx in range(NTILES):
-        for ty in range(NTILES):
-            gxx = tx * POSTS + gx[None, :]
-            gyy = ty * POSTS + gx[:, None]
-            ed = (gxx * 7919 + gyy * 104729) % 4000
-            elevs = ed.astype(np.float64) / 10.0  # row 0 = south
-            write_gridascii(
-                os.path.join(dirpath, f"tile_{tx}_{ty}.asc"),
-                elevs,
-                x0=10.0 + tx * 0.5,
-                y0=40.0 + ty * 0.5,
-                cellsize=0.01,
-            )
-    open(os.path.join(dirpath, "_done"), "w").write("ok")
-    return dirpath
+    def write(d: str) -> None:
+        gx = np.arange(POSTS, dtype=np.int64)
+        for tx in range(NTILES):
+            for ty in range(NTILES):
+                gxx = tx * POSTS + gx[None, :]
+                gyy = ty * POSTS + gx[:, None]
+                ed = (gxx * 7919 + gyy * 104729) % 4000
+                elevs = ed.astype(np.float64) / 10.0  # row 0 = south
+                write_gridascii(
+                    os.path.join(d, f"tile_{tx}_{ty}.asc"),
+                    elevs,
+                    x0=10.0 + tx * 0.5,
+                    y0=40.0 + ty * 0.5,
+                    cellsize=0.01,
+                )
+
+    return write_once("asc_v1", write)
 
 
 def q_dem_ascii_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,32 +376,28 @@ DTED_NY = 2    # cells north-south
 _DTED_ELEV = "((tx * 331 + ty * 757 + c * 7919 + r * 104729) % 3000) - 500"
 
 
-def write_dted_fixture(dirpath: str | None = None) -> str:
+def write_dted_fixture() -> str:
     import os
 
     import numpy as np
 
     from ..sources.dem import write_dted
-    from ..sources.fixtures import fixture_dir
+    from ..sources.fixtures import write_once
 
-    if dirpath is None:
-        dirpath = fixture_dir("dted_v1")
-    if os.path.exists(os.path.join(dirpath, "_done")):
-        return dirpath
-    os.makedirs(dirpath, exist_ok=True)
-    c = np.arange(DTED_POSTS, dtype=np.int64)[None, :]   # lon posts
-    r = np.arange(DTED_POSTS, dtype=np.int64)[:, None]   # lat posts (row 0 = S)
-    for tx in range(DTED_NX):
-        for ty in range(DTED_NY):
-            elevs = ((tx * 331 + ty * 757 + c * 7919 + r * 104729) % 3000) - 500
-            write_dted(
-                os.path.join(dirpath, f"cell_{tx}_{ty}.dt1"),
-                elevs,
-                lon_deg=10 + tx,
-                lat_deg=40 + ty,
-            )
-    open(os.path.join(dirpath, "_done"), "w").write("ok")
-    return dirpath
+    def write(d: str) -> None:
+        c = np.arange(DTED_POSTS, dtype=np.int64)[None, :]   # lon posts
+        r = np.arange(DTED_POSTS, dtype=np.int64)[:, None]   # lat posts (row 0 = S)
+        for tx in range(DTED_NX):
+            for ty in range(DTED_NY):
+                elevs = ((tx * 331 + ty * 757 + c * 7919 + r * 104729) % 3000) - 500
+                write_dted(
+                    os.path.join(d, f"cell_{tx}_{ty}.dt1"),
+                    elevs,
+                    lon_deg=10 + tx,
+                    lat_deg=40 + ty,
+                )
+
+    return write_once("dted_v1", write)
 
 
 def q_dem_dted_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -465,33 +455,40 @@ GTIFF_NY = 2
 _GTIFF_ELEV = "((tx * 733 + ty * 577 + c * 7919 + r * 104729) % 3000) - 700"
 
 
-def write_geotiff_fixture(dirpath: str | None = None) -> str:
+def write_geotiff_fixture() -> str:
+    return _write_gtiff_cells("gtiff_v1", compressed=False)
+
+
+def _write_gtiff_cells(name: str, compressed: bool) -> str:
+    """The GTIFF_NX x GTIFF_NY cells of ``_GTIFF_ELEV``; ``compressed``
+    rotates LZW (with the differencing predictor), PackBits and Deflate."""
     import os
 
     import numpy as np
 
     from ..sources.dem import write_geotiff
-    from ..sources.fixtures import fixture_dir
+    from ..sources.fixtures import write_once
 
-    if dirpath is None:
-        dirpath = fixture_dir("gtiff_v1")
-    if os.path.exists(os.path.join(dirpath, "_done")):
-        return dirpath
-    os.makedirs(dirpath, exist_ok=True)
-    c = np.arange(GTIFF_POSTS, dtype=np.int64)[None, :]
-    r = np.arange(GTIFF_POSTS, dtype=np.int64)[:, None]   # row 0 = SOUTH
-    for tx in range(GTIFF_NX):
-        for ty in range(GTIFF_NY):
-            elevs = ((tx * 733 + ty * 577 + c * 7919 + r * 104729) % 3000) - 700
-            write_geotiff(
-                os.path.join(dirpath, f"cell_{tx}_{ty}.tif"),
-                elevs,
-                x0=20.0 + tx * 0.5,
-                y0=50.0 + ty * 0.5,
-                cellsize=0.0125,
-            )
-    open(os.path.join(dirpath, "_done"), "w").write("ok")
-    return dirpath
+    def write(d: str) -> None:
+        c = np.arange(GTIFF_POSTS, dtype=np.int64)[None, :]
+        r = np.arange(GTIFF_POSTS, dtype=np.int64)[:, None]   # row 0 = SOUTH
+        for tx in range(GTIFF_NX):
+            for ty in range(GTIFF_NY):
+                elevs = ((tx * 733 + ty * 577 + c * 7919 + r * 104729) % 3000) - 700
+                comp = "none"
+                if compressed:
+                    comp = ("lzw", "packbits", "deflate")[(tx + ty) % 3]
+                write_geotiff(
+                    os.path.join(d, f"cell_{tx}_{ty}.tif"),
+                    elevs,
+                    x0=20.0 + tx * 0.5,
+                    y0=50.0 + ty * 0.5,
+                    cellsize=0.0125,
+                    compression=comp,
+                    predictor=2 if comp == "lzw" else 1,
+                )
+
+    return write_once(name, write)
 
 
 def q_dem_geotiff_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -546,36 +543,8 @@ ORACLES["dem_geotiff_tile_stats"] = ORACLE_DEM_GEOTIFF_TILE_STATS
 # compressed data.)
 
 
-def write_geotiff_compressed_fixture(dirpath: str | None = None) -> str:
-    import os
-
-    import numpy as np
-
-    from ..sources.dem import write_geotiff
-    from ..sources.fixtures import fixture_dir
-
-    if dirpath is None:
-        dirpath = fixture_dir("gtiff_comp_v2")
-    if os.path.exists(os.path.join(dirpath, "_done")):
-        return dirpath
-    os.makedirs(dirpath, exist_ok=True)
-    c = np.arange(GTIFF_POSTS, dtype=np.int64)[None, :]
-    r = np.arange(GTIFF_POSTS, dtype=np.int64)[:, None]   # row 0 = SOUTH
-    for tx in range(GTIFF_NX):
-        for ty in range(GTIFF_NY):
-            elevs = ((tx * 733 + ty * 577 + c * 7919 + r * 104729) % 3000) - 700
-            comp = ("lzw", "packbits", "deflate")[(tx + ty) % 3]
-            write_geotiff(
-                os.path.join(dirpath, f"cell_{tx}_{ty}.tif"),
-                elevs,
-                x0=20.0 + tx * 0.5,
-                y0=50.0 + ty * 0.5,
-                cellsize=0.0125,
-                compression=comp,
-                predictor=2 if comp == "lzw" else 1,
-            )
-    open(os.path.join(dirpath, "_done"), "w").write("ok")
-    return dirpath
+def write_geotiff_compressed_fixture() -> str:
+    return _write_gtiff_cells("gtiff_comp_v2", compressed=True)
 
 
 def q_dem_geotiff_compressed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.fixtures import fixture_dir
+from ..sources.fixtures import write_once
 from ..sources.shapefile import read_dbf, read_shp, write_dbf, write_polyline_shp
 
 N_FEATURES = 1000
@@ -64,16 +64,15 @@ def _line(key: int) -> list[tuple[float, float]]:
     return [(x1, y1), (x2, y2), (x3, y3)]
 
 
-def write_fixture(dirpath: str | None = None, n: int = N_FEATURES) -> str:
-    if dirpath is None:
-        dirpath = fixture_dir("shp_v1")
-    os.makedirs(dirpath, exist_ok=True)
-    lines = [_line(k) for k in range(n)]
-    write_polyline_shp(os.path.join(dirpath, "lines.shp"), lines)
-    fields = [("FCODE", "C", 5, 0), ("WID", "N", 6, 0)]
-    recs = [(_FCODES[k % 5], 1 + k % 9) for k in range(n)]
-    write_dbf(os.path.join(dirpath, "lines.dbf"), fields, recs)
-    return dirpath
+def write_fixture() -> str:
+    def write(d: str) -> None:
+        keys = range(N_FEATURES)
+        write_polyline_shp(os.path.join(d, "lines.shp"), [_line(k) for k in keys])
+        fields = [("FCODE", "C", 5, 0), ("WID", "N", 6, 0)]
+        recs = [(_FCODES[k % 5], 1 + k % 9) for k in keys]
+        write_dbf(os.path.join(d, "lines.dbf"), fields, recs)
+
+    return write_once("shp_v1", write)
 
 
 def q_shp_dbf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

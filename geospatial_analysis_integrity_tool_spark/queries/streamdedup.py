@@ -8,8 +8,9 @@ whose MinHash band signature collides with one seen in an earlier batch.
 Shape: band signatures are computed in BATCH (4 bands, each the min 16-bit
 md5-slice over the doc's 3-token shingles — r=1 banded MinHash, the same
 hash conventions as the batch family), written as one parquet file per
-batch, replayed with ``readStream`` + ``maxFilesPerTrigger=1``, and fed
-through the keyed stateful operator ``streaming/stateful.lsh_first_seen``
+batch and replayed one file per trigger (streaming/replay.write_batches /
+batch_stream), and fed through the keyed stateful operator
+``streaming/stateful.lsh_first_seen``
 (applyInPandasWithState per (band, sig) bucket — state is ONE seen flag per
 bucket).  The memory-sink rows then roll up per document: n_dup_bands and
 the any-band is_dup verdict.
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.portable_hash import duck_md5_slice
-from ..streaming.replay import replay_to_memory
+from ..streaming.replay import batch_stream, replay_to_memory, write_batches
 
 N_BATCHES = 5
 #: 1-based hex offsets of the 4 disjoint 16-bit md5 slices (one per band)
@@ -48,11 +49,8 @@ def write_lsh_stream_fixture(sf_dir: str) -> str:
     """Per-batch parquet of (doc_id, batch_idx, band, sig) from documents."""
     import hashlib
     import re
-    import time
 
     import pandas as pd
-
-    from ..sources.fixtures import fixture_dir
 
     docs = pd.read_parquet(
         os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
@@ -64,47 +62,31 @@ def write_lsh_stream_fixture(sf_dir: str) -> str:
     h = hashlib.md5()
     for doc_id, text in zip(docs["doc_id"], docs["text"]):
         h.update(f"{doc_id}|{len(text)}|{text}".encode())
-    digest = h.hexdigest()[:8]
-    dirpath = fixture_dir(f"stream_lsh_{n}_{digest}")
-    if os.path.exists(os.path.join(dirpath, "_done")):
-        return dirpath
-    rows = []
-    for doc_id, text in zip(docs["doc_id"], docs["text"]):
-        toks = [t for t in re.split(r"\s+", text) if t]
-        if len(toks) < 3:
-            continue
-        hexes = [
-            hashlib.md5(
-                " ".join(toks[i : i + 3]).encode()
-            ).hexdigest()
-            for i in range(len(toks) - 2)
-        ]
-        for band, off in enumerate(BAND_OFFS):
-            sig = min(int(h[off - 1 : off + 3], 16) for h in hexes)
-            rows.append((int(doc_id), int(doc_id) * N_BATCHES // n, band, sig))
-    df = pd.DataFrame(rows, columns=["doc_id", "batch_idx", "band", "sig"])
-    t0 = int(time.time()) - 3600
-    for b, grp in df.groupby("batch_idx"):
-        p = os.path.join(dirpath, f"b{int(b):03d}.parquet")
-        grp.to_parquet(p)
-        # FileStreamSource orders pending files by modification time; pin
-        # strictly increasing mtimes so batch order never depends on
-        # filesystem timestamp granularity
-        os.utime(p, (t0 + int(b) * 10, t0 + int(b) * 10))
-    open(os.path.join(dirpath, "_done"), "w").write("ok")
-    return dirpath
+
+    def build():
+        rows = []
+        for doc_id, text in zip(docs["doc_id"], docs["text"]):
+            toks = [t for t in re.split(r"\s+", text) if t]
+            if len(toks) < 3:
+                continue
+            hexes = [
+                hashlib.md5(" ".join(toks[i : i + 3]).encode()).hexdigest()
+                for i in range(len(toks) - 2)
+            ]
+            for band, off in enumerate(BAND_OFFS):
+                sig = min(int(x[off - 1 : off + 3], 16) for x in hexes)
+                rows.append((int(doc_id), int(doc_id) * N_BATCHES // n, band, sig))
+        df = pd.DataFrame(rows, columns=["doc_id", "batch_idx", "band", "sig"])
+        return [grp for _, grp in df.groupby("batch_idx")]
+
+    return write_batches(f"stream_lsh_{n}_{h.hexdigest()[:8]}", build)
 
 
 def q_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import lsh_first_seen
 
-    d = write_lsh_stream_fixture(sf_dir)
-    src = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    # 8 state-store partitions rather than the replay default of 4: the work
+    src = batch_stream(spark, _SCHEMA, write_lsh_stream_fixture(sf_dir))
+    # 8 state-store partitions rather than the replay default of 1: the work
     # per batch is thousands of per-bucket Python calls — parallelism wins
     # over commit overhead here
     replay_to_memory(lsh_first_seen(src), "lsh_dedup_sink", shuffle_partitions=8)

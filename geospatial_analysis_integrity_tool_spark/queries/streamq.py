@@ -4,26 +4,35 @@ The stateful operator (streaming/stateful.dedup_first_seen,
 applyInPandasWithState keyed on the condition identity — the incremental
 form of GAIT's duplicate-condition elimination, DC_FreadFwrite*
 errors.c:1361) runs here against a REAL micro-batch stream: a deterministic
-detection log is written as one parquet file per batch, read back with
-``readStream`` + ``maxFilesPerTrigger=1`` (so the state machine sees many
-batches), and the emitted rows land in a memory sink that the gate compares
-against a closed-form DuckDB oracle.
+detection log is written as one parquet file per batch and read back one
+file per trigger (streaming/replay.write_batches / batch_stream, so the
+state machine sees many batches), and the emitted rows land in a memory
+sink that the gate compares against a closed-form DuckDB oracle.  Every
+stream in this module is written and read through that pair.
 
 Determinism under re-batching: the operator emits, per key, the minimum
 (batch_idx, payload) row.  Even if the file source coalesces several files
 into one micro-batch, sorting by (batch_idx, payload) inside the batch
 reproduces the per-file arrival order, so the emitted set equals the
 oracle's ``row_number() OVER (PARTITION BY key ORDER BY batch_idx, payload)
-= 1`` regardless of trigger boundaries.
+= 1`` regardless of trigger boundaries.  It does depend on batch ORDER: a
+key's batch-3 row that arrives before its batch-1 row is emitted and the
+batch-1 row suppressed.  The order comes from the files' mtimes (the file
+source takes the oldest first, ties in directory-listing order), which
+``write_batches`` pins 10 s apart in batch order; unpinned files written a
+few ms apart keep their order only while each write takes long enough.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..streaming.replay import await_replay, replay_to_memory
+from ..streaming.replay import (
+    await_replay,
+    batch_stream,
+    replay_to_memory,
+    write_batches,
+)
 
 N_ROWS = 600
 N_PER_BATCH = 120
@@ -32,39 +41,27 @@ N_KEYS = 240
 _SCHEMA = "cond_key long, batch_idx long, payload long"
 
 
-def write_stream_fixture(dirpath: str | None = None) -> str:
-    import pandas as pd
+def write_stream_fixture() -> str:
+    def build():
+        import pandas as pd
 
-    from ..sources.fixtures import fixture_dir
+        df = pd.DataFrame(
+            {
+                "cond_key": (i * 7) % N_KEYS,
+                "batch_idx": i // N_PER_BATCH,
+                "payload": i,
+            }
+            for i in range(N_ROWS)
+        )
+        return [grp for _, grp in df.groupby("batch_idx")]
 
-    if dirpath is None:
-        dirpath = fixture_dir("stream_v1")
-    if os.path.exists(os.path.join(dirpath, "_done")):
-        return dirpath
-    rows = [
-        {
-            "cond_key": (i * 7) % N_KEYS,
-            "batch_idx": i // N_PER_BATCH,
-            "payload": i,
-        }
-        for i in range(N_ROWS)
-    ]
-    df = pd.DataFrame(rows)
-    for b, grp in df.groupby("batch_idx"):
-        grp.to_parquet(os.path.join(dirpath, f"b{int(b):03d}.parquet"))
-    open(os.path.join(dirpath, "_done"), "w").write("ok")
-    return dirpath
+    return write_batches("stream_v1", build)
 
 
 def q_streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import dedup_first_seen
 
-    d = write_stream_fixture()
-    src = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    src = batch_stream(spark, _SCHEMA, write_stream_fixture())
     out = dedup_first_seen(
         src, key_cols=["cond_key"], payload_cols=["batch_idx", "payload"]
     )
@@ -121,6 +118,7 @@ DELAY_S = 123
 N_BATCHES = 5
 N_PER_B = 80
 _EPOCH = 1704067200  # 2024-01-01T00:00:00Z, a multiple of WIN_S
+WINDOWED_SCHEMA = "key long, ts timestamp"
 
 
 def _win_sec(i: int) -> tuple[int, int]:
@@ -131,48 +129,35 @@ def _win_sec(i: int) -> tuple[int, int]:
     return b, b * 120 + j
 
 
-def write_windowed_fixture(dirpath: str | None = None) -> str:
-    import pandas as pd
+def write_windowed_fixture() -> str:
+    def build():
+        import pandas as pd
 
-    from ..sources.fixtures import fixture_dir
+        # tz-aware so parquet marks the column isAdjustedToUTC (Spark reads
+        # it as TIMESTAMP_LTZ, matching the declared stream schema; naive
+        # would be NTZ)
+        base = pd.Timestamp("2024-01-01", tz="UTC")
+        batches = [
+            pd.DataFrame(
+                {"key": i % 7, "ts": base + pd.Timedelta(seconds=_win_sec(i)[1])}
+                for i in range(b * N_PER_B, (b + 1) * N_PER_B)
+            )
+            for b in range(N_BATCHES)
+        ]
+        # sentinels: advance the watermark past the last data window (end
+        # 600 s; 780 - 123 = 657), then fire one more batch so eviction runs
+        return batches + [
+            pd.DataFrame([{"key": -1, "ts": base + pd.Timedelta(seconds=sec)}])
+            for sec in (780, 900)
+        ]
 
-    if dirpath is None:
-        dirpath = fixture_dir("stream_win_v1")
-    if os.path.exists(os.path.join(dirpath, "_done")):
-        return dirpath
-    # tz-aware so parquet marks the column isAdjustedToUTC (Spark reads it as
-    # TIMESTAMP_LTZ, matching the declared stream schema; naive would be NTZ)
-    base = pd.Timestamp("2024-01-01", tz="UTC")
-    batches: list[pd.DataFrame] = []
-    for b in range(N_BATCHES):
-        rows = []
-        for i in range(b * N_PER_B, (b + 1) * N_PER_B):
-            _, sec = _win_sec(i)
-            rows.append({"key": i % 7, "ts": base + pd.Timedelta(seconds=sec)})
-        batches.append(pd.DataFrame(rows))
-    # sentinels: advance the watermark past the last data window (end 600 s;
-    # 780 - 123 = 657), then fire one more batch so eviction runs
-    batches.append(pd.DataFrame([{"key": -1, "ts": base + pd.Timedelta(seconds=780)}]))
-    batches.append(pd.DataFrame([{"key": -1, "ts": base + pd.Timedelta(seconds=900)}]))
-    t0 = 1_700_000_000
-    for b, df in enumerate(batches):
-        p = os.path.join(dirpath, f"w{b:03d}.parquet")
-        # micros, not pandas' nano default — Spark reads INT64(NANOS) as LONG
-        df.to_parquet(p, coerce_timestamps="us")
-        os.utime(p, (t0 + b * 10, t0 + b * 10))
-    open(os.path.join(dirpath, "_done"), "w").write("ok")
-    return dirpath
+    return write_batches("stream_win_v1", build)
 
 
 def q_streaming_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    d = write_windowed_fixture()
-    src = (
-        spark.readStream.schema("key long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    src = batch_stream(spark, WINDOWED_SCHEMA, write_windowed_fixture())
     agg = (
         src.withWatermark("ts", f"{DELAY_S} seconds")
         .groupBy(F.window("ts", f"{WIN_S} seconds"), "key")
@@ -226,50 +211,37 @@ GROUP BY 1, 2
 # (key = (i*7) % NK with 7 invertible mod NK), so the replay emits exactly
 # NK rows per batch; ts is a pseudo-shuffled UNIQUE value so "freshest" is
 # never a tie.  Emission count depends on micro-batch boundaries, which the
-# gate pins with one-file-per-trigger (mtime order) like the windowed gate.
+# gate pins with one file per trigger in mtime order like every stream here.
 NK2 = 120
 NPB2 = 120
 NB2 = 5
 
 
-def write_capture_fixture(dirpath: str | None = None) -> str:
-    import pandas as pd
+def write_capture_fixture() -> str:
+    def build():
+        import pandas as pd
 
-    from ..sources.fixtures import fixture_dir
+        df = pd.DataFrame(
+            {
+                "cap_key": (i * 7) % NK2,
+                "batch_idx": i // NPB2,
+                "ts": ((i * 5231) % 7919) * 1000 + i,
+                "payload": i,
+            }
+            for i in range(NB2 * NPB2)
+        )
+        return [grp for _, grp in df.groupby("batch_idx")]
 
-    if dirpath is None:
-        dirpath = fixture_dir("stream_caps_v1")
-    if os.path.exists(os.path.join(dirpath, "_done")):
-        return dirpath
-    rows = [
-        {
-            "cap_key": (i * 7) % NK2,
-            "batch_idx": i // NPB2,
-            "ts": ((i * 5231) % 7919) * 1000 + i,
-            "payload": i,
-        }
-        for i in range(NB2 * NPB2)
-    ]
-    df = pd.DataFrame(rows)
-    t0 = 1_700_000_000
-    for b, grp in df.groupby("batch_idx"):
-        p = os.path.join(dirpath, f"c{int(b):03d}.parquet")
-        grp.to_parquet(p)
-        os.utime(p, (t0 + int(b) * 10, t0 + int(b) * 10))
-    open(os.path.join(dirpath, "_done"), "w").write("ok")
-    return dirpath
+    return write_batches("stream_caps_v1", build)
 
 
 def q_streaming_url_consolidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import consolidate_latest
 
-    d = write_capture_fixture()
-    src = (
-        spark.readStream.schema(
-            "cap_key long, batch_idx long, ts long, payload long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    src = batch_stream(
+        spark,
+        "cap_key long, batch_idx long, ts long, payload long",
+        write_capture_fixture(),
     )
     out = consolidate_latest(src, key_col="cap_key", ts_col="ts", payload_col="payload")
     replay_to_memory(out, "url_consolidate_sink")
@@ -308,26 +280,25 @@ _EXTRACT_BATCHES = 4
 
 
 def _write_pages_stream_fixture(n: int) -> str:
-    import pandas as pd  # noqa: F401
+    def build():
+        import numpy as np
 
-    from ..sources.fixtures import fixture_dir
-    from ..sources.pages import _page_batch
+        from ..sources.pages import _page_batch
 
-    d = fixture_dir(f"pages_stream_{n}")
-    if os.path.exists(os.path.join(d, "_done")):
-        return d
-    import numpy as np
+        per = n // _EXTRACT_BATCHES
+        return [
+            _page_batch(
+                np.arange(
+                    b * per,
+                    n if b == _EXTRACT_BATCHES - 1 else (b + 1) * per,
+                    dtype=np.int64,
+                ),
+                n_total=n,
+            )
+            for b in range(_EXTRACT_BATCHES)
+        ]
 
-    per = n // _EXTRACT_BATCHES
-    for b in range(_EXTRACT_BATCHES):
-        hi = n if b == _EXTRACT_BATCHES - 1 else (b + 1) * per
-        pdf = _page_batch(np.arange(b * per, hi, dtype=np.int64), n_total=n)
-        # micro-precision so the parquet type is TIMESTAMP(MICROS, ntz) —
-        # pandas' default ns unit reads back as a bare INT64 to Spark
-        pdf["warc_ts"] = pdf["warc_ts"].astype("datetime64[us]")
-        pdf.to_parquet(os.path.join(d, f"b{b:03d}.parquet"))
-    open(os.path.join(d, "_done"), "w").write("ok")
-    return d
+    return write_batches(f"pages_stream_{n}", build)
 
 
 def q_streaming_extract_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,19 +311,15 @@ def q_streaming_extract_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.extract_stream import stream_extract_to_parquet
 
     n = _n_pages(sf_dir)
-    src = _write_pages_stream_fixture(n)
+    stream = batch_stream(
+        spark,
+        "url string, warc_ts timestamp_ntz, html binary, text string, lang string",
+        _write_pages_stream_fixture(n),
+    )
     out = fixture_dir(f"extract_sink_{n}")
     cp = fixture_dir(f"extract_sink_cp_{n}")
     shutil.rmtree(out, ignore_errors=True)
     shutil.rmtree(cp, ignore_errors=True)
-    stream = (
-        spark.readStream.schema(
-            "url string, warc_ts timestamp_ntz, html binary,"
-            " text string, lang string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     await_replay(stream_extract_to_parquet(stream, out, cp))
     feats = spark.read.parquet(out)
     return feats.groupBy("fcode").agg(
@@ -388,47 +355,35 @@ PIP_STREAM_N = 1200
 PIP_STREAM_BATCHES = 4
 
 
-def write_pip_stream_fixture(dirpath: str | None = None) -> str:
-    import pandas as pd
+def write_pip_stream_fixture() -> str:
+    def build():
+        import pandas as pd
 
-    from ..sources.fixtures import fixture_dir
+        per = PIP_STREAM_N // PIP_STREAM_BATCHES
+        return [
+            pd.DataFrame(
+                {
+                    "point_id": i,
+                    "lon": ((i * 9973) % 7200) / 20.0 - 180.0,
+                    "lat": ((i * 7919) % 2400) / 20.0 - 60.0,
+                    "fcode": "STRPT",
+                }
+                for i in range(b * per, (b + 1) * per)
+            )
+            for b in range(PIP_STREAM_BATCHES)
+        ]
 
-    if dirpath is None:
-        dirpath = fixture_dir("stream_pip_v1")
-    if os.path.exists(os.path.join(dirpath, "_done")):
-        return dirpath
-    rows = []
-    per = PIP_STREAM_N // PIP_STREAM_BATCHES
-    for i in range(PIP_STREAM_N):
-        rows.append(
-            {
-                "point_id": i,
-                "lon": ((i * 9973) % 7200) / 20.0 - 180.0,
-                "lat": ((i * 7919) % 2400) / 20.0 - 60.0,
-                "fcode": "STRPT",
-                "batch_idx": i // per,
-            }
-        )
-    df = pd.DataFrame(rows)
-    for b, grp in df.groupby("batch_idx"):
-        grp.drop(columns=["batch_idx"]).to_parquet(
-            os.path.join(dirpath, f"b{int(b):03d}.parquet")
-        )
-    open(os.path.join(dirpath, "_done"), "w").write("ok")
-    return dirpath
+    return write_batches("stream_pip_v1", build)
 
 
 def q_streaming_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pip import pip_join
     from ..sources.synthetic import geo_zone_rings
 
-    d = write_pip_stream_fixture()
-    src = (
-        spark.readStream.schema(
-            "point_id long, lon double, lat double, fcode string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    src = batch_stream(
+        spark,
+        "point_id long, lon double, lat double, fcode string",
+        write_pip_stream_fixture(),
     )
     zones = geo_zone_rings(spark)
     out = pip_join(src, zones, point_id="point_id", poly_id="zone_id").select(
@@ -470,47 +425,35 @@ UTM_STREAM_N = 1200
 UTM_STREAM_BATCHES = 4
 
 
-def write_utm_stream_fixture(dirpath: str | None = None) -> str:
-    import pandas as pd
+def write_utm_stream_fixture() -> str:
+    def build():
+        import pandas as pd
 
-    from ..sources.fixtures import fixture_dir
+        per = UTM_STREAM_N // UTM_STREAM_BATCHES
+        return [
+            pd.DataFrame(
+                {
+                    "point_id": i,
+                    "zone": 29 + i % 9,
+                    "easting": 150000.0 + float((i * 7919) % 700000),
+                    "northing": float((i * 104729) % 8000000),
+                }
+                for i in range(b * per, (b + 1) * per)
+            )
+            for b in range(UTM_STREAM_BATCHES)
+        ]
 
-    if dirpath is None:
-        dirpath = fixture_dir("stream_utm_pip_v1")
-    if os.path.exists(os.path.join(dirpath, "_done")):
-        return dirpath
-    rows = []
-    per = UTM_STREAM_N // UTM_STREAM_BATCHES
-    for i in range(UTM_STREAM_N):
-        rows.append(
-            {
-                "point_id": i,
-                "zone": 29 + i % 9,
-                "easting": 150000.0 + float((i * 7919) % 700000),
-                "northing": float((i * 104729) % 8000000),
-                "batch_idx": i // per,
-            }
-        )
-    df = pd.DataFrame(rows)
-    for b, grp in df.groupby("batch_idx"):
-        grp.drop(columns=["batch_idx"]).to_parquet(
-            os.path.join(dirpath, f"b{int(b):03d}.parquet")
-        )
-    open(os.path.join(dirpath, "_done"), "w").write("ok")
-    return dirpath
+    return write_batches("stream_utm_pip_v1", build)
 
 
 def q_streaming_utm_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pip import pip_join
     from ..sources.synthetic import geo_zone_rings
 
-    d = write_utm_stream_fixture()
-    src = (
-        spark.readStream.schema(
-            "point_id long, zone long, easting double, northing double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    src = batch_stream(
+        spark,
+        "point_id long, zone long, easting double, northing double",
+        write_utm_stream_fixture(),
     )
     # transform via the Arrow-batched numpy twin (bit-identical to the SQL
     # stage chain — tests/test_utm.py::test_utm_numpy_twin_matches_sql_chain;

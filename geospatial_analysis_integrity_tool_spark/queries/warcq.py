@@ -23,7 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.fixtures import fixture_dir
+from ..sources.fixtures import write_once
 from ..sources.pages import _page_batch, extract_text_kernel
 from ..sources.warc import read_warc, write_warc
 from .nonsql import _n_pages, _oracle_pages_text
@@ -33,20 +33,17 @@ _EPOCH_2024 = 1704067200  # warc_ts origin (2024-01-01T00:00:00Z)
 
 
 def _ensure_warc_fixture(n: int) -> str:
-    d = fixture_dir(f"warc_n{n}")
-    paths = [os.path.join(d, f"shard-{s:02d}.warc") for s in range(_N_SHARDS)]
-    if all(os.path.exists(p) for p in paths):
-        return d
-    pdf = _page_batch(np.arange(n), n_total=n)
-    dates = pdf["warc_ts"].dt.strftime("%Y-%m-%dT%H:%M:%SZ")
-    for s, p in enumerate(paths):
-        recs = [
-            (pdf["url"][i], dates[i], pdf["html"][i])
-            for i in range(n)
-            if i % _N_SHARDS == s
-        ]
-        write_warc(p, recs)
-    return d
+    def write(d: str) -> None:
+        pdf = _page_batch(np.arange(n), n_total=n)
+        dates = pdf["warc_ts"].dt.strftime("%Y-%m-%dT%H:%M:%SZ")
+        for s in range(_N_SHARDS):
+            recs = [
+                (pdf["url"][i], dates[i], pdf["html"][i])
+                for i in range(s, n, _N_SHARDS)
+            ]
+            write_warc(os.path.join(d, f"shard-{s:02d}.warc"), recs)
+
+    return write_once(f"warc_n{n}", write)
 
 
 def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -52,11 +52,12 @@ container and the GeoTIFF georeferencing tags are public specs):
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from .binary_scan import scan_files
 
 
 def write_gridascii(
@@ -267,14 +268,7 @@ DTED_SCHEMA = (
 def read_dted(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed DTED scan: binaryFile source + parse kernel, one task per
     cell file (a DTED cell is bounded: <= 3601x3601 posts)."""
-    files = spark.read.format("binaryFile").load(path_glob)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                yield parse_dted_bytes(bytes(row["content"]), row["path"])
-
-    return files.select("path", "content").mapInPandas(run, schema=DTED_SCHEMA)
+    return scan_files(spark, path_glob, parse_dted_bytes, DTED_SCHEMA)
 
 
 # --- GeoTIFF (TIFF 6.0 + GeoTIFF spec; uncompressed, PackBits, LZW) ------------
@@ -636,24 +630,10 @@ def parse_geotiff_bytes(data: bytes, source: str) -> pd.DataFrame:
 def read_geotiff(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed uncompressed-GeoTIFF scan: binaryFile source + parse
     kernel, one task per file — same tiles-row shape as Grid-ASCII."""
-    files = spark.read.format("binaryFile").load(path_glob)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                yield parse_geotiff_bytes(bytes(row["content"]), row["path"])
-
-    return files.select("path", "content").mapInPandas(run, schema=GRIDASCII_SCHEMA)
+    return scan_files(spark, path_glob, parse_geotiff_bytes, GRIDASCII_SCHEMA)
 
 
 def read_gridascii(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed Grid-ASCII scan: binaryFile source + parse kernel,
     one task per file (DEM tiles are bounded)."""
-    files = spark.read.format("binaryFile").load(path_glob)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                yield parse_gridascii_bytes(bytes(row["content"]), row["path"])
-
-    return files.select("path", "content").mapInPandas(run, schema=GRIDASCII_SCHEMA)
+    return scan_files(spark, path_glob, parse_gridascii_bytes, GRIDASCII_SCHEMA)

@@ -12,22 +12,23 @@ Implements the public SHP spec (ESRI whitepaper) with no external libraries:
   flattening parts would add phantom segments connecting part ends, feeding
   false segments into SEGLEN/LOOPS/intersection checks (the reference splits
   multiparts at import: ShapeWriteArealLinear shape_import.c:4484).
-* ``read_shp`` — the distributed path: ``spark.read.format("binaryFile")``
-  over a glob, then an Arrow-batched kernel parses each file's bytes with
-  numpy ``frombuffer`` into feature rows.  One task per file — shapefiles
-  are bounded (2 GB by format), so per-file parallelism matches GAIT's
-  per-layer ingest (SHAPE_IGNORE_LIMIT share_linux.h:134 caps layer size
-  similarly).
+* ``read_shp`` — the distributed path: ``binary_scan.scan_files`` (a
+  ``binaryFile`` source over a glob), whose Arrow-batched kernel parses each
+  file's bytes with numpy ``frombuffer`` into feature rows.  One task per
+  file — shapefiles are bounded (2 GB by format), so per-file parallelism
+  matches GAIT's per-layer ingest (SHAPE_IGNORE_LIMIT share_linux.h:134
+  caps layer size similarly).
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from .binary_scan import scan_files
 
 SHPT_NULL = 0
 SHPT_POINT = 1
@@ -326,14 +327,7 @@ SHP_SCHEMA = (
 
 def read_shp(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed shapefile scan: binaryFile source + parse kernel."""
-    files = spark.read.format("binaryFile").load(path_glob)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():  # per FILE, not per feature
-                yield parse_shp_bytes(bytes(row["content"]), row["path"])
-
-    return files.select("path", "content").mapInPandas(run, schema=SHP_SCHEMA)
+    return scan_files(spark, path_glob, parse_shp_bytes, SHP_SCHEMA)
 
 
 # --- .dbf attribute tables (dbfopen.c; public Xbase DBF layout) ----------------
@@ -448,11 +442,4 @@ DBF_SCHEMA = "source string, recno int, attr string, dtype string, value string"
 
 def read_dbf(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed .dbf scan -> long-form attribute rows."""
-    files = spark.read.format("binaryFile").load(path_glob)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                yield parse_dbf_bytes(bytes(row["content"]), row["path"])
-
-    return files.select("path", "content").mapInPandas(run, schema=DBF_SCHEMA)
+    return scan_files(spark, path_glob, parse_dbf_bytes, DBF_SCHEMA)

@@ -11,10 +11,11 @@ sources/shapefile.py):
   resource, a deterministic WARC-Record-ID (UUID from the md5 of the target
   URI — reproducible, no RNG), WARC-Date, WARC-Target-URI, Content-Type and
   Content-Length headers.
-* ``read_warc`` is the distributed path: ``binaryFile`` source (one task
-  per shard — CC's own unit of parallelism) + an Arrow-batched kernel that
-  walks records by OFFSET: parse the header block up to the blank line,
-  take exactly Content-Length payload bytes, skip the record separator.
+* ``read_warc`` is the distributed path: ``binary_scan.scan_files`` (a
+  ``binaryFile`` source, one task per shard — CC's own unit of
+  parallelism) + ``parse_warc_frame``, which walks records by OFFSET:
+  parse the header block up to the blank line, take exactly Content-Length
+  payload bytes, skip the record separator.
   No regex splitting — a wrong Content-Length or a corrupt separator
   surfaces as a parse error or a changed payload, which the round-trip
   gate hashes.
@@ -30,10 +31,11 @@ from __future__ import annotations
 import hashlib
 import os
 import uuid
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from .binary_scan import scan_files
 
 _CRLF = b"\r\n"
 
@@ -127,38 +129,17 @@ READ_WARC_SCHEMA = (
 )
 
 
+def parse_warc_frame(data: bytes, path: str) -> pd.DataFrame:
+    """One shard's records as rows of ``READ_WARC_SCHEMA``."""
+    cols = ["record_id", "warc_type", "target_uri", "warc_date", "payload"]
+    recs = parse_warc_bytes(data)
+    return pd.DataFrame(
+        [(os.path.basename(path), *(r[c] for c in cols)) for r in recs],
+        columns=["shard", *cols],
+    )
+
+
 def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed WARC scan: binaryFile source + offset-walking kernel,
     one task per shard."""
-    files = spark.read.format("binaryFile").load(path_glob)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                shard = os.path.basename(path)
-                for rec in parse_warc_bytes(bytes(content)):
-                    rows.append(
-                        (
-                            shard,
-                            rec["record_id"],
-                            rec["warc_type"],
-                            rec["target_uri"],
-                            rec["warc_date"],
-                            rec["payload"],
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "shard",
-                        "record_id",
-                        "warc_type",
-                        "target_uri",
-                        "warc_date",
-                        "payload",
-                    ],
-                )
-
-    return files.select("path", "content").mapInPandas(run, schema=READ_WARC_SCHEMA)
+    return scan_files(spark, path_glob, parse_warc_frame, READ_WARC_SCHEMA)

@@ -1,6 +1,19 @@
-"""One replay harness for the gated micro-batch streams.
+"""One replay harness for the gated micro-batch streams: the batch files in,
+the sink out.
 
-Every streaming query replays a fixture directory to completion
+Input.  ``write_batches(name, build)`` writes ``build()``'s frames as one
+parquet file per batch (``b000.parquet``, ``b001.parquet``, ...) through the
+write-once fixture directory (sources/fixtures.write_once), and pins each
+file's mtime: batch b gets ``BATCH_MTIME_ORIGIN + 10 * b`` seconds.  The
+file source orders pending files by millisecond mtime and breaks ties by
+the directory listing (hash order on common filesystems), so unpinned files
+written a few ms apart arrive in order only while each write is slow
+enough; spaced 10 s apart they arrive in batch order on any filesystem with
+timestamps of 2 s or finer.  ``batch_stream(spark, schema, d)`` reads the
+directory back one file per trigger (``maxFilesPerTrigger`` 1), so each
+micro-batch is exactly one written batch.
+
+Output.  Every streaming query replays its stream to completion
 (``availableNow``) before it is read, so they share one policy:
 
 * a stale query of the same name (an earlier call in this session) is
@@ -23,10 +36,38 @@ Every streaming query replays a fixture directory to completion
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+from collections.abc import Callable
+
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..sources.fixtures import write_once
+
 TIMEOUT_S = 300
+#: mtime of batch 0's file (2023-11-14T22:13:20Z); batch b's is 10 s later per b
+BATCH_MTIME_ORIGIN = 1_700_000_000
+
+
+def write_batches(name: str, build: Callable[[], list[pd.DataFrame]]) -> str:
+    """The write-once directory ``name`` holding ``build()``'s frames, one
+    parquet file per batch with pinned, spaced mtimes."""
+
+    def write(d: str) -> None:
+        for b, pdf in enumerate(build()):
+            p = os.path.join(d, f"b{b:03d}.parquet")
+            # micros, not pandas' nano default: Spark reads INT64(NANOS) as LONG
+            pdf.to_parquet(p, index=False, coerce_timestamps="us")
+            t = BATCH_MTIME_ORIGIN + 10 * b
+            os.utime(p, (t, t))
+
+    return write_once(name, write)
+
+
+def batch_stream(spark: SparkSession, schema: str, d: str) -> DataFrame:
+    """Replay ``write_batches``' directory ``d``, one batch per trigger."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d)
 
 
 def await_replay(q: StreamingQuery) -> StreamingQuery:

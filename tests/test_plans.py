@@ -145,6 +145,7 @@ def test_streaming_dedup_first_seen(spark, tmp_path):
     import pandas as pd
 
     from geospatial_analysis_integrity_tool_spark.streaming.replay import (
+        batch_stream,
         replay_to_memory,
     )
     from geospatial_analysis_integrity_tool_spark.streaming.stateful import (
@@ -161,10 +162,8 @@ def test_streaming_dedup_first_seen(spark, tmp_path):
         {"errtype": ["SEGLEN", "LOOPS"], "feature_id": [2, 3], "magnitude_mm": [200, 300]}
     ).to_parquet(src / "b2.parquet")
 
-    stream = (
-        spark.readStream.schema("errtype string, feature_id long, magnitude_mm long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+    stream = batch_stream(
+        spark, "errtype string, feature_id long, magnitude_mm long", str(src)
     )
     out = dedup_first_seen(
         stream, key_cols=["errtype", "feature_id"], payload_cols=["magnitude_mm"]

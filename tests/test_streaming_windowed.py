@@ -10,17 +10,15 @@ def test_windowed_replay_drops_late_rows(spark):
     from geospatial_analysis_integrity_tool_spark.queries.streamq import (
         DELAY_S,
         WIN_S,
+        WINDOWED_SCHEMA,
         write_windowed_fixture,
     )
     from geospatial_analysis_integrity_tool_spark.streaming.replay import (
+        batch_stream,
         replay_to_memory,
     )
 
-    src = (
-        spark.readStream.schema("key long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(write_windowed_fixture())
-    )
+    src = batch_stream(spark, WINDOWED_SCHEMA, write_windowed_fixture())
     agg = (
         src.withWatermark("ts", f"{DELAY_S} seconds")
         .groupBy(F.window("ts", f"{WIN_S} seconds"), "key")
